@@ -1283,16 +1283,15 @@ def pboh_e2e_clusters(spark, sf_dir):
     pipeline on the synthetic corpus; returns the clusters table."""
     from pboh_spark import blocking, cluster
     from pboh_spark import pairs as pairs_mod
+    from pboh_spark.util import release
 
     _, _, _, mentions, ns = _seeded_corpus(spark)
-    cb = blocking.candidate_blocks(mentions, ns, top_k=10)
-    mh = blocking.minhash_blocks(mentions, ns, oov_only=True)
-    salted, _ = blocking.salt_and_cap(cb.unionByName(mh), cap=512)
+    salted, _ = blocking.salt_and_cap(blocking.blocks(mentions, ns), cap=512)
     scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
     comp = cluster.connected_components(scored.where("is_match_pred"))
-    # comp is eagerly localCheckpointed by CC, so the persisted blocked
-    # table is no longer needed by the returned plan
-    blocking.release_persisted()
+    # CC materialized its own checkpoints: the returned plan no longer
+    # reads the salted table
+    release(salted)
     return cluster.clusters_table(mentions, comp).select(
         "mention_id", "conv_id", "turn_idx", "ngram", "cluster_id"
     )
@@ -1303,15 +1302,14 @@ def pboh_surface_clusters(spark, sf_dir):
     surfaces blocked/scored once, cluster labels expanded to instances."""
     from pboh_spark import blocking, cluster
     from pboh_spark import pairs as pairs_mod
+    from pboh_spark.util import release
 
     _, _, _, mentions, ns = _seeded_corpus(spark)
     nodes = pairs_mod.surface_nodes(mentions)
-    cb = blocking.candidate_blocks(nodes, ns, top_k=10)
-    mh = blocking.minhash_blocks(nodes, ns, oov_only=True)
-    salted, _ = blocking.salt_and_cap(cb.unionByName(mh), cap=512)
+    salted, _ = blocking.salt_and_cap(blocking.blocks(nodes, ns), cap=512)
     scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
     comp = cluster.connected_components(scored.where("is_match_pred"))
-    blocking.release_persisted()  # comp is eagerly checkpointed by CC
+    release(salted)  # comp reads only CC's own checkpoints
     return pairs_mod.surface_clusters_to_mentions(mentions, comp).select(
         "mention_id", "conv_id", "turn_idx", "ngram", "cluster_id"
     )
@@ -1349,14 +1347,12 @@ def pboh_threshold_grid(spark, sf_dir):
     from pboh_spark import pairs as pairs_mod
 
     _, gold, _, mentions, ns = _seeded_corpus(spark)
-    cb = blocking.candidate_blocks(mentions, ns, top_k=10)
-    mh = blocking.minhash_blocks(mentions, ns, oov_only=True)
-    blocked = cb.unionByName(mh)
+    blocked = blocking.blocks(mentions, ns)
     salted, _ = blocking.salt_and_cap(blocked, cap=512)
     scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
     lp = evaluate.build_labeled_pairs(gold, blocked)
+    # grid is lazy and still reads the salted checkpoint: not released
     grid = evaluate.calibrate_threshold(scored, lp)
-    blocking.release_persisted()
     return grid.select(
         "threshold", "tp", "fp", "fn",
         F.round("precision", 6).alias("precision"),

@@ -105,6 +105,7 @@ def linkage_pairs_throughput(
     from pboh_spark import blocking, stats, synth
     from pboh_spark import pairs as pairs_mod
     from pboh_spark.normalize import extract_mentions
+    from pboh_spark.util import release
 
     uni = synth.EntityUniverse()
     transcripts, _ = synth.generate_transcripts(
@@ -119,22 +120,19 @@ def linkage_pairs_throughput(
     mentions.count()
 
     t0 = time.time()
-    if surface_mode:
-        mentions = pairs_mod.surface_nodes(mentions)
-    cb = blocking.candidate_blocks(mentions, ns, top_k=10)
-    mh = blocking.minhash_blocks(mentions, ns, oov_only=True)
-    # salt_and_cap persists its input, so the blocking plan (incl. the
-    # LSH pandas UDF) is computed once even though the downstream
-    # self-join consumes it twice. The final action aggregates over the
-    # fused score — a bare count() would let Catalyst prune the scoring
-    # columns and the similarity UDF would never run
-    salted, _ = blocking.salt_and_cap(cb.unionByName(mh), cap=block_cap)
+    nodes = pairs_mod.surface_nodes(mentions) if surface_mode else mentions
+    # the final action aggregates over the fused score — a bare count()
+    # would let Catalyst prune the scoring columns and the similarity
+    # UDF would never run
+    salted, _ = blocking.salt_and_cap(
+        blocking.blocks(nodes, ns), cap=block_cap
+    )
     scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
     row = scored.agg(
         F.count("*").alias("n"), F.sum("score").alias("chk")
     ).collect()[0]
     dt = time.time() - t0
-    blocking.release_persisted()  # don't accumulate cached blocked tables
+    release(salted, mentions, ns)
     return int(row["n"]), dt
 
 
@@ -156,9 +154,7 @@ def _prep_pairs(n_conv: int, out_path: str, partitions: int) -> None:
     anchors = synth.generate_anchors(spark, 4000, universe=uni)
     ns = stats.name_stats(anchors)
     mentions = extract_mentions(transcripts)
-    cb = blocking.candidate_blocks(mentions, ns, top_k=10)
-    mh = blocking.minhash_blocks(mentions, ns, oov_only=True)
-    salted, _ = blocking.salt_and_cap(cb.unionByName(mh), cap=64)
+    salted, _ = blocking.salt_and_cap(blocking.blocks(mentions, ns), cap=64)
     pairs_mod.candidate_pairs(salted).repartition(partitions).write.mode(
         "overwrite"
     ).parquet(out_path)
@@ -308,6 +304,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     from pboh_spark.ops.simsearch import recall_at_k
+    from pboh_spark.util import release
 
     qs = entrymod.queries()
     bf = qs["ann_cosine_topk"](spark, SF_DIR).cache()
@@ -316,7 +313,7 @@ def main() -> None:
         name: round(recall_at_k(qs[name](spark, SF_DIR), bf), 3)
         for name in ("ann_lsh_topk", "ann_ivf_topk")
     }
-    bf.unpersist()
+    release(bf)
     # the same diagnostic on planted-CLUSTER embeddings — the realistic
     # regime for an IVF index (uniform vectors are its worst case); the
     # Lloyd-refined defaults must clear 0.7 here (asserted in test_ops)
@@ -337,8 +334,7 @@ def main() -> None:
             recall_at_k(lsh_topk(cemb, cq, dim=64, k=10), cbf), 3
         ),
     }
-    cemb.unpersist()
-    cbf.unpersist()
+    release(cemb, cbf)
     # linkage throughput: best of 3 (the join-heavy job shows ±30%
     # run-to-run variance on this box; the min is the reproducible number)
     runs = [linkage_pairs_throughput(spark, n_conv) for _ in range(3)]

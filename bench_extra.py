@@ -101,6 +101,7 @@ def sec_linkage(spark) -> None:
     from pboh_spark import blocking, stats, synth
     from pboh_spark import pairs as pairs_mod
     from pboh_spark.normalize import extract_mentions
+    from pboh_spark.util import release
     import re
 
     m = re.search(r"sf([0-9.]+)", SF_DIR)
@@ -131,9 +132,7 @@ def sec_linkage(spark) -> None:
         spark, "pairs: score_pairs agg", lambda: scored.agg(
             F.count("*"), F.sum("score")).collect(), n=2,
     )
-    blocking.release_persisted()
-    mentions.unpersist()
-    ns.unpersist()
+    release(salted, mentions, ns)
 
 
 def sec_cc(spark) -> None:

@@ -27,6 +27,7 @@ import pandas as pd
 
 from pboh_spark.resolve import LAMBDA_FLOOR, _pack, _solve_conv
 from pboh_spark.stats import ScorerWeights
+from pboh_spark.util import release
 
 
 @dataclass
@@ -154,7 +155,7 @@ class EntityLinker:
                 .collect()
             }
         finally:
-            lam_pruned.unpersist()
+            release(lam_pruned)
         lam = {
             int(_pack(np.array([r["e1"]]), np.array([r["e2"]]))[0]): float(
                 r["lambda_potential"]

@@ -30,25 +30,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
 _MERSENNE = np.uint64((1 << 61) - 1)
-
-# DataFrames persisted internally (salt_and_cap); callers running many
-# blocking passes in one session call release_persisted() between passes
-# so the cached blocked tables don't accumulate for the session lifetime
-_PERSISTED: list = []
-
-
-def release_persisted() -> None:
-    """Unpersist every DataFrame this module cached (blocking=False)."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:
-            pass
-
 
 def _minhash_params(n_hashes: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
     rng = np.random.default_rng(seed)
@@ -179,65 +165,39 @@ def minhash_blocks(
     )
 
 
+def blocks(
+    nodes: DataFrame, name_stats: DataFrame, top_k: int = 10
+) -> DataFrame:
+    """THE blocking composition: candidate-key blocks plus minhash-LSH
+    blocks for the names the dictionary misses, unsalted. Callers salt
+    with ``salt_and_cap`` themselves — the labelled-pair universe needs
+    the unsalted union."""
+    return candidate_blocks(nodes, name_stats, top_k=top_k).unionByName(
+        minhash_blocks(nodes, name_stats, oov_only=True)
+    )
+
+
 def salt_and_cap(
     blocked: DataFrame, cap: int = 512, persist: bool = True
 ) -> tuple[DataFrame, DataFrame]:
     """Splits blocks larger than ``cap`` into ⌈n/cap⌉ salted sub-blocks.
 
     Returns (salted_df, metrics_df). metrics_df: per-block sizes and the
-    number of oversplit blocks — the 'never silently' part. One extra
-    shuffle (groupBy block_key) whose result broadcasts back (block-size
-    dim is tiny relative to data).
+    number of oversplit blocks — the 'never silently' part — as a
+    separate lazy aggregate over the input. salted_df is one pass (a
+    window count per block_key, no join back), so the blocking pandas
+    UDF runs once.
 
-    The input is materialized once (lazy localCheckpoint) because it is
-    scanned twice — once for sizes, once for the salting join — and
-    upstream blocking includes a pandas UDF that must not run twice. In
-    the checkpointed pipeline the stage write supersedes this; for
-    ad-hoc use (bench, notebooks) it halves the blocking cost. Callers
-    that only consume the ``metrics`` side (one scan, salted df
-    discarded) pass ``persist=False`` so no cache entry outlives the
-    call.
+    With ``persist`` salted_df is a lazy ``localCheckpoint`` the caller
+    owns: ``util.release(salted)`` once nothing lazy reads it. Callers
+    that write it durably themselves, or use only the metrics, pass
+    ``persist=False``.
     """
-    if persist:
-        # hash-partition on block_key BEFORE materializing: the three
-        # consumers (size agg, salting join, and the downstream pair
-        # self-join) all key on block_key, so they reuse this one
-        # exchange instead of each re-shuffling the table — and the
-        # union's inflated partition count (sum of both blocking
-        # branches' partitions, mostly near-empty) collapses first.
-        #
-        # localCheckpoint (lazy) rather than persist (r6): a persisted
-        # DataFrame keeps its FULL logical plan, and every downstream
-        # consumer (self-join aliases a/b, the attribute re-attach, the
-        # size agg) embeds that blocking tree again — Catalyst was
-        # re-analyzing ~12 copies of the union subtree per query build,
-        # ~1-2 s of driver time per pass. The checkpoint truncates the
-        # lineage to a leaf (partitioning preserved), cutting both
-        # analysis and AQE re-optimization cost; same rows, same
-        # storage level (MEMORY_AND_DISK). Trade-off (guide §5): local
-        # checkpoints are not fault-tolerant — an executor loss forces
-        # the query to re-run instead of recomputing the lost blocks.
-        # For a derived blocking table inside one query that is the
-        # right side of the trade at any scale; durable pipelines go
-        # through checkpoint.py stage writes instead.
-        blocked = blocked.repartition("block_key").localCheckpoint(
-            eager=False
-        )
-        # kept for reference-dropping: DataFrame.unpersist is a no-op on
-        # a checkpointed frame, but popping the reference lets the
-        # ContextCleaner reclaim the checkpoint RDD's blocks
-        _PERSISTED.append(blocked)
-    sizes = blocked.groupBy("block_key").agg(F.count("*").alias("block_size"))
-    big = sizes.where(F.col("block_size") > cap)
+    n_salt = F.ceil(
+        F.count("*").over(Window.partitionBy("block_key")) / F.lit(cap)
+    ).cast("int")
     salted = (
-        blocked.join(big, "block_key", "left")
-        .withColumn(
-            "n_salt",
-            F.when(
-                F.col("block_size").isNotNull(),
-                F.ceil(F.col("block_size") / F.lit(cap)).cast("int"),
-            ).otherwise(F.lit(1)),
-        )
+        blocked.withColumn("n_salt", n_salt)
         .withColumn(
             "block_key",
             F.when(
@@ -249,8 +209,16 @@ def salt_and_cap(
                 ),
             ).otherwise(F.col("block_key")),
         )
-        .drop("block_size", "n_salt")
+        .drop("n_salt")
     )
+    if persist:
+        # a checkpoint, not persist: a persisted frame keeps its plan, and
+        # each downstream consumer (both self-join aliases, the attribute
+        # re-attach) re-analyzes the blocking tree, ~1-2 s of driver time
+        # per pass. Not fault-tolerant: an executor loss re-runs the query;
+        # durable pipelines write the table through checkpoint.py instead.
+        salted = salted.localCheckpoint(eager=False)
+    sizes = blocked.groupBy("block_key").agg(F.count("*").alias("block_size"))
     metrics = sizes.agg(
         F.count("*").alias("n_blocks"),
         F.max("block_size").alias("max_block_size"),

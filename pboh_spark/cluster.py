@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pboh_spark.util import release
+
 
 def connected_components(
     edges: DataFrame,
@@ -38,8 +40,11 @@ def connected_components(
     (a 300-node chain closes in ~9 rounds; plain propagation needs 300).
     Convergence is a driver-side changed-count (the same bounded-loop
     shape as the reference's LBP, LoopyBeliefPropagation.scala:126-137).
+    Each round's checkpoint is released once the next one is
+    materialized; only the one behind the returned labels stays pinned.
     """
-    spark = edges.sparkSession
+    if max_iter < 1:
+        raise ValueError("max_iter must be >= 1")
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -53,7 +58,7 @@ def connected_components(
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     sym = sym.repartition("v").localCheckpoint(eager=True)
 
-    labels = (
+    pinned = (
         sym.groupBy("u")
         .agg(F.min("v").alias("nmin"))
         .select(
@@ -62,6 +67,7 @@ def connected_components(
         )
         .localCheckpoint(eager=False)
     )
+    labels = pinned
     for _ in range(max_iter):
         neigh = (
             sym.join(
@@ -102,11 +108,14 @@ def connected_components(
         changed = new_labels.where(
             F.col("new_cluster_id") != F.col("old")
         ).count()
+        release(pinned)
+        pinned = new_labels
         labels = new_labels.select(
             "id", F.col("new_cluster_id").alias("cluster_id")
         )
         if changed == 0:
             break
+    release(sym)
     return labels
 
 
@@ -174,6 +183,7 @@ def connected_components_star(
         new_e = large.union(small).distinct().localCheckpoint(eager=True)
         # converged when the (distinct) edge set is stable
         new_fp = _fingerprint(new_e)
+        release(e)
         e = new_e
         if new_fp == fp:
             break
@@ -285,6 +295,7 @@ def merge_edges_into_components(
     relabel = connected_components(
         contracted, "la", "lb", max_iter=max_iter
     ).select(F.col("id").alias("old_label"), F.col("cluster_id").alias("new_label"))
+    release(contracted)  # relabel reads only CC's own checkpoint
 
     updated_existing = mapping.join(
         relabel, mapping["cluster_id"] == relabel["old_label"], "left"

@@ -50,6 +50,21 @@ def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame
     )
 
 
+def _dense(col, n: int, d: int) -> np.ndarray:
+    """Null-free list column → (n, d) matrix; ragged lengths or a wrong
+    ``dim`` raise instead of mis-pairing elements across rows."""
+    import pyarrow.compute as pc
+
+    values = col.flatten()
+    lens = np.unique(pc.list_value_length(col).to_numpy(zero_copy_only=False))
+    if len(values) != n * d or lens.tolist() != [d]:
+        raise ValueError(
+            f"arrow_cosine_pairs: expected {n} vectors of dim {d}, got "
+            f"{len(values)} values with vector lengths {lens.tolist()}"
+        )
+    return np.asarray(values, dtype=np.float64).reshape(n, d)
+
+
 def arrow_cosine_pairs(
     df: DataFrame,
     a: str,
@@ -75,6 +90,7 @@ def arrow_cosine_pairs(
     other columns or fuse into a join keep ``with_cosine``.
     """
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     out_schema = ", ".join(
@@ -90,8 +106,8 @@ def arrow_cosine_pairs(
             va = batch.column(n_ids)
             vb = batch.column(n_ids + 1)
             nulls = (
-                pa.compute.is_null(va).to_numpy(zero_copy_only=False)
-                | pa.compute.is_null(vb).to_numpy(zero_copy_only=False)
+                pc.is_null(va).to_numpy(zero_copy_only=False)
+                | pc.is_null(vb).to_numpy(zero_copy_only=False)
             )
             if nulls.any():
                 # rare degenerate rows (null vector): NULL cosine, same
@@ -131,8 +147,7 @@ def arrow_cosine_pairs(
                 carr = pa.array(cos, type=pa.float64(), mask=mask)
             else:
                 d = dim or len(va[0])
-                x = np.asarray(va.flatten(), dtype=np.float64).reshape(n, d)
-                y = np.asarray(vb.flatten(), dtype=np.float64).reshape(n, d)
+                x, y = _dense(va, n, d), _dense(vb, n, d)
                 dot = np.zeros(n, dtype=np.float64)
                 na = np.zeros(n, dtype=np.float64)
                 nb = np.zeros(n, dtype=np.float64)

@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 from pboh_spark.learning import CLAMP, MAX_DOC, _FIXED
 from pboh_spark.resolve import LAMBDA_FLOOR, _pack
 from pboh_spark.stats import ScorerWeights
+from pboh_spark.util import release
 
 PGRAD_SCHEMA = (
     "conv_id string, kind string, ngram string, e1 long, e2 long, val double"
@@ -340,7 +341,7 @@ def learn_param_tables(
     lam_p = init_lambda_params(lambda_table, min_cocit).localCheckpoint()
     history: list[dict] = []
     q = lambda c: (F.sum(F.round(F.col(c) * _FIXED).cast("long")) / _FIXED)  # noqa: E731
-    in_flight: list = []  # round-scoped persisted handles, released on ANY exit
+    in_flight: list = []  # this round's λ slice and merge, released on ANY exit
     try:
         for r in range(n_rounds):
             cg = cand_gold.join(
@@ -394,11 +395,8 @@ def learn_param_tables(
             gl = merged.where(F.col("kind") == "lam").select(
                 "e1", "e2", (F.col("gsum") / n_convs).alias("grad"),
             )
-            # the eager localCheckpoint below materializes the NEW tables
-            # before the superseded round's blocks are released — without
-            # the unpersists, n_rounds dead parameter-table copies (plus
-            # one λ-slice per round) would pin executor storage for the
-            # app lifetime
+            # the eager checkpoints materialize the new tables, so the
+            # superseded ones and this round's slices can go
             rho_prev, lam_prev = rho_p, lam_p
             rho_p = _adagrad_update(
                 rho_p.join(gr, ["ngram", "entity"], "left"), eta, reg
@@ -406,16 +404,10 @@ def learn_param_tables(
             lam_p = _adagrad_update(
                 lam_p.join(gl, ["e1", "e2"], "left"), eta, reg
             ).localCheckpoint()
-            for stale in (rho_prev, lam_prev):
-                stale.unpersist()
-            for stale in in_flight:
-                stale.unpersist()
+            release(rho_prev, lam_prev, *in_flight)
             in_flight = []
     finally:
-        cand_gold.unpersist()  # releases the localCheckpoint blocks
-        pairs.unpersist()
-        for stale in in_flight:  # early break or mid-round failure
-            stale.unpersist()
+        release(cand_gold, pairs, *in_flight)
     return rho_p, lam_p, history
 
 

@@ -99,9 +99,11 @@ def run_pipeline(
     )
 
     def build_blocked() -> DataFrame:
-        cb = blocking.candidate_blocks(link_nodes, name_stats, top_k=top_k)
-        mh = blocking.minhash_blocks(link_nodes, name_stats, oov_only=True)
-        salted, _ = blocking.salt_and_cap(cb.unionByName(mh), cap=block_cap)
+        # persist=False: the stage write below is what makes it durable
+        salted, _ = blocking.salt_and_cap(
+            blocking.blocks(link_nodes, name_stats, top_k=top_k),
+            cap=block_cap, persist=False,
+        )
         return salted
 
     blocked = ck.run_stage(
@@ -110,9 +112,6 @@ def run_pipeline(
         upstream=["s1_mentions", "s2_name_stats"],
         repartition_by="block_key",
     )
-    # the stage write above supersedes salt_and_cap's internal persist —
-    # release it so repeated pipeline runs don't pin dead blocked tables
-    blocking.release_persisted()
 
     scored = ck.run_stage(
         f"s4_pairs{sfx}",
@@ -218,6 +217,9 @@ def run_pipeline(
                 raise ValueError("learn_params requires learn_gold")
             from pboh_spark import learning, param_learning
             from pboh_spark.stats import ScorerWeights
+            from pboh_spark.util import release
+
+            fitted: list = []  # the fit's two tables, freed once written
 
             def build_param_tables() -> DataFrame:
                 cg = learning.learning_candidates(cand, mentions, learn_gold)
@@ -227,6 +229,7 @@ def run_pipeline(
                     n_rounds=param_rounds,
                     lam_const=resolve.backoff_lam_const(scalars),
                 )
+                fitted.extend((rho_p, lam_p))
                 # one kind-tagged table per stage: rho + lambda params AND
                 # the per-round loss history, so resume restores all three
                 r = rho_p.select(
@@ -257,6 +260,7 @@ def run_pipeline(
                 upstream=["s5_candidates", "s2_lambda"]
                 + (["s5_weights"] if weights is not None else []),
             )
+            release(*fitted)
             param_tables = (
                 pt.where(F.col("kind") == "rho").select(
                     "ngram", F.col("e1").alias("entity"), "w"
@@ -447,10 +451,7 @@ def main() -> None:
             # the checkpointed name_stats rather than recomputing it
             mentions = spark.read.parquet(str(ck._paths("s1_mentions")[0]))
             ns = spark.read.parquet(str(ck._paths("s2_name_stats")[0]))
-            inst_blocked = blocking.candidate_blocks(mentions, ns).unionByName(
-                blocking.minhash_blocks(mentions, ns, oov_only=True)
-            )
-            lp = evaluate.build_labeled_pairs(gold, inst_blocked)
+            lp = evaluate.build_labeled_pairs(gold, blocking.blocks(mentions, ns))
             clusters = spark.read.parquet(str(ck._paths("s6_clusters_surf")[0]))
             comp = clusters.select(
                 F.col("mention_id").alias("id"), F.col("cluster_id")

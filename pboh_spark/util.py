@@ -1,7 +1,8 @@
-"""Shared plan-shape helpers for the operator library."""
+"""Shared plan-shape and cache-release helpers."""
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
@@ -65,3 +66,20 @@ def bound_parallelism(df: DataFrame) -> DataFrame:
     parts = df.rdd.getNumPartitions()
     target = max(sc.defaultParallelism, parts // 4)
     return df.coalesce(target) if parts > target else df
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free what ``persist()`` or ``localCheckpoint()`` pinned for each
+    frame. The rule: whoever persists or checkpoints a frame calls this
+    on the frame that call returned, once nothing lazy still reads it.
+    ``unpersist`` alone leaves a checkpoint's blocks pinned: they belong
+    to the RDD behind the frame's ``LogicalRDD`` leaf, reached through a
+    private API — if that changes, this degrades to ``unpersist``."""
+    for df in dfs:
+        df.unpersist()
+        try:
+            plan = df._jdf.queryExecution().analyzed()
+            if plan.nodeName() == "LogicalRDD":
+                plan.rdd().unpersist(False)
+        except (AttributeError, Py4JError):
+            pass

@@ -91,3 +91,38 @@ def test_clusters_table_keeps_singletons(spark):
     out = {r["mention_id"]: r["cluster_id"]
            for r in cluster.clusters_table(mentions, comp).collect()}
     assert out == {1: 1, 2: 1, 3: 3}
+
+
+def _pinned(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_release_frees_persisted_and_checkpointed_frames(spark):
+    from pboh_spark.util import release
+
+    before = _pinned(spark)
+    df = spark.range(100).selectExpr("id", "id % 3 AS k")
+    cached = df.persist()
+    cached.count()
+    eager = df.localCheckpoint()
+    lazy = df.groupBy("k").count().localCheckpoint(eager=False)
+    lazy.count()
+    assert len(_pinned(spark) - before) == 3
+    release(cached, eager, lazy)
+    assert _pinned(spark) - before == set()
+
+
+def test_cc_pins_only_the_returned_labels(spark):
+    """Every superseded round's checkpoint and the symmetric edge list
+    are released; at most the frame behind the labels stays pinned."""
+    edges = spark.createDataFrame(
+        pd.DataFrame(
+            [(i, i + 1) for i in range(63)],
+            columns=["mention_id_a", "mention_id_b"],
+        )
+    )
+    before = _pinned(spark)
+    labels = cluster.connected_components(edges)
+    assert len(_pinned(spark) - before) <= 1
+    got = labels.collect()
+    assert len(got) == 64 and all(r["cluster_id"] == 0 for r in got)

@@ -194,6 +194,18 @@ def test_learning_is_partitioning_deterministic(spark):
     assert runs[0][0] == runs[1][0]
 
 
+def test_learn_weights_leaves_nothing_pinned(spark):
+    """The fit's persisted and checkpointed intermediates are all
+    released: it returns plain Python values, so nothing stays pinned."""
+    cand, lam = _crafted_corpus(spark, [f"p{i}" for i in range(6)])
+    pinned = lambda: set(  # noqa: E731
+        spark.sparkContext._jsc.getPersistentRDDs().keys()
+    )
+    before = pinned()
+    learn_weights(cand, lam, n_rounds=3)
+    assert pinned() - before == set()
+
+
 def test_loss_increases_and_fitted_beats_shipped(spark):
     """Train on 20 crafted convs, hold out 8: the pseudolikelihood rises
     monotonically-ish, the fitted g grows past the flip point, and LBP

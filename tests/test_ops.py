@@ -501,3 +501,14 @@ def test_arrow_cosine_bit_parity_with_jvm_fold(spark, emb):
     fgot = simsearch.arrow_cosine_pairs(fix, "va", "vb", ("id",))
     assert fgot.exceptAll(fref).count() == 0
     assert fref.exceptAll(fgot).count() == 0
+    # ragged batch (one partition, so one Arrow batch): the fast path
+    # must fail loudly, even when the value count happens to equal n*dim
+    ragged = spark.createDataFrame(
+        [(1, [1.0, 2.0], [1.0, 2.0, 3.0]), (2, [1.0, 2.0, 3.0, 4.0], [4.0, 5.0, 6.0])],
+        "id bigint, va array<double>, vb array<double>",
+    ).coalesce(1)
+    for dim in (None, 3):
+        with pytest.raises(Exception, match="vector lengths \\[2, 4\\]"):
+            simsearch.arrow_cosine_pairs(
+                ragged, "va", "vb", ("id",), dim=dim
+            ).collect()

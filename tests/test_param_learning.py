@@ -258,10 +258,11 @@ def test_conv_pair_skeleton_and_probe_semantics(spark):
     assert any(not r["trainable"] for r in eff)
 
 
-def test_param_fit_deterministic_across_partitionings(spark):
+def _planted_cand_gold(spark, convs):
+    """_planted_corpus as the fit's (candidates ⋈ gold, λ table) input."""
     from pyspark.sql import functions as F
 
-    cand, mentions, lam = _planted_corpus(spark, [f"c{i}" for i in range(6)])
+    cand, mentions, lam = _planted_corpus(spark, convs)
     gold = mentions.select(
         "mention_id",
         F.when(F.col("ngram") == "foo", F.lit(B))
@@ -272,6 +273,11 @@ def test_param_fit_deterministic_across_partitionings(spark):
         "conv_id", "mention_id", "entity", "rho", "log_pop", "ngram",
         "gold_entity",
     )
+    return cg, lam
+
+
+def test_param_fit_deterministic_across_partitionings(spark):
+    cg, lam = _planted_cand_gold(spark, [f"c{i}" for i in range(6)])
 
     def run(parts):
         rho_p, lam_p, _ = param_learning.learn_param_tables(
@@ -287,3 +293,20 @@ def test_param_fit_deterministic_across_partitionings(spark):
         return r, l
 
     assert run(1) == run(7)
+
+
+def test_param_fit_pins_only_its_two_tables(spark):
+    """Four rounds leave exactly the two returned parameter tables
+    pinned; every superseded table and round slice is released."""
+    from pboh_spark.util import release
+
+    cg, lam = _planted_cand_gold(spark, [f"c{i}" for i in range(6)])
+    pinned = lambda: set(  # noqa: E731
+        spark.sparkContext._jsc.getPersistentRDDs().keys()
+    )
+    before = pinned()
+    rho_p, lam_p, hist = param_learning.learn_param_tables(cg, lam, n_rounds=4)
+    assert len(hist) == 4
+    assert len(pinned() - before) == 2
+    release(rho_p, lam_p)
+    assert pinned() - before == set()

@@ -132,6 +132,7 @@ def test_streamed_ingest_then_batch_linkage_matches_batch(
     periodic batch job; only stage 1 streams.)"""
     from pboh_spark import blocking, cluster, stats
     from pboh_spark import pairs as pairs_mod
+    from pboh_spark.util import release
 
     base = str(tmp_path)
     t = _write_two_chunks(spark, universe, base)
@@ -146,12 +147,10 @@ def test_streamed_ingest_then_batch_linkage_matches_batch(
     ns = stats.name_stats(anchors)
 
     def clusters_from(mentions):
-        cb = blocking.candidate_blocks(mentions, ns, top_k=10)
-        mh = blocking.minhash_blocks(mentions, ns, oov_only=True)
-        salted, _ = blocking.salt_and_cap(cb.unionByName(mh), cap=512)
+        salted, _ = blocking.salt_and_cap(blocking.blocks(mentions, ns), cap=512)
         scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
         comp = cluster.connected_components(scored.where("is_match_pred"))
-        blocking.release_persisted()
+        release(salted)
         return {
             r["mention_id"]: r["cluster_id"]
             for r in cluster.clusters_table(mentions, comp).collect()

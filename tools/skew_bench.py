@@ -96,10 +96,8 @@ def _run_once(spark, blocked, cap: int) -> tuple[int, float, int]:
     from pboh_spark import pairs as pairs_mod
 
     t0 = time.time()
-    # persist=False: the CALLER persisted the input (off the clock), and
-    # salt_and_cap(persist=True) would append that same DataFrame to the
-    # module cache — release_persisted() would then evict the caller's
-    # cache and later trials would rebuild the corpus inside the clock
+    # persist=False: one pass over the caller's persisted input, nothing
+    # left pinned between trials
     salted, _ = blocking.salt_and_cap(blocked, cap=cap, persist=False)
     pairs = pairs_mod.candidate_pairs(salted)
     # aggregate over a computed column so Catalyst can't prune the work
@@ -132,6 +130,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from pboh_spark.session import DEFAULT_CPUS, get_spark
+    from pboh_spark.util import release
 
     cores = args.cores or DEFAULT_CPUS
     spark = get_spark(cores=cores, shuffle_partitions=2 * cores)
@@ -163,7 +162,7 @@ def main() -> None:
                 f"{min(trials):8.3f}s  max_block={max_blk}",
                 file=sys.stderr,
             )
-        blocked.unpersist()
+        release(blocked)
 
     # trend factors: time[i+1]/time[i] per mode across the sweep
     def factors(mode: str) -> list[float]:

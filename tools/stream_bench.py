@@ -86,6 +86,7 @@ def main() -> None:
 
     from pboh_spark import streaming, synth
     from pboh_spark.session import DEFAULT_CPUS, get_spark
+    from pboh_spark.util import release
 
     cores = args.cores or DEFAULT_CPUS
     spark = get_spark(cores=cores, shuffle_partitions=2 * cores)
@@ -117,7 +118,7 @@ def main() -> None:
         # manager substitutes the in-memory relation
         batch_rows = comps.collect()
         batch_sec = time.time() - t0
-        scored.unpersist()
+        release(scored)
         batch_map = sorted(tuple(r) for r in batch_rows)
 
         # --- streamed chain, one micro-batch vs n_files micro-batches ---
