@@ -1348,10 +1348,11 @@ def pboh_threshold_grid(spark, sf_dir):
 
     _, gold, _, mentions, ns = _seeded_corpus(spark)
     blocked = blocking.blocks(mentions, ns)
-    salted, _ = blocking.salt_and_cap(blocked, cap=512)
+    # one aggregate pass reads the salted table: nothing to checkpoint,
+    # so nothing stays pinned after the query
+    salted, _ = blocking.salt_and_cap(blocked, cap=512, persist=False)
     scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
     lp = evaluate.build_labeled_pairs(gold, blocked)
-    # grid is lazy and still reads the salted checkpoint: not released
     grid = evaluate.calibrate_threshold(scored, lp)
     return grid.select(
         "threshold", "tp", "fp", "fn",

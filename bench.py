@@ -1,33 +1,60 @@
 #!/usr/bin/env python
-"""Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the linkage
-pipeline's candidate-pairs-scored/sec (the BASELINE.json throughput
-metric) on the seeded synthetic transcript corpus sized to the same sf.
+"""Benchmark harness — the one entry point for measuring the engine.
 
-Prints ONE JSON line:
+Default run: the headline queries at $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 test data) on local[DEFAULT_CPUS], plus the linkage pipeline's
+candidate-pairs-scored/sec (the BASELINE.json throughput metric) on the
+seeded synthetic transcript corpus sized to the same sf. Prints ONE
+JSON line:
   {"metric": "headline_suite_sec", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>,
    "pairs_scored": N, "pairs_per_sec": X}
 
 --scaling runs the linkage job at local[N] and local[4N] on the SAME
 input and reports both throughputs + efficiency (the sandbox stand-in
-for the N vs 4N executor criterion) and appends the result to BENCH.md.
+for the N vs 4N executor criterion).
+
+--section NAME runs one stage-isolation section (SECTIONS below) or
+any declared query, and prints ONE JSON line: every step runs inside a
+``perfbench.spans.Tracer`` span, so each step reports wall_s,
+executor_s, tasks, shuffle_write_mb and spill_mb (the fastest of its
+repeats); ``wall_s`` is their sum; ``check`` holds the outputs that
+must not change between code versions (pair counts, checksums).
+
+--ab COMMIT [--section S] [--trials N] runs section S (default
+linkage) as interleaved fresh-subprocess trials of this checkout and of
+COMMIT on the same box, alternating which side goes first, and reports
+each side's trials, min, median and interquartile spread. Both sides
+run this file; the COMMIT side runs with its working directory at an
+export of COMMIT, and the working directory comes first on sys.path,
+so that process and its Python workers import COMMIT's pboh_spark.
 """
 
 from __future__ import annotations
 
 import argparse
+import io
 import json
 import os
 import re
+import shutil
+import statistics
+import subprocess
 import sys
+import tarfile
+import tempfile
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+HERE = Path(__file__).resolve().parent
+# the working directory first: an --ab trial's ref side imports the ref
+# tree's pboh_spark, as its Python workers (started in that cwd) do
+sys.path.insert(0, str(HERE))
+sys.path.insert(0, os.getcwd())
+
+from pboh_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # the headline suite: one per operator family (relational agg/join chain,
 # PBOH potentials, pair scoring, dedup LSH, clustering, text, ANN)
@@ -55,6 +82,15 @@ BENCH_QUERIES = [
     "pboh_learn_weights",
 ]
 
+# section sizes (the measurements recorded in BENCH.md used these)
+SKEW_N_HOT = (5_000, 10_000, 20_000)  # mentions in the one hot block
+SKEW_CAP = 512  # the pipeline's salt cap
+SKEW_BACKGROUND = (2_000, 8)  # background blocks × mentions each
+STREAM_CONVS, STREAM_FILES = 2_000, 16  # files = micro-batch boundaries
+PARAM_EXTRAS = (0, 30_000, 100_000, 300_000)  # synthetic keys per table
+PARAM_ROUNDS = 3
+BLOCK_CAP = 64  # the linkage benchmarks' salt cap (the pipeline uses 512)
+
 
 def _force(df) -> None:
     """Fully materialize (noop sink: computes every column, writes nothing)."""
@@ -64,6 +100,37 @@ def _force(df) -> None:
 def _sf_of(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else 0.0
+
+
+def _n_conv(sf_dir: str) -> int:
+    return max(200, int(_sf_of(sf_dir) * 20000))
+
+
+def _warm_up(spark, sf_dir: str) -> None:
+    """JVM/codegen warm-up so the first timed step isn't charged for init."""
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1000).groupBy(
+        "l_returnflag"
+    ).count().collect()
+
+
+def _linkage_inputs(spark, n_conv: int):
+    """The seeded linkage corpus — deterministic and identical at any
+    parallelism (synth seeds per conversation) — as cached, materialized
+    (mentions, name_stats); the caller releases both. Materialized here
+    so a timed region measures linkage, not synth generation."""
+    from pboh_spark import stats, synth
+    from pboh_spark.normalize import extract_mentions
+
+    uni = synth.EntityUniverse()
+    transcripts, _ = synth.generate_transcripts(
+        spark, n_conv, universe=uni, partitions=128
+    )
+    anchors = synth.generate_anchors(spark, 4000, universe=uni)
+    ns = stats.name_stats(anchors).cache()
+    ns.count()
+    mentions = extract_mentions(transcripts).cache()
+    mentions.count()
+    return mentions, ns
 
 
 def run_headline(
@@ -93,40 +160,25 @@ def run_headline(
 
 
 def linkage_pairs_throughput(
-    spark, n_conversations: int, block_cap: int = 64, surface_mode: bool = False
+    spark, n_conversations: int, surface_mode: bool = False
 ) -> tuple[int, float]:
     """Blocking → within-block self-join → vectorized pair scoring on the
-    seeded synthetic corpus; returns (pairs_scored, seconds). The corpus is
-    deterministic and identical at any parallelism (synth seeds per conv).
+    seeded synthetic corpus; returns (pairs_scored, seconds).
     ``surface_mode`` runs the same stages over the distinct-surface node
     table (the 10^12-turn path) — same clock, far smaller pair space."""
     from pyspark.sql import functions as F
 
-    from pboh_spark import blocking, stats, synth
+    from pboh_spark import blocking
     from pboh_spark import pairs as pairs_mod
-    from pboh_spark.normalize import extract_mentions
     from pboh_spark.util import release
 
-    uni = synth.EntityUniverse()
-    transcripts, _ = synth.generate_transcripts(
-        spark, n_conversations, universe=uni, partitions=128
-    )
-    anchors = synth.generate_anchors(spark, 4000, universe=uni)
-    ns = stats.name_stats(anchors).cache()
-    ns.count()
-    # materialize the input corpus before the clock starts — the metric is
-    # pairs-scored/sec of the blocking+scoring stages, not synth generation
-    mentions = extract_mentions(transcripts).cache()
-    mentions.count()
-
+    mentions, ns = _linkage_inputs(spark, n_conversations)
     t0 = time.time()
     nodes = pairs_mod.surface_nodes(mentions) if surface_mode else mentions
     # the final action aggregates over the fused score — a bare count()
     # would let Catalyst prune the scoring columns and the similarity
     # UDF would never run
-    salted, _ = blocking.salt_and_cap(
-        blocking.blocks(nodes, ns), cap=block_cap
-    )
+    salted, _ = blocking.salt_and_cap(blocking.blocks(nodes, ns), cap=BLOCK_CAP)
     scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
     row = scored.agg(
         F.count("*").alias("n"), F.sum("score").alias("chk")
@@ -136,25 +188,653 @@ def linkage_pairs_throughput(
     return int(row["n"]), dt
 
 
+# ---------------------------------------------------------------------------
+# sections: one JSON line each, every step inside a tracer span
+# ---------------------------------------------------------------------------
+
+def _step(tr, name: str, layer: str, fn, n: int = 1):
+    """Run ``fn`` ``n`` times, each inside a span called ``name``;
+    returns the last result (the section keeps the fastest span)."""
+    for _ in range(n):
+        with tr.span(name, layer):
+            out = fn()
+    return out
+
+
+def _steps(spans: list[dict]) -> dict[str, dict]:
+    """Per step name, the fastest span's numbers."""
+    steps: dict[str, dict] = {}
+    for s in spans:
+        row = {
+            "wall_s": round(s["end"] - s["start"], 3),
+            "executor_s": round(s.get("executor_s", 0.0), 3),
+            "tasks": s.get("tasks", 0),
+            "shuffle_write_mb": round(s.get("shuffle_write_mb", 0.0), 2),
+            "spill_mb": round(s.get("spill_mb", 0.0), 2),
+        }
+        best = steps.get(s["name"])
+        if best is None or row["wall_s"] < best["wall_s"]:
+            steps[s["name"]] = row
+    return steps
+
+
+def sec_learn(spark, sf_dir, tr) -> dict:
+    """pboh_learn_weights: the two input tables vs the full fit."""
+    import __spark_entry__ as entrymod
+    from pboh_spark import learning, resolve
+
+    def inputs():
+        gold, mentions, cand, lam, scalars = entrymod._seeded_resolve_inputs(spark)
+        return (
+            learning.learning_candidates(cand, mentions, gold),
+            resolve.conv_lambda_pairs(
+                cand, lam, value_cols=("log_smoothed", "lp_sum")
+            ),
+            resolve.backoff_lam_const(scalars),
+        )
+
+    _step(tr, "inputs: cand_gold", "learning", lambda: _force(inputs()[0]))
+    _step(tr, "inputs: conv_aff", "learning", lambda: _force(inputs()[1]))
+    cand_gold, conv_aff, lam_const = inputs()
+    _, hist = _step(tr, "fit", "learning", lambda: learning.learn_weights(
+        cand_gold, conv_aff, lam_const=lam_const, **entrymod._FIT_KW
+    ))
+    return {"check": {"rounds": len(hist), "loss": round(hist[-1]["loss"], 6)}}
+
+
+def sec_resolve(spark, sf_dir, tr) -> dict:
+    """pboh_resolve_lbp: corpus, candidates and λ pairs vs the full query."""
+    import __spark_entry__ as entrymod
+    from pboh_spark import resolve
+
+    _, _, _, mentions, ns = entrymod._seeded_corpus(spark)
+    _step(tr, "corpus: mentions", "normalize", lambda: _force(mentions))
+    _step(tr, "corpus: name_stats", "stats", lambda: _force(ns))
+    _step(tr, "inputs: candidates (incl containment)", "resolve",
+          lambda: _force(entrymod._seeded_resolve_inputs(spark)[2]))
+
+    def lam_pairs():
+        _, _, cand, lam, _ = entrymod._seeded_resolve_inputs(spark)
+        _force(resolve.conv_lambda_pairs(cand, lam))
+
+    _step(tr, "inputs: conv_lambda_pairs", "resolve", lam_pairs)
+    _step(tr, "full query", "resolve", lambda: _force(
+        entrymod.queries()["pboh_resolve_lbp"](spark, sf_dir)), n=2)
+    return {}
+
+
+def sec_linkage(spark, sf_dir, tr) -> dict:
+    """The linkage chain stage by stage (blocking branches, salt/cap,
+    pair generation, scoring) in instance mode and in surface mode,
+    over the headline's corpus."""
+    from pyspark.sql import functions as F
+
+    from pboh_spark import blocking
+    from pboh_spark import pairs as pairs_mod
+    from pboh_spark.util import release
+
+    n_conv = _n_conv(sf_dir)
+    mentions, ns = _linkage_inputs(spark, n_conv)
+    pairs = {}
+    for mode, nodes in (
+        ("instance", mentions), ("surface", pairs_mod.surface_nodes(mentions))
+    ):
+        _step(tr, f"{mode}: candidate_blocks", "blocking",
+              lambda: _force(blocking.candidate_blocks(nodes, ns)))
+        _step(tr, f"{mode}: minhash_blocks", "blocking",
+              lambda: _force(blocking.minhash_blocks(nodes, ns)))
+
+        def salt():
+            salted, _ = blocking.salt_and_cap(
+                blocking.blocks(nodes, ns), cap=BLOCK_CAP
+            )
+            _force(salted)
+            return salted
+
+        salted = _step(tr, f"{mode}: salt_and_cap", "blocking", salt)
+        cp = pairs_mod.candidate_pairs(salted)
+        _step(tr, f"{mode}: candidate_pairs", "pairs", lambda: _force(cp))
+        row = _step(tr, f"{mode}: score_pairs", "pairs", lambda: (
+            pairs_mod.score_pairs(cp)
+            .agg(F.count("*").alias("n"), F.sum("score"))
+            .collect()[0]
+        ), n=2)
+        pairs[mode] = int(row["n"])
+        release(salted)
+    release(mentions, ns)
+    return {
+        "n_conversations": n_conv,
+        "check": {
+            "pairs_scored": pairs["instance"],
+            "surface_pairs_scored": pairs["surface"],
+        },
+    }
+
+
+def _cc_graphs(spark, lsh_edges) -> dict:
+    """Three graph shapes as (u, v) edge lists: the LSH near-dup graph
+    (near-clique components, the production shape), one 2,000-vertex
+    path (worst-case diameter: round count), and a 3,000-spoke hub next
+    to 500 size-4 cliques (one giant skewed key)."""
+    from pyspark.sql import functions as F
+
+    lsh = lsh_edges.select(
+        F.col("doc_id_a").alias("u"), F.col("doc_id_b").alias("v")
+    )
+    chain = spark.range(1999).select(
+        F.col("id").alias("u"), (F.col("id") + 1).alias("v")
+    )
+    hub = spark.range(1, 3000).select(
+        F.lit(0).cast("long").alias("u"), F.col("id").alias("v")
+    )
+    cliq = spark.range(500).select(
+        F.explode(F.array([F.lit(i) for i in range(4)])).alias("m"), "id"
+    ).select((10_000 + F.col("id") * 4 + F.col("m")).alias("vid"), "id")
+    a, b = cliq.alias("a"), cliq.alias("b")
+    cliq_edges = (
+        a.join(b, "id")
+        .where(F.col("a.vid") < F.col("b.vid"))
+        .select(F.col("a.vid").alias("u"), F.col("b.vid").alias("v"))
+    )
+    return {"lsh": lsh, "chain": chain, "skew": hub.union(cliq_edges)}
+
+
+def sec_cc(spark, sf_dir, tr) -> dict:
+    """cc_components: the LSH edge build, hash-to-min vs large/small-star
+    (Kiveris et al. SoCC'14) on three graph shapes — identical min-id
+    labels asserted — and the full query."""
+    import __spark_entry__ as entrymod
+    from pboh_spark import cluster
+    from pboh_spark.ops.dedup import minhash_lsh_pairs
+    from pboh_spark.util import release
+
+    d = entrymod._t(spark, sf_dir, "documents")
+    edges = minhash_lsh_pairs(
+        d, "text", k=3, n_hashes=entrymod._MH_N, n_bands=entrymod._MH_BANDS
+    )
+    _step(tr, "edges: minhash_lsh_pairs", "ops.dedup", lambda: _force(edges), n=2)
+    vertices = {}
+    for gname, g in _cc_graphs(spark, edges).items():
+        g = g.localCheckpoint()  # graph generation off the clock
+        labels = {}
+        for algo, fn in (
+            ("hash_to_min", cluster.connected_components),
+            ("large_small_star", cluster.connected_components_star),
+        ):
+            for _ in range(3):
+                with tr.span(f"{gname}/{algo}", "cluster"):
+                    lab = fn(g, "u", "v")
+                    n = lab.count()
+                if algo in labels:
+                    release(labels[algo])
+                labels[algo] = lab
+        diff = labels["hash_to_min"].exceptAll(labels["large_small_star"]).count()
+        assert diff == 0, f"{gname}: CC label mismatch ({diff} rows)"
+        vertices[gname] = n
+        release(g, *labels.values())
+    _step(tr, "full query", "cluster", lambda: _force(
+        entrymod.queries()["cc_components"](spark, sf_dir)), n=2)
+    return {"check": {"vertices": vertices}}
+
+
+def sec_emblsh(spark, sf_dir, tr) -> dict:
+    """dedup_embedding_lsh_pairs: signatures vs the full query."""
+    import __spark_entry__ as entrymod
+    from pyspark.sql import functions as F
+
+    from pboh_spark.ops.simsearch import hyperplane_signatures
+
+    emb = entrymod._t(spark, sf_dir, "embeddings")
+    v = F.col("embedding").cast("array<double>")
+    pert = F.transform(
+        v, lambda x, i: x + 0.05 * F.element_at(v, (i + 1) % 64 + 1)
+    )
+    dups = emb.where(F.col("vec_id") < 25).select(
+        (-F.col("vec_id") - 1).alias("vec_id"), pert.alias("embedding")
+    )
+    allv = emb.select("vec_id", v.alias("embedding")).unionByName(dups)
+    sigs = hyperplane_signatures(
+        allv, 64, n_bits=8, n_tables=6, seed=42,
+        id_col="vec_id", vec_col="embedding",
+    )
+    _step(tr, "signatures only", "ops.simsearch", lambda: _force(sigs), n=2)
+    _step(tr, "full query", "ops.simsearch", lambda: _force(
+        entrymod.queries()["dedup_embedding_lsh_pairs"](spark, sf_dir)), n=2)
+    return {}
+
+
+def sec_lshpairs(spark, sf_dir, tr) -> dict:
+    """dedup_lsh_pairs: shingles and signatures vs the full query."""
+    import __spark_entry__ as entrymod
+    from pboh_spark.ops.dedup import minhash_signatures_wide, word_shingles
+
+    d = entrymod._t(spark, sf_dir, "documents")
+    _step(tr, "word_shingles", "ops.dedup",
+          lambda: _force(word_shingles(d, "text", 3)), n=2)
+    _step(tr, "minhash_signatures_wide", "ops.dedup", lambda: _force(
+        minhash_signatures_wide(d, "text", 3, entrymod._MH_N)), n=2)
+    _step(tr, "full query", "ops.dedup", lambda: _force(
+        entrymod.queries()["dedup_lsh_pairs"](spark, sf_dir)), n=2)
+    return {}
+
+
+def sec_lambda(spark, sf_dir, tr) -> dict:
+    """stat_lambda_potential: anchors, entity stats, co-occurrence vs
+    the full query."""
+    import __spark_entry__ as entrymod
+    from pboh_spark import stats
+
+    anchors = entrymod._anchors(spark, sf_dir)
+    _step(tr, "anchors", "stats", lambda: _force(anchors), n=2)
+    _step(tr, "entity_stats", "stats",
+          lambda: _force(stats.entity_stats(anchors)), n=2)
+    _step(tr, "cooccurrence", "stats",
+          lambda: _force(stats.cooccurrence(anchors, min_cocit=1)), n=2)
+    _step(tr, "full query", "stats", lambda: _force(
+        entrymod.queries()["stat_lambda_potential"](spark, sf_dir)), n=2)
+    return {}
+
+
+def _hot_block_corpus(spark, n_hot: int):
+    """Blocking-shaped rows: one hot block 'e1' of ``n_hot`` mentions
+    plus SKEW_BACKGROUND small blocks. Pure column expressions over
+    ``spark.range``, so only the salting and self-join are measured."""
+    from pyspark.sql import functions as F
+
+    n_blocks, size = SKEW_BACKGROUND
+    hot = spark.range(n_hot).select(
+        F.lit("e1").alias("block_key"),
+        F.concat(F.lit("c"), (F.col("id") % 997).cast("string")).alias("conv_id"),
+        (F.col("id") % 25).cast("int").alias("turn_idx"),
+        F.col("id").alias("mention_id"),
+        F.concat(F.lit("hot surface "), (F.col("id") % 997).cast("string"))
+        .alias("ngram"),
+        F.lit(1).cast("bigint").alias("cand_entity"),
+        F.lit(0.5).alias("prob"),
+    )
+    bg = spark.range(n_blocks * size).select(
+        F.concat(F.lit("b"), (F.col("id") % n_blocks).cast("string"))
+        .alias("block_key"),
+        F.concat(F.lit("d"), (F.col("id") % 499).cast("string")).alias("conv_id"),
+        (F.col("id") % 25).cast("int").alias("turn_idx"),
+        (F.col("id") + n_hot).alias("mention_id"),
+        F.concat(F.lit("bg surface "), F.col("id").cast("string")).alias("ngram"),
+        (F.col("id") % n_blocks + 2).cast("bigint").alias("cand_entity"),
+        F.lit(0.5).alias("prob"),
+    )
+    return hot.unionByName(bg)
+
+
+def sec_skew(spark, sf_dir, tr) -> dict:
+    """What salt_and_cap buys on one pathologically hot block: the same
+    salt → candidate_pairs path with the pipeline cap (``salted``: pair
+    count and time grow ~linearly in n_hot) and without one
+    (``unsalted``: C(n_hot, 2) pairs in ONE task, ~quadratic). The trend
+    over the n_hot sweep is the evidence. The modes intentionally differ
+    in pair count: the lost cross-sub-block pairs are the documented
+    recall trade."""
+    from pyspark.sql import functions as F
+
+    from pboh_spark import blocking
+    from pboh_spark import pairs as pairs_mod
+    from pboh_spark.util import release
+
+    rows = []
+    for n_hot in SKEW_N_HOT:
+        blocked = _hot_block_corpus(spark, n_hot).persist()
+        blocked.count()  # input off the clock
+        for mode, cap in (("salted", SKEW_CAP), ("unsalted", 1 << 31)):
+            # persist=False: one pass over the persisted input per trial
+            salted, _ = blocking.salt_and_cap(blocked, cap=cap, persist=False)
+            row = _step(tr, f"n_hot={n_hot}/{mode}", "pairs", lambda: (
+                pairs_mod.candidate_pairs(salted)
+                .agg(F.count("*").alias("n"), F.sum("prior_agreement"))
+                .collect()[0]
+            ), n=2)
+            max_block = salted.groupBy("block_key").count().agg(
+                F.max("count")
+            ).collect()[0][0]
+            rows.append({"n_hot": n_hot, "mode": mode, "pairs": int(row["n"]),
+                         "max_block_size": int(max_block)})
+        release(blocked)
+    steps = _steps(tr.spans)
+
+    def growth(mode: str) -> list[float]:
+        ts = [steps[f"n_hot={n}/{mode}"]["wall_s"] for n in SKEW_N_HOT]
+        return [round(b / a, 2) for a, b in zip(ts, ts[1:])]
+
+    return {
+        "cap": SKEW_CAP,
+        "rows": rows,
+        "time_growth_per_doubling": {m: growth(m) for m in ("salted", "unsalted")},
+        "check": {"pairs": [r["pairs"] for r in rows]},
+    }
+
+
+def sec_stream(spark, sf_dir, tr) -> dict:
+    """The streamed linkage chain (ingest → pair generation →
+    stream-static scoring → incremental CC) vs one batch pass over the
+    same STREAM_FILES parquet files: ``stream_whole`` drains them in one
+    micro-batch (the machinery's fixed cost), ``stream_split`` in one
+    micro-batch per file; their difference per extra batch is the
+    per-micro-batch overhead. The final component mapping must equal
+    the batch truth on both runs. The two stream steps report wall time
+    only: Spark runs a streaming query's jobs under the query's own job
+    group, which the span cannot see."""
+    from pyspark.sql import functions as F
+
+    from pboh_spark import streaming, synth
+    from pboh_spark.cluster import connected_components
+    from pboh_spark.util import release
+
+    work = Path(tempfile.mkdtemp(prefix="bench_stream_"))
+    try:
+        transcripts, _ = synth.generate_transcripts(
+            spark, STREAM_CONVS, partitions=STREAM_FILES
+        )
+        inp = str(work / "in")
+        transcripts.write.parquet(inp)
+        n_turns = spark.read.parquet(inp).count()
+
+        def batch():
+            # the streamed chain's derivations composed statically
+            t = spark.read.schema(streaming.TRANSCRIPT_SCHEMA).parquet(inp)
+            m = streaming.blocked_turns(t)
+            a, b = m.alias("a"), m.alias("b")
+            cand = (
+                a.join(b, "block_key")
+                .where(F.col("a.mention_id") < F.col("b.mention_id"))
+                .select(
+                    "block_key",
+                    F.col("a.mention_id").alias("mention_id_a"),
+                    F.col("b.mention_id").alias("mention_id_b"),
+                )
+            )
+            # persisted so scoring runs once: the count fills the cache
+            # and the CC pass, planned afterwards, reads it
+            scored = streaming.streaming_scored_pairs(
+                cand, streaming.mention_token_dim(t)
+            ).persist()
+            n_pairs = scored.count()
+            comps = connected_components(scored)
+            rows = comps.collect()
+            release(scored, comps)
+            return n_pairs, sorted(tuple(r) for r in rows)
+
+        n_pairs, truth = _step(tr, "batch", "streaming", batch)
+        batches = {}
+        for tag, max_files in (("whole", None), ("split", 1)):
+            state = work / f"state_{tag}"
+
+            def drain():
+                streaming.run_streaming_cc(
+                    spark, inp, str(state), str(work / f"ck_{tag}"),
+                    max_files_per_trigger=max_files,
+                ).awaitTermination()
+
+            _step(tr, f"stream_{tag}", "streaming", drain)
+            got = sorted(
+                tuple(r)
+                for r in streaming.latest_components(spark, str(state)).collect()
+            )
+            assert got == truth, f"stream_{tag} mapping != batch truth"
+            batches[tag] = sum(
+                1 for p in state.iterdir() if p.name.startswith("epoch=")
+            )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    steps = _steps(tr.spans)
+    extra = batches["split"] - batches["whole"]
+    per_batch = (
+        (steps["stream_split"]["wall_s"] - steps["stream_whole"]["wall_s"]) / extra
+        if extra > 0 else None
+    )
+    return {
+        "n_conversations": STREAM_CONVS,
+        "n_turns": n_turns,
+        "micro_batches": batches,
+        "per_micro_batch_overhead_s": per_batch and round(per_batch, 3),
+        "turns_per_s": {k: round(n_turns / s["wall_s"], 1) for k, s in steps.items()},
+        "check": {"scored_pairs": n_pairs, "components_rows": len(truth)},
+    }
+
+
+def _inflate(df, extra: int, kind: str):
+    """Union ``extra`` synthetic keys onto an initial parameter table.
+    Their ids are ones no corpus entity or surface uses, and w == w0,
+    so the proximal AdaGrad update leaves them untouched."""
+    from pyspark.sql import functions as F
+
+    if extra <= 0:
+        return df
+    base = df.sparkSession.range(extra)
+    if kind == "rho":
+        keys = [
+            F.concat(F.lit("zz_syn_"), F.col("id")).alias("ngram"),
+            (F.col("id") + 10_000_000).alias("entity"),
+        ]
+        w = -5.0
+    else:
+        keys = [
+            (F.col("id") + 10_000_000).alias("e1"),
+            (F.col("id") + 20_000_000).alias("e2"),
+        ]
+        w = 0.5
+    return df.unionByName(base.select(
+        *keys, F.lit(w).alias("w0"), F.lit(w).alias("w"), F.lit(0.0).alias("sq")
+    ))
+
+
+def _real_checksum(rho_p, lam_p) -> int:
+    """Fixed-point checksum of the fitted values on real keys only."""
+    from pyspark.sql import functions as F
+
+    def fixed(df) -> int:
+        return int(df.agg(F.sum(F.round(F.col("w") * 1e6).cast("long"))).first()[0] or 0)
+
+    real_rho = rho_p.where(~F.col("ngram").startswith("zz_syn_"))
+    real_lam = lam_p.where(F.col("e1") < 10_000_000)
+    return fixed(real_rho) * 31 + fixed(real_lam)
+
+
+def sec_param_scale(spark, sf_dir, tr) -> dict:
+    """learn_param_tables on the fixed seeded corpus with both initial
+    tables inflated by PARAM_EXTRAS synthetic keys: the keys never meet
+    the gradient probe but flow through both keyed AdaGrad update joins
+    every round, so the per-round cost tracks table size. The fit on
+    real keys must stay bit-identical at every inflation level."""
+    import __spark_entry__ as entrymod
+    from pboh_spark import learning, param_learning, resolve
+    from pboh_spark.util import release
+
+    gold, mentions, cand, lam, scalars = entrymod._seeded_resolve_inputs(spark)
+    cand_gold = learning.learning_candidates(cand, mentions, gold).localCheckpoint()
+    lam = lam.localCheckpoint()  # inputs off the clock
+    lam_const = resolve.backoff_lam_const(scalars)
+    orig_rho, orig_lam = (
+        param_learning.init_rho_params, param_learning.init_lambda_params
+    )
+    rows, baseline = [], None
+    for extra in PARAM_EXTRAS:
+        param_learning.init_rho_params = lambda cg, e=extra: _inflate(
+            orig_rho(cg), e, "rho"
+        )
+        param_learning.init_lambda_params = lambda lt, mc=4, e=extra: _inflate(
+            orig_lam(lt, mc), e, "lam"
+        )
+        try:
+            rho_p, lam_p, hist = _step(
+                tr, f"extra={extra}", "param_learning",
+                lambda: param_learning.learn_param_tables(
+                    cand_gold, lam, n_rounds=PARAM_ROUNDS, lam_const=lam_const
+                ),
+            )
+        finally:
+            param_learning.init_rho_params = orig_rho
+            param_learning.init_lambda_params = orig_lam
+        ck = _real_checksum(rho_p, lam_p)
+        baseline = ck if baseline is None else baseline
+        assert ck == baseline, f"extra={extra}: fit on real keys changed"
+        rows.append({
+            "extra_keys_per_table": extra,
+            "rho_keys": rho_p.count(),
+            "lam_keys": lam_p.count(),
+            "rounds_run": len(hist),
+            "checksum_ok": True,
+        })
+        release(rho_p, lam_p)
+    release(cand_gold, lam)
+    steps = _steps(tr.spans)
+    for row in rows:
+        wall = steps[f"extra={row['extra_keys_per_table']}"]["wall_s"]
+        row["s_per_round"] = round(wall / max(row["rounds_run"], 1), 2)
+    return {"rows": rows, "check": {"checksum": baseline}}
+
+
+SECTIONS = {
+    "learn": sec_learn,
+    "resolve": sec_resolve,
+    "linkage": sec_linkage,
+    "cc": sec_cc,
+    "emblsh": sec_emblsh,
+    "lshpairs": sec_lshpairs,
+    "lambda": sec_lambda,
+    "skew": sec_skew,
+    "stream": sec_stream,
+    "param_scale": sec_param_scale,
+}
+
+
+class _SectionSpans:
+    """The spans one section adds to the caller's tracer."""
+
+    def __init__(self, tracer):
+        self.span, self._all, self._first = tracer.span, tracer.spans, len(tracer.spans)
+
+    @property
+    def spans(self) -> list[dict]:
+        return self._all[self._first:]
+
+
+def run_section(tracer, name: str, sf_dir: str = SF_DIR) -> dict:
+    """One section (or, for any other name, the declared query of that
+    name, best of 2) on ``tracer``'s session, as one JSON-ready dict.
+    Use one ``perfbench.spans.Tracer`` per Spark application: its span
+    ids name the job groups the spans read back."""
+    import __spark_entry__ as entrymod
+
+    spark, tr = tracer.spark, _SectionSpans(tracer)
+    entrymod._FIT_CACHE.clear()
+    if name in SECTIONS:
+        extra = SECTIONS[name](spark, sf_dir, tr)
+    else:
+        query = entrymod.queries()[name]
+
+        def once():
+            entrymod._FIT_CACHE.clear()
+            _force(query(spark, sf_dir))
+
+        _step(tr, name, "query", once, n=2)
+        extra = {}
+    steps = _steps(tr.spans)
+    return {
+        "section": name,
+        "wall_s": round(sum(s["wall_s"] for s in steps.values()), 3),
+        "steps": steps,
+        **extra,
+    }
+
+
+# ---------------------------------------------------------------------------
+# same-box A/B and the scaling run: fresh interpreters
+# ---------------------------------------------------------------------------
+
+def _ref_tree(commit: str) -> Path:
+    """A read-only export of ``commit`` in the temp dir, reused if present."""
+    sha = subprocess.run(
+        ["git", "rev-parse", "--short", commit],
+        cwd=HERE, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    path = Path(tempfile.gettempdir()) / f"bench_ref_{sha}"
+    if not path.exists():
+        archive = subprocess.run(
+            ["git", "archive", sha], cwd=HERE, capture_output=True, check=True
+        ).stdout
+        tmp = Path(tempfile.mkdtemp(dir=path.parent))
+        with tarfile.open(fileobj=io.BytesIO(archive)) as tar:
+            tar.extractall(tmp, filter="data")
+        tmp.rename(path)
+    return path
+
+
+def _trial(tree: Path, section: str) -> dict:
+    proc = subprocess.run(
+        [sys.executable, str(HERE / "bench.py"), "--section", section],
+        cwd=tree, capture_output=True, text=True,
+    )
+    if proc.returncode != 0:
+        raise RuntimeError(
+            f"{section} trial in {tree} failed:\n{proc.stderr[-3000:]}"
+        )
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def _side(trials: list[dict]) -> dict:
+    walls = [t["wall_s"] for t in trials]
+    q1, _, q3 = statistics.quantiles(walls, n=4) if len(walls) > 1 else walls * 3
+    return {
+        "trials_s": walls,
+        "min_s": min(walls),
+        "median_s": statistics.median(walls),
+        "iqr_s": round(q3 - q1, 3),
+        "steps_median_s": {
+            k: statistics.median(t["steps"][k]["wall_s"] for t in trials)
+            for k in trials[0]["steps"]
+        },
+    }
+
+
+def run_ab(commit: str, section: str, trials: int) -> dict:
+    """Interleaved fresh-subprocess trials of ``section``: COMMIT (ref)
+    vs this checkout (head), alternating which side runs first, so both
+    sides see the same box state."""
+    trees = {"ref": _ref_tree(commit), "head": HERE}
+    runs: dict[str, list[dict]] = {"ref": [], "head": []}
+    for i in range(trials):
+        for side in ("ref", "head") if i % 2 == 0 else ("head", "ref"):
+            r = _trial(trees[side], section)
+            runs[side].append(r)
+            print(f"[trial {i + 1}/{trials}] {side:4s} {r['wall_s']:8.3f}s",
+                  file=sys.stderr)
+    checks = {side: runs[side][0].get("check") for side in runs}
+    if checks["ref"] != checks["head"]:
+        print(f"WARNING: outputs differ (ref {checks['ref']} vs head "
+              f"{checks['head']}): the sides are not computing the same job",
+              file=sys.stderr)
+    ref, head = _side(runs["ref"]), _side(runs["head"])
+    return {
+        "metric": "section_ab",
+        "section": section,
+        "ref_commit": commit,
+        "cores": DEFAULT_CPUS,
+        "ref": ref,
+        "head": head,
+        "checks": checks,
+        "head_over_ref_median": round(head["median_s"] / ref["median_s"], 3),
+    }
+
+
 def _prep_pairs(n_conv: int, out_path: str, partitions: int) -> None:
     """Materialize the candidate-pair table once (full parallelism) so
     both scaling phases score the IDENTICAL input. Repartitioned so the
     scan yields many waves of tasks at 4N cores — a handful of large
     files makes the last-task tail dominate and masks real scaling."""
-    from pboh_spark import blocking, stats, synth
+    from pboh_spark import blocking
     from pboh_spark import pairs as pairs_mod
-    from pboh_spark.normalize import extract_mentions
-    from pboh_spark.session import get_spark
 
-    spark = get_spark(cores=CPUS, shuffle_partitions=128)
-    uni = synth.EntityUniverse()
-    transcripts, _ = synth.generate_transcripts(
-        spark, n_conv, universe=uni, partitions=128
-    )
-    anchors = synth.generate_anchors(spark, 4000, universe=uni)
-    ns = stats.name_stats(anchors)
-    mentions = extract_mentions(transcripts)
-    salted, _ = blocking.salt_and_cap(blocking.blocks(mentions, ns), cap=64)
+    spark = get_spark(cores=DEFAULT_CPUS, shuffle_partitions=128)
+    mentions, ns = _linkage_inputs(spark, n_conv)
+    salted, _ = blocking.salt_and_cap(blocking.blocks(mentions, ns), cap=BLOCK_CAP)
     pairs_mod.candidate_pairs(salted).repartition(partitions).write.mode(
         "overwrite"
     ).parquet(out_path)
@@ -164,14 +844,10 @@ def _prep_pairs(n_conv: int, out_path: str, partitions: int) -> None:
 def _one_shot(cores: int, pairs_path: str, shuffle_partitions: int) -> None:
     """One pinned scaling phase: score the pre-materialized pair table —
     the 'candidate-pairs-scored/sec' job itself. Full warm-up pass
-    (workers, page cache, codegen), then best-of-3. Invoked as a
-    taskset-pinned subprocess by --scaling so the process really has only
-    N cores (JVM GC/shuffle threads included) — local[N] on a bigger box
-    otherwise overstates N-core throughput."""
+    (workers, page cache, codegen), then best-of-3."""
     from pyspark.sql import functions as F
 
     from pboh_spark import pairs as pairs_mod
-    from pboh_spark.session import get_spark
 
     spark = get_spark(
         cores=cores,
@@ -201,102 +877,55 @@ def _one_shot(cores: int, pairs_path: str, shuffle_partitions: int) -> None:
     spark.stop()
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--scaling", action="store_true",
-                    help="run linkage at local[N] and local[4N], report efficiency")
-    ap.add_argument("--n", type=int, default=8, help="N for the scaling run")
-    ap.add_argument("--n-conversations", type=int, default=None)
-    ap.add_argument("--one-shot-cores", type=int, default=None,
-                    help=argparse.SUPPRESS)
-    ap.add_argument("--pairs-path", type=str, default=None,
-                    help=argparse.SUPPRESS)
-    ap.add_argument("--prep-pairs", action="store_true",
-                    help=argparse.SUPPRESS)
-    ap.add_argument("--shuffle-partitions", type=int, default=None,
-                    help=argparse.SUPPRESS)
-    args = ap.parse_args()
+def _call(code: str, pin: tuple[str, ...] = ()) -> str:
+    """Run ``bench.<code>`` in a fresh interpreter (behind the ``pin``
+    command prefix, if any); returns its stdout."""
+    return subprocess.run(
+        [*pin, sys.executable, "-c", f"import bench; bench.{code}"],
+        cwd=HERE, capture_output=True, text=True, check=True,
+    ).stdout
 
-    from pboh_spark.session import get_spark
 
-    sf = _sf_of(SF_DIR)
-    n_conv = args.n_conversations or max(200, int(sf * 20000))
+def run_scaling(n: int, n_conversations: int | None) -> dict:
+    """Pair scoring over a pre-materialized pair table (the BASELINE
+    metric: candidate-pairs-scored/sec), the same input and plan at
+    local[n] and local[4n]. The corpus is large enough that per-task
+    work dominates fixed stage latency AND the per-worker JW memo fill
+    amortizes (4N cores spread the distinct pairs over 4× more python
+    workers, so a too-small corpus charges the big configuration 4× the
+    cache misses and understates its scaling). Each phase is a
+    subprocess pinned to its core budget with taskset, so the process
+    really has only N cores (JVM GC/shuffle threads included)."""
+    n_conv = n_conversations or max(10000, int(_sf_of(SF_DIR) * 2000000))
+    have_taskset = shutil.which("taskset") is not None
+    tmpdir = tempfile.mkdtemp(prefix="bench_pairs_")
+    pairs_path = f"{tmpdir}/pairs"
+    try:
+        _call(f"_prep_pairs({n_conv}, {pairs_path!r}, {64 * n})")
+        results = {}
+        for cores in (n, 4 * n):
+            pin = ("taskset", "-c", f"0-{cores - 1}") if have_taskset else ()
+            out = _call(f"_one_shot({cores}, {pairs_path!r}, {16 * n})", pin)
+            results[cores] = json.loads(out.strip().splitlines()[-1])
+    finally:
+        shutil.rmtree(tmpdir, ignore_errors=True)
+    eff = results[4 * n]["pairs_per_sec"] / (4 * results[n]["pairs_per_sec"])
+    return {
+        "metric": "scaling_efficiency",
+        "value": round(eff, 3),
+        "unit": "ratio",
+        "n_cores": n,
+        "n4_cores": 4 * n,
+        "pinned": have_taskset,
+        "results": results,
+        "n_conversations": n_conv,
+    }
 
-    if args.prep_pairs:
-        _prep_pairs(n_conv, args.pairs_path, args.shuffle_partitions or 256)
-        print("prepared")
-        return
 
-    if args.one_shot_cores:
-        _one_shot(args.one_shot_cores, args.pairs_path,
-                  args.shuffle_partitions or 128)
-        return
-
-    if args.scaling:
-        import shutil
-        import subprocess
-        import tempfile
-
-        # the measured job is pair SCORING over a pre-materialized pair
-        # table (the BASELINE metric: candidate-pairs-scored/sec) — the
-        # same input and plan at both parallelism levels. Corpus is large
-        # enough that per-task work dominates fixed stage latency AND the
-        # per-worker JW memo fill amortizes (4N cores spread the distinct
-        # pairs over 4× more python workers, so a too-small corpus
-        # charges the big configuration 4× the cache misses and
-        # understates its scaling); each phase is a subprocess pinned to
-        # its core budget with taskset.
-        n_conv_scaling = args.n_conversations or max(10000, int(sf * 2000000))
-        sp = 16 * args.n
-        scan_parts = 16 * 4 * args.n
-        have_taskset = shutil.which("taskset") is not None
-        tmpdir = tempfile.mkdtemp(prefix="bench_pairs_")
-        pairs_path = f"{tmpdir}/pairs"
-        try:
-            subprocess.run(
-                [sys.executable, __file__, "--prep-pairs",
-                 "--pairs-path", pairs_path,
-                 "--n-conversations", str(n_conv_scaling),
-                 "--shuffle-partitions", str(scan_parts)],
-                capture_output=True, text=True, check=True,
-            )
-            results = {}
-            for cores in (args.n, 4 * args.n):
-                cmd = []
-                if have_taskset:
-                    cmd = ["taskset", "-c", f"0-{cores - 1}"]
-                cmd += [
-                    sys.executable, __file__,
-                    "--one-shot-cores", str(cores),
-                    "--pairs-path", pairs_path,
-                    "--shuffle-partitions", str(sp),
-                ]
-                proc = subprocess.run(
-                    cmd, capture_output=True, text=True, check=True
-                )
-                results[cores] = json.loads(proc.stdout.strip().splitlines()[-1])
-        finally:
-            shutil.rmtree(tmpdir, ignore_errors=True)
-        lo, hi = args.n, 4 * args.n
-        eff = results[hi]["pairs_per_sec"] / (4 * results[lo]["pairs_per_sec"])
-        out = {
-            "metric": "scaling_efficiency",
-            "value": round(eff, 3),
-            "unit": "ratio",
-            "n_cores": lo,
-            "n4_cores": hi,
-            "pinned": have_taskset,
-            "results": results,
-            "n_conversations": n_conv_scaling,
-        }
-        print(json.dumps(out))
-        return
-
-    spark = get_spark(cores=CPUS, app_name="bench")
-    # JVM/codegen warmup so the first timed query isn't charged for init
-    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(1000).groupBy(
-        "l_returnflag"
-    ).count().collect()
+def run_default(spark, n_conv: int) -> dict:
+    """The headline suite, the ANN recall diagnostics and the linkage
+    throughput, as the one headline JSON line."""
+    _warm_up(spark, SF_DIR)
     times, spreads = run_headline(spark, SF_DIR)
     # recall@10 of the approximate ANN paths vs exact brute force — the
     # coverage diagnostic the reference prints for its candidate index
@@ -347,15 +976,14 @@ def main() -> None:
     )
     times["linkage_surface"] = round(surf_secs, 3)
     spreads["linkage_pairs"] = sorted(round(s, 3) for _, s in runs)
-    total = round(sum(times.values()), 3)
-    out = {
+    return {
         "metric": "headline_suite_sec",
-        "value": total,
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
         "query_trials": spreads,
         "trials_per_query": 3,
-        "sf": sf,
+        "sf": _sf_of(SF_DIR),
         "pairs_scored": n_pairs,
         "pairs_per_sec": round(n_pairs / secs, 1),
         "surface_pairs_scored": surf_pairs,
@@ -363,6 +991,45 @@ def main() -> None:
         "ann_recall_at_10": ann_recall,
         "ann_recall_clustered": ann_recall_clustered,
     }
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(
+        description="Benchmark harness: the headline suite by default."
+    )
+    ap.add_argument("--scaling", action="store_true",
+                    help="run linkage at local[N] and local[4N], report efficiency")
+    ap.add_argument("--n", type=int, default=8, help="N for the scaling run")
+    ap.add_argument("--n-conversations", type=int, default=None,
+                    help="linkage corpus size of the headline and scaling runs")
+    ap.add_argument("--section", metavar="NAME",
+                    help="run one section instead: " + ", ".join(SECTIONS)
+                    + "; or any declared query name")
+    ap.add_argument("--ab", metavar="COMMIT",
+                    help="same-box A/B of --section (default linkage) vs COMMIT")
+    ap.add_argument("--trials", type=int, default=3,
+                    help="interleaved subprocess trials per side for --ab")
+    args = ap.parse_args()
+    if args.section and args.section not in SECTIONS:
+        import __spark_entry__ as entrymod
+
+        if args.section not in entrymod.queries():
+            ap.error(f"no section or query named {args.section!r}")
+
+    if args.ab:
+        print(json.dumps(run_ab(args.ab, args.section or "linkage", args.trials)))
+        return
+    if args.scaling:
+        print(json.dumps(run_scaling(args.n, args.n_conversations)))
+        return
+    spark = get_spark(cores=DEFAULT_CPUS, app_name="bench")
+    if args.section:
+        from perfbench.spans import Tracer
+
+        _warm_up(spark, SF_DIR)
+        out = run_section(Tracer(spark), args.section)
+    else:
+        out = run_default(spark, args.n_conversations or _n_conv(SF_DIR))
     print(json.dumps(out))
     spark.stop()
 

@@ -110,22 +110,13 @@ def candidate_blocks(
     dictionary (~21M rows at reference scale) → broadcastable or a plain
     shuffle hash join at worst; Catalyst picks via AQE.
     """
-    from pboh_spark.util import bound_parallelism
-
     cands = name_stats.where(F.col("rank") <= top_k).select(
         F.col("name"), F.col("entity"), F.col("prob")
     )
-    # bound the branch's task width before the caller unions it with the
-    # LSH branch (the union SUMS both branches' partition counts and
-    # every downstream pass over the blocked table pays that many task
-    # launches); below the union the coalesce survives CollapseRepartition
-    return bound_parallelism(
-        mentions.join(cands, mentions["ngram"] == cands["name"], "inner")
-        .select(
-            F.concat(F.lit("e"), F.col("entity").cast("string")).alias("block_key"),
-            "conv_id", "turn_idx", "mention_id", "ngram",
-            F.col("entity").alias("cand_entity"), "prob",
-        )
+    return mentions.join(cands, mentions["ngram"] == cands["name"], "inner").select(
+        F.concat(F.lit("e"), F.col("entity").cast("string")).alias("block_key"),
+        "conv_id", "turn_idx", "mention_id", "ngram",
+        F.col("entity").alias("cand_entity"), "prob",
     )
 
 
@@ -148,20 +139,12 @@ def minhash_blocks(
             "ngram",
             "left_anti",
         )
-    from pboh_spark.util import bound_parallelism
-
     bands = minhash_band_keys_udf(n_hashes, n_bands)
-    # same width bound as candidate_blocks (see there): cheaper task
-    # launches for the union's downstream passes, no-op when the branch
-    # is already reasonably partitioned
-    return bound_parallelism(
-        m.withColumn("bk", F.explode(bands(F.col("ngram"))))
-        .select(
-            F.col("bk").alias("block_key"),
-            "conv_id", "turn_idx", "mention_id", "ngram",
-            F.lit(None).cast("bigint").alias("cand_entity"),
-            F.lit(None).cast("double").alias("prob"),
-        )
+    return m.withColumn("bk", F.explode(bands(F.col("ngram")))).select(
+        F.col("bk").alias("block_key"),
+        "conv_id", "turn_idx", "mention_id", "ngram",
+        F.lit(None).cast("bigint").alias("cand_entity"),
+        F.lit(None).cast("double").alias("prob"),
     )
 
 

@@ -84,10 +84,11 @@ def arrow_cosine_pairs(
     the dim axis in order (acc = acc + x·y, plain IEEE mul/add, no FMA)
     — the same left-to-right fold ``aggregate(zip_with(...))`` performs —
     then cosine = dot/(sqrt(na)·sqrt(nb)) with the identical zero-denom
-    NULL guard. Pinned row-for-row against the expression form in
-    tests/test_ops.py. Only ``id_cols + [a, b]`` cross the Python
-    boundary (project-before-opaque, guide §4.1); callers that must keep
-    other columns or fuse into a join keep ``with_cosine``.
+    NULL guard (a NaN element gives cosine NaN in both forms). Pinned
+    row-for-row against the expression form in tests/test_ops.py. Only
+    ``id_cols + [a, b]`` cross the Python boundary (project-before-opaque,
+    guide §4.1); callers that must keep other columns or fuse into a join
+    keep ``with_cosine``.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -140,7 +141,7 @@ def arrow_cosine_pairs(
                         na = na + x[k2] * x[k2]
                         nb = nb + y[k2] * y[k2]
                     denom = np.sqrt(na) * np.sqrt(nb)
-                    if denom > 0:
+                    if denom > 0 or np.isnan(denom):
                         cos[i] = dot / denom
                     else:
                         mask[i] = True
@@ -158,7 +159,9 @@ def arrow_cosine_pairs(
                     na += xk * xk
                     nb += yk * yk
                 denom = np.sqrt(na) * np.sqrt(nb)
-                ok = denom > 0
+                # Spark orders NaN above every number, so the expression
+                # form's denom > 0 keeps a NaN row (cosine NaN)
+                ok = (denom > 0) | np.isnan(denom)
                 cos = np.where(ok, dot / np.where(ok, denom, 1.0), 0.0)
                 carr = pa.array(cos, type=pa.float64(), mask=~ok)
             yield pa.RecordBatch.from_arrays(

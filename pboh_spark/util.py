@@ -33,6 +33,11 @@ def ensure_parallelism(
     Deterministic for results: every caller aggregates/joins by key
     downstream, so row-to-partition placement never reaches an output
     (the repo's partition-independence invariant).
+
+    Leaf-only: the partition-count probe is free on a scan or a cached
+    frame, which is what every caller passes. On a frame with an
+    exchange below it, the probe runs that exchange as a hidden Spark
+    job (under AQE), and the real action later recomputes it.
     """
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
@@ -40,32 +45,6 @@ def ensure_parallelism(
     if df.rdd.getNumPartitions() < trigger:
         return df.repartition(target)
     return df
-
-
-def bound_parallelism(df: DataFrame) -> DataFrame:
-    """Scale-relative CAP on a map stage's width (guide §2.2 "fewer,
-    larger map tasks for the stage feeding the shuffle").
-
-    Derived chains (e.g. each blocking branch over a cached mention
-    table) inherit their parent's partition count; when that is far
-    above the session parallelism the stage pays hundreds of near-empty
-    task launches. Coalesce to max(defaultParallelism, parts // 4):
-    the merge factor is bounded at 4× (partitions stay within the
-    128 MB–1 GB band the guide targets when they were data-sized) and
-    the width never drops below the core count, so no cluster is left
-    idle. The floor was 2× the core count until r6's continuation: the
-    bound only ever BINDS for small inputs (real corpora have parts//4
-    ≫ the floor), and there an interleaved A/B read 4.62 vs 5.08 s for
-    the linkage region at 1× vs 2× — fewer task launches beat the extra
-    balancing slack in exactly the regime the floor governs. Narrow
-    dependency — nothing is recomputed or shuffled.
-    NOTE: apply BELOW a union/other operator, never directly under a
-    repartition — Catalyst's CollapseRepartition would erase it there.
-    """
-    sc = df.sparkSession.sparkContext
-    parts = df.rdd.getNumPartitions()
-    target = max(sc.defaultParallelism, parts // 4)
-    return df.coalesce(target) if parts > target else df
 
 
 def release(*dfs: DataFrame) -> None:

@@ -111,7 +111,7 @@ def test_shingle_hashes_byte_identical_to_scalar_fnv():
 
 def test_salt_and_cap_semantic_invariants(spark):
     """The skew guard's three semantic invariants (measured side:
-    tools/skew_bench.py / BENCH.md; this pins the set semantics):
+    bench.py --section skew / BENCH.md; this pins the set semantics):
 
     1. row preservation — salting renames block keys, never drops,
        duplicates, or reassigns rows: the multiset of (base block key,
@@ -193,3 +193,22 @@ def test_salt_and_cap_semantic_invariants(spark):
         else:
             # untouched pair: the deterministic argmax must agree too
             assert ent == want_ent, pair
+
+
+def test_blocks_construction_runs_no_spark_job(spark, tiny, anchors, tmp_path):
+    """Building the blocking plan is lazy: on scan inputs (the pipeline's
+    shape) no partition-count probe or other eager call runs a Spark job
+    before the caller's own action."""
+    t, _ = tiny
+    normalize.extract_mentions(t).write.parquet(str(tmp_path / "mentions"))
+    stats.name_stats(anchors).write.parquet(str(tmp_path / "name_stats"))
+    mentions = spark.read.parquet(str(tmp_path / "mentions"))
+    ns = spark.read.parquet(str(tmp_path / "name_stats"))
+    sc = spark.sparkContext
+    group = "blocks-construction"
+    sc.setJobGroup(group, "build blocking.blocks without an action")
+    try:
+        blocking.blocks(mentions, ns)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

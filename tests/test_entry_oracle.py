@@ -87,3 +87,30 @@ def test_rows_only(spark, name):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+
+def test_linkage_queries_pin_only_what_their_result_reads(spark):
+    """A linkage query releases what it pins, except what its lazy result
+    still reads: the CC queries return frames over CC's checkpointed
+    labels (one entry each), and the threshold grid reads nothing
+    pinned. The first call of each builds the seeded corpus'
+    session-lifetime persists; a second call may add only those."""
+    result_pins = {
+        "pboh_e2e_clusters": 1,
+        "pboh_surface_clusters": 1,
+        "pboh_threshold_grid": 0,
+    }
+
+    def force(name):
+        _QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    for name in result_pins:
+        force(name)
+    for name, n in result_pins.items():
+        before = pinned()
+        force(name)
+        assert len(pinned() - before) == n, name

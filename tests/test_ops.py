@@ -488,19 +488,24 @@ def test_arrow_cosine_bit_parity_with_jvm_fold(spark, emb):
     got = simsearch.arrow_cosine_pairs(pairs, "va", "vb", ("id_a", "id_b"))
     assert got.exceptAll(ref).count() == 0
     assert ref.exceptAll(got).count() == 0
-    # degenerate rows: zero-norm -> NULL, null vector -> NULL, both engines
+    # degenerate rows: zero-norm -> NULL, null vector -> NULL, NaN element
+    # -> NaN (Spark's NaN > 0 keeps it), both engines
     fix = spark.createDataFrame(
         [
             (1, [0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),
             (2, [1.0, 0.5, -2.0], [4.0, 3.0, 2.0]),
             (3, None, [1.0, 1.0, 1.0]),
+            (4, [1.0, float("nan"), 2.0], [1.0, 1.0, 1.0]),
         ],
         "id bigint, va array<double>, vb array<double>",
     )
     fref = simsearch.with_cosine(fix, "va", "vb").select("id", "cosine")
-    fgot = simsearch.arrow_cosine_pairs(fix, "va", "vb", ("id",))
-    assert fgot.exceptAll(fref).count() == 0
-    assert fref.exceptAll(fgot).count() == 0
+    # spread over partitions (the null-free fast path) and in one batch
+    # with the null row (the slow path)
+    for f in (fix, fix.coalesce(1)):
+        fgot = simsearch.arrow_cosine_pairs(f, "va", "vb", ("id",))
+        assert fgot.exceptAll(fref).count() == 0
+        assert fref.exceptAll(fgot).count() == 0
     # ragged batch (one partition, so one Arrow batch): the fast path
     # must fail loudly, even when the value count happens to equal n*dim
     ragged = spark.createDataFrame(
