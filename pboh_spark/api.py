@@ -25,7 +25,9 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from pboh_spark.resolve import LAMBDA_FLOOR, _pack, _solve_conv
+from pboh_spark.resolve import (
+    LAMBDA_FLOOR, _pack, _solve_conv, backoff_lam_const,
+)
 from pboh_spark.stats import ScorerWeights
 from pboh_spark.util import release
 
@@ -162,13 +164,7 @@ class EntityLinker:
             )
             for r in lam_rows
         }
-        if scalars:
-            n = float(max(scalars.get("num_total_pairs", 1), 1))
-            d = float(max(scalars.get("num_distinct_pairs", 1), 1))
-            backoff = max(n - w.delta_cocit * d, 1e-9) / n
-            lam_const = float(np.log(backoff) - np.log(n))
-        else:
-            lam_const = LAMBDA_FLOOR
+        lam_const = backoff_lam_const(scalars, w) if scalars else LAMBDA_FLOOR
         return cls(cand, pop, lam, lam_const, w)
 
     def link(

@@ -20,11 +20,13 @@ Reference parity (file:line in /root/reference/src/main/scala/):
   partial results reduced, then one driver-side update per round.
 
 Spark recast: the reference runs per-worker *stochastic* SGD and merges
-weight deltas; here each round is ONE deterministic full-batch job —
-per-conversation losses/gradients from the same cogrouped
-``applyInPandas`` shape as the LBP kernel (all tensors already exist in
-resolve.py), merged by a fixed-point aggregate, AdaGrad'd driver-side.
-Same merge topology, but reproducible: results are bit-identical at any
+weight deltas; here each round is ONE deterministic full-batch job. One
+cogrouped ``applyInPandas`` on conv_id — the LBP kernel's shape and its
+tensor builder, resolve.conv_tensors — assembles the weight-independent
+per-conversation contractions once per fit; each round is then a
+shuffle-free ``mapInPandas`` that evaluates loss/gradients and
+partial-sums them per partition, AdaGrad'd driver-side. Same merge
+topology, but reproducible: results are bit-identical at any
 partitioning because per-conversation float results are quantized to
 integer 1e-9 units before the (order-independent) long sum — float
 addition order across partitions can never leak into the fitted weights,
@@ -58,14 +60,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pboh_spark.resolve import LAMBDA_FLOOR, _pack
+from pboh_spark.resolve import LAMBDA_FLOOR, _pack, conv_tensors, pair_map
 from pboh_spark.stats import ScorerWeights
 from pboh_spark.util import release
 
-GRAD_SCHEMA = (
-    "conv_id string, loss double, g_f double, g_g double, g_h double, "
-    "g_b double, n_mentions int"
-)
 CLAMP = 10.0  # FewParamsLearning.scala:330 log_factor discard threshold
 MAX_DOC = 25  # FewParamsLearning.scala:364
 _FIXED = 1e9  # fixed-point quantum for the order-independent merge
@@ -206,92 +204,27 @@ def _pl_conv(
     )
 
 
-def _conv_tensors(cand: pd.DataFrame, lam: pd.DataFrame):
-    """Pandas → dense per-conversation tensors (shared by the one-shot
-    gradient kernel and the r6 preassembly kernel): returns
-    (ents, rho, logpop, surfaces, gold_ent, gold_idx, c0_map, c1_map,
-    ctx_or_None)."""
-    c0_map, c1_map = {}, {}
-    if len(lam):
-        pk = _pack(
-            lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64)
-        )
-        c0_map = dict(zip(pk, lam["log_smoothed"].to_numpy(np.float64)))
-        c1_map = dict(zip(pk, lam["lp_sum"].to_numpy(np.float64)))
-    cand = cand.sort_values(["mention_id", "entity"])
-    mids = cand["mention_id"].unique()
-    L = len(mids)
-    ents_k = cand.groupby("mention_id")["entity"].size()
-    K = int(ents_k.max())
-    ents = np.full((L, K), -1, dtype=np.int64)
-    rho = np.full((L, K), -1.0e30, dtype=np.float64)
-    logpop = np.zeros((L, K), dtype=np.float64)
-    has_ctx = "ctx_evidence" in cand.columns
-    ctx = np.zeros((L, K), dtype=np.float64) if has_ctx else None
-    surfaces = np.empty(L, dtype=object)
-    gold_ent = np.zeros(L, dtype=np.int64)
-    gold_idx = np.full(L, -1, dtype=np.int64)
-    for i, (_, grp) in enumerate(cand.groupby("mention_id", sort=True)):
-        k = len(grp)
-        e = grp["entity"].to_numpy()
-        ents[i, :k] = e
-        rho[i, :k] = grp["rho"].to_numpy()
-        logpop[i, :k] = grp["log_pop"].fillna(0.0).to_numpy(np.float64)
-        if has_ctx:
-            ctx[i, :k] = (
-                grp["ctx_evidence"].fillna(0.0).to_numpy(np.float64)
-            )
-        surfaces[i] = grp["ngram"].iloc[0]
-        ge = int(grp["gold_entity"].iloc[0])
-        gold_ent[i] = ge
-        hit = np.nonzero(e[:k] == ge)[0]
-        if len(hit):
-            gold_idx[i] = int(hit[0])
-    return ents, rho, logpop, surfaces, gold_ent, gold_idx, c0_map, c1_map, ctx
-
-
-def _grad_kernel(w: ScorerWeights, lam_const: float):
-    def solve(cand: pd.DataFrame, lam: pd.DataFrame) -> pd.DataFrame:
-        cols = ["conv_id", "loss", "g_f", "g_g", "g_h", "g_b", "n_mentions"]
-        if cand.empty:
-            return pd.DataFrame(columns=cols)
-        conv = cand["conv_id"].iloc[0]
-        (ents, rho, logpop, surfaces, gold_ent, gold_idx,
-         c0_map, c1_map, ctx) = _conv_tensors(cand, lam)
-        loss, g, n = _pl_conv(
-            ents, rho, logpop, surfaces, gold_ent, gold_idx,
-            c0_map, c1_map, w, lam_const, ctx=ctx,
-        )
-        return pd.DataFrame(
-            {"conv_id": [conv], "loss": [loss], "g_f": [g[0]],
-             "g_g": [g[1]], "g_h": [g[2]], "g_b": [g[3]],
-             "n_mentions": [n]}
-        )
-
-    return solve
-
-
 PRE_SCHEMA = "conv_id string, blob binary"
 
 
 def _assemble_kernel(lam_const: float):
     """Cogroup kernel for the ONE-TIME weight-independent preassembly:
-    per conversation, build the dense tensors, run ``_pl_prepare``, and
-    pickle the resulting contractions into a single binary cell."""
+    per conversation, build the dense tensors (resolve.conv_tensors, the
+    LBP kernel's builder), run ``_pl_prepare``, and pickle the resulting
+    contractions into a single binary cell."""
     import pickle
 
     def assemble(cand: pd.DataFrame, lam: pd.DataFrame) -> pd.DataFrame:
         if cand.empty:
             return pd.DataFrame(columns=["conv_id", "blob"])
-        conv = cand["conv_id"].iloc[0]
-        (ents, rho, logpop, surfaces, gold_ent, gold_idx,
-         c0_map, c1_map, ctx) = _conv_tensors(cand, lam)
+        t = conv_tensors(cand)
         pre = _pl_prepare(
-            ents, rho, logpop, surfaces, gold_ent, gold_idx,
-            c0_map, c1_map, lam_const, ctx=ctx,
+            t.ents, t.rho, t.logpop, t.surfaces, t.gold_ent, t.gold_idx,
+            pair_map(lam, "log_smoothed"), pair_map(lam, "lp_sum"),
+            lam_const, ctx=t.ctx,
         )
         return pd.DataFrame(
-            {"conv_id": [conv],
+            {"conv_id": [cand["conv_id"].iloc[0]],
              "blob": [pickle.dumps(pre, protocol=pickle.HIGHEST_PROTOCOL)]}
         )
 
@@ -302,11 +235,13 @@ def preassembled_convs(
     cand_gold: DataFrame, conv_lambdas: DataFrame, lam_const: float
 ) -> DataFrame:
     """(conv_id, blob) — the weight-independent per-conversation
-    contractions, computed by the SAME cogrouped exchange shape as
-    ``pseudolikelihood_grads`` but only once per fit instead of once per
-    round. Rounds then re-evaluate ``_pl_round`` over this table (a
-    narrow mapInPandas with no shuffle), so an n-round fit pays one
-    assembly shuffle + n cheap scans rather than n assembly shuffles."""
+    contractions, computed once per fit by one cogrouped exchange on
+    conv_id (the LBP kernel's shape, resolve.resolve_entities). Rounds
+    then re-evaluate ``_pl_round`` over this table (a narrow mapInPandas
+    with no shuffle, ``_fused_round_kernel``), so an n-round fit pays one
+    assembly shuffle + n cheap scans. ``conv_lambdas`` carries (conv_id,
+    e1, e2, log_smoothed, lp_sum) (resolve.conv_lambda_pairs(...,
+    value_cols=("log_smoothed", "lp_sum")))."""
     return (
         cand_gold.groupBy("conv_id")
         .cogroup(conv_lambdas.groupBy("conv_id"))
@@ -396,46 +331,6 @@ def learning_candidates(
     )
 
 
-def pseudolikelihood_grads(
-    cand_gold: DataFrame,
-    conv_lambdas: DataFrame,
-    weights: ScorerWeights,
-    lam_const: float = LAMBDA_FLOOR,
-) -> DataFrame:
-    """Per-conversation (loss, ∂f, ∂g, ∂h, ∂b) — one cogrouped Arrow
-    exchange on conv_id, the same distribution shape as
-    resolve.resolve_entities. ``conv_lambdas`` must carry (conv_id, e1,
-    e2, log_smoothed, lp_sum)
-    (resolve.conv_lambda_pairs(..., value_cols=("log_smoothed","lp_sum")))."""
-    lam = conv_lambdas.localCheckpoint(eager=False)
-    return (
-        cand_gold.groupBy("conv_id")
-        .cogroup(lam.groupBy("conv_id"))
-        .applyInPandas(_grad_kernel(weights, lam_const), GRAD_SCHEMA)
-    )
-
-
-def _merge_round(grads: DataFrame) -> tuple[float, np.ndarray, int]:
-    """Order-independent merge: per-conv doubles quantized to 1e-9 units,
-    summed as longs (exact integer addition commutes — the result is
-    bit-identical at any partitioning), then un-scaled to per-conv means.
-    ≙ Learning.scala:296-361's reduce-then-finalMerge, made deterministic."""
-    q = lambda c: F.sum(F.round(F.col(c) * _FIXED).cast("long")).alias(c)  # noqa: E731
-    row = grads.agg(
-        q("loss"), q("g_f"), q("g_g"), q("g_h"), q("g_b"),
-        F.sum(F.when(F.col("n_mentions") > 0, 1).otherwise(0)).alias("n_convs"),
-    ).collect()[0]
-    n = int(row["n_convs"] or 0)
-    if n == 0:
-        return 0.0, np.zeros(4), 0
-    loss = row["loss"] / _FIXED / n
-    g = (
-        np.array([row["g_f"], row["g_g"], row["g_h"], row["g_b"]])
-        / _FIXED / n
-    )
-    return float(loss), g, n
-
-
 def learn_weights(
     cand_gold: DataFrame,
     conv_lambdas: DataFrame,
@@ -461,12 +356,7 @@ def learn_weights(
     Returns (fitted weights, history) where history[r] =
     {round, loss, f, g, h, b} recorded AFTER round r's update;
     history[0] is the init evaluation (no update). Deterministic at any
-    parallelism (see _merge_round).
-
-    The round loop turns ``spark.sql.adaptive.enabled`` off session-wide
-    (AQE has nothing to adapt in a scan→agg over a cached table; 0.77 vs
-    0.84 s per round on a 4-core box). Unsafe while the session runs
-    other queries concurrently: they would plan without AQE."""
+    parallelism (see _fused_round_kernel). Session conf is left alone."""
     w = init or ScorerWeights()
     pr = np.array(priors if priors is not None else (w.f, w.g, w.h, w.b))
     # r6: the λ probes and neighbor-sum contractions are weight-
@@ -480,18 +370,14 @@ def learn_weights(
     # the cogroup inherits the full shuffle-partition count; re-reading
     # 200 near-empty cached partitions per round costs more task/worker
     # launches than the round's arithmetic. Coalesce the ROUND VIEW to a
-    # rows-derived width (~256 conversations per task, floor 1) — a
-    # narrow dependency over the cache, so nothing is recomputed, and
-    # the quantized integer merge makes the result partitioning-
-    # independent by construction.
-    n_pre = pre.count()
-    parts = max(1, min(pre.rdd.getNumPartitions(), n_pre // 256 + 1))
-    pre_eval = pre.coalesce(parts)
+    # rows-derived width (~256 conversations per task; coalesce never
+    # raises the count) — a narrow dependency over the cache, so nothing
+    # is recomputed, and the quantized integer merge makes the result
+    # partitioning-independent by construction. The count materializes
+    # the cache.
+    pre_eval = pre.coalesce(pre.count() // 256 + 1)
     sq = np.zeros(4)
     history: list[dict] = []
-    spark = cand_gold.sparkSession
-    aqe_prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         for r in range(n_rounds + 1):
             # r6: one-stage round — the kernel quantizes and partial-sums
@@ -529,6 +415,5 @@ def learn_weights(
                 h = -15.0 / gg
             w = replace(w, f=float(f), g=float(gg), h=float(h), b=float(b))
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prior)
         release(pre, conv_lambdas)
     return w, history

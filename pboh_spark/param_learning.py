@@ -44,7 +44,7 @@ Reference parity (file:line in /root/reference/src/main/scala/):
 
 Determinism: per-conversation gradient rows are quantized to integer
 1e-9 units and merged with an order-independent long sum per parameter
-key (the same fixed-point trick as learning._merge_round), the AdaGrad
+key (the fixed-point rule learning._quantize reproduces), the AdaGrad
 state lives in the parameter DataFrames themselves, and the driver
 holds nothing but the round counter and loss history — so the fit is
 bit-identical at any partitioning and golden-oracle checkable, and at
@@ -60,11 +60,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pboh_spark.learning import CLAMP, MAX_DOC, _FIXED
-from pboh_spark.resolve import LAMBDA_FLOOR, _pack
+from pboh_spark.resolve import (
+    LAMBDA_FLOOR, _pack, conv_entity_pairs, conv_tensors, pair_map,
+)
 from pboh_spark.stats import ScorerWeights
 from pboh_spark.util import release
 
-PGRAD_SCHEMA = (
+GRAD_ROWS_SCHEMA = (
     "conv_id string, kind string, ngram string, e1 long, e2 long, val double"
 )
 READ_CLAMP = 15.0  # Learning.scala:440-443 (applied at update here)
@@ -108,8 +110,7 @@ def _ppl_conv(
     lam_map: dict[int, float],      # packed pair -> effective lambda
     train_keys: np.ndarray,         # SORTED int64 packed pairs with a
                                     # parameter row (built once per group
-                                    # in _pgrad_kernel — no per-call
-                                    # set/fromiter conversion)
+                                    # in _pgrad_kernel)
     w: ScorerWeights,
     lam_const: float = LAMBDA_FLOOR,
 ) -> tuple[float, dict, dict, int]:
@@ -202,42 +203,15 @@ def _pgrad_kernel(w: ScorerWeights, lam_const: float):
         if cand.empty:
             return pd.DataFrame(columns=cols)
         conv = cand["conv_id"].iloc[0]
-        lam_map: dict[int, float] = {}
-        train_keys = np.empty(0, dtype=np.int64)
-        if len(lam):
-            pk = _pack(
-                lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64)
-            )
-            lam_map = dict(zip(pk, lam["lam_eff"].to_numpy(np.float64)))
-            # vectorized once per group; sorted for np.isin's binary path
-            train_keys = np.unique(
-                pk[lam["trainable"].to_numpy(np.bool_)]
-            )
-        cand = cand.sort_values(["mention_id", "entity"])
-        mids = cand["mention_id"].unique()
-        L = len(mids)
-        K = int(cand.groupby("mention_id")["entity"].size().max())
-        ents = np.full((L, K), -1, dtype=np.int64)
-        rho_w = np.full((L, K), -1.0e30, dtype=np.float64)
-        logpop = np.zeros((L, K), dtype=np.float64)
-        surfaces = np.empty(L, dtype=object)
-        gold_ent = np.zeros(L, dtype=np.int64)
-        gold_idx = np.full(L, -1, dtype=np.int64)
-        for i, (_, grp) in enumerate(cand.groupby("mention_id", sort=True)):
-            k = len(grp)
-            e = grp["entity"].to_numpy()
-            ents[i, :k] = e
-            rho_w[i, :k] = grp["rho_w"].to_numpy()
-            logpop[i, :k] = grp["log_pop"].fillna(0.0).to_numpy(np.float64)
-            surfaces[i] = grp["ngram"].iloc[0]
-            ge = int(grp["gold_entity"].iloc[0])
-            gold_ent[i] = ge
-            hit = np.nonzero(e[:k] == ge)[0]
-            if len(hit):
-                gold_idx[i] = int(hit[0])
+        t = conv_tensors(cand)
+        # sorted for np.isin's binary path, built once per group
+        train_keys = np.array(
+            sorted(k for k, tr in pair_map(lam, "trainable").items() if tr),
+            dtype=np.int64,
+        )
         loss, rho_g, lam_g, n = _ppl_conv(
-            ents, rho_w, logpop, surfaces, gold_ent, gold_idx,
-            lam_map, train_keys, w, lam_const,
+            t.ents, t.rho, t.logpop, t.surfaces, t.gold_ent, t.gold_idx,
+            pair_map(lam, "lam_eff"), train_keys, w, lam_const,
         )
         rows = [
             {"conv_id": conv, "kind": "loss", "ngram": None,
@@ -267,19 +241,9 @@ def _conv_entity_pairs(cand_gold: DataFrame) -> DataFrame:
     parameter table (guide §1.2: hoist weight-independent work out of
     the round loop, the same discipline as learning.learn_weights'
     preassembly)."""
-    ce = cand_gold.select("conv_id", "entity").distinct()
-    gd = cand_gold.select(
-        "conv_id", F.col("gold_entity").alias("entity")
-    ).distinct()
-    ents = ce.unionByName(gd).distinct()
-    a, b = ents.alias("a"), ents.alias("b")
-    return (
-        a.join(b, "conv_id")
-        .where(F.col("a.entity") <= F.col("b.entity"))
-        .select(
-            "conv_id",
-            F.col("a.entity").alias("e1"),
-            F.col("b.entity").alias("e2"),
+    return conv_entity_pairs(
+        cand_gold.select("conv_id", "entity").unionByName(
+            cand_gold.select("conv_id", F.col("gold_entity").alias("entity"))
         )
     )
 
@@ -344,10 +308,9 @@ def learn_param_tables(
     in_flight: list = []  # this round's λ slice and merge, released on ANY exit
     try:
         for r in range(n_rounds):
-            cg = cand_gold.join(
-                rho_p.select(
-                    "ngram", "entity", F.col("w").alias("rho_w")
-                ),
+            # the current parameter IS the kernel's rho
+            cg = cand_gold.drop("rho").join(
+                rho_p.select("ngram", "entity", F.col("w").alias("rho")),
                 ["ngram", "entity"], "inner",
             )
             # rename the λ side's key: both cogroup sides descend from
@@ -362,7 +325,7 @@ def learn_param_tables(
             grads = (
                 cg.groupBy("conv_id")
                 .cogroup(lam_ck.groupBy("conv_id_l"))
-                .applyInPandas(_pgrad_kernel(w, lam_const), PGRAD_SCHEMA)
+                .applyInPandas(_pgrad_kernel(w, lam_const), GRAD_ROWS_SCHEMA)
             )
             # fixed-point merge per parameter key (order-independent)
             merged = grads.groupBy("kind", "ngram", "e1", "e2").agg(

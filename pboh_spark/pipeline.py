@@ -198,18 +198,12 @@ def run_pipeline(
                 "final_loss": float(last["loss"]),
             }
 
-        def _lam_at_serving_h(tbl: DataFrame) -> DataFrame:
-            """THE λ-baseline rule shared by the param fit and the
-            serving stage: with fitted weights, stored potentials are
-            re-evaluated from the affine columns at the fitted h —
-            round 0 of the param fit must reproduce exactly what
-            serving computes, so there is ONE copy of this expression."""
-            if weights is None:
-                return tbl
-            return tbl.withColumn(
-                "lambda_potential",
-                F.col("log_smoothed") - F.lit(weights.h) * F.col("lp_sum"),
-            )
+        # with fitted weights, stored potentials are re-evaluated at the
+        # fitted h (the checkpointed lambda_potential was baked at the
+        # prior h); the param fit's round 0 and serving both read this
+        lam_tbl = (
+            lam if weights is None else resolve.lambda_at_h(lam, weights.h)
+        )
 
         param_tables = None
         if learn_params:
@@ -225,7 +219,7 @@ def run_pipeline(
                 cg = learning.learning_candidates(cand, mentions, learn_gold)
                 w_fit = weights or ScorerWeights()
                 rho_p, lam_p, hist = param_learning.learn_param_tables(
-                    cg, _lam_at_serving_h(lam), weights=w_fit,
+                    cg, lam_tbl, weights=w_fit,
                     n_rounds=param_rounds,
                     lam_const=resolve.backoff_lam_const(scalars),
                 )
@@ -278,42 +272,21 @@ def run_pipeline(
             }
 
         def build_assignments() -> DataFrame:
+            c, tbl = cand, lam_tbl
             if param_tables is not None:
                 from pboh_spark import param_learning
 
-                # base λ table at the serving h (the SAME rule the fit
-                # saw), then the learned pair parameters override, then
-                # the learned rho parameters override the candidate priors
-                base_tbl = _lam_at_serving_h(lam)
-                c2 = param_learning.serve_candidates(
+                # learned pair parameters override the λ table, learned
+                # rho parameters the candidate priors
+                c = param_learning.serve_candidates(
                     cand, mentions, param_tables[0]
                 )
-                return resolve.resolve_entities(
-                    c2,
-                    resolve.conv_lambda_pairs(
-                        c2,
-                        param_learning.serve_lambda_table(
-                            base_tbl, param_tables[1]
-                        ),
-                    ),
-                    weights=weights, max_product=True, scalars=scalars,
-                )
-            if weights is None:
-                conv_lam = resolve.conv_lambda_pairs(cand, lam)
-            else:
-                # the fitted h must reach STORED pairs too, not just the
-                # kernel's backoff default — re-evaluate from the affine
-                # coefficients at the learned h (the checkpointed
-                # lambda_potential was baked at the prior h)
-                conv_lam = resolve.lambda_at_h(
-                    resolve.conv_lambda_pairs(
-                        cand, lam, value_cols=("log_smoothed", "lp_sum")
-                    ),
-                    weights.h,
+                tbl = param_learning.serve_lambda_table(
+                    lam_tbl, param_tables[1]
                 )
             return resolve.resolve_entities(
-                cand, conv_lam, weights=weights, max_product=True,
-                scalars=scalars,
+                c, resolve.conv_lambda_pairs(c, tbl), weights=weights,
+                max_product=True, scalars=scalars,
             )
 
         # fitted-weights assignments checkpoint under their own stage name

@@ -30,12 +30,14 @@ normalizes to Σexp = 1 (LoopyBeliefPropagation.scala:195-230).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pboh_spark.stats import ScorerWeights
+from pboh_spark.stats import ScorerWeights, backoff_mass
 
 MAX_ITER = 15  # eval/VerifyEDLBPForListOfWords.scala:35
 EPS = 1e-5  # LoopyBeliefPropagation.scala:33
@@ -168,6 +170,73 @@ def _solve_conv(
     return best, best_score, iters, converged
 
 
+class ConvTensors(NamedTuple):
+    """One conversation's CRF as dense tensors, rows in mention_id order
+    and candidates in entity order. A field is ``None`` when the
+    candidate frame lacks its column."""
+
+    mids: np.ndarray  # (L,) mention ids, ascending
+    ents: np.ndarray  # (L, K) candidate entity ids, -1 padding
+    rho: np.ndarray  # (L, K) unary potentials, NEG padding
+    logpop: np.ndarray | None  # (L, K) 'log_pop', 0.0 pad
+    ctx: np.ndarray | None  # (L, K) 'ctx_evidence', 0.0 pad
+    surfaces: np.ndarray | None  # (L,) mention strings ('ngram')
+    gold_ent: np.ndarray | None  # (L,) gold entity ids ('gold_entity')
+    gold_idx: np.ndarray | None  # (L,) gold's candidate slot, -1 if absent
+
+
+def conv_tensors(cand: pd.DataFrame) -> ConvTensors:
+    """The pandas → numpy step of every per-conversation kernel (LBP,
+    the weight-fit preassembly, the parameter-fit gradients): scatter
+    one conversation's candidate rows into (L, K) tensors, one row per
+    mention (mention_id asc), candidates by entity asc — the stable
+    argmax tie-break of the LBP kernel."""
+    cand = cand.sort_values(["mention_id", "entity"])
+    mids, first, row = np.unique(
+        cand["mention_id"].to_numpy(), return_index=True, return_inverse=True
+    )
+    slot = np.arange(len(cand)) - first[row]  # position inside the mention
+    L, K = len(mids), int(slot.max()) + 1
+
+    def dense(vals: pd.Series, fill, dtype=np.float64) -> np.ndarray:
+        out = np.full((L, K), fill, dtype=dtype)
+        out[row, slot] = vals.to_numpy(dtype)
+        return out
+
+    def evidence(col: str) -> np.ndarray | None:  # nulls read as 0.0
+        if col not in cand.columns:
+            return None
+        return dense(cand[col].fillna(0.0), 0.0)
+
+    ents = dense(cand["entity"], -1, np.int64)
+    surfaces = gold_ent = gold_idx = None
+    if "ngram" in cand.columns:
+        surfaces = cand["ngram"].to_numpy(object)[first]
+    if "gold_entity" in cand.columns:
+        gold_ent = cand["gold_entity"].to_numpy(np.int64)[first]
+        gold_idx = np.full(L, -1, dtype=np.int64)
+        hit = np.nonzero(ents[row, slot] == gold_ent[row])[0]
+        rows_hit, h = np.unique(row[hit], return_index=True)
+        gold_idx[rows_hit] = slot[hit[h]]
+    return ConvTensors(
+        mids, ents, dense(cand["rho"], NEG), evidence("log_pop"),
+        evidence("ctx_evidence"), surfaces, gold_ent, gold_idx,
+    )
+
+
+def pair_map(lam: pd.DataFrame, col: str) -> dict[int, float]:
+    """One conversation's pair rows as packed (e1, e2) → ``col`` — the
+    per-document CocitationMap the kernels probe."""
+    if not len(lam):
+        return {}
+    return dict(
+        zip(
+            _pack(lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64)),
+            lam[col].to_numpy(np.float64),
+        )
+    )
+
+
 def _kernel(weights: ScorerWeights, max_product: bool, lam_const: float):
     def solve(cand: pd.DataFrame, lam: pd.DataFrame) -> pd.DataFrame:
         if cand.empty:
@@ -177,41 +246,16 @@ def _kernel(weights: ScorerWeights, max_product: bool, lam_const: float):
                     "n_iters", "converged",
                 ]
             )
-        conv = cand["conv_id"].iloc[0]
-        lam_map = dict(
-            zip(
-                _pack(
-                    lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64)
-                ),
-                lam["lambda_potential"].to_numpy(np.float64),
-            )
-        ) if len(lam) else {}
-        # deterministic order: mention_id asc, entity asc (stable tie-break)
-        cand = cand.sort_values(["mention_id", "entity"])
-        mids = cand["mention_id"].unique()
-        L = len(mids)
-        K = int(cand.groupby("mention_id")["entity"].size().max())
-        ents = np.full((L, K), -1, dtype=np.int64)
-        rho = np.full((L, K), NEG, dtype=np.float64)
-        logpop = np.zeros((L, K), dtype=np.float64)
-        has_pop = "log_pop" in cand.columns
-        for i, (_, grp) in enumerate(cand.groupby("mention_id", sort=True)):
-            k = len(grp)
-            ents[i, :k] = grp["entity"].to_numpy()
-            rho[i, :k] = grp["rho"].to_numpy()
-            if has_pop:
-                logpop[i, :k] = (
-                    grp["log_pop"].fillna(0.0).to_numpy(dtype=np.float64)
-                )
+        t = conv_tensors(cand)
         best, score, iters, conv_ok = _solve_conv(
-            ents, rho, lam_map, weights, max_product,
-            logpop=logpop if has_pop else None, lam_const=lam_const,
+            t.ents, t.rho, pair_map(lam, "lambda_potential"), weights,
+            max_product, logpop=t.logpop, lam_const=lam_const,
         )
         return pd.DataFrame(
             {
-                "conv_id": conv,
-                "mention_id": mids,
-                "entity": ents[np.arange(L), best],
+                "conv_id": cand["conv_id"].iloc[0],
+                "mention_id": t.mids,
+                "entity": t.ents[np.arange(len(t.mids)), best],
                 "score": score,
                 "n_iters": iters,
                 "converged": conv_ok,
@@ -221,24 +265,20 @@ def _kernel(weights: ScorerWeights, max_product: bool, lam_const: float):
     return solve
 
 
-def lambda_at_h(conv_affine: DataFrame, h: float) -> DataFrame:
-    """Re-evaluate conversation-local potentials at a (re-fit) h weight
-    from the affine coefficients carried by
-    ``conv_lambda_pairs(..., value_cols=("log_smoothed", "lp_sum"))``:
+def lambda_at_h(df: DataFrame, h: float) -> DataFrame:
+    """Replace ``lambda_potential`` by its value at the (re-fit) h weight,
+    from the affine coefficients any λ frame carries — the stats table
+    (stats.with_lambda_potential) or its conversation-local slice
+    (``conv_lambda_pairs(..., value_cols=("log_smoothed", "lp_sum"))``):
 
         λ(h) = log_smoothed − h·lp_sum
 
     This is THE consistency rule between training and inference — the
-    same decomposition stats.with_lambda_potential emits and the
-    learning kernel differentiates. Fitted-weight inference must come
-    through here rather than reusing a lambda_potential baked at the
-    prior h (used by pipeline --learn-weights and the
-    pboh_resolve_lbp_fitted contract query)."""
-    return conv_affine.select(
-        "conv_id", "e1", "e2",
-        (
-            F.col("log_smoothed") - F.lit(h) * F.col("lp_sum")
-        ).alias("lambda_potential"),
+    decomposition the learning kernels differentiate. Fitted-weight
+    inference and the parameter fit's baseline come through here rather
+    than reusing a lambda_potential baked at the prior h."""
+    return df.withColumn(
+        "lambda_potential", F.col("log_smoothed") - F.lit(h) * F.col("lp_sum")
     )
 
 
@@ -247,13 +287,28 @@ def backoff_lam_const(
 ) -> float:
     """Closed-form independence-backoff constant log((N − δ·D)/N) − log N
     for entity pairs absent from the lambda table (ScorerFull.scala:
-    212-213 recast; N = total pairs, D = distinct pairs). Shared by the
-    LBP kernel and the learning kernel so both back off identically."""
-    w = w or ScorerWeights()
-    n = float(max(scalars.get("num_total_pairs", 1), 1))
-    d = float(max(scalars.get("num_distinct_pairs", 1), 1))
-    backoff = max(n - w.delta_cocit * d, 1e-9) / n
+    212-213 recast; see stats.backoff_mass). Shared by the LBP kernel,
+    both fits and the driver-side linker so all back off identically."""
+    backoff, n = backoff_mass(scalars, w)
     return float(np.log(backoff) - np.log(n))
+
+
+def conv_entity_pairs(conv_ents: DataFrame) -> DataFrame:
+    """(conv_id, e1, e2) with e1 ≤ e2 (diagonal included) over each
+    conversation's distinct entities of a (conv_id, entity) frame — the
+    conversation self-join both the serving probe and the parameter fit
+    build on."""
+    ce = conv_ents.select("conv_id", "entity").distinct()
+    a, b = ce.alias("a"), ce.alias("b")
+    return (
+        a.join(b, "conv_id")
+        .where(F.col("a.entity") <= F.col("b.entity"))
+        .select(
+            "conv_id",
+            F.col("a.entity").alias("e1"),
+            F.col("b.entity").alias("e2"),
+        )
+    )
 
 
 def conv_lambda_pairs(
@@ -265,23 +320,12 @@ def conv_lambda_pairs(
     (conv_id, e1, e2, *value_cols). Distinct conv entities self-join
     on conv_id (anti-diagonal) then probe the global lambda table — the
     distributed CocitationMap build (CocitationMap.scala:24-47), one
-    shuffle instead of per-doc hash probes. Missing pairs take the −1000
-    floor inside the kernel. Weight learning passes
+    shuffle instead of per-doc hash probes. Missing pairs take the
+    closed-form backoff inside the kernel. Weight learning passes
     ``value_cols=("log_smoothed", "lp_sum")`` to carry the h-affine λ
     coefficients instead of the evaluated potential.
     """
-    ce = candidates.select("conv_id", "entity").distinct()
-    a = ce.alias("a")
-    b = ce.alias("b")
-    pairs = (
-        a.join(b, "conv_id")
-        .where(F.col("a.entity") <= F.col("b.entity"))  # diagonal included
-        .select(
-            "conv_id",
-            F.col("a.entity").alias("e1"),
-            F.col("b.entity").alias("e2"),
-        )
-    )
+    pairs = conv_entity_pairs(candidates)
     # explicit alias mints a FRESH conv_id attribute: the caller cogroups
     # this output against the candidate table it was derived from, and a
     # shared attribute id trips Spark's ambiguous-self-join analysis when

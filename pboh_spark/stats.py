@@ -159,6 +159,19 @@ def cooccurrence(anchors: DataFrame, min_cocit: int = 1) -> DataFrame:
     return pairs.where(F.col("cocit") >= min_cocit)
 
 
+def backoff_mass(
+    scalars: dict[str, int], w: ScorerWeights | None = None
+) -> tuple[float, float]:
+    """((N − δ·D)/N, N): the independence-backoff mass of the smoothed
+    co-citation count (ScorerFull.scala:212-213), N = num_total_pairs,
+    D = num_distinct_pairs — the one copy of the formula behind the λ
+    table and resolve.backoff_lam_const."""
+    w = w or ScorerWeights()
+    n = float(max(scalars.get("num_total_pairs", 1), 1))
+    d = float(max(scalars.get("num_distinct_pairs", 1), 1))
+    return max(n - w.delta_cocit * d, 1e-9) / n, n
+
+
 def with_lambda_potential(
     pairs: DataFrame,
     ent_stats: DataFrame,
@@ -188,9 +201,7 @@ def with_lambda_potential(
     resolve.mention_candidates and pairs.score_pairs).
     """
     w = w or ScorerWeights()
-    n_pairs = float(max(scalars.get("num_total_pairs", 1), 1))
-    n_dist = float(max(scalars.get("num_distinct_pairs", 1), 1))
-    backoff = max(n_pairs - w.delta_cocit * n_dist, 1e-9) / n_pairs
+    backoff, n_pairs = backoff_mass(scalars, w)
     diag = ent_stats.select(
         F.col("entity").alias("e1"),
         F.col("entity").alias("e2"),

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pboh_spark import learning, resolve
-from pboh_spark.learning import _pl_conv, learn_weights, pseudolikelihood_grads
+from pboh_spark.learning import _pl_conv, learn_weights
 from pboh_spark.stats import ScorerWeights
 
 W = ScorerWeights()
@@ -153,9 +153,16 @@ def _crafted_corpus(spark, conv_ids):
 
 
 def test_spark_kernel_matches_numpy(spark):
+    """The live fit path — the cogrouped preassembly (resolve.conv_tensors
+    on the Spark side) then one fused round — equals the quantized loss
+    and gradients of ``_pl_conv`` on hand-built tensors."""
     cand, lam = _crafted_corpus(spark, ["c0"])
-    out = pseudolikelihood_grads(cand, lam, W).collect()
-    assert len(out) == 1
+    rows = (
+        learning.preassembled_convs(cand, lam, resolve.LAMBDA_FLOOR)
+        .mapInPandas(learning._fused_round_kernel(W), learning.PART_SCHEMA)
+        .collect()
+    )
+    got = {c: sum(r[c] for r in rows) for c in (*learning._QCOLS, "n_convs")}
     ents = np.array([[1, 2], [3, -1]], dtype=np.int64)
     rho = np.array([[math.log(0.7), math.log(0.3)], [0.0, -1e30]])
     logpop = np.zeros((2, 2))
@@ -170,13 +177,29 @@ def test_spark_kernel_matches_numpy(spark):
     loss, g, n = _pl_conv(
         ents, rho, logpop, surfaces, gold_ent, gold_idx, c0, c1, W
     )
-    row = out[0]
-    assert row["loss"] == pytest.approx(loss, abs=1e-12)
-    assert row["g_f"] == pytest.approx(g[0], abs=1e-12)
-    assert row["g_g"] == pytest.approx(g[1], abs=1e-12)
-    assert row["g_h"] == pytest.approx(g[2], abs=1e-12)
-    assert row["g_b"] == pytest.approx(g[3], abs=1e-12) == 0.0  # no ctx col
-    assert row["n_mentions"] == n == 2
+    assert n == 2 and got["n_convs"] == 1
+    q = learning._quantize
+    assert got["loss"] == q(loss)
+    assert [got["g_f"], got["g_g"], got["g_h"]] == [q(x) for x in g[:3]]
+    assert got["g_b"] == q(g[3]) == 0  # no ctx column
+
+
+def test_learn_weights_leaves_session_conf_alone(spark, monkeypatch):
+    """The fit sets no session-global conf: a concurrent query on the
+    same session must keep planning with AQE."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    keys = []
+    orig = RuntimeConfig.set
+
+    def spy(self, key, value):
+        keys.append(key)
+        return orig(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    cand, lam = _crafted_corpus(spark, ["a0", "a1"])
+    learn_weights(cand, lam, n_rounds=2)
+    assert [k for k in keys if k.startswith("spark.sql.adaptive.")] == []
 
 
 def test_learning_is_partitioning_deterministic(spark):
@@ -276,6 +299,29 @@ def test_pipeline_learn_weights_stage(spark, universe, tmp_path):
     assign = spark.read.parquet(f"{out}/s5_assignments_fit/data")
     acc = evaluate.linking_accuracy(assign, gold, m)
     assert acc["micro_accuracy"] >= 0.99, (acc, lw)
+
+    # λ(h) applied to the stats table before the conversation probe gives
+    # the assignments of applying it to the probed pairs afterwards
+    from pboh_spark import stats
+
+    stage = lambda name: spark.read.parquet(f"{out}/{name}/data")  # noqa: E731
+    cand, lam = stage("s5_candidates"), stage("s2_lambda")
+    w = ScorerWeights(f=lw["f"], g=lw["g"], h=lw["h"], b=lw["b"])
+    want = resolve.resolve_entities(
+        cand,
+        resolve.lambda_at_h(
+            resolve.conv_lambda_pairs(
+                cand, lam, ("log_smoothed", "lp_sum")
+            ),
+            w.h,
+        ),
+        weights=w,
+        scalars=stats.corpus_scalars(anchors, cooc=stage("s2_cooc")),
+    )
+    rows = lambda df: sorted(  # noqa: E731
+        tuple(r) for r in df.select(*want.columns).collect()
+    )
+    assert rows(assign) == rows(want)
 
 
 def test_b_fit_end_to_end_on_synth_context(spark, universe):

@@ -187,6 +187,64 @@ def test_pack_rejects_ids_over_32_bits():
         _solve_conv(ents, rho, {}, ScorerWeights(), max_product=True)
 
 
+def _loop_tensors(cand):
+    """Per-mention loop reference for resolve.conv_tensors."""
+    cand = cand.sort_values(["mention_id", "entity"])
+    groups = [g for _, g in cand.groupby("mention_id", sort=True)]
+    L, K = len(groups), max(len(g) for g in groups)
+    ents = np.full((L, K), -1, dtype=np.int64)
+    rho = np.full((L, K), resolve.NEG)
+    logpop, ctx = np.zeros((L, K)), np.zeros((L, K))
+    surfaces = np.empty(L, dtype=object)
+    gold_ent = np.zeros(L, dtype=np.int64)
+    gold_idx = np.full(L, -1, dtype=np.int64)
+    for i, g in enumerate(groups):
+        k = len(g)
+        ents[i, :k] = g["entity"].to_numpy()
+        rho[i, :k] = g["rho"].to_numpy()
+        logpop[i, :k] = g["log_pop"].fillna(0.0).to_numpy()
+        ctx[i, :k] = g["ctx_evidence"].fillna(0.0).to_numpy()
+        surfaces[i] = g["ngram"].iloc[0]
+        gold_ent[i] = g["gold_entity"].iloc[0]
+        hit = np.nonzero(ents[i, :k] == gold_ent[i])[0]
+        if len(hit):
+            gold_idx[i] = hit[0]
+    mids = np.array([g["mention_id"].iloc[0] for g in groups])
+    return resolve.ConvTensors(
+        mids, ents, rho, logpop, ctx, surfaces, gold_ent, gold_idx
+    )
+
+
+def test_conv_tensors_matches_loop_reference():
+    """The one builder behind every kernel equals the per-mention loop
+    (mention_id asc rows, entity asc slots, -1 / NEG / 0.0 pads, nulls
+    as 0.0, gold slot -1 when gold is no candidate), and fills a field
+    only when its column is present."""
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    for _ in range(50):
+        rows = []
+        for _ in range(int(rng.integers(1, 7))):
+            mid, ng = int(rng.integers(0, 1 << 40)), f"s{rng.integers(3)}"
+            es = rng.choice(100, size=int(rng.integers(1, 5)), replace=False)
+            gold = int(rng.choice(es)) if rng.random() < 0.7 else 999
+            for e in es:
+                lp, cx = np.where(rng.random(2) < 0.2, np.nan, rng.normal(size=2))
+                rows.append((mid, int(e), rng.normal(), lp, cx, ng, gold))
+        cand = pd.DataFrame(rows, columns=[
+            "mention_id", "entity", "rho", "log_pop", "ctx_evidence",
+            "ngram", "gold_entity",
+        ]).sample(frac=1, random_state=int(rng.integers(1 << 30)))
+        got, want = resolve.conv_tensors(cand), _loop_tensors(cand)
+        for name, a, b in zip(want._fields, got, want):
+            assert a.dtype == b.dtype, name
+            assert np.array_equal(a, b, equal_nan=a.dtype.kind == "f"), name
+    lbp = resolve.conv_tensors(cand[["mention_id", "entity", "rho"]])
+    assert np.array_equal(lbp.ents, got.ents)
+    assert lbp[3:] == (None,) * 5
+
+
 def test_containment_candidate_augmentation(spark):
     """MentEntsFreqIndexWrapper.scala:30-40: a mention strictly contained
     in a co-document mention inherits the container's candidates with
