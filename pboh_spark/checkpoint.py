@@ -4,15 +4,25 @@ resume-from-last-complete-stage (north_rule requirement).
 Design: every pipeline stage is written durably before the next stage
 reads it — the distributed analogue of the reference's persist() +
 saveAsTextFile checkpoints between its RDD jobs
-(context/EntityWordsProbs.scala:200,213). A stage directory contains
+(context/EntityWordsProbs.scala:200,213), and like them written once and
+never scanned back. A stage directory contains
 
-    <base>/<stage>/data/          parquet (or an Iceberg table when a
-                                  catalog is configured — this sandbox has
-                                  no Iceberg jars, so the writer probes and
-                                  falls back; the interface is identical)
+    <base>/<stage>/data/          parquet, one part-NNNNN file per write
+                                  task
     <base>/<stage>/metrics.json   rows, wall time, schema fingerprint,
                                   per-partition row counts (lineage),
                                   upstream stage names + their fingerprints
+
+Row counts, lineage and schema come from the footers of the part files
+just written, read with pyarrow in this process: a stage costs its write
+job(s) and nothing else. Lineage is per **write** partition — the task
+number in the part file name, summed over that task's files — not per
+split of a later read (Spark's file packing may read 16 written files
+as 4 partitions). The schema is the one Spark stores in every footer
+(``SPARK_SCHEMA_KEY``); fresh and resumed stages are served by the same
+reader, with that schema given, so serving a stage launches no job.
+The checkpointer is local-filesystem only: the data directories, their
+footers and metrics.json are listed, read and written with ``pathlib``.
 
 Resume: a stage whose metrics.json exists and whose upstream
 fingerprints still match is **skipped** and served from its data dir —
@@ -31,12 +41,20 @@ import time
 from collections.abc import Callable
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's parquet writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _fingerprint(metrics: dict) -> str:
     return f"{metrics.get('rows')}:{metrics.get('schema')}"
+
+
+def _part_files(dpath: Path) -> list[Path]:
+    return sorted(dpath.glob("part-*.parquet"))
 
 
 class StageCheckpointer:
@@ -49,6 +67,23 @@ class StageCheckpointer:
     def _paths(self, stage: str) -> tuple[Path, Path]:
         d = self.base / stage
         return d / "data", d / "metrics.json"
+
+    def read(self, stage: str) -> DataFrame:
+        """The stage's data, with the schema Spark stored in the footer of
+        its first part file: planning the scan launches no job."""
+        dpath = self._paths(stage)[0]
+        files = _part_files(dpath)
+        if not files:
+            raise FileNotFoundError(f"no parquet part files in {dpath}")
+        meta = pq.read_metadata(files[0]).metadata or {}
+        if SPARK_SCHEMA_KEY not in meta:
+            raise ValueError(
+                f"{files[0]} has no Spark schema in its footer "
+                f"(key {SPARK_SCHEMA_KEY.decode()}); it was not written by "
+                "Spark's parquet writer"
+            )
+        schema = StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+        return self.spark.read.schema(schema).parquet(str(dpath))
 
     def load_metrics(self, stage: str) -> dict | None:
         _, mpath = self._paths(stage)
@@ -88,12 +123,17 @@ class StageCheckpointer:
         ``observe`` — {name: aggregate Column} piggybacked on the stage
         write via ``df.observe`` (A4's idiomatic form: the metrics ride
         the write job, zero extra actions) and persisted under
-        ``metrics.json["observed"]`` so resumed runs read them back."""
+        ``metrics.json["observed"]`` so resumed runs read them back.
+
+        A fresh stage runs only its write: ``rows`` and the per-write-
+        partition lineage are summed from the part files' footer row
+        counts, and the returned frame is ``read(stage)``. A resumed
+        stage runs no job."""
         upstream = upstream or []
         dpath, mpath = self._paths(stage)
         if self.is_complete(stage, upstream):
             self._done[stage] = self.load_metrics(stage)
-            return self.spark.read.parquet(str(dpath))
+            return self.read(stage)
 
         t0 = time.time()
         df = builder()
@@ -111,17 +151,14 @@ class StageCheckpointer:
                 repartition_by,
             )
         df.write.mode("overwrite").parquet(str(dpath))
-        out = self.spark.read.parquet(str(dpath))
-        # per-partition lineage: row count per output file partition
-        per_part = [
-            {"partition": r["pid"], "rows": r["rows"]}
-            for r in out.groupBy(
-                F.spark_partition_id().alias("pid")
-            )
-            .agg(F.count("*").alias("rows"))
-            .orderBy("pid")
-            .collect()
-        ]
+        out = self.read(stage)
+        # lineage: footer row counts summed per write task, whose number
+        # is the NNNNN of the part-NNNNN-<job uuid>-cNNN file name
+        counts: dict[int, int] = {}
+        for f in _part_files(dpath):
+            part = int(f.name.split("-")[1])
+            counts[part] = counts.get(part, 0) + pq.read_metadata(f).num_rows
+        per_part = [{"partition": p, "rows": n} for p, n in sorted(counts.items())]
         metrics = {
             "stage": stage,
             "rows": sum(p["rows"] for p in per_part),
@@ -155,18 +192,3 @@ class StageCheckpointer:
                 }
         return out
 
-
-def write_table(df: DataFrame, path_or_table: str) -> None:
-    """Sink S5 analogue: prefer an Iceberg ``writeTo(...).createOrReplace``
-    when a catalog with Iceberg support is configured; otherwise parquet.
-    (This container ships no Iceberg jars — the probe is an import/conf
-    check, not a hard dependency.)"""
-    spark = df.sparkSession
-    uses_catalog = "/" not in path_or_table
-    if uses_catalog:
-        try:
-            df.writeTo(path_or_table).createOrReplace()
-            return
-        except Exception:
-            pass
-    df.write.mode("overwrite").parquet(path_or_table)

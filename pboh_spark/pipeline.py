@@ -264,9 +264,10 @@ def run_pipeline(
             hist_rows = (
                 pt.where(F.col("kind") == "hist").orderBy("e1").collect()
             )
+            n_kind = dict(pt.groupBy("kind").count().collect())
             metrics["param_tables"] = {
-                "n_rho": pt.where(F.col("kind") == "rho").count(),
-                "n_lambda": pt.where(F.col("kind") == "lam").count(),
+                "n_rho": n_kind.get("rho", 0),
+                "n_lambda": n_kind.get("lam", 0),
                 "rounds": len(hist_rows),
                 "loss_history": [round(r["w"], 8) for r in hist_rows],
             }
@@ -299,7 +300,7 @@ def run_pipeline(
         assign_upstream = ["s5_candidates", "s2_lambda"] + (
             ["s5_weights"] if weights is not None else []
         ) + (["s5_param_tables"] if param_tables is not None else [])
-        ck.run_stage(
+        assignments = ck.run_stage(
             assign_name,
             build_assignments,
             upstream=assign_upstream,
@@ -315,7 +316,6 @@ def run_pipeline(
         # tiny aggs over the checkpointed assignments parquet (column-
         # pruned scan of a small table; the stage write itself already
         # carried the global observes above)
-        assignments = spark.read.parquet(str(ck._paths(assign_name)[0]))
         if pct is None or avg_iters is None:
             # stage resumed from a checkpoint written before the observe()
             # change (its metrics.json has no 'observed') — compute once
@@ -422,16 +422,16 @@ def main() -> None:
             # labeled-pair universe at the INSTANCE level with the same
             # block sources as instance mode (candidate + LSH), reading
             # the checkpointed name_stats rather than recomputing it
-            mentions = spark.read.parquet(str(ck._paths("s1_mentions")[0]))
-            ns = spark.read.parquet(str(ck._paths("s2_name_stats")[0]))
+            mentions = ck.read("s1_mentions")
+            ns = ck.read("s2_name_stats")
             lp = evaluate.build_labeled_pairs(gold, blocking.blocks(mentions, ns))
-            clusters = spark.read.parquet(str(ck._paths("s6_clusters_surf")[0]))
+            clusters = ck.read("s6_clusters_surf")
             comp = clusters.select(
                 F.col("mention_id").alias("id"), F.col("cluster_id")
             )
         else:
-            blocked = spark.read.parquet(str(ck._paths("s3_blocked")[0]))
-            comp = spark.read.parquet(str(ck._paths("s6_components")[0]))
+            blocked = ck.read("s3_blocked")
+            comp = ck.read("s6_components")
             lp = evaluate.build_labeled_pairs(gold, blocked)
         metrics["pairwise"] = evaluate.pairwise_f1(lp, comp)
         metrics["pairwise_macro"] = evaluate.macro_pairwise_f1(lp, comp)

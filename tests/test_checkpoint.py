@@ -1,0 +1,68 @@
+"""StageCheckpointer: a stage costs its write, serving it costs nothing."""
+
+from contextlib import contextmanager
+from pathlib import Path
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from pboh_spark.checkpoint import StageCheckpointer
+
+
+@contextmanager
+def _jobs_in_group(spark, group: str):
+    """Yields a list that holds, on exit, the ids of the Spark jobs the
+    block launched (counted by the status tracker, under a job group)."""
+    sc = spark.sparkContext
+    jobs: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _frame(spark):
+    return (
+        spark.range(0, 2000, numPartitions=4)
+        .withColumn("k", (F.col("id") % 13).cast("int"))
+        .groupBy("k")
+        .agg(F.count("*").alias("n"), F.collect_list("id").alias("ids"))
+    )
+
+
+def test_stage_write_is_the_only_job(spark, tmp_path):
+    """A fresh stage launches exactly the jobs of a bare parquet write of
+    the same frame; a resumed stage launches none."""
+    with _jobs_in_group(spark, "ck_bare") as bare:
+        _frame(spark).write.parquet(str(tmp_path / "bare"))
+    ck = StageCheckpointer(spark, str(tmp_path / "ck"))
+    with _jobs_in_group(spark, "ck_fresh") as fresh:
+        ck.run_stage("s", lambda: _frame(spark))
+    with _jobs_in_group(spark, "ck_resumed") as resumed:
+        out = StageCheckpointer(spark, str(tmp_path / "ck")).run_stage(
+            "s", lambda: _frame(spark)
+        )
+    assert len(bare) >= 1
+    assert len(fresh) == len(bare)
+    assert resumed == []
+    assert out.schema == spark.read.parquet(str(tmp_path / "ck/s/data")).schema
+    m = ck.load_metrics("s")
+    assert m["rows"] == 13 == out.count()
+    assert m["schema"] == "struct<k:int,n:bigint,ids:array<bigint>>"
+
+
+def test_read_requires_spark_footer_schema(spark, tmp_path):
+    """A part file without Spark's schema in its footer is refused, not
+    inferred."""
+    ck = StageCheckpointer(spark, str(tmp_path))
+    data = Path(tmp_path, "s", "data")
+    data.mkdir(parents=True)
+    pq.write_table(pa.table({"a": [1, 2]}), data / "part-00000-x-c000.parquet")
+    with pytest.raises(ValueError, match="org.apache.spark.sql.parquet.row.metadata"):
+        ck.read("s")

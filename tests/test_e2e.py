@@ -10,6 +10,7 @@ from pboh_spark import (
     blocking, cluster, evaluate, normalize, resolve, stats, synth,
 )
 from pboh_spark import pairs as pairs_mod
+from pboh_spark.checkpoint import StageCheckpointer
 from pboh_spark.pipeline import run_pipeline
 
 
@@ -97,12 +98,31 @@ def test_learn_params_stage_checkpoints_and_serves(spark, universe, tmp_path_fac
     assert m2["param_tables"]["loss_history"] == pt["loss_history"]
 
 
-def test_per_partition_lineage_recorded(e2e):
+def test_per_partition_lineage_recorded(spark, e2e):
+    """Every stage's lineage is the row count per written part file, its
+    row count that of a scan, and the frame it serves has the schema a
+    scan infers."""
     out, *_ = e2e
     m = json.loads(Path(out, "s4_pairs", "metrics.json").read_text())
-    assert m["rows"] == sum(p["rows"] for p in m["per_partition"])
-    assert m["n_partitions"] >= 1
     assert "s3_blocked" in m["upstream"]
+    ck = StageCheckpointer(spark, out)
+    stages = sorted(p.name for p in Path(out).iterdir() if (p / "data").is_dir())
+    assert len(stages) >= 10
+    for stage in stages:
+        m = ck.load_metrics(stage)
+        d = f"{out}/{stage}/data"
+        scan = spark.read.parquet(d)
+        per_file = {
+            int(r["f"].rsplit("/part-", 1)[1].split("-")[0]): r["rows"]
+            for r in scan.groupBy(F.input_file_name().alias("f"))
+            .agg(F.count("*").alias("rows"))
+            .collect()
+        }
+        recorded = {p["partition"]: p["rows"] for p in m["per_partition"]}
+        assert {k: v for k, v in recorded.items() if v} == per_file, stage
+        assert m["n_partitions"] == len(m["per_partition"]) >= 1, stage
+        assert m["rows"] == sum(recorded.values()) == scan.count(), stage
+        assert ck.read(stage).schema == scan.schema, stage
 
 
 def test_size_bucketed_stats(spark, e2e):
