@@ -1109,7 +1109,8 @@ _FIT_KW = {"n_rounds": 12, "eta": 1.0, "reg": 0.01}
 # COMPUTE at call time (a driver round loop) rather than building a lazy
 # plan — without the memo every conformance round pays each fit twice.
 # Safe because the fits are bit-deterministic (fixed-point merges) and the
-# cached DataFrames are localCheckpointed in the same session they serve.
+# cached DataFrames are localCheckpointed in, or local relations of, the
+# session they serve.
 _FIT_CACHE: dict = {}
 
 

@@ -640,9 +640,10 @@ def _real_checksum(rho_p, lam_p) -> int:
 def sec_param_scale(spark, sf_dir, tr) -> dict:
     """learn_param_tables on the fixed seeded corpus with both initial
     tables inflated by PARAM_EXTRAS synthetic keys: the keys never meet
-    the gradient probe but flow through both keyed AdaGrad update joins
-    every round, so the per-round cost tracks table size. The fit on
-    real keys must stay bit-identical at every inflation level."""
+    the gradient probe, but the driver collects them, ships their w
+    vectors to every round's tasks and steps AdaGrad over them, so the
+    per-round cost tracks table size. The fit on real keys must stay
+    bit-identical at every inflation level."""
     import __spark_entry__ as entrymod
     from pboh_spark import learning, param_learning, resolve
     from pboh_spark.util import release

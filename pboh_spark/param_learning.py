@@ -1,17 +1,16 @@
 """Per-parameter weight learning (L4's payload, Spark-native) —
 per-(surface, entity) rho corrections and per-frequent-entity-pair
-lambda corrections fit by distributed pseudolikelihood ascent, stored
-and served as plain DataFrames.
+lambda corrections fit by full-batch pseudolikelihood ascent, served
+as plain DataFrames.
 
-Reference parity (file:line in /root/reference/src/main/scala/):
+Reference parity (file:line in the reference's src/main/scala/):
 * parameter stores — utils/OptimizedRhosMap.scala:12-27 (Trove
   String→Double keyed "entity\\tmention") and
   utils/OptimizedLambdasMap.scala:14-21 (packed-long (e1,e2) → Double):
-  recast as hash-partitioned DataFrames
-  (ngram, entity, w0, w, sq) / (e1, e2, w0, w, sq) — the honest
-  cluster-scale replacement for the memcached parameter server the
-  reference needs (SGDPiecewiseMemClient), because a keyed Spark join
-  IS the distributed hash probe.
+  returned as DataFrames (ngram, entity, w0, w, sq) /
+  (e1, e2, w0, w, sq); during the fit, numpy vectors on the driver
+  shipped with each round's task replace the reference's memcached
+  parameter server (SGDPiecewiseMemClient).
 * frequent-pair restriction — learning/Learning.scala:113-148: only
   entity pairs with corpus co-citation frequency ≥ 4 get a lambda
   parameter; everything else keeps the closed-form backoff.
@@ -29,10 +28,8 @@ Reference parity (file:line in /root/reference/src/main/scala/):
   (SGDStepPseudolikelihood): gold-numerator bumps + softmax-denominator
   pulls for every stored (x,y) rho key and every stored
   (y_gold_neighbor, y_candidate) lambda key; the same gradient here,
-  computed FULL-BATCH per round instead of per-sampled-doc (one
-  deterministic cogrouped job per round, exactly the learn_weights
-  topology — learning.py), with the >15 read-clamp of
-  Learning.scala:440-443 applied at update time.
+  computed FULL-BATCH per round in learning.learn_weights' shape
+  (Learning.scala:296-361 merge, :440-443 read clamp at update time).
 * serving — loopybeliefpropagation/ScorerFullLearnedParams.scala:38-54:
   stored key → learned value, missing key → default scorer. Here the
   override happens BEFORE the unchanged LBP kernel: learned rho
@@ -42,34 +39,33 @@ Reference parity (file:line in /root/reference/src/main/scala/):
   ``lambda_potential`` in the table the conv-pair probe joins, so
   backoff pairs still flow through the kernel's closed-form default.
 
-Determinism: per-conversation gradient rows are quantized to integer
-1e-9 units and merged with an order-independent long sum per parameter
-key (the fixed-point rule learning._quantize reproduces), the AdaGrad
-state lives in the parameter DataFrames themselves, and the driver
-holds nothing but the round counter and loss history — so the fit is
-bit-identical at any partitioning and golden-oracle checkable, and at
-10^12-turn scale each round is one gradient job + one keyed update
-join, no driver-side parameter traffic at all.
+Determinism: every per-(conversation, key) gradient is quantized to
+integer 1e-9 units (learning._quantize) and the integers are summed
+per key, so the fit is bit-identical at any partitioning and
+golden-oracle checkable.
 """
 
 from __future__ import annotations
+
+import pickle
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pboh_spark.learning import CLAMP, MAX_DOC, _FIXED
+from pboh_spark.learning import CLAMP, MAX_DOC, PRE_SCHEMA, _FIXED, _quantize
 from pboh_spark.resolve import (
-    LAMBDA_FLOOR, _pack, conv_entity_pairs, conv_tensors, pair_map,
+    LAMBDA_FLOOR, NEG, ConvTensors, _pack, conv_lambda_pairs, conv_tensors,
 )
 from pboh_spark.stats import ScorerWeights
 from pboh_spark.util import release
 
-GRAD_ROWS_SCHEMA = (
-    "conv_id string, kind string, ngram string, e1 long, e2 long, val double"
-)
 READ_CLAMP = 15.0  # Learning.scala:440-443 (applied at update here)
+PART_SCHEMA = (
+    "loss long, n_convs long, rho_id array<long>, rho_q array<long>, "
+    "lam_id array<long>, lam_q array<long>"
+)
 
 
 def init_rho_params(cand_gold: DataFrame) -> DataFrame:
@@ -100,6 +96,99 @@ def init_lambda_params(lambda_table: DataFrame, min_cocit: int = 4) -> DataFrame
     )
 
 
+def _ppl_prepare(
+    t: ConvTensors,
+    rho_ids: dict,         # (surface, entity) -> rho-parameter id
+    lam_keys: np.ndarray,  # (P,) distinct packed pairs with a λ value
+    lam_id: np.ndarray,    # (P,) λ-parameter id per pair, -1 untrainable
+    lam_pot: np.ndarray,   # (P,) fixed λ of each pair
+    w: ScorerWeights,
+    lam_const: float = LAMBDA_FLOOR,
+) -> dict | None:
+    """Parameter-INDEPENDENT half of the kernel: the rho-parameter id of
+    each candidate slot, each (candidate, gold-neighbor) key's position
+    in ``lam_keys``, its closed-form backoff, and the neighbor mask.
+    None when the conversation contributes nothing: outside the
+    (1, MAX_DOC] length guard, or no gold among its candidates."""
+    L, K = t.ents.shape
+    if L < 2 or L > MAX_DOC or not (t.gold_idx >= 0).any():
+        return None
+    gold_lp = np.where(
+        t.gold_idx >= 0, t.logpop[np.arange(L), np.maximum(t.gold_idx, 0)], 0.0
+    )
+    keys = _pack(
+        np.broadcast_to(t.ents[:, :, None], (L, K, L)),
+        np.broadcast_to(t.gold_ent[None, None, :], (L, K, L)),
+    )
+    pos = pd.Index(lam_keys).get_indexer(keys.ravel()).reshape(L, K, L)
+    rho_id = [[rho_ids[(s, e)] if e >= 0 else -1 for e in row]
+              for s, row in zip(t.surfaces, t.ents.tolist())]
+    return {
+        "L": L, "valid": t.ents >= 0, "gold_idx": t.gold_idx,
+        "rho_id": np.array(rho_id, dtype=np.int64), "pos": pos,
+        "lam_id": lam_id, "lam_pot": lam_pot,
+        "backoff": lam_const + (1.0 - w.h) * (
+            t.logpop[:, :, None] + gold_lp[None, None, :]
+        ),
+        "mask": (t.surfaces[:, None] != t.surfaces[None, :]).astype(np.float64),
+    }
+
+
+def _sum_by_id(ids: np.ndarray, vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(distinct ids, per-id sums), each sum in ``vals`` order."""
+    uk, inv = np.unique(ids, return_inverse=True)
+    return uk, np.bincount(inv, weights=vals, minlength=len(uk))
+
+
+def _ppl_round(
+    pre: dict, rho_w: np.ndarray, lam_ext: np.ndarray, w: ScorerWeights
+) -> tuple[float, tuple, tuple, int]:
+    """Parameter-DEPENDENT half: loss and sparse gradients at the current
+    rho values ``rho_w`` (L, K; NEG pad) and λ parameters ``lam_ext``
+    (by id, plus a pad entry id −1 reads). Returns (loss, (rho ids,
+    d/dw_rho), (λ ids, d/dw_lam), n_mentions)."""
+    L, valid, gold_idx, mask = pre["L"], pre["valid"], pre["gold_idx"], pre["mask"]
+    lam_id = pre["lam_id"]
+    lam_vals = np.where(lam_id >= 0, lam_ext[lam_id], pre["lam_pot"])
+    lam = np.append(lam_vals, np.nan)[pre["pos"]]
+    lam = np.where(np.isnan(lam), pre["backoff"], lam)
+    pw = 2.0 / (L - 1)
+    lam_sum = np.einsum("ikj,ij->ik", lam, mask)
+    phi = w.f * rho_w + w.g * pw * lam_sum
+    big = phi > CLAMP  # discard clamp: factor AND partials zeroed
+    phi = np.where(big, 0.0, phi)
+    phi = np.where(valid, phi, -np.inf)
+    idx = np.nonzero(gold_idx >= 0)[0]
+    gidx = gold_idx[idx]
+    mx = phi[idx].max(axis=1, keepdims=True)
+    zexp = np.where(valid[idx], np.exp(phi[idx] - mx), 0.0)
+    z = zexp.sum(axis=1, keepdims=True)
+    lse = (np.log(z) + mx)[:, 0]
+    p = zexp / z
+    loss = float(((phi[idx, gidx] - lse) / L).sum())
+    # coeff[row,a] = (1{a = gold_row} − p_row(a)) / L for contributing
+    # mentions, zeroed where the candidate slot is padding or the discard
+    # clamp fired (∂φ = 0 there)
+    onehot = np.zeros_like(p)
+    onehot[np.arange(len(idx)), gidx] = 1.0
+    coeff = np.where(valid[idx] & ~big[idx], (onehot - p) / L, 0.0)
+    nz = coeff != 0.0  # a (surface, entity) id repeats when a surface recurs
+    rho_g = _sum_by_id(pre["rho_id"][idx][nz], w.f * coeff[nz])
+    # λ part (the n·K·L tensor is the hot path): contribution
+    # g·pw·coeff[row,a] at the parameter of (cand a of row, gold of j)
+    # for unmasked neighbors j
+    lid = np.append(lam_id, -1)[pre["pos"][idx]]               # (n, K, L)
+    sel = (
+        (mask[idx][:, None, :] > 0.0)                           # neighbor guard
+        & (coeff[:, :, None] != 0.0)
+        & (lid >= 0)
+    )
+    lam_g = _sum_by_id(
+        lid[sel], w.g * pw * np.broadcast_to(coeff[:, :, None], lid.shape)[sel]
+    )
+    return loss, rho_g, lam_g, len(idx)
+
+
 def _ppl_conv(
     ents: np.ndarray,        # (L, K) candidate ids, -1 pad
     rho_w: np.ndarray,       # (L, K) CURRENT per-key rho params, NEG pad
@@ -108,9 +197,7 @@ def _ppl_conv(
     gold_ent: np.ndarray,    # (L,) gold entity ids
     gold_idx: np.ndarray,    # (L,) index of gold in candidate row, -1 absent
     lam_map: dict[int, float],      # packed pair -> effective lambda
-    train_keys: np.ndarray,         # SORTED int64 packed pairs with a
-                                    # parameter row (built once per group
-                                    # in _pgrad_kernel)
+    train_keys: np.ndarray,         # int64 packed pairs with a parameter row
     w: ScorerWeights,
     lam_const: float = LAMBDA_FLOOR,
 ) -> tuple[float, dict, dict, int]:
@@ -125,151 +212,121 @@ def _ppl_conv(
     Gradient = numerator (gold indicator) − softmax expectation, the
     full-batch form of SGDStepPseudolikelihood (Learning.scala:746-858);
     the same-surface neighbor guard (xj != x) and the log_factor > 10
-    discard clamp mirror learning._pl_conv."""
-    L, K = ents.shape
-    valid = ents >= 0
-    if L < 2 or L > MAX_DOC:
+    discard clamp mirror learning._pl_conv. Composed from
+    ``_ppl_prepare`` and ``_ppl_round`` with conversation-local ids."""
+    rho_keys = sorted(
+        {(s, e) for s, row in zip(surfaces, ents.tolist()) for e in row if e >= 0}
+    )
+    lam_keys = np.union1d(np.fromiter(lam_map, np.int64, len(lam_map)), train_keys)
+    lam_vals = pd.Series(lam_keys).map(lam_map).to_numpy(np.float64)
+    pre = _ppl_prepare(
+        ConvTensors(None, ents, rho_w, logpop, None, surfaces, gold_ent, gold_idx),
+        {k: i for i, k in enumerate(rho_keys)}, lam_keys,
+        np.where(np.isin(lam_keys, train_keys), np.arange(len(lam_keys)), -1),
+        lam_vals, w, lam_const,
+    )
+    if pre is None:
         return 0.0, {}, {}, 0
-    gold_lp = np.where(
-        gold_idx >= 0, logpop[np.arange(L), np.maximum(gold_idx, 0)], 0.0
+    loss, (ri, rg), (li, lg), n = _ppl_round(pre, rho_w, np.append(lam_vals, np.nan), w)
+    rho_g = {rho_keys[i]: g for i, g in zip(ri.tolist(), rg.tolist())}
+    return loss, rho_g, dict(zip(lam_keys[li].tolist(), lg.tolist())), n
+
+
+def _preassemble(
+    cand_gold: DataFrame, rho_keys: pd.DataFrame, lambda_table: DataFrame,
+    lam_keys: pd.DataFrame, w: ScorerWeights, lam_const: float,
+) -> tuple[DataFrame, DataFrame]:
+    """(λ probe, preassembly): the λ-table pairs of each conversation's
+    candidate ∪ gold entities with their potential and λ-parameter id,
+    checkpointed lazily (the caller releases it), and one cogroup of
+    ``cand_gold``, carrying its rho-parameter id, against the probe into
+    (conv_id, pickled ``_ppl_prepare``). A key's id is its row in
+    ``rho_keys`` / ``lam_keys``."""
+    spark = cand_gold.sparkSession
+    rid = spark.createDataFrame(
+        rho_keys[["ngram", "entity"]].assign(rho_id=np.arange(len(rho_keys))),
+        "ngram string, entity long, rho_id long",
     )
-    keys = _pack(
-        np.broadcast_to(ents[:, :, None], (L, K, L)),
-        np.broadcast_to(gold_ent[None, None, :], (L, K, L)),
+    lid = spark.createDataFrame(
+        lam_keys[["e1", "e2"]].assign(lam_id=np.arange(len(lam_keys))),
+        "e1 long, e2 long, lam_id long",
     )
-    lam = pd.Series(keys.ravel()).map(lam_map).to_numpy(np.float64).reshape(
-        L, K, L
+    lam_tbl = lambda_table.join(lid, ["e1", "e2"], "left").withColumn(
+        "lam_id", F.coalesce("lam_id", F.lit(-1))
     )
-    backoff = lam_const + (1.0 - w.h) * (
-        logpop[:, :, None] + gold_lp[None, None, :]
+    ents = cand_gold.select("conv_id", "entity").unionByName(
+        cand_gold.select("conv_id", F.col("gold_entity").alias("entity"))
     )
-    lam = np.where(np.isnan(lam), backoff, lam)
-    mask = (surfaces[:, None] != surfaces[None, :]).astype(np.float64)
-    pw = 2.0 / (L - 1)
-    lam_sum = np.einsum("ikj,ij->ik", lam, mask)
-    phi = w.f * rho_w + w.g * pw * lam_sum
-    big = phi > CLAMP  # discard clamp: factor AND partials zeroed
-    phi = np.where(big, 0.0, phi)
-    phi = np.where(valid, phi, -np.inf)
-    contrib = gold_idx >= 0
-    n = int(contrib.sum())
-    if n == 0:
-        return 0.0, {}, {}, 0
-    idx = np.where(contrib)[0]
-    gidx = gold_idx[idx]
-    mx = phi[idx].max(axis=1, keepdims=True)
-    zexp = np.where(valid[idx], np.exp(phi[idx] - mx), 0.0)
-    z = zexp.sum(axis=1, keepdims=True)
-    lse = (np.log(z) + mx)[:, 0]
-    p = zexp / z
-    loss = float(((phi[idx, gidx] - lse) / L).sum())
-    # coeff[row,a] = (1{a = gold_row} − p_row(a)) / L for contributing
-    # mentions, zeroed where the candidate slot is padding or the discard
-    # clamp fired (∂φ = 0 there)
-    onehot = np.zeros_like(p)
-    onehot[np.arange(len(idx)), gidx] = 1.0
-    coeff = np.where(valid[idx] & ~big[idx], (onehot - p) / L, 0.0)
-    rho_g: dict[tuple[str, int], float] = {}
-    nz = np.nonzero(coeff)  # ≤ n·K entries — the same (surface, entity)
-    for row, a in zip(*nz):  # key repeats when a surface recurs in-conv
-        rk = (surfaces[idx[row]], int(ents[idx[row], a]))
-        rho_g[rk] = rho_g.get(rk, 0.0) + w.f * float(coeff[row, a])
-    # λ part vectorized (the n·K·L tensor is the hot path): contribution
-    # g·pw·coeff[row,a] at key (cand a of row, gold of j) for unmasked
-    # neighbors j whose packed key has a parameter row
-    lam_g: dict[int, float] = {}
-    if train_keys.size:
-        k3 = keys[idx]                                   # (n, K, L)
-        m3 = mask[idx][:, None, :] > 0.0                 # neighbor guard
-        sel = (
-            m3
-            & (coeff[:, :, None] != 0.0)
-            & np.isin(k3, train_keys)
+    # the same λ-side localCheckpoint learn_weights takes: both cogroup
+    # sides derive from cand_gold
+    probe = conv_lambda_pairs(
+        ents, lam_tbl, value_cols=("lambda_potential", "lam_id")
+    ).localCheckpoint(eager=False)
+
+    def assemble(cand: pd.DataFrame, lam: pd.DataFrame) -> pd.DataFrame:
+        pre = None if cand.empty else _ppl_prepare(
+            conv_tensors(cand),
+            dict(zip(zip(cand["ngram"], cand["entity"]), cand["rho_id"])),
+            _pack(lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64)),
+            lam["lam_id"].to_numpy(np.int64),
+            lam["lambda_potential"].to_numpy(np.float64), w, lam_const,
         )
-        if sel.any():
-            flat_keys = k3[sel]
-            flat_vals = (
-                w.g * pw * np.broadcast_to(coeff[:, :, None], k3.shape)[sel]
+        if pre is None:
+            return pd.DataFrame(columns=["conv_id", "blob"])
+        blob = pickle.dumps(pre, protocol=pickle.HIGHEST_PROTOCOL)
+        return pd.DataFrame({"conv_id": [cand["conv_id"].iloc[0]], "blob": [blob]})
+
+    pre = (
+        cand_gold.join(rid, ["ngram", "entity"])
+        .groupBy("conv_id")
+        .cogroup(probe.groupBy("conv_id"))
+        .applyInPandas(assemble, PRE_SCHEMA)
+    )
+    return probe, pre
+
+
+def _partial_sums(grads: list[tuple]) -> tuple[np.ndarray, np.ndarray]:
+    """Per-id int64 sums of the quantized (conversation, id) gradients."""
+    ids = np.concatenate([i for i, _ in grads])
+    q = [_quantize(x) for _, g in grads for x in g.tolist()]
+    s = pd.Series(q, dtype=np.int64).groupby(ids).sum()
+    return s.index.to_numpy(np.int64), s.to_numpy(np.int64)
+
+
+def _round_kernel(w: ScorerWeights, rho_ext: np.ndarray, lam_ext: np.ndarray):
+    """One round as one Python stage: ``_ppl_round`` of every
+    preassembled conversation, folded into one row per partition of
+    integer loss and per-id gradient sums. ``rho_ext`` / ``lam_ext`` are
+    the current w vectors plus a pad entry (NEG / NaN) that id −1 reads."""
+
+    def ev(batches):
+        out = [
+            _ppl_round(pre, rho_ext[pre["rho_id"]], lam_ext, w)
+            for pdf in batches for pre in map(pickle.loads, pdf["blob"])
+        ]
+        if out:
+            loss, rho_g, lam_g, _ = zip(*out)
+            yield pd.DataFrame(
+                [[sum(map(_quantize, loss)), len(out),
+                  *_partial_sums(rho_g), *_partial_sums(lam_g)]],
+                columns=["loss", "n_convs", "rho_id", "rho_q", "lam_id", "lam_q"],
             )
-            uk, inv = np.unique(flat_keys, return_inverse=True)
-            sums = np.bincount(inv, weights=flat_vals)
-            lam_g = dict(zip(uk.tolist(), sums.tolist()))
-    return loss, rho_g, lam_g, n
+
+    return ev
 
 
-def _pgrad_kernel(w: ScorerWeights, lam_const: float):
-    def solve(cand: pd.DataFrame, lam: pd.DataFrame) -> pd.DataFrame:
-        cols = ["conv_id", "kind", "ngram", "e1", "e2", "val"]
-        if cand.empty:
-            return pd.DataFrame(columns=cols)
-        conv = cand["conv_id"].iloc[0]
-        t = conv_tensors(cand)
-        # sorted for np.isin's binary path, built once per group
-        train_keys = np.array(
-            sorted(k for k, tr in pair_map(lam, "trainable").items() if tr),
-            dtype=np.int64,
-        )
-        loss, rho_g, lam_g, n = _ppl_conv(
-            t.ents, t.rho, t.logpop, t.surfaces, t.gold_ent, t.gold_idx,
-            pair_map(lam, "lam_eff"), train_keys, w, lam_const,
-        )
-        rows = [
-            {"conv_id": conv, "kind": "loss", "ngram": None,
-             "e1": n, "e2": 0, "val": loss}
-        ]
-        rows += [
-            {"conv_id": conv, "kind": "rho", "ngram": ng,
-             "e1": ent, "e2": 0, "val": g}
-            for (ng, ent), g in rho_g.items()
-        ]
-        rows += [
-            {"conv_id": conv, "kind": "lam", "ngram": None,
-             "e1": int(k >> 32), "e2": int(k & 0xFFFFFFFF), "val": g}
-            for k, g in lam_g.items()
-        ]
-        return pd.DataFrame(rows, columns=cols)
-
-    return solve
-
-
-def _conv_entity_pairs(cand_gold: DataFrame) -> DataFrame:
-    """Parameter-INDEPENDENT half of the conv-pair probe: distinct
-    conversation-local candidate∪gold entities, self-joined into ordered
-    pairs (conv_id, e1, e2). Depends only on ``cand_gold``, so the fit
-    builds it ONCE and reuses it every round — the per-round work in
-    ``_conv_lambda_eff`` is then just the keyed probe of the merged
-    parameter table (guide §1.2: hoist weight-independent work out of
-    the round loop, the same discipline as learning.learn_weights'
-    preassembly)."""
-    return conv_entity_pairs(
-        cand_gold.select("conv_id", "entity").unionByName(
-            cand_gold.select("conv_id", F.col("gold_entity").alias("entity"))
-        )
-    )
-
-
-def _conv_lambda_eff(
-    pairs: DataFrame,
-    lambda_table: DataFrame,
-    lambda_params: DataFrame,
-) -> DataFrame:
-    """Conversation-local effective λ pairs for the gradient kernel:
-    (conv_id, e1, e2, lam_eff, trainable) — the stored table value
-    overridden by the current parameter where one exists. ``pairs`` is
-    the hoisted `_conv_entity_pairs` output; this function is only the
-    round-dependent keyed probe of the merged table (same distributed
-    shape as resolve.conv_lambda_pairs)."""
-    merged = lambda_table.select("e1", "e2", "lambda_potential").join(
-        lambda_params.select("e1", "e2", F.col("w").alias("__w")),
-        ["e1", "e2"], "left",
-    ).select(
-        "e1", "e2",
-        F.coalesce("__w", "lambda_potential").alias("lam_eff"),
-        F.col("__w").isNotNull().alias("trainable"),
-    )
-    return pairs.join(merged, ["e1", "e2"], "inner").select(
-        "conv_id", "e1", "e2", "lam_eff", "trainable"
-    )
+def _adagrad_update(
+    t: pd.DataFrame, tot: np.ndarray, n_convs: int, eta: float, reg: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """(w', sq') for a parameter table (w0, w, sq) and its per-key
+    integer gradient sums: w' = min(w + eta/√(1+sq')·g_eff, 15),
+    g_eff = grad − reg·(w−w0), sq' = sq + g_eff² — per-key AdaGrad with
+    the proximal pull. fmin skips NaN the way Spark's ``least`` does."""
+    grad = tot / _FIXED / n_convs
+    w = t["w"].to_numpy(np.float64)
+    g_eff = grad - reg * (w - t["w0"].to_numpy(np.float64))
+    sq = t["sq"].to_numpy(np.float64) + g_eff * g_eff
+    return np.fmin(w + eta / np.sqrt(1.0 + sq) * g_eff, READ_CLAMP), sq
 
 
 def learn_param_tables(
@@ -283,111 +340,50 @@ def learn_param_tables(
     lam_const: float = LAMBDA_FLOOR,
 ) -> tuple[DataFrame, DataFrame, list[dict]]:
     """Fit the per-parameter tables; returns (rho_params, lambda_params,
-    history). One cogrouped gradient job + two keyed update joins per
-    round; parameters never leave the cluster (only the scalar loss is
-    collected). The regularizer is proximal toward w0 — the full-batch
-    recast of the reference's multiplicative s-shrinkage
-    (Learning.scala:401-402), pulling unobserved parameters back to the
-    baseline scorer instead of to zero-in-a-different-scale. Per-key
-    AdaGrad (eta/√(1+Σg²)) mirrors the few-params driver update; the
-    READ_CLAMP caps stored values at 15 like Learning.scala:440-443."""
+    history), the tables as local DataFrames, so the fit pins nothing.
+    The driver holds three float64 per parameter key (w0, w, sq) plus
+    the keys, and ships both w vectors to each round's one mapInPandas
+    over the conversations preassembled once. The regularizer is
+    proximal toward w0 — the full-batch recast of the reference's
+    multiplicative s-shrinkage (Learning.scala:401-402), pulling
+    unobserved parameters back to the baseline scorer instead of to
+    zero-in-a-different-scale. Per-key AdaGrad (eta/√(1+Σg²)) mirrors
+    the few-params driver update; the READ_CLAMP caps stored values at
+    15 like Learning.scala:440-443."""
     w = weights or ScorerWeights()
-    # eager localCheckpoint, not just persist: the gradient cogroup's two
-    # sides (cand⋈params and the conv-pair probe) BOTH derive from
-    # cand_gold, and shared lineage trips Spark's ambiguous-self-join
-    # analysis; fresh lineage also caches the scanned-every-round input
-    cand_gold = cand_gold.localCheckpoint()
-    # the conv-pair skeleton depends only on cand_gold: materialize it
-    # once per fit instead of re-running its distinct+union+self-join
-    # every round (only the parameter probe is round-dependent)
-    pairs = _conv_entity_pairs(cand_gold).localCheckpoint()
-    rho_p = init_rho_params(cand_gold).localCheckpoint()
-    lam_p = init_lambda_params(lambda_table, min_cocit).localCheckpoint()
+    rho0 = init_rho_params(cand_gold)
+    lam0 = init_lambda_params(lambda_table, min_cocit)
+    rho_t, lam_t = rho0.toPandas(), lam0.toPandas()
+    probe, pre = _preassemble(cand_gold, rho_t, lambda_table, lam_t, w, lam_const)
+    pre = pre.persist()
     history: list[dict] = []
-    q = lambda c: (F.sum(F.round(F.col(c) * _FIXED).cast("long")) / _FIXED)  # noqa: E731
-    in_flight: list = []  # this round's λ slice and merge, released on ANY exit
     try:
+        # learn_weights' width rule: ~256 conversations per task, a
+        # narrow coalesce over the cache (the count materializes it)
+        pre_eval = pre.coalesce(pre.count() // 256 + 1)
         for r in range(n_rounds):
-            # the current parameter IS the kernel's rho
-            cg = cand_gold.drop("rho").join(
-                rho_p.select("ngram", "entity", F.col("w").alias("rho")),
-                ["ngram", "entity"], "inner",
-            )
-            # rename the λ side's key: both cogroup sides descend from
-            # cand_gold and localCheckpoint PRESERVES attribute ids, so
-            # grouping both on the same conv_id attribute trips Spark's
-            # ambiguous-self-join analysis; the rename mints a fresh one
-            lam_eff = _conv_lambda_eff(
-                pairs, lambda_table, lam_p
-            ).withColumnRenamed("conv_id", "conv_id_l")
-            lam_ck = lam_eff.localCheckpoint(eager=False)
-            in_flight = [lam_ck]
-            grads = (
-                cg.groupBy("conv_id")
-                .cogroup(lam_ck.groupBy("conv_id_l"))
-                .applyInPandas(_pgrad_kernel(w, lam_const), GRAD_ROWS_SCHEMA)
-            )
-            # fixed-point merge per parameter key (order-independent)
-            merged = grads.groupBy("kind", "ngram", "e1", "e2").agg(
-                q("val").alias("gsum"),
-                F.count("*").alias("n"),
-            ).persist()
-            in_flight.append(merged)
-            # loss rows collapse per (kind, null, n_mentions, 0) key, so a
-            # group can hold MANY conversations with the same contributing
-            # count — n_convs must sum the group's row count `n`, not
-            # count groups (counting groups under-counts and over-scales
-            # every gradient by the collapse factor)
-            lrow = merged.where(F.col("kind") == "loss").agg(
-                F.sum("gsum").alias("loss"),
-                F.sum(
-                    F.when(F.col("e1") > 0, F.col("n")).otherwise(0)
-                ).alias("n_convs"),
-            ).collect()[0]
-            n_convs = int(lrow["n_convs"] or 0)
+            parts = pre_eval.mapInPandas(
+                _round_kernel(
+                    w, np.append(rho_t["w"], NEG), np.append(lam_t["w"], np.nan)
+                ),
+                PART_SCHEMA,
+            ).toPandas()
+            n_convs = int(parts["n_convs"].sum())
             if n_convs == 0:
-                break  # in_flight (merged + this round's λ slice) released below
+                break
             history.append(
-                {"round": r, "loss": float(lrow["loss"]) / n_convs,
+                {"round": r, "loss": int(parts["loss"].sum()) / _FIXED / n_convs,
                  "n_convs": n_convs}
             )
-            gr = merged.where(F.col("kind") == "rho").select(
-                "ngram", F.col("e1").alias("entity"),
-                (F.col("gsum") / n_convs).alias("grad"),
-            )
-            gl = merged.where(F.col("kind") == "lam").select(
-                "e1", "e2", (F.col("gsum") / n_convs).alias("grad"),
-            )
-            # the eager checkpoints materialize the new tables, so the
-            # superseded ones and this round's slices can go
-            rho_prev, lam_prev = rho_p, lam_p
-            rho_p = _adagrad_update(
-                rho_p.join(gr, ["ngram", "entity"], "left"), eta, reg
-            ).localCheckpoint()
-            lam_p = _adagrad_update(
-                lam_p.join(gl, ["e1", "e2"], "left"), eta, reg
-            ).localCheckpoint()
-            release(rho_prev, lam_prev, *in_flight)
-            in_flight = []
+            for kind, t in (("rho", rho_t), ("lam", lam_t)):
+                tot = np.zeros(len(t), dtype=np.int64)
+                for ids, q in zip(parts[f"{kind}_id"], parts[f"{kind}_q"]):
+                    np.add.at(tot, np.asarray(ids, np.int64), np.asarray(q, np.int64))
+                t["w"], t["sq"] = _adagrad_update(t, tot, n_convs, eta, reg)
     finally:
-        release(cand_gold, pairs, *in_flight)
-    return rho_p, lam_p, history
-
-
-def _adagrad_update(joined: DataFrame, eta: float, reg: float) -> DataFrame:
-    """w ← clamp(w + eta/√(1+sq')·g_eff, ≤15), g_eff = grad − reg·(w−w0),
-    sq' = sq + g_eff² — per-key AdaGrad with the proximal pull, as one
-    column expression over the (params ⟕ grads) join."""
-    g_eff = F.coalesce(F.col("grad"), F.lit(0.0)) - reg * (
-        F.col("w") - F.col("w0")
-    )
-    sq2 = F.col("sq") + g_eff * g_eff
-    w2 = F.least(
-        F.col("w") + F.lit(eta) / F.sqrt(1.0 + sq2) * g_eff,
-        F.lit(READ_CLAMP),
-    )
-    keep = [c for c in joined.columns if c not in ("grad", "w", "sq")]
-    return joined.select(*keep, w2.alias("w"), sq2.alias("sq"))
+        release(pre, probe)
+    new = cand_gold.sparkSession.createDataFrame
+    return new(rho_t, rho0.schema), new(lam_t, lam0.schema), history
 
 
 def serve_candidates(

@@ -211,9 +211,6 @@ def run_pipeline(
                 raise ValueError("learn_params requires learn_gold")
             from pboh_spark import learning, param_learning
             from pboh_spark.stats import ScorerWeights
-            from pboh_spark.util import release
-
-            fitted: list = []  # the fit's two tables, freed once written
 
             def build_param_tables() -> DataFrame:
                 cg = learning.learning_candidates(cand, mentions, learn_gold)
@@ -223,7 +220,6 @@ def run_pipeline(
                     n_rounds=param_rounds,
                     lam_const=resolve.backoff_lam_const(scalars),
                 )
-                fitted.extend((rho_p, lam_p))
                 # one kind-tagged table per stage: rho + lambda params AND
                 # the per-round loss history, so resume restores all three
                 r = rho_p.select(
@@ -254,7 +250,6 @@ def run_pipeline(
                 upstream=["s5_candidates", "s2_lambda"]
                 + (["s5_weights"] if weights is not None else []),
             )
-            release(*fitted)
             param_tables = (
                 pt.where(F.col("kind") == "rho").select(
                     "ngram", F.col("e1").alias("entity"), "w"

@@ -293,24 +293,6 @@ def backoff_lam_const(
     return float(np.log(backoff) - np.log(n))
 
 
-def conv_entity_pairs(conv_ents: DataFrame) -> DataFrame:
-    """(conv_id, e1, e2) with e1 ≤ e2 (diagonal included) over each
-    conversation's distinct entities of a (conv_id, entity) frame — the
-    conversation self-join both the serving probe and the parameter fit
-    build on."""
-    ce = conv_ents.select("conv_id", "entity").distinct()
-    a, b = ce.alias("a"), ce.alias("b")
-    return (
-        a.join(b, "conv_id")
-        .where(F.col("a.entity") <= F.col("b.entity"))
-        .select(
-            "conv_id",
-            F.col("a.entity").alias("e1"),
-            F.col("b.entity").alias("e2"),
-        )
-    )
-
-
 def conv_lambda_pairs(
     candidates: DataFrame,
     lambda_table: DataFrame,
@@ -325,7 +307,17 @@ def conv_lambda_pairs(
     ``value_cols=("log_smoothed", "lp_sum")`` to carry the h-affine λ
     coefficients instead of the evaluated potential.
     """
-    pairs = conv_entity_pairs(candidates)
+    ce = candidates.select("conv_id", "entity").distinct()
+    a, b = ce.alias("a"), ce.alias("b")
+    pairs = (
+        a.join(b, "conv_id")
+        .where(F.col("a.entity") <= F.col("b.entity"))
+        .select(
+            "conv_id",
+            F.col("a.entity").alias("e1"),
+            F.col("b.entity").alias("e2"),
+        )
+    )
     # explicit alias mints a FRESH conv_id attribute: the caller cogroups
     # this output against the candidate table it was derived from, and a
     # shared attribute id trips Spark's ambiguous-self-join analysis when

@@ -1,6 +1,5 @@
 """StageCheckpointer: a stage costs its write, serving it costs nothing."""
 
-from contextlib import contextmanager
 from pathlib import Path
 
 import pyarrow as pa
@@ -9,22 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pboh_spark.checkpoint import StageCheckpointer
-
-
-@contextmanager
-def _jobs_in_group(spark, group: str):
-    """Yields a list that holds, on exit, the ids of the Spark jobs the
-    block launched (counted by the status tracker, under a job group)."""
-    sc = spark.sparkContext
-    jobs: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _frame(spark):
@@ -36,15 +19,15 @@ def _frame(spark):
     )
 
 
-def test_stage_write_is_the_only_job(spark, tmp_path):
+def test_stage_write_is_the_only_job(spark, tmp_path, jobs_in_group):
     """A fresh stage launches exactly the jobs of a bare parquet write of
     the same frame; a resumed stage launches none."""
-    with _jobs_in_group(spark, "ck_bare") as bare:
+    with jobs_in_group("ck_bare") as bare:
         _frame(spark).write.parquet(str(tmp_path / "bare"))
     ck = StageCheckpointer(spark, str(tmp_path / "ck"))
-    with _jobs_in_group(spark, "ck_fresh") as fresh:
+    with jobs_in_group("ck_fresh") as fresh:
         ck.run_stage("s", lambda: _frame(spark))
-    with _jobs_in_group(spark, "ck_resumed") as resumed:
+    with jobs_in_group("ck_resumed") as resumed:
         out = StageCheckpointer(spark, str(tmp_path / "ck")).run_stage(
             "s", lambda: _frame(spark)
         )

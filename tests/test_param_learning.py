@@ -3,7 +3,8 @@
 Oracles: central finite differences against the numpy kernel's sparse
 gradients; a planted wrong-prior corpus where per-parameter capacity is
 REQUIRED (no global {f,g,h,b} can fix one surface's preference) and the
-fitted tables must flip it; exact determinism across partitionings.
+fitted tables must flip it; exact determinism across partitionings;
+the fit's round kernel against _ppl_conv and a brute-force loss.
 """
 
 from __future__ import annotations
@@ -202,62 +203,6 @@ def test_param_fit_flips_planted_surface_and_beats_fewparams(spark):
     assert few_acc == base_acc  # global weights can't fix a per-surface prior
 
 
-def test_conv_pair_skeleton_and_probe_semantics(spark):
-    """r6 internals pin: the fit hoists the parameter-independent
-    conv-pair skeleton (`_conv_entity_pairs`) out of the round loop and
-    leaves only the keyed probe (`_conv_lambda_eff`) per round. The
-    skeleton must enumerate exactly the ordered pairs of each
-    conversation's candidate∪gold entity set (brute-force oracle), and
-    the probe must override the table potential with the parameter value
-    exactly where a parameter row exists (trainable flag matching)."""
-    from pyspark.sql import functions as F
-
-    cand, mentions, lam = _planted_corpus(spark, ["c0", "c1"])
-    gold = mentions.select(
-        "mention_id",
-        F.when(F.col("ngram") == "foo", F.lit(B))
-        .otherwise(F.expr("cast(substring(ngram, 4, 10) as long)"))
-        .alias("gold_entity"),
-    )
-    cg = cand.join(mentions, "mention_id").join(gold, "mention_id").select(
-        "conv_id", "mention_id", "entity", "rho", "log_pop", "ngram",
-        "gold_entity",
-    )
-
-    pairs = param_learning._conv_entity_pairs(cg)
-    got = {(r["conv_id"], r["e1"], r["e2"]) for r in pairs.collect()}
-    pdf = cg.select("conv_id", "entity", "gold_entity").toPandas()
-    expect = set()
-    for conv, grp in pdf.groupby("conv_id"):
-        ents = set(grp["entity"]) | set(grp["gold_entity"])
-        expect |= {
-            (conv, a, b) for a in ents for b in ents if a <= b
-        }
-    assert got == expect
-
-    # probe: only e1 == A gets a parameter row, moved off its init value
-    lam_p = (
-        param_learning.init_lambda_params(lam, min_cocit=4)
-        .where(F.col("e1") == A)
-        .withColumn("w", F.col("w") + 7.5)
-    )
-    eff = param_learning._conv_lambda_eff(pairs, lam, lam_p).collect()
-    assert eff, "probe produced no rows"
-    table_pot = {
-        (r["e1"], r["e2"]): r["lambda_potential"]
-        for r in lam.collect()
-    }
-    for r in eff:
-        key = (r["e1"], r["e2"])
-        assert key in table_pot  # inner probe: only table pairs survive
-        if r["e1"] == A:
-            assert r["trainable"] and r["lam_eff"] == table_pot[key] + 7.5
-        else:
-            assert not r["trainable"] and r["lam_eff"] == table_pot[key]
-    assert any(r["trainable"] for r in eff)
-    assert any(not r["trainable"] for r in eff)
-
-
 def _planted_cand_gold(spark, convs):
     """_planted_corpus as the fit's (candidates ⋈ gold, λ table) input."""
     from pyspark.sql import functions as F
@@ -296,10 +241,8 @@ def test_param_fit_deterministic_across_partitionings(spark):
 
 
 def test_param_fit_pins_only_its_two_tables(spark):
-    """Four rounds leave exactly the two returned parameter tables
-    pinned; every superseded table and round slice is released."""
-    from pboh_spark.util import release
-
+    """Four rounds leave nothing pinned: the preassembly and the λ probe
+    are released, and the two returned tables are local relations."""
     cg, lam = _planted_cand_gold(spark, [f"c{i}" for i in range(6)])
     pinned = lambda: set(  # noqa: E731
         spark.sparkContext._jsc.getPersistentRDDs().keys()
@@ -307,6 +250,177 @@ def test_param_fit_pins_only_its_two_tables(spark):
     before = pinned()
     rho_p, lam_p, hist = param_learning.learn_param_tables(cg, lam, n_rounds=4)
     assert len(hist) == 4
-    assert len(pinned() - before) == 2
-    release(rho_p, lam_p)
     assert pinned() - before == set()
+
+
+def test_param_fit_job_count(spark, jobs_in_group):
+    """A one-round fit on materialized inputs costs 14 Spark jobs: the
+    two initial-table collects, the preassembly's exchanges and count,
+    and one job for the round."""
+    from pboh_spark.util import release
+
+    cg, lam = (
+        df.localCheckpoint()  # count the fit's jobs, not its inputs'
+        for df in _planted_cand_gold(spark, [f"c{i}" for i in range(6)])
+    )
+    with jobs_in_group("param_fit") as jobs:
+        param_learning.learn_param_tables(cg, lam, n_rounds=1)
+    release(cg, lam)
+    assert len(jobs) == 14
+
+
+# ---------------------------------------------------------------------------
+# the fit's per-round kernel against _ppl_conv and a brute-force loss
+# ---------------------------------------------------------------------------
+
+LAM_CONST = -3.0  # a moderate backoff, so every term stays finite
+
+
+def _edge_cand_gold(spark):
+    """The planted corpus plus five edge conversations: one mention
+    ("one"), MAX_DOC + 1 mentions ("long"), a gold entity without a
+    candidate row ("nogold"), no trainable λ key ("untrained") and a
+    recurring surface ("repeat"). Popularities differ, so the backoff
+    separates candidates."""
+    cg, lam = _planted_cand_gold(spark, ["c0", "c1"])
+    lp = lambda e: 0.1 * (e % 7)  # noqa: E731
+    rows = [("one", 5000, 50, float(np.log(0.5)), lp(50), "solo", 50)]
+    for k in range(learning.MAX_DOC + 1):
+        m, e = 6000 + k, 60 + k
+        rows += [("long", m, e, float(np.log(0.6)), lp(e), f"w{k}", e),
+                 ("long", m, 99, float(np.log(0.4)), lp(99), f"w{k}", e)]
+    rows += [
+        ("nogold", 7000, A, float(np.log(0.75)), lp(A), "foo", 77),
+        ("nogold", 7000, B, float(np.log(0.25)), lp(B), "foo", 77),
+        ("nogold", 7001, 20, float(np.log(0.5)), lp(20), "bar", 21),
+        ("nogold", 7001, 21, float(np.log(0.5)), lp(21), "bar", 21),
+        ("untrained", 8000, 30, float(np.log(0.6)), lp(30), "baz", 31),
+        ("untrained", 8000, 31, float(np.log(0.4)), lp(31), "baz", 31),
+        ("untrained", 8001, 32, float(np.log(0.7)), lp(32), "qux", 32),
+        ("untrained", 8001, 33, float(np.log(0.3)), lp(33), "qux", 32),
+    ]
+    for m in (9000, 9001):
+        rows += [("repeat", m, A, float(np.log(0.75)), lp(A), "foo", B),
+                 ("repeat", m, B, float(np.log(0.25)), lp(B), "foo", B)]
+    rows += [("repeat", 9002, 10, float(np.log(0.9)), lp(10), "ctx10", 10)]
+    cg = cg.unionByName(spark.createDataFrame(rows, cg.schema))
+    lam = lam.unionByName(spark.createDataFrame(
+        [(20, 77, 5, 0.3), (21, 77, 5, -0.2), (A, 21, 5, 0.2),
+         (B, 21, 1, 0.1), (30, 32, 1, 0.4), (31, 32, 2, -0.3),
+         (31, 33, 0, 0.5), (60, 99, 5, 0.1)],
+        lam.schema,
+    ))
+    return cg, lam
+
+
+def _brute_loss(conv: pd.DataFrame, rho_w: dict, lam_eff: dict) -> float:
+    """One conversation's pseudolikelihood loss by explicit loops over
+    mentions, candidates and differently-named neighbors."""
+    ms = {
+        m: (g["ngram"].iloc[0], int(g["gold_entity"].iloc[0]),
+            dict(zip(g["entity"].astype(int), g["log_pop"])))
+        for m, g in conv.groupby("mention_id")
+    }
+    L = len(ms)
+    if not 1 < L <= learning.MAX_DOC:
+        return 0.0
+    loss = 0.0
+    for s, gold, cands in ms.values():
+        if gold not in cands:
+            continue
+        phi = {}
+        for e, lp in cands.items():
+            tot = 0.0
+            for sj, gj, cj in ms.values():
+                if sj == s:
+                    continue
+                tot += lam_eff.get(
+                    (min(e, gj), max(e, gj)),
+                    LAM_CONST + (1 - W.h) * (lp + cj.get(gj, 0.0)),
+                )
+            v = W.f * rho_w[(s, e)] + W.g * 2.0 / (L - 1) * tot
+            phi[e] = 0.0 if v > learning.CLAMP else v
+        loss += (phi[gold] - np.log(sum(np.exp(v) for v in phi.values()))) / L
+    return loss
+
+
+def test_round_kernel_matches_ppl_conv(spark):
+    """The fit's per-round kernel, run on each preassembled conversation
+    at parameters moved off their init values, returns _ppl_conv's
+    quantized loss and gradients key by key, and the brute-force loss.
+    The λ probe holds exactly the λ-table pairs among each
+    conversation's candidate ∪ gold entities, with the table potential
+    and the λ-parameter id of each pair."""
+    from pboh_spark.resolve import NEG, conv_tensors
+    from pboh_spark.util import release
+
+    q = learning._quantize
+    cg, lam = _edge_cand_gold(spark)
+    rho_t = param_learning.init_rho_params(cg).toPandas()
+    lam_t = param_learning.init_lambda_params(lam, min_cocit=4).toPandas()
+    rho_keys = list(zip(rho_t["ngram"], rho_t["entity"]))
+    lam_ids = {k: i for i, k in enumerate(zip(lam_t["e1"], lam_t["e2"]))}
+    rho_w = rho_t["w"].to_numpy(np.float64)
+    lam_w = lam_t["w"].to_numpy(np.float64)
+    rho_w[rho_keys.index(("foo", A))] -= 0.4
+    lam_w[lam_ids[(A, 10)]] += 7.5
+
+    probe, pre = param_learning._preassemble(cg, rho_t, lam, lam_t, W, LAM_CONST)
+    try:
+        blobs = dict(pre.collect())
+        got = {
+            (r["conv_id"], r["e1"], r["e2"]): (r["lambda_potential"], r["lam_id"])
+            for r in probe.collect()
+        }
+    finally:
+        release(probe)
+
+    table = {(r["e1"], r["e2"]): r["lambda_potential"] for r in lam.collect()}
+    pdf = cg.toPandas()
+    expect = {}
+    for conv, grp in pdf.groupby("conv_id"):
+        ents = set(grp["entity"]) | set(grp["gold_entity"])
+        expect.update({
+            (conv, a, b): (table[(a, b)], lam_ids.get((a, b), -1))
+            for a in ents for b in ents if a <= b and (a, b) in table
+        })
+    assert got == expect
+    assert any(k[0] == "nogold" and 77 in k[1:] for k in got)
+
+    ev = param_learning._round_kernel(
+        W, np.append(rho_w, NEG), np.append(lam_w, np.nan)
+    )
+    rho_eff = dict(zip(rho_keys, rho_w))
+    lam_eff = {**table, **{k: lam_w[i] for k, i in lam_ids.items()}}
+    pk = lambda a, b: int(_pack(np.array([a]), np.array([b]))[0])  # noqa: E731
+    lam_map = {pk(a, b): v for (a, b), v in lam_eff.items()}
+    lam_id = {pk(a, b): i for (a, b), i in lam_ids.items()}
+    train_keys = np.array(sorted(lam_id), dtype=np.int64)
+    moved = False
+    for conv, grp in pdf.groupby("conv_id"):
+        t = conv_tensors(grp)
+        rw = np.array(
+            [[rho_eff.get((s, e), NEG) for e in row]
+             for s, row in zip(t.surfaces, t.ents.tolist())]
+        )
+        loss, rho_g, lam_g, n = param_learning._ppl_conv(
+            t.ents, rw, t.logpop, t.surfaces, t.gold_ent, t.gold_idx,
+            lam_map, train_keys, W, LAM_CONST,
+        )
+        brute = _brute_loss(grp, rho_eff, lam_eff)
+        assert abs(loss - brute) < 1e-9, (conv, loss, brute)
+        if n == 0:
+            assert conv in ("one", "long") and conv not in blobs
+            continue
+        row = next(ev(iter([pd.DataFrame({"blob": [blobs[conv]]})]))).iloc[0]
+        assert row["n_convs"] == 1
+        assert row["loss"] == q(loss)
+        assert dict(zip((rho_keys[i] for i in row["rho_id"]), row["rho_q"])) == {
+            k: q(g) for k, g in rho_g.items()
+        }, conv
+        assert dict(zip(row["lam_id"], row["lam_q"])) == {
+            lam_id[k]: q(g) for k, g in lam_g.items()
+        }, conv
+        assert rho_g and (lam_g or conv == "untrained"), conv
+        moved |= lam_ids[(A, 10)] in set(row["lam_id"])
+    assert moved
