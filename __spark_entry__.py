@@ -1109,8 +1109,8 @@ _FIT_KW = {"n_rounds": 12, "eta": 1.0, "reg": 0.01}
 # COMPUTE at call time (a driver round loop) rather than building a lazy
 # plan — without the memo every conformance round pays each fit twice.
 # Safe because the fits are bit-deterministic (fixed-point merges) and the
-# cached DataFrames are localCheckpointed in, or local relations of, the
-# session they serve.
+# cached DataFrames are persisted in, or local relations of, the session
+# they serve.
 _FIT_CACHE: dict = {}
 
 
@@ -1118,25 +1118,36 @@ def _session_key(spark) -> str:
     return spark.sparkContext.applicationId
 
 
+def _seeded_assembly(spark, with_gold: bool):
+    """_seeded_resolve_inputs' conversations assembled once for LBP and
+    the fits (resolve.assemble_conversations): (assembly, λ table,
+    scalars). The
+    fits' assembly carries the seeded gold and is persisted, like the
+    seeded statistics tables, for the session: the fit and its serving
+    query both read it."""
+    from pboh_spark import resolve
+
+    gold, mentions, cand, lam, scalars = _seeded_resolve_inputs(spark)
+    asm = resolve.assemble_conversations(
+        cand, mentions, lam, gold if with_gold else None
+    )
+    return (asm.persist() if with_gold else asm), lam, scalars
+
+
 def _seeded_fit(spark):
     """Runs the shared weight fit; returns (fitted weights, history,
-    cand, conv-affine λ table, scalars). Memoized per session."""
+    assembly, scalars). Memoized per session."""
     from pboh_spark import learning, resolve
 
     key = ("few", _session_key(spark))
     if key in _FIT_CACHE:
         return _FIT_CACHE[key]
 
-    gold, mentions, cand, lam, scalars = _seeded_resolve_inputs(spark)
-    cand_gold = learning.learning_candidates(cand, mentions, gold)
-    conv_aff = resolve.conv_lambda_pairs(
-        cand, lam, value_cols=("log_smoothed", "lp_sum")
-    )
+    asm, _, scalars = _seeded_assembly(spark, with_gold=True)
     w_fit, hist = learning.learn_weights(
-        cand_gold, conv_aff,
-        lam_const=resolve.backoff_lam_const(scalars), **_FIT_KW,
+        asm, lam_const=resolve.backoff_lam_const(scalars), **_FIT_KW,
     )
-    _FIT_CACHE[key] = (w_fit, hist, cand, conv_aff, scalars)
+    _FIT_CACHE[key] = (w_fit, hist, asm, scalars)
     return _FIT_CACHE[key]
 
 
@@ -1148,21 +1159,19 @@ _PFIT_KW = {"n_rounds": 3, "eta": 1.0, "reg": 0.1, "min_cocit": 4}
 
 def _seeded_param_fit(spark):
     """Runs the shared per-parameter fit (L4's payload as DataFrames);
-    returns (rho_params, lambda_params, history, mentions, cand, lam,
-    scalars). Memoized per session."""
-    from pboh_spark import learning, param_learning, resolve
+    returns (rho_params, lambda_params, history, assembly, scalars).
+    Memoized per session."""
+    from pboh_spark import param_learning, resolve
 
     key = ("param", _session_key(spark))
     if key in _FIT_CACHE:
         return _FIT_CACHE[key]
 
-    gold, mentions, cand, lam, scalars = _seeded_resolve_inputs(spark)
-    cand_gold = learning.learning_candidates(cand, mentions, gold)
+    asm, lam, scalars = _seeded_assembly(spark, with_gold=True)
     rho_p, lam_p, hist = param_learning.learn_param_tables(
-        cand_gold, lam,
-        lam_const=resolve.backoff_lam_const(scalars), **_PFIT_KW,
+        asm, lam, lam_const=resolve.backoff_lam_const(scalars), **_PFIT_KW,
     )
-    _FIT_CACHE[key] = (rho_p, lam_p, hist, mentions, cand, lam, scalars)
+    _FIT_CACHE[key] = (rho_p, lam_p, hist, asm, scalars)
     return _FIT_CACHE[key]
 
 
@@ -1176,7 +1185,7 @@ def pboh_learn_param_tables(spark, sf_dir):
     utils/OptimizedLambdasMap.scala:14-21). Returns both parameter
     tables as one row set; bit-deterministic at any parallelism
     (fixed-point gradient merge), hence golden-oracle checkable."""
-    rho_p, lam_p, _, _, _, _, _ = _seeded_param_fit(spark)
+    rho_p, lam_p, _, _, _ = _seeded_param_fit(spark)
     r = rho_p.select(
         F.lit("rho").alias("kind"), "ngram",
         F.col("entity").alias("e1"), F.lit(0).cast("long").alias("e2"),
@@ -1192,34 +1201,29 @@ def pboh_learn_param_tables(spark, sf_dir):
 
 def pboh_resolve_lbp_params(spark, sf_dir):
     """Serving path of the per-parameter model
-    (ScorerFullLearnedParams.scala:38-54 as keyed left joins): the
-    learned rho/lambda tables from the shared fit override the
-    candidate priors and the pair-potential table, then the UNCHANGED
-    LBP kernel resolves — proving the parameter DataFrames join into
-    scoring end-to-end."""
-    from pboh_spark import param_learning, resolve
+    (ScorerFullLearnedParams.scala:38-54): the learned rho/lambda tables
+    from the shared fit override, by key inside the UNCHANGED LBP
+    kernel, the candidate priors and the pair potentials — proving the
+    parameter DataFrames feed scoring end-to-end."""
+    from pboh_spark import resolve
 
-    rho_p, lam_p, _, mentions, cand, lam, scalars = _seeded_param_fit(spark)
-    cand2 = param_learning.serve_candidates(cand, mentions, rho_p)
-    lam2 = param_learning.serve_lambda_table(lam, lam_p)
+    rho_p, lam_p, _, asm, scalars = _seeded_param_fit(spark)
     out = resolve.resolve_entities(
-        cand2, resolve.conv_lambda_pairs(cand2, lam2),
-        max_product=True, scalars=scalars,
+        asm, max_product=True, scalars=scalars, params=(rho_p, lam_p)
     )
     return out.select("conv_id", "mention_id", "entity", "converged")
 
 
 def _resolve_lbp(spark, max_product: bool, full: bool = False):
     """Shared body of the two LBP resolution queries: seeded corpus →
-    stats → candidates → bounded message passing (C4-C8). ``full``
-    returns every kernel column (n_iters/converged/score) for the
-    telemetry rollup query."""
+    stats → candidates → assembled conversations → bounded message
+    passing (C4-C8). ``full`` returns every kernel column
+    (n_iters/converged/score) for the telemetry rollup query."""
     from pboh_spark import resolve
 
-    _, _, cand, lam, scalars = _seeded_resolve_inputs(spark)
+    asm, _, scalars = _seeded_assembly(spark, with_gold=False)
     out = resolve.resolve_entities(
-        cand, resolve.conv_lambda_pairs(cand, lam), max_product=max_product,
-        scalars=scalars,
+        asm, max_product=max_product, scalars=scalars
     )
     if full:
         return out
@@ -1253,10 +1257,9 @@ def pboh_resolve_lbp_fitted(spark, sf_dir):
     constants misrank is proven in tests/test_learning.py instead."""
     from pboh_spark import resolve
 
-    w_fit, _, cand, conv_aff, scalars = _seeded_fit(spark)
+    w_fit, _, asm, scalars = _seeded_fit(spark)
     out = resolve.resolve_entities(
-        cand, resolve.lambda_at_h(conv_aff, w_fit.h),
-        weights=w_fit, max_product=True, scalars=scalars,
+        asm, weights=w_fit, max_product=True, scalars=scalars
     )
     return out.select("conv_id", "mention_id", "entity", "converged")
 
@@ -1325,7 +1328,7 @@ def pboh_learn_weights(spark, sf_dir):
     Returns the per-round training history (loss, f, g, h) — bit-stable
     at any parallelism thanks to the fixed-point gradient merge, hence
     golden-oracle checkable."""
-    _, hist, _, _, _ = _seeded_fit(spark)
+    _, hist, _, _ = _seeded_fit(spark)
     return spark.createDataFrame(
         [
             (

@@ -219,45 +219,33 @@ def _steps(spans: list[dict]) -> dict[str, dict]:
 
 
 def sec_learn(spark, sf_dir, tr) -> dict:
-    """pboh_learn_weights: the two input tables vs the full fit."""
+    """pboh_learn_weights: the conversation assembly vs the full fit."""
     import __spark_entry__ as entrymod
     from pboh_spark import learning, resolve
+    from pboh_spark.util import release
 
-    def inputs():
-        gold, mentions, cand, lam, scalars = entrymod._seeded_resolve_inputs(spark)
-        return (
-            learning.learning_candidates(cand, mentions, gold),
-            resolve.conv_lambda_pairs(
-                cand, lam, value_cols=("log_smoothed", "lp_sum")
-            ),
-            resolve.backoff_lam_const(scalars),
-        )
-
-    _step(tr, "inputs: cand_gold", "learning", lambda: _force(inputs()[0]))
-    _step(tr, "inputs: conv_aff", "learning", lambda: _force(inputs()[1]))
-    cand_gold, conv_aff, lam_const = inputs()
+    _step(tr, "inputs: assembly", "resolve",
+          lambda: _force(entrymod._seeded_assembly(spark, with_gold=True)[0]))
+    asm, _, scalars = entrymod._seeded_assembly(spark, with_gold=True)
     _, hist = _step(tr, "fit", "learning", lambda: learning.learn_weights(
-        cand_gold, conv_aff, lam_const=lam_const, **entrymod._FIT_KW
+        asm, lam_const=resolve.backoff_lam_const(scalars), **entrymod._FIT_KW
     ))
+    release(asm)
     return {"check": {"rounds": len(hist), "loss": round(hist[-1]["loss"], 6)}}
 
 
 def sec_resolve(spark, sf_dir, tr) -> dict:
-    """pboh_resolve_lbp: corpus, candidates and λ pairs vs the full query."""
+    """pboh_resolve_lbp: corpus, candidates and the assembly vs the full
+    query."""
     import __spark_entry__ as entrymod
-    from pboh_spark import resolve
 
     _, _, _, mentions, ns = entrymod._seeded_corpus(spark)
     _step(tr, "corpus: mentions", "normalize", lambda: _force(mentions))
     _step(tr, "corpus: name_stats", "stats", lambda: _force(ns))
     _step(tr, "inputs: candidates (incl containment)", "resolve",
           lambda: _force(entrymod._seeded_resolve_inputs(spark)[2]))
-
-    def lam_pairs():
-        _, _, cand, lam, _ = entrymod._seeded_resolve_inputs(spark)
-        _force(resolve.conv_lambda_pairs(cand, lam))
-
-    _step(tr, "inputs: conv_lambda_pairs", "resolve", lam_pairs)
+    _step(tr, "inputs: assembly", "resolve",
+          lambda: _force(entrymod._seeded_assembly(spark, with_gold=False)[0]))
     _step(tr, "full query", "resolve", lambda: _force(
         entrymod.queries()["pboh_resolve_lbp"](spark, sf_dir)), n=2)
     return {}
@@ -645,20 +633,20 @@ def sec_param_scale(spark, sf_dir, tr) -> dict:
     per-round cost tracks table size. The fit on real keys must stay
     bit-identical at every inflation level."""
     import __spark_entry__ as entrymod
-    from pboh_spark import learning, param_learning, resolve
+    from pboh_spark import param_learning, resolve
     from pboh_spark.util import release
 
-    gold, mentions, cand, lam, scalars = entrymod._seeded_resolve_inputs(spark)
-    cand_gold = learning.learning_candidates(cand, mentions, gold).localCheckpoint()
-    lam = lam.localCheckpoint()  # inputs off the clock
+    asm, lam, scalars = entrymod._seeded_assembly(spark, with_gold=True)
+    _force(asm)  # inputs off the clock
+    lam = lam.localCheckpoint()
     lam_const = resolve.backoff_lam_const(scalars)
     orig_rho, orig_lam = (
         param_learning.init_rho_params, param_learning.init_lambda_params
     )
     rows, baseline = [], None
     for extra in PARAM_EXTRAS:
-        param_learning.init_rho_params = lambda cg, e=extra: _inflate(
-            orig_rho(cg), e, "rho"
+        param_learning.init_rho_params = lambda a, e=extra: _inflate(
+            orig_rho(a), e, "rho"
         )
         param_learning.init_lambda_params = lambda lt, mc=4, e=extra: _inflate(
             orig_lam(lt, mc), e, "lam"
@@ -667,7 +655,7 @@ def sec_param_scale(spark, sf_dir, tr) -> dict:
             rho_p, lam_p, hist = _step(
                 tr, f"extra={extra}", "param_learning",
                 lambda: param_learning.learn_param_tables(
-                    cand_gold, lam, n_rounds=PARAM_ROUNDS, lam_const=lam_const
+                    asm, lam, n_rounds=PARAM_ROUNDS, lam_const=lam_const
                 ),
             )
         finally:
@@ -684,7 +672,7 @@ def sec_param_scale(spark, sf_dir, tr) -> dict:
             "checksum_ok": True,
         })
         release(rho_p, lam_p)
-    release(cand_gold, lam)
+    release(asm, lam)
     steps = _steps(tr.spans)
     for row in rows:
         wall = steps[f"extra={row['extra_keys_per_table']}"]["wall_s"]

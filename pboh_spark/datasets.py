@@ -35,7 +35,7 @@ path), mention lines filtered and field-sliced with codegen'd
 expressions. Output shapes plug straight into the existing stack:
 ``to_transcripts`` yields the input_hint turn schema for the full
 pipeline, ``aida_mentions``/``aida_gold`` feed
-evaluate.linking_accuracy and learning.learning_candidates as-is.
+evaluate.linking_accuracy and resolve.assemble_conversations as-is.
 """
 
 from __future__ import annotations
@@ -560,7 +560,8 @@ def evaluate_gold_dataset(
             stats.cooccurrence(anchors), es, scalars
         )
         assign = resolve.resolve_entities(
-            cand, resolve.conv_lambda_pairs(cand, lam), scalars=scalars
+            resolve.assemble_conversations(cand, mentions, lam),
+            scalars=scalars,
         )
         out["lbp"] = evaluate.linking_accuracy(assign, gold, mentions)
     return out

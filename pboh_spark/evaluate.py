@@ -224,7 +224,7 @@ def linking_accuracy(
     headline metric (GlobalStats.scala:236-248), for the LBP/ARGMAX path.
 
     Gold is deduplicated to one label per (conv, turn, surface) — min
-    entity, the same convention as learning.learning_candidates — BEFORE
+    entity, the same convention as resolve.assemble_conversations — BEFORE
     the mention join: per-occurrence gold tables (the dataset adapters
     emit one row per annotation) would otherwise fan k same-surface
     occurrences into k×k counted rows, weighting repeated surfaces

@@ -21,9 +21,10 @@ Reference parity (file:line in /root/reference/src/main/scala/):
 
 Spark recast: the reference runs per-worker *stochastic* SGD and merges
 weight deltas; here each round is ONE deterministic full-batch job. One
-cogrouped ``applyInPandas`` on conv_id — the LBP kernel's shape and its
-tensor builder, resolve.conv_tensors — assembles the weight-independent
-per-conversation contractions once per fit; each round is then a
+narrow ``mapInPandas`` over the conversation assembly
+(resolve.assemble_conversations, which LBP and the parameter fit read
+too) prepares the weight-independent per-conversation contractions once
+per fit through resolve.conv_tensors; each round is then a
 shuffle-free ``mapInPandas`` that evaluates loss/gradients and
 partial-sums them per partition, AdaGrad'd driver-side. Same merge
 topology, but reproducible: results are bit-identical at any
@@ -53,14 +54,17 @@ reference's ``y_space.contains(y)`` skip (:389).
 
 from __future__ import annotations
 
+import pickle
 from dataclasses import replace
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from pboh_spark.resolve import LAMBDA_FLOOR, _pack, conv_tensors, pair_map
+from pboh_spark.resolve import (
+    BLOB_SCHEMA, LAMBDA_FLOOR, _pack, conversations, conv_tensors, gold_rows,
+    pair_map,
+)
 from pboh_spark.stats import ScorerWeights
 from pboh_spark.util import release
 
@@ -204,49 +208,33 @@ def _pl_conv(
     )
 
 
-PRE_SCHEMA = "conv_id string, blob binary"
+def _prepare_kernel(lam_const: float):
+    """Narrow kernel over assembled conversations: per conversation with
+    a gold-labelled mention, ``_pl_prepare`` of its gold mentions
+    (resolve.conv_tensors) and of the λ pairs whose two entities are
+    both candidates in the conversation, pickled into one binary cell.
+    Conversations that contribute nothing (``skip``) yield no row."""
 
+    def prepare(batches):
+        for pdf in batches:
+            out = []
+            for conv_id, cand, lam in conversations(pdf):
+                gold = gold_rows(cand)
+                if gold.empty:
+                    continue
+                t = conv_tensors(gold)
+                ents = cand["entity"].to_numpy()
+                lam = lam[lam["e1"].isin(ents) & lam["e2"].isin(ents)]
+                pre = _pl_prepare(
+                    t.ents, t.rho, t.logpop, t.surfaces, t.gold_ent, t.gold_idx,
+                    pair_map(lam, "log_smoothed"), pair_map(lam, "lp_sum"),
+                    lam_const, ctx=t.ctx,
+                )
+                if not pre["skip"]:
+                    out.append((conv_id, pickle.dumps(pre, pickle.HIGHEST_PROTOCOL)))
+            yield pd.DataFrame(out, columns=["conv_id", "blob"])
 
-def _assemble_kernel(lam_const: float):
-    """Cogroup kernel for the ONE-TIME weight-independent preassembly:
-    per conversation, build the dense tensors (resolve.conv_tensors, the
-    LBP kernel's builder), run ``_pl_prepare``, and pickle the resulting
-    contractions into a single binary cell."""
-    import pickle
-
-    def assemble(cand: pd.DataFrame, lam: pd.DataFrame) -> pd.DataFrame:
-        if cand.empty:
-            return pd.DataFrame(columns=["conv_id", "blob"])
-        t = conv_tensors(cand)
-        pre = _pl_prepare(
-            t.ents, t.rho, t.logpop, t.surfaces, t.gold_ent, t.gold_idx,
-            pair_map(lam, "log_smoothed"), pair_map(lam, "lp_sum"),
-            lam_const, ctx=t.ctx,
-        )
-        return pd.DataFrame(
-            {"conv_id": [cand["conv_id"].iloc[0]],
-             "blob": [pickle.dumps(pre, protocol=pickle.HIGHEST_PROTOCOL)]}
-        )
-
-    return assemble
-
-
-def preassembled_convs(
-    cand_gold: DataFrame, conv_lambdas: DataFrame, lam_const: float
-) -> DataFrame:
-    """(conv_id, blob) — the weight-independent per-conversation
-    contractions, computed once per fit by one cogrouped exchange on
-    conv_id (the LBP kernel's shape, resolve.resolve_entities). Rounds
-    then re-evaluate ``_pl_round`` over this table (a narrow mapInPandas
-    with no shuffle, ``_fused_round_kernel``), so an n-round fit pays one
-    assembly shuffle + n cheap scans. ``conv_lambdas`` carries (conv_id,
-    e1, e2, log_smoothed, lp_sum) (resolve.conv_lambda_pairs(...,
-    value_cols=("log_smoothed", "lp_sum")))."""
-    return (
-        cand_gold.groupBy("conv_id")
-        .cogroup(conv_lambdas.groupBy("conv_id"))
-        .applyInPandas(_assemble_kernel(lam_const), PRE_SCHEMA)
-    )
+    return prepare
 
 
 def _quantize(x: float) -> int:
@@ -280,8 +268,6 @@ def _fused_round_kernel(w: ScorerWeights):
     partial sums per partition + a driver total equal the global long
     sum by integer associativity — the merge stays bit-identical at any
     partitioning."""
-    import pickle
-
     def ev(batches):
         acc = [0, 0, 0, 0, 0, 0]
         seen = False
@@ -300,40 +286,8 @@ def _fused_round_kernel(w: ScorerWeights):
     return ev
 
 
-def learning_candidates(
-    candidates: DataFrame, mentions: DataFrame, gold: DataFrame
-) -> DataFrame:
-    """Joins gold labels + surfaces onto the candidate table:
-    (conv_id, mention_id, entity, rho, log_pop[, ctx_evidence], ngram,
-    gold_entity). Mentions without a gold annotation are dropped (they
-    cannot supply a pseudolikelihood term or a gold-conditioned
-    neighbor). A ``ctx_evidence`` column on the input (the unfused
-    Σ log(p̃/p̂) term, with ``rho`` prior-only) passes through and turns
-    on the b-weight gradient."""
-    gm = (
-        gold.select(
-            "conv_id", "turn_idx",
-            F.lower(F.col("surface")).alias("ngram"),
-            F.col("entity").alias("gold_entity"),
-        )
-        .groupBy("conv_id", "turn_idx", "ngram")
-        .agg(F.min("gold_entity").alias("gold_entity"))
-    )
-    mg = mentions.join(gm, ["conv_id", "turn_idx", "ngram"], "inner").select(
-        "mention_id", "ngram", "gold_entity"
-    )
-    extra = (
-        ["ctx_evidence"] if "ctx_evidence" in candidates.columns else []
-    )
-    return candidates.join(mg, "mention_id", "inner").select(
-        "conv_id", "mention_id", "entity", "rho", "log_pop", *extra,
-        "ngram", "gold_entity",
-    )
-
-
 def learn_weights(
-    cand_gold: DataFrame,
-    conv_lambdas: DataFrame,
+    assembly: DataFrame,
     init: ScorerWeights | None = None,
     n_rounds: int = 20,
     eta: float = 1.0,
@@ -348,10 +302,15 @@ def learn_weights(
     ScorerWeights.scala:120-154: f,g clamped to [0.001, 15], b to
     [1e-8, 10], h bounded only by h·g ≥ −15).
 
-    b (the context-evidence weight) only moves when ``cand_gold``
-    carries a ``ctx_evidence`` column (with ``rho`` then being the
-    PRIOR-ONLY log p̂(e|m)); otherwise its gradient is identically 0 and
-    the regularizer pins it at its prior.
+    The fit reads the gold mentions of an assembly
+    (resolve.assemble_conversations built with ``gold``), and only λ
+    pairs whose two entities are both candidates in the conversation: a
+    gold entity that no mention has as a candidate meets its neighbors
+    through the closed-form backoff. b (the context-evidence weight)
+    only moves when the assembled candidate table carries a
+    ``ctx_evidence`` column (with ``rho`` then being the PRIOR-ONLY
+    log p̂(e|m)); otherwise its gradient is identically 0 and the
+    regularizer pins it at its prior.
 
     Returns (fitted weights, history) where history[r] =
     {round, loss, f, g, h, b} recorded AFTER round r's update;
@@ -359,22 +318,16 @@ def learn_weights(
     parallelism (see _fused_round_kernel). Session conf is left alone."""
     w = init or ScorerWeights()
     pr = np.array(priors if priors is not None else (w.f, w.g, w.h, w.b))
-    # r6: the λ probes and neighbor-sum contractions are weight-
-    # independent, so they are assembled ONCE (one cogrouped exchange —
-    # the shape every round used to pay) and persisted; each round is
-    # then a shuffle-free mapInPandas over the small contraction table.
-    # localCheckpoint on the λ side keeps the cogroup's analysis clean
-    # exactly as before; the persist lives only for the fit's duration.
-    conv_lambdas = conv_lambdas.localCheckpoint(eager=False)
-    pre = preassembled_convs(cand_gold, conv_lambdas, lam_const).persist()
-    # the cogroup inherits the full shuffle-partition count; re-reading
-    # 200 near-empty cached partitions per round costs more task/worker
-    # launches than the round's arithmetic. Coalesce the ROUND VIEW to a
-    # rows-derived width (~256 conversations per task; coalesce never
-    # raises the count) — a narrow dependency over the cache, so nothing
-    # is recomputed, and the quantized integer merge makes the result
+    # the λ probes and neighbor-sum contractions are weight-independent:
+    # one narrow pass over the assembly prepares them, persisted for the
+    # fit's duration; each round is then a mapInPandas over the small
+    # contraction table. The round view is coalesced to a rows-derived
+    # width (~256 conversations per task; coalesce never raises the
+    # count) — a narrow dependency over the cache, so nothing is
+    # recomputed, and the quantized integer merge makes the result
     # partitioning-independent by construction. The count materializes
     # the cache.
+    pre = assembly.mapInPandas(_prepare_kernel(lam_const), BLOB_SCHEMA).persist()
     pre_eval = pre.coalesce(pre.count() // 256 + 1)
     sq = np.zeros(4)
     history: list[dict] = []
@@ -415,5 +368,5 @@ def learn_weights(
                 h = -15.0 / gg
             w = replace(w, f=float(f), g=float(gg), h=float(h), b=float(b))
     finally:
-        release(pre, conv_lambdas)
+        release(pre)
     return w, history

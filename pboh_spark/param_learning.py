@@ -31,13 +31,17 @@ Reference parity (file:line in the reference's src/main/scala/):
   computed FULL-BATCH per round in learning.learn_weights' shape
   (Learning.scala:296-361 merge, :440-443 read clamp at update time).
 * serving — loopybeliefpropagation/ScorerFullLearnedParams.scala:38-54:
-  stored key → learned value, missing key → default scorer. Here the
-  override happens BEFORE the unchanged LBP kernel: learned rho
-  replaces the candidate table's prior (kernel applies f to both
-  branches — a uniform-scale deviation from the reference, which
-  leaves its learned rho un-multiplied) and learned lambda replaces
-  ``lambda_potential`` in the table the conv-pair probe joins, so
+  stored key → learned value, missing key → default scorer. Here
+  resolve.resolve_entities takes both tables as ``params`` and applies
+  them by key inside the unchanged LBP kernel: learned rho replaces the
+  candidate's prior (the kernel applies f to both branches — a
+  uniform-scale deviation from the reference, which leaves its learned
+  rho un-multiplied) and learned lambda replaces the pair's λ, so
   backoff pairs still flow through the kernel's closed-form default.
+
+The fit, like LBP and the weight fit, reads the conversations that
+resolve.assemble_conversations built once: one narrow pass prepares
+them against the parameter ids, and each round is one mapInPandas.
 
 Determinism: every per-(conversation, key) gradient is quantized to
 integer 1e-9 units (learning._quantize) and the integers are summed
@@ -54,9 +58,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pboh_spark.learning import CLAMP, MAX_DOC, PRE_SCHEMA, _FIXED, _quantize
+from pboh_spark.learning import CLAMP, MAX_DOC, _FIXED, _quantize
 from pboh_spark.resolve import (
-    LAMBDA_FLOOR, NEG, ConvTensors, _pack, conv_lambda_pairs, conv_tensors,
+    BLOB_SCHEMA, LAMBDA_FLOOR, NEG, ConvTensors, _pack, conv_tensors,
+    conversations, gold_rows, lambda_at_h, pair_values,
 )
 from pboh_spark.stats import ScorerWeights
 from pboh_spark.util import release
@@ -68,14 +73,27 @@ PART_SCHEMA = (
 )
 
 
-def init_rho_params(cand_gold: DataFrame) -> DataFrame:
+def _gold_rho_rows(batches):
+    """(ngram, entity, rho) of the gold mentions' candidate rows."""
+    for pdf in batches:
+        yield pd.concat(
+            [gold_rows(cand)[["ngram", "entity", "rho"]]
+             for _, cand, _ in conversations(pdf)]
+            or [pd.DataFrame(columns=["ngram", "entity", "rho"])],
+            ignore_index=True,
+        )
+
+
+def init_rho_params(assembly: DataFrame) -> DataFrame:
     """(ngram, entity, w0, w, sq): one row per distinct (surface, entity)
-    candidate key, initialized at the prior rho the scorer uses
-    (initW, Learning.scala:182-187). ``sq`` is the per-parameter AdaGrad
-    accumulator. rho is a function of (ngram, entity) upstream, so
-    min() is a deterministic pick of the one value."""
+    candidate key of the assembly's gold mentions, initialized at the
+    prior rho the scorer uses (initW, Learning.scala:182-187). ``sq`` is
+    the per-parameter AdaGrad accumulator. rho is a function of
+    (ngram, entity) upstream, so min() is a deterministic pick of the
+    one value."""
     return (
-        cand_gold.groupBy("ngram", "entity")
+        assembly.mapInPandas(_gold_rho_rows, "ngram string, entity long, rho double")
+        .groupBy("ngram", "entity")
         .agg(F.min("rho").alias("w0"))
         .select(
             "ngram", "entity", "w0",
@@ -232,57 +250,39 @@ def _ppl_conv(
     return loss, rho_g, dict(zip(lam_keys[li].tolist(), lg.tolist())), n
 
 
-def _preassemble(
-    cand_gold: DataFrame, rho_keys: pd.DataFrame, lambda_table: DataFrame,
-    lam_keys: pd.DataFrame, w: ScorerWeights, lam_const: float,
-) -> tuple[DataFrame, DataFrame]:
-    """(λ probe, preassembly): the λ-table pairs of each conversation's
-    candidate ∪ gold entities with their potential and λ-parameter id,
-    checkpointed lazily (the caller releases it), and one cogroup of
-    ``cand_gold``, carrying its rho-parameter id, against the probe into
-    (conv_id, pickled ``_ppl_prepare``). A key's id is its row in
-    ``rho_keys`` / ``lam_keys``."""
-    spark = cand_gold.sparkSession
-    rid = spark.createDataFrame(
-        rho_keys[["ngram", "entity"]].assign(rho_id=np.arange(len(rho_keys))),
-        "ngram string, entity long, rho_id long",
-    )
-    lid = spark.createDataFrame(
-        lam_keys[["e1", "e2"]].assign(lam_id=np.arange(len(lam_keys))),
-        "e1 long, e2 long, lam_id long",
-    )
-    lam_tbl = lambda_table.join(lid, ["e1", "e2"], "left").withColumn(
-        "lam_id", F.coalesce("lam_id", F.lit(-1))
-    )
-    ents = cand_gold.select("conv_id", "entity").unionByName(
-        cand_gold.select("conv_id", F.col("gold_entity").alias("entity"))
-    )
-    # the same λ-side localCheckpoint learn_weights takes: both cogroup
-    # sides derive from cand_gold
-    probe = conv_lambda_pairs(
-        ents, lam_tbl, value_cols=("lambda_potential", "lam_id")
-    ).localCheckpoint(eager=False)
+def _prepare_kernel(
+    rho_t: pd.DataFrame, lam_t: pd.DataFrame, weights: ScorerWeights | None,
+    lam_const: float,
+):
+    """Narrow kernel over assembled conversations: ``_ppl_prepare`` of
+    each conversation's gold mentions against its candidate ∪ gold λ
+    pairs, pickled into one binary cell. A key's parameter id is its row
+    in ``rho_t`` / ``lam_t`` (−1: a λ pair without a parameter); a pair's
+    fixed value is resolve.pair_values at ``weights``. Conversations
+    that contribute nothing yield no row."""
+    rho_keys = list(zip(rho_t["ngram"].tolist(), rho_t["entity"].tolist()))
+    lam_keys = _pack(lam_t["e1"].to_numpy(np.int64), lam_t["e2"].to_numpy(np.int64))
+    w = weights or ScorerWeights()
 
-    def assemble(cand: pd.DataFrame, lam: pd.DataFrame) -> pd.DataFrame:
-        pre = None if cand.empty else _ppl_prepare(
-            conv_tensors(cand),
-            dict(zip(zip(cand["ngram"], cand["entity"]), cand["rho_id"])),
-            _pack(lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64)),
-            lam["lam_id"].to_numpy(np.int64),
-            lam["lambda_potential"].to_numpy(np.float64), w, lam_const,
-        )
-        if pre is None:
-            return pd.DataFrame(columns=["conv_id", "blob"])
-        blob = pickle.dumps(pre, protocol=pickle.HIGHEST_PROTOCOL)
-        return pd.DataFrame({"conv_id": [cand["conv_id"].iloc[0]], "blob": [blob]})
+    def prepare(batches):
+        rho_ids = {k: i for i, k in enumerate(rho_keys)}
+        lam_ids = pd.Index(lam_keys)
+        for pdf in batches:
+            out = []
+            for conv_id, cand, lam in conversations(pdf):
+                gold = gold_rows(cand)
+                if gold.empty:
+                    continue
+                keys = _pack(lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64))
+                pre = _ppl_prepare(
+                    conv_tensors(gold), rho_ids, keys, lam_ids.get_indexer(keys),
+                    pair_values(lam, weights), w, lam_const,
+                )
+                if pre is not None:
+                    out.append((conv_id, pickle.dumps(pre, pickle.HIGHEST_PROTOCOL)))
+            yield pd.DataFrame(out, columns=["conv_id", "blob"])
 
-    pre = (
-        cand_gold.join(rid, ["ngram", "entity"])
-        .groupBy("conv_id")
-        .cogroup(probe.groupBy("conv_id"))
-        .applyInPandas(assemble, PRE_SCHEMA)
-    )
-    return probe, pre
+    return prepare
 
 
 def _partial_sums(grads: list[tuple]) -> tuple[np.ndarray, np.ndarray]:
@@ -330,7 +330,7 @@ def _adagrad_update(
 
 
 def learn_param_tables(
-    cand_gold: DataFrame,
+    assembly: DataFrame,
     lambda_table: DataFrame,
     weights: ScorerWeights | None = None,
     n_rounds: int = 4,
@@ -339,23 +339,31 @@ def learn_param_tables(
     min_cocit: int = 4,
     lam_const: float = LAMBDA_FLOOR,
 ) -> tuple[DataFrame, DataFrame, list[dict]]:
-    """Fit the per-parameter tables; returns (rho_params, lambda_params,
-    history), the tables as local DataFrames, so the fit pins nothing.
-    The driver holds three float64 per parameter key (w0, w, sq) plus
-    the keys, and ships both w vectors to each round's one mapInPandas
-    over the conversations preassembled once. The regularizer is
-    proximal toward w0 — the full-batch recast of the reference's
-    multiplicative s-shrinkage (Learning.scala:401-402), pulling
-    unobserved parameters back to the baseline scorer instead of to
-    zero-in-a-different-scale. Per-key AdaGrad (eta/√(1+Σg²)) mirrors
+    """Fit the per-parameter tables on the gold mentions of an assembly
+    (resolve.assemble_conversations built with ``gold``); returns
+    (rho_params, lambda_params, history), the tables as local
+    DataFrames, so the fit pins nothing. ``weights`` are the fitted
+    scorer weights: with them, λ values — the λ-parameter init from
+    ``lambda_table`` included — are taken at the fitted h
+    (resolve.lambda_at_h); without, the stored potential and the
+    validated constants. The driver holds three float64 per parameter
+    key (w0, w, sq) plus the keys, and ships both w vectors to each
+    round's one mapInPandas over the conversations prepared once. The
+    regularizer is proximal toward w0 — the full-batch recast of the
+    reference's multiplicative s-shrinkage (Learning.scala:401-402),
+    pulling unobserved parameters back to the baseline scorer instead of
+    to zero-in-a-different-scale. Per-key AdaGrad (eta/√(1+Σg²)) mirrors
     the few-params driver update; the READ_CLAMP caps stored values at
     15 like Learning.scala:440-443."""
     w = weights or ScorerWeights()
-    rho0 = init_rho_params(cand_gold)
+    if weights is not None:
+        lambda_table = lambda_at_h(lambda_table, weights.h)
+    rho0 = init_rho_params(assembly)
     lam0 = init_lambda_params(lambda_table, min_cocit)
     rho_t, lam_t = rho0.toPandas(), lam0.toPandas()
-    probe, pre = _preassemble(cand_gold, rho_t, lambda_table, lam_t, w, lam_const)
-    pre = pre.persist()
+    pre = assembly.mapInPandas(
+        _prepare_kernel(rho_t, lam_t, weights, lam_const), BLOB_SCHEMA
+    ).persist()
     history: list[dict] = []
     try:
         # learn_weights' width rule: ~256 conversations per task, a
@@ -381,48 +389,6 @@ def learn_param_tables(
                     np.add.at(tot, np.asarray(ids, np.int64), np.asarray(q, np.int64))
                 t["w"], t["sq"] = _adagrad_update(t, tot, n_convs, eta, reg)
     finally:
-        release(pre, probe)
-    new = cand_gold.sparkSession.createDataFrame
+        release(pre)
+    new = assembly.sparkSession.createDataFrame
     return new(rho_t, rho0.schema), new(lam_t, lam0.schema), history
-
-
-def serve_candidates(
-    candidates: DataFrame, mentions: DataFrame, rho_params: DataFrame
-) -> DataFrame:
-    """Join learned rho parameters into the candidate table
-    (ScorerFullLearnedParams.scala:38-45 as a keyed left join): stored
-    (surface, entity) keys replace the prior rho, everything else keeps
-    it. Output schema equals the input's, so the unchanged LBP kernel
-    serves the learned model."""
-    m = mentions.select("mention_id", "ngram")
-    out_cols = candidates.columns
-    return (
-        candidates.join(m, "mention_id", "left")
-        .join(
-            rho_params.select(
-                "ngram", "entity", F.col("w").alias("__w_rho")
-            ),
-            ["ngram", "entity"], "left",
-        )
-        .withColumn("rho", F.coalesce("__w_rho", "rho"))
-        .select(*out_cols)
-    )
-
-
-def serve_lambda_table(
-    lambda_table: DataFrame, lambda_params: DataFrame
-) -> DataFrame:
-    """Learned pair parameters override ``lambda_potential``
-    (ScorerFullLearnedParams.scala:46-52 as a keyed left join); pairs
-    absent from BOTH tables still reach the kernel's closed-form
-    backoff through resolve.conv_lambda_pairs' inner probe."""
-    return (
-        lambda_table.join(
-            lambda_params.select("e1", "e2", F.col("w").alias("__w")),
-            ["e1", "e2"], "left",
-        )
-        .withColumn(
-            "lambda_potential", F.coalesce("__w", "lambda_potential")
-        )
-        .drop("__w")
-    )

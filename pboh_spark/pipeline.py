@@ -6,6 +6,14 @@ Stage graph (each stage checkpointed, resumable — checkpoint.py):
     anchors ─► s2_name_stats/entity_stats/cooccurrence ─┐
                                     └─► s5_assignments ◄┘  (LBP linking)
 
+The resolution chain — s5_weights, s5_param_tables, s5_assignments* —
+reads one conversation assembly (resolve.assemble_conversations), built
+once per call when one of those stages has to be built and released
+before the call returns. Corpus scalars, fit summaries and the cluster
+count come from what the stage writes observed (``df.observe``) and
+from their footer row counts: run_pipeline runs no job of its own for
+them.
+
 Run: spark-submit --py-files pboh_spark.zip -m pboh_spark.pipeline
      --input <transcripts> --anchors <anchors> --out <dir> [--cores N]
 """
@@ -17,13 +25,50 @@ import sys
 import json
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pboh_spark import blocking, cluster, evaluate, normalize, resolve, stats, synth
 from pboh_spark import pairs as pairs_mod
 from pboh_spark.checkpoint import StageCheckpointer
 from pboh_spark.session import get_spark
+from pboh_spark.util import release
+
+
+def _total(col: Column) -> Column:
+    """SUM that observes 0, not NULL, over an empty stage."""
+    return F.coalesce(F.sum(col), F.lit(0))
+
+
+def corpus_stages(
+    ck: StageCheckpointer, anchors: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame, dict[str, int]]:
+    """The s2 statistics stages — name stats, entity stats and the
+    unpruned co-occurrence table — and stats.corpus_scalars' three
+    values, taken from those writes with no job of their own: Σ
+    total_freq over each name's rank-1 row counts every anchor link
+    once, Σ popularity = Σ_d n_d(n_d − 1) counts the ordered link pairs,
+    and the co-occurrence stage's footer row count is the distinct-pair
+    count."""
+    name_stats = ck.run_stage(
+        "s2_name_stats", lambda: stats.name_stats(anchors),
+        observe={"num_total_links": _total(
+            F.when(F.col("rank") == 1, F.col("total_freq"))
+        )},
+    )
+    ent_stats = ck.run_stage(
+        "s2_entity_stats", lambda: stats.entity_stats(anchors),
+        observe={"num_total_pairs": _total(F.col("popularity"))},
+    )
+    cooc = ck.run_stage("s2_cooc", lambda: stats.cooccurrence(anchors))
+    scalars = {
+        "num_total_links": ck.observed("s2_name_stats")["num_total_links"],
+        "num_total_pairs": ck.observed("s2_entity_stats")["num_total_pairs"],
+        "num_distinct_pairs": ck.stage_metrics("s2_cooc")["rows"],
+    }
+    return name_stats, ent_stats, cooc, scalars
 
 
 def run_pipeline(
@@ -62,8 +107,8 @@ def run_pipeline(
     ``learn_params`` additionally fits the PER-PARAMETER tables (L4's
     payload — param_learning.py): per-(surface, entity) rho and
     per-frequent-pair lambda corrections, checkpointed as one stage
-    (``s5_param_tables``, kind-tagged rows) and joined into the LBP
-    scoring exactly like the reference's OptimizedRhos/LambdasMap
+    (``s5_param_tables``, kind-tagged rows) and applied by key in the
+    LBP kernel exactly like the reference's OptimizedRhos/LambdasMap
     (ScorerFullLearnedParams.scala:38-54). Resume reloads the tables
     from parquet — no re-fit."""
     ck = StageCheckpointer(spark, out_dir)
@@ -85,13 +130,7 @@ def run_pipeline(
         if surface_mode
         else mentions
     )
-    name_stats = ck.run_stage("s2_name_stats", lambda: stats.name_stats(anchors))
-    ent_stats = ck.run_stage("s2_entity_stats", lambda: stats.entity_stats(anchors))
-    # the checkpointed co-occurrence table doubles as the distinct-pair
-    # count for the lambda backoff scalar — no second (doc,entity)
-    # self-join, and on resume the count is a parquet metadata read
-    cooc = ck.run_stage("s2_cooc", lambda: stats.cooccurrence(anchors))
-    scalars = stats.corpus_scalars(anchors, cooc=cooc)
+    name_stats, ent_stats, cooc, scalars = corpus_stages(ck, anchors)
     lam = ck.run_stage(
         "s2_lambda",
         lambda: stats.with_lambda_potential(cooc, ent_stats, scalars),
@@ -120,21 +159,22 @@ def run_pipeline(
         ),
         upstream=[f"s3_blocked{sfx}", "s2_lambda"],
         # match count rides the stage-write job (df.observe — A4), no
-        # separate scan of the scored table afterwards; coalesce because
-        # SUM over an empty stage observes NULL, not 0
-        observe={
-            "n_matches": F.coalesce(
-                F.sum(F.col("is_match_pred").cast("bigint")), F.lit(0)
-            )
-        },
+        # separate scan of the scored table afterwards
+        observe={"n_matches": _total(F.col("is_match_pred").cast("bigint"))},
     )
 
+    # the component roots (each component's cluster_id is its min member
+    # id) ride the components write: every link node outside a component
+    # is its own cluster, so n_clusters = nodes − component nodes + roots
     components = ck.run_stage(
         f"s6_components{sfx}",
         lambda: cluster.connected_components(scored.where("is_match_pred")),
         upstream=[f"s4_pairs{sfx}"],
+        observe={"n_roots": _total(
+            (F.col("id") == F.col("cluster_id")).cast("bigint")
+        )},
     )
-    clusters = ck.run_stage(
+    ck.run_stage(
         f"s6_clusters{sfx}",
         lambda: (
             pairs_mod.surface_clusters_to_mentions(mentions, components)
@@ -146,199 +186,199 @@ def run_pipeline(
 
     metrics: dict = {"stages": ck.summary(), "wall_sec": round(time.time() - t0, 2)}
 
-    if with_lbp:
-        cand = ck.run_stage(
-            "s5_candidates",
-            lambda: resolve.mention_candidates(mentions, name_stats, ent_stats, top_k),
-            upstream=["s1_mentions", "s2_name_stats", "s2_entity_stats"],
-        )
-        weights = None
-        if learn_gold is not None and fit_weights:
-            from pboh_spark import learning
-            from pboh_spark.stats import ScorerWeights
+    # LBP and both fits read one conversation assembly: built on first
+    # use — only when one of their stages has to be built — pinned for
+    # the call, released before it returns. persist, not
+    # localCheckpoint(eager=False): under AQE the latter runs every
+    # shuffle stage below it at call time (3 to 10 jobs for a λ probe of
+    # this shape); persist runs none until the first consumer's action
+    asm: list[DataFrame] = []
 
+    def assembly() -> DataFrame:
+        if not asm:
             if "log_smoothed" not in lam.columns:
                 raise ValueError(
-                    "--learn-weights needs the lambda table's affine "
-                    "columns (log_smoothed, lp_sum); the resumed s2_lambda "
-                    "checkpoint predates them — delete s2_lambda/ under the "
-                    "out_dir so the stage rebuilds with the current schema"
+                    "the conversation assembly needs the lambda table's "
+                    "affine columns (log_smoothed, lp_sum); the resumed "
+                    "s2_lambda checkpoint predates them — delete s2_lambda/ "
+                    "under the out_dir so the stage rebuilds with the "
+                    "current schema"
                 )
+            asm.append(resolve.assemble_conversations(
+                cand, mentions, lam, learn_gold
+            ).persist())
+        return asm[0]
 
-            def build_weight_history() -> DataFrame:
-                cg = learning.learning_candidates(cand, mentions, learn_gold)
-                cl = resolve.conv_lambda_pairs(
-                    cand, lam, value_cols=("log_smoothed", "lp_sum")
-                )
-                _, hist = learning.learn_weights(
-                    cg, cl, n_rounds=learn_rounds,
-                    lam_const=resolve.backoff_lam_const(scalars),
-                )
-                return spark.createDataFrame(
-                    [(h["round"], h["n_convs"], h["loss"],
-                      h["f"], h["g"], h["h"], h["b"]) for h in hist],
-                    "round int, n_convs int, loss double, f double, "
-                    "g double, h double, b double",
-                )
-
-            hist_df = ck.run_stage(
-                "s5_weights",
-                build_weight_history,
-                upstream=["s5_candidates", "s2_lambda"],
-            )
-            last = hist_df.orderBy(F.desc("round")).first()
-            weights = ScorerWeights(
-                f=float(last["f"]), g=float(last["g"]),
-                h=float(last["h"]), b=float(last["b"]),
-            )
-            metrics["learned_weights"] = {
-                "f": weights.f, "g": weights.g, "h": weights.h,
-                "b": weights.b,
-                "rounds": int(last["round"]),
-                "final_loss": float(last["loss"]),
-            }
-
-        # with fitted weights, stored potentials are re-evaluated at the
-        # fitted h (the checkpointed lambda_potential was baked at the
-        # prior h); the param fit's round 0 and serving both read this
-        lam_tbl = (
-            lam if weights is None else resolve.lambda_at_h(lam, weights.h)
-        )
-
-        param_tables = None
-        if learn_params:
-            if learn_gold is None:
-                raise ValueError("learn_params requires learn_gold")
-            from pboh_spark import learning, param_learning
-            from pboh_spark.stats import ScorerWeights
-
-            def build_param_tables() -> DataFrame:
-                cg = learning.learning_candidates(cand, mentions, learn_gold)
-                w_fit = weights or ScorerWeights()
-                rho_p, lam_p, hist = param_learning.learn_param_tables(
-                    cg, lam_tbl, weights=w_fit,
-                    n_rounds=param_rounds,
-                    lam_const=resolve.backoff_lam_const(scalars),
-                )
-                # one kind-tagged table per stage: rho + lambda params AND
-                # the per-round loss history, so resume restores all three
-                r = rho_p.select(
-                    F.lit("rho").alias("kind"), "ngram",
-                    F.col("entity").alias("e1"),
-                    F.lit(None).cast("long").alias("e2"), "w0", "w", "sq",
-                )
-                l = lam_p.select(
-                    F.lit("lam").alias("kind"),
-                    F.lit(None).cast("string").alias("ngram"),
-                    "e1", "e2", "w0", "w", "sq",
-                )
-                h = spark.createDataFrame(
-                    [(x["round"], x["loss"]) for x in hist],
-                    "e1 long, w double",
-                ).select(
-                    F.lit("hist").alias("kind"),
-                    F.lit(None).cast("string").alias("ngram"),
-                    "e1", F.lit(None).cast("long").alias("e2"),
-                    F.lit(None).cast("double").alias("w0"), "w",
-                    F.lit(None).cast("double").alias("sq"),
-                )
-                return r.unionByName(l).unionByName(h)
-
-            pt = ck.run_stage(
-                "s5_param_tables",
-                build_param_tables,
-                upstream=["s5_candidates", "s2_lambda"]
-                + (["s5_weights"] if weights is not None else []),
-            )
-            param_tables = (
-                pt.where(F.col("kind") == "rho").select(
-                    "ngram", F.col("e1").alias("entity"), "w"
+    try:
+        if with_lbp:
+            cand = ck.run_stage(
+                "s5_candidates",
+                lambda: resolve.mention_candidates(
+                    mentions, name_stats, ent_stats, top_k
                 ),
-                pt.where(F.col("kind") == "lam").select("e1", "e2", "w"),
+                upstream=["s1_mentions", "s2_name_stats", "s2_entity_stats"],
             )
-            hist_rows = (
-                pt.where(F.col("kind") == "hist").orderBy("e1").collect()
-            )
-            n_kind = dict(pt.groupBy("kind").count().collect())
-            metrics["param_tables"] = {
-                "n_rho": n_kind.get("rho", 0),
-                "n_lambda": n_kind.get("lam", 0),
-                "rounds": len(hist_rows),
-                "loss_history": [round(r["w"], 8) for r in hist_rows],
-            }
+            lam_const = resolve.backoff_lam_const(scalars)
+            weights = None
+            if learn_gold is not None and fit_weights:
+                from pboh_spark import learning
+                from pboh_spark.stats import ScorerWeights
 
-        def build_assignments() -> DataFrame:
-            c, tbl = cand, lam_tbl
-            if param_tables is not None:
+                def build_weight_history() -> DataFrame:
+                    _, hist = learning.learn_weights(
+                        assembly(), n_rounds=learn_rounds, lam_const=lam_const
+                    )
+                    return spark.createDataFrame(
+                        pd.DataFrame(hist)[
+                            ["round", "n_convs", "loss", "f", "g", "h", "b"]
+                        ],
+                        "round int, n_convs int, loss double, f double, "
+                        "g double, h double, b double",
+                    )
+
+                ck.run_stage(
+                    "s5_weights",
+                    build_weight_history,
+                    upstream=["s5_candidates", "s2_lambda"],
+                    # the last round's row rides the write
+                    observe={
+                        "rounds": F.max("round"),
+                        **{k: F.max_by(k, "round")
+                           for k in ("loss", "f", "g", "h", "b")},
+                    },
+                )
+                last = ck.observed("s5_weights")
+                weights = ScorerWeights(
+                    f=float(last["f"]), g=float(last["g"]),
+                    h=float(last["h"]), b=float(last["b"]),
+                )
+                metrics["learned_weights"] = {
+                    "f": weights.f, "g": weights.g, "h": weights.h,
+                    "b": weights.b,
+                    "rounds": int(last["rounds"]),
+                    "final_loss": float(last["loss"]),
+                }
+
+            param_tables = None
+            if learn_params:
+                if learn_gold is None:
+                    raise ValueError("learn_params requires learn_gold")
                 from pboh_spark import param_learning
 
-                # learned pair parameters override the λ table, learned
-                # rho parameters the candidate priors
-                c = param_learning.serve_candidates(
-                    cand, mentions, param_tables[0]
+                def build_param_tables() -> DataFrame:
+                    rho_p, lam_p, hist = param_learning.learn_param_tables(
+                        assembly(), lam, weights=weights,
+                        n_rounds=param_rounds, lam_const=lam_const,
+                    )
+                    # one kind-tagged table per stage: rho + lambda params
+                    # AND the per-round loss history, so resume restores
+                    # all three
+                    r = rho_p.select(
+                        F.lit("rho").alias("kind"), "ngram",
+                        F.col("entity").alias("e1"),
+                        F.lit(None).cast("long").alias("e2"), "w0", "w", "sq",
+                    )
+                    l = lam_p.select(
+                        F.lit("lam").alias("kind"),
+                        F.lit(None).cast("string").alias("ngram"),
+                        "e1", "e2", "w0", "w", "sq",
+                    )
+                    h = spark.createDataFrame(
+                        pd.DataFrame({
+                            "e1": np.array([x["round"] for x in hist], np.int64),
+                            "w": np.array([x["loss"] for x in hist], np.float64),
+                        }),
+                        "e1 long, w double",
+                    ).select(
+                        F.lit("hist").alias("kind"),
+                        F.lit(None).cast("string").alias("ngram"),
+                        "e1", F.lit(None).cast("long").alias("e2"),
+                        F.lit(None).cast("double").alias("w0"), "w",
+                        F.lit(None).cast("double").alias("sq"),
+                    )
+                    return r.unionByName(l).unionByName(h)
+
+                kind = F.col("kind")
+                pt = ck.run_stage(
+                    "s5_param_tables",
+                    build_param_tables,
+                    upstream=["s5_candidates", "s2_lambda"]
+                    + (["s5_weights"] if weights is not None else []),
+                    # per-kind counts and the loss history ride the write
+                    observe={
+                        "n_rho": _total((kind == "rho").cast("bigint")),
+                        "n_lambda": _total((kind == "lam").cast("bigint")),
+                        "loss_history": F.transform(
+                            F.sort_array(F.collect_list(
+                                F.when(kind == "hist", F.struct("e1", "w"))
+                            )),
+                            lambda x: x["w"],
+                        ),
+                    },
                 )
-                tbl = param_learning.serve_lambda_table(
-                    lam_tbl, param_tables[1]
+                param_tables = (
+                    pt.where(kind == "rho").select(
+                        "ngram", F.col("e1").alias("entity"), "w"
+                    ),
+                    pt.where(kind == "lam").select("e1", "e2", "w"),
                 )
-            return resolve.resolve_entities(
-                c, resolve.conv_lambda_pairs(c, tbl), weights=weights,
-                max_product=True, scalars=scalars,
+                o = ck.observed("s5_param_tables")
+                metrics["param_tables"] = {
+                    "n_rho": o["n_rho"],
+                    "n_lambda": o["n_lambda"],
+                    "rounds": len(o["loss_history"]),
+                    "loss_history": [round(x, 8) for x in o["loss_history"]],
+                }
+
+            # fitted-weights assignments checkpoint under their own stage
+            # name (like the _surf suffix): toggling --learn-weights on an
+            # existing out_dir must rebuild, never silently reuse the other
+            # mode's LBP output — and the weight stage is an explicit
+            # upstream
+            assign_name = (
+                "s5_assignments" if weights is None else "s5_assignments_fit"
             )
+            if param_tables is not None:
+                assign_name += "_params"
+            assign_upstream = ["s5_candidates", "s2_lambda"] + (
+                ["s5_weights"] if weights is not None else []
+            ) + (["s5_param_tables"] if param_tables is not None else [])
+            assignments = ck.run_stage(
+                assign_name,
+                lambda: resolve.resolve_entities(
+                    assembly(), weights=weights, max_product=True,
+                    scalars=scalars, params=param_tables,
+                ),
+                upstream=assign_upstream,
+                observe={
+                    "pct_converged": F.avg(F.col("converged").cast("int")),
+                    "avg_iters": F.avg(F.col("n_iters")),
+                },
+            )
+            # bucketed convergence rollup ≙ GlobalStats.scala:200-209 —
+            # two tiny aggs over the checkpointed assignments parquet
+            # (column-pruned scan of a small table; the stage write itself
+            # already carried the global observes above)
+            conv_rows = resolve.convergence_report(assignments).collect()
+            o = ck.observed(assign_name)
+            metrics["lbp"] = {
+                "n_assignments": ck.stage_metrics(assign_name).get("rows"),
+                "pct_converged": o["pct_converged"],
+                "avg_iters": o["avg_iters"],
+                "convergence_by_size": [r.asDict() for r in conv_rows],
+            }
+    finally:
+        release(*asm)
 
-        # fitted-weights assignments checkpoint under their own stage name
-        # (like the _surf suffix): toggling --learn-weights on an existing
-        # out_dir must rebuild, never silently reuse the other mode's LBP
-        # output — and the weight stage is an explicit upstream
-        assign_name = "s5_assignments" if weights is None else "s5_assignments_fit"
-        if param_tables is not None:
-            assign_name += "_params"
-        assign_upstream = ["s5_candidates", "s2_lambda"] + (
-            ["s5_weights"] if weights is not None else []
-        ) + (["s5_param_tables"] if param_tables is not None else [])
-        assignments = ck.run_stage(
-            assign_name,
-            build_assignments,
-            upstream=assign_upstream,
-            observe={
-                "pct_converged": F.avg(F.col("converged").cast("int")),
-                "avg_iters": F.avg(F.col("n_iters")),
-            },
-        )
-        sm = ck.stage_metrics(assign_name)
-        pct = sm.get("observed", {}).get("pct_converged")
-        avg_iters = sm.get("observed", {}).get("avg_iters")
-        # bucketed convergence rollup ≙ GlobalStats.scala:200-209 — two
-        # tiny aggs over the checkpointed assignments parquet (column-
-        # pruned scan of a small table; the stage write itself already
-        # carried the global observes above)
-        if pct is None or avg_iters is None:
-            # stage resumed from a checkpoint written before the observe()
-            # change (its metrics.json has no 'observed') — compute once
-            row = assignments.agg(
-                F.avg(F.col("converged").cast("int")).alias("p"),
-                F.avg(F.col("n_iters")).alias("a"),
-            ).collect()[0]
-            pct = row["p"] if pct is None else pct
-            avg_iters = row["a"] if avg_iters is None else avg_iters
-        conv_rows = resolve.convergence_report(assignments).collect()
-        metrics["lbp"] = {
-            "n_assignments": sm.get("rows"),
-            "pct_converged": pct,
-            "avg_iters": avg_iters,
-            "convergence_by_size": [r.asDict() for r in conv_rows],
-        }
-
-    # row counts come from the stage metrics (counted once during the
-    # checkpoint write); n_matches from the observed aggregate — the only
-    # post-hoc action left is the distinct cluster count
+    # row counts come from the stage metrics (footer counts of each
+    # stage write) and the rest from what the writes observed
     metrics["n_pairs_scored"] = ck.stage_metrics(f"s4_pairs{sfx}").get("rows")
-    n_matches = ck.stage_metrics(f"s4_pairs{sfx}").get("observed", {}).get(
-        "n_matches"
+    metrics["n_matches"] = ck.observed(f"s4_pairs{sfx}")["n_matches"]
+    metrics["n_clusters"] = (
+        ck.stage_metrics("s1_surfaces" if surface_mode else "s1_mentions")["rows"]
+        - ck.stage_metrics(f"s6_components{sfx}")["rows"]
+        + ck.observed(f"s6_components{sfx}")["n_roots"]
     )
-    if n_matches is None:  # pre-observe checkpoint resumed — count once
-        n_matches = scored.where("is_match_pred").count()
-    metrics["n_matches"] = n_matches
-    metrics["n_clusters"] = clusters.select("cluster_id").distinct().count()
     metrics["text_equality_violations"] = normalize.verify_text_equality(
         transcripts, normalize.normalize_turns(transcripts)
     )

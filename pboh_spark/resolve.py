@@ -11,9 +11,11 @@ eval/VerifyEDLBPForListOfWords.scala:35), neighbor-sum memoization
 Spark mapping: documents ⇒ conversations; since each conversation is
 ≤25 mentions × ≤10 candidates (doc-size cap ≙ FewParamsLearning.scala:364,
 top-10 prune ≙ MentEntsFreqIndexWrapper.scala:53), the whole CRF fits in
-small dense numpy tensors, so the kernel is a grouped **cogroup
-applyInPandas** over (candidates, conv-local lambda pairs) — one Python
-call per conversation batch, everything inside is vectorized numpy.
+small dense numpy tensors. ``assemble_conversations`` builds every
+conversation once — one cogroup of the candidate table against one λ
+probe into (conv_id, blob) rows — and LBP and both fits
+(learning.learn_weights, param_learning.learn_param_tables) are narrow
+mapInPandas stages over those rows, each through ``conv_tensors``.
 The reference's per-message virtual calls into Trove maps become three
 tensor ops per iteration; the O(l²k²)-not-O(l³k²) neighbor-sum
 subtraction trick (MessagesMap.scala:32-40) is preserved as
@@ -30,6 +32,7 @@ normalizes to Σexp = 1 (LoopyBeliefPropagation.scala:195-230).
 
 from __future__ import annotations
 
+import pickle
 from typing import NamedTuple
 
 import numpy as np
@@ -186,8 +189,8 @@ class ConvTensors(NamedTuple):
 
 
 def conv_tensors(cand: pd.DataFrame) -> ConvTensors:
-    """The pandas → numpy step of every per-conversation kernel (LBP,
-    the weight-fit preassembly, the parameter-fit gradients): scatter
+    """The pandas → numpy step of every per-conversation kernel (LBP and
+    both fits' prepare passes): scatter
     one conversation's candidate rows into (L, K) tensors, one row per
     mention (mention_id asc), candidates by entity asc — the stable
     argmax tie-break of the LBP kernel."""
@@ -237,49 +240,33 @@ def pair_map(lam: pd.DataFrame, col: str) -> dict[int, float]:
     )
 
 
-def _kernel(weights: ScorerWeights, max_product: bool, lam_const: float):
-    def solve(cand: pd.DataFrame, lam: pd.DataFrame) -> pd.DataFrame:
-        if cand.empty:
-            return pd.DataFrame(
-                columns=[
-                    "conv_id", "mention_id", "entity", "score",
-                    "n_iters", "converged",
-                ]
-            )
-        t = conv_tensors(cand)
-        best, score, iters, conv_ok = _solve_conv(
-            t.ents, t.rho, pair_map(lam, "lambda_potential"), weights,
-            max_product, logpop=t.logpop, lam_const=lam_const,
-        )
-        return pd.DataFrame(
-            {
-                "conv_id": cand["conv_id"].iloc[0],
-                "mention_id": t.mids,
-                "entity": t.ents[np.arange(len(t.mids)), best],
-                "score": score,
-                "n_iters": iters,
-                "converged": conv_ok,
-            }
-        )
-
-    return solve
-
-
 def lambda_at_h(df: DataFrame, h: float) -> DataFrame:
     """Replace ``lambda_potential`` by its value at the (re-fit) h weight,
-    from the affine coefficients any λ frame carries — the stats table
-    (stats.with_lambda_potential) or its conversation-local slice
-    (``conv_lambda_pairs(..., value_cols=("log_smoothed", "lp_sum"))``):
+    from the affine coefficients the λ table carries
+    (stats.with_lambda_potential):
 
         λ(h) = log_smoothed − h·lp_sum
 
     This is THE consistency rule between training and inference — the
-    decomposition the learning kernels differentiate. Fitted-weight
-    inference and the parameter fit's baseline come through here rather
-    than reusing a lambda_potential baked at the prior h."""
+    decomposition the learning kernels differentiate. ``pair_values`` is
+    the same rule, with the same IEEE operations, inside the
+    per-conversation kernels; this column form builds the parameter
+    fit's initial λ table."""
     return df.withColumn(
         "lambda_potential", F.col("log_smoothed") - F.lit(h) * F.col("lp_sum")
     )
+
+
+def pair_values(lam: pd.DataFrame, weights: ScorerWeights | None) -> np.ndarray:
+    """λ of one conversation's pair rows: the stored ``lambda_potential``
+    when no weights were fit, else λ(h) at the fitted h — lambda_at_h's
+    rule, evaluated in the same IEEE operations (h·lp_sum, then the
+    subtraction), so both forms agree bit for bit."""
+    if weights is None:
+        return lam["lambda_potential"].to_numpy(np.float64)
+    return lam["log_smoothed"].to_numpy(np.float64) - weights.h * lam[
+        "lp_sum"
+    ].to_numpy(np.float64)
 
 
 def backoff_lam_const(
@@ -293,38 +280,110 @@ def backoff_lam_const(
     return float(np.log(backoff) - np.log(n))
 
 
-def conv_lambda_pairs(
-    candidates: DataFrame,
-    lambda_table: DataFrame,
-    value_cols: tuple[str, ...] = ("lambda_potential",),
-) -> DataFrame:
-    """Conversation-local candidate-entity pair potentials:
-    (conv_id, e1, e2, *value_cols). Distinct conv entities self-join
-    on conv_id (anti-diagonal) then probe the global lambda table — the
-    distributed CocitationMap build (CocitationMap.scala:24-47), one
-    shuffle instead of per-doc hash probes. Missing pairs take the
-    closed-form backoff inside the kernel. Weight learning passes
-    ``value_cols=("log_smoothed", "lp_sum")`` to carry the h-affine λ
-    coefficients instead of the evaluated potential.
-    """
-    ce = candidates.select("conv_id", "entity").distinct()
-    a, b = ce.alias("a"), ce.alias("b")
-    pairs = (
-        a.join(b, "conv_id")
-        .where(F.col("a.entity") <= F.col("b.entity"))
-        .select(
-            "conv_id",
-            F.col("a.entity").alias("e1"),
-            F.col("b.entity").alias("e2"),
-        )
+# one pickled row per conversation: the assembly and both fits' prepared
+# conversations
+BLOB_SCHEMA = "conv_id string, blob binary"
+_LAM_COLS = ("e1", "e2", "lambda_potential", "log_smoothed", "lp_sum")
+
+
+def _assemble(cand: pd.DataFrame, lam: pd.DataFrame) -> pd.DataFrame:
+    """Cogroup kernel: one conversation's candidate and λ rows pickled
+    as two {column: array} dicts. No gold reads as gold_entity −1. Every
+    λ group has a candidate group: its pairs come from the candidates."""
+    cand = cand.assign(
+        gold_entity=cand["gold_entity"].fillna(-1).astype(np.int64)
     )
-    # explicit alias mints a FRESH conv_id attribute: the caller cogroups
-    # this output against the candidate table it was derived from, and a
-    # shared attribute id trips Spark's ambiguous-self-join analysis when
-    # the candidate lineage is shallow (e.g. a raw createDataFrame)
-    return pairs.join(
-        lambda_table.select("e1", "e2", *value_cols), ["e1", "e2"], "inner"
-    ).select(F.col("conv_id").alias("conv_id"), "e1", "e2", *value_cols)
+    blob = pickle.dumps(
+        (
+            {c: cand[c].to_numpy() for c in cand.columns if c != "conv_id"},
+            {c: lam[c].to_numpy() for c in _LAM_COLS},
+        ),
+        protocol=pickle.HIGHEST_PROTOCOL,
+    )
+    return pd.DataFrame({"conv_id": [cand["conv_id"].iloc[0]], "blob": [blob]})
+
+
+def assemble_conversations(
+    candidates: DataFrame,
+    mentions: DataFrame,
+    lambda_table: DataFrame,
+    gold: DataFrame | None = None,
+) -> DataFrame:
+    """(conv_id, blob): every conversation of the candidate table built
+    ONCE for LBP and both fits — the distributed analogue of the
+    reference building each document's CocitationMap once and using it
+    for learning and message passing (CocitationMap.scala:24-47).
+
+    One cogroup on conv_id. Its candidate side is the candidate table
+    with each mention's ``ngram`` and, when ``gold`` is given, its gold
+    entity under linking_accuracy's rule: one label per (conv, turn,
+    surface), the min entity (no label: −1). Its λ side is ONE probe of
+    the λ table (stats.with_lambda_potential) by every pair of the
+    conversation's candidate ∪ gold entities, carrying
+    ``lambda_potential``, ``log_smoothed`` and ``lp_sum``. Each
+    consumer is then a narrow mapInPandas over the rows
+    (``conversations``) that takes its own view:
+
+    * LBP (resolve_entities): all mentions, candidate pairs;
+    * the weight fit (learning.learn_weights): gold mentions, pairs of
+      two candidate entities;
+    * the parameter fit (param_learning.learn_param_tables): gold
+      mentions, candidate ∪ gold pairs.
+
+    The λ side's explicit ``conv_id`` alias mints a fresh attribute, so
+    the cogroup of two frames derived from one candidate table analyzes
+    without a checkpoint. Lazy: the caller persists the result when
+    more than one consumer reads it and releases it afterwards."""
+    if gold is None:
+        m = mentions.withColumn("gold_entity", F.lit(None).cast("long"))
+    else:
+        gm = (
+            gold.select(
+                "conv_id", "turn_idx",
+                F.lower(F.col("surface")).alias("ngram"),
+                F.col("entity").alias("gold_entity"),
+            )
+            .groupBy("conv_id", "turn_idx", "ngram")
+            .agg(F.min("gold_entity").alias("gold_entity"))
+        )
+        m = mentions.join(gm, ["conv_id", "turn_idx", "ngram"], "left")
+    extra = ["ctx_evidence"] if "ctx_evidence" in candidates.columns else []
+    cand = candidates.select(
+        "conv_id", "mention_id", "entity", "rho", "log_pop", *extra
+    ).join(m.select("mention_id", "ngram", "gold_entity"), "mention_id", "left")
+    # each conversation's entity pairs e1 ≤ e2, enumerated from its
+    # entity set in one aggregation instead of a self-join
+    ents = cand.groupBy("conv_id").agg(F.array_distinct(F.concat(
+        F.collect_list("entity"), F.collect_list("gold_entity")
+    )).alias("ents"))
+    pairs = ents.select("conv_id", F.inline(F.flatten(F.transform(
+        "ents", lambda x: F.transform(
+            F.filter("ents", lambda y: x <= y),
+            lambda y: F.struct(x.alias("e1"), y.alias("e2")),
+        )
+    ))))
+    lam = pairs.join(lambda_table.select(*_LAM_COLS), ["e1", "e2"]).select(
+        F.col("conv_id").alias("conv_id"), *_LAM_COLS
+    )
+    return (
+        cand.groupBy("conv_id")
+        .cogroup(lam.groupBy("conv_id"))
+        .applyInPandas(_assemble, BLOB_SCHEMA)
+    )
+
+
+def conversations(pdf: pd.DataFrame):
+    """(conv_id, candidate rows, λ rows) of each assembled conversation
+    in one mapInPandas batch of the assembly."""
+    for conv_id, blob in zip(pdf["conv_id"], pdf["blob"]):
+        cand, lam = pickle.loads(blob)
+        yield conv_id, pd.DataFrame(cand), pd.DataFrame(lam)
+
+
+def gold_rows(cand: pd.DataFrame) -> pd.DataFrame:
+    """The candidate rows of a conversation's gold-labelled mentions —
+    what both fits learn from."""
+    return cand[cand["gold_entity"] >= 0]
 
 
 def augment_containment(
@@ -445,30 +504,86 @@ def mention_candidates(
     return out
 
 
+def _lbp_kernel(
+    weights: ScorerWeights | None,
+    max_product: bool,
+    lam_const: float,
+    rho_over: dict,
+    lam_over: dict,
+):
+    """Narrow LBP kernel over assembled conversations: learned rho
+    parameters replace the prior of their (surface, entity) key, learned
+    λ parameters the pair value of their key, and everything else keeps
+    its value (ScorerFullLearnedParams.scala:38-54)."""
+    w = weights or ScorerWeights()
+
+    def solve(batches):
+        for pdf in batches:
+            out = []
+            for conv_id, cand, lam in conversations(pdf):
+                if rho_over:
+                    keys = zip(cand["ngram"].tolist(), cand["entity"].tolist())
+                    cand["rho"] = [
+                        rho_over.get(k, r) for k, r in zip(keys, cand["rho"].tolist())
+                    ]
+                pairs = _pack(
+                    lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64)
+                ).tolist()
+                vals = pair_values(lam, weights).tolist()
+                if lam_over:
+                    vals = [lam_over.get(k, v) for k, v in zip(pairs, vals)]
+                t = conv_tensors(cand)
+                best, score, iters, ok = _solve_conv(
+                    t.ents, t.rho, dict(zip(pairs, vals)), w, max_product,
+                    logpop=t.logpop, lam_const=lam_const,
+                )
+                out.append(pd.DataFrame({
+                    "conv_id": conv_id, "mention_id": t.mids,
+                    "entity": t.ents[np.arange(len(t.mids)), best],
+                    "score": score, "n_iters": iters, "converged": ok,
+                }))
+            if out:
+                yield pd.concat(out, ignore_index=True)
+
+    return solve
+
+
 def resolve_entities(
-    candidates: DataFrame,
-    conv_lambdas: DataFrame,
+    assembly: DataFrame,
     weights: ScorerWeights | None = None,
     max_product: bool = True,
     scalars: dict[str, int] | None = None,
+    params: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """LBP assignment per conversation → (conv_id, mention_id, entity,
-    score, n_iters, converged). Cogrouped Arrow exchange: both sides
-    shuffle once on conv_id, kernel runs per group.
+    """LBP assignment per assembled conversation (assemble_conversations)
+    → (conv_id, mention_id, entity, score, n_iters, converged): one
+    narrow mapInPandas, no shuffle.
 
-    ``scalars`` (stats.corpus_scalars) parameterizes the closed-form
-    independence-backoff lambda for pairs missing from conv_lambdas."""
-    w = weights or ScorerWeights()
-    lam_const = backoff_lam_const(scalars, w) if scalars else LAMBDA_FLOOR
-    # conv_lambdas usually derives from candidates (shared attribute ids);
-    # localCheckpoint gives it fresh lineage so the cogroup analyzes cleanly
-    # — and truncates the self-join plan, which is what we want before an
-    # Arrow exchange anyway.
-    lam = conv_lambdas.localCheckpoint(eager=False)
-    return (
-        candidates.groupBy("conv_id")
-        .cogroup(lam.groupBy("conv_id"))
-        .applyInPandas(_kernel(w, max_product, lam_const), RESOLVE_SCHEMA)
+    ``weights`` are the fitted scorer weights: with them, stored pairs
+    take λ at the fitted h (pair_values); without, the stored potential
+    and the validated constants. ``scalars`` (stats.corpus_scalars)
+    parameterizes the closed-form independence-backoff λ of pairs the
+    λ table lacks. ``params`` are the learned (rho, λ) parameter tables
+    of param_learning.learn_param_tables, (ngram, entity, w) and
+    (e1, e2, w); they are collected to the driver and applied by key in
+    the kernel."""
+    lam_const = (
+        backoff_lam_const(scalars, weights or ScorerWeights())
+        if scalars else LAMBDA_FLOOR
+    )
+    rho_over, lam_over = {}, {}
+    if params is not None:
+        r, l = (p.toPandas() for p in params)
+        rho_over = dict(zip(
+            zip(r["ngram"].tolist(), r["entity"].tolist()), r["w"].tolist()
+        ))
+        lam_over = dict(zip(
+            _pack(l["e1"].to_numpy(np.int64), l["e2"].to_numpy(np.int64)).tolist(),
+            l["w"].tolist(),
+        ))
+    return assembly.mapInPandas(
+        _lbp_kernel(weights, max_product, lam_const, rho_over, lam_over),
+        RESOLVE_SCHEMA,
     )
 
 

@@ -1,8 +1,9 @@
 from contextlib import contextmanager
 
 import pytest
+from pyspark.sql import functions as F
 
-from pboh_spark import synth
+from pboh_spark import resolve, synth
 from pboh_spark.session import get_spark
 
 
@@ -50,3 +51,25 @@ def jobs_in_group(spark):
             jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture(scope="session")
+def assemble():
+    """``assemble(cand, lam)``: resolve.assemble_conversations of a
+    hand-built candidate table that carries each mention's ``ngram``
+    and ``gold_entity``, with the mention and gold tables derived from
+    it (one turn per mention) and ``lam`` a λ table (e1, e2,
+    lambda_potential, log_smoothed, lp_sum)."""
+
+    def build(cand, lam):
+        turn = F.col("mention_id").alias("turn_idx")
+        mentions = cand.select("conv_id", "mention_id", turn, "ngram").distinct()
+        gold = cand.select(
+            "conv_id", turn, F.col("ngram").alias("surface"),
+            F.col("gold_entity").alias("entity"),
+        ).distinct()
+        return resolve.assemble_conversations(
+            cand.drop("ngram", "gold_entity"), mentions, lam, gold
+        )
+
+    return build

@@ -49,3 +49,24 @@ def test_read_requires_spark_footer_schema(spark, tmp_path):
     pq.write_table(pa.table({"a": [1, 2]}), data / "part-00000-x-c000.parquet")
     with pytest.raises(ValueError, match="org.apache.spark.sql.parquet.row.metadata"):
         ck.read("s")
+
+
+def test_resumed_stage_observes_from_metrics(spark, tmp_path, jobs_in_group):
+    """A resumed stage serves what its write observed with no job; an
+    ``observe`` name its metrics.json lacks is aggregated once from the
+    stage's data, and metrics.json is left as written."""
+    total = {"n_total": F.sum("n")}
+    ck = StageCheckpointer(spark, str(tmp_path))
+    ck.run_stage("s", lambda: _frame(spark), observe=total)
+    written = (tmp_path / "s" / "metrics.json").read_text()
+    with jobs_in_group("ck_observed") as resumed:
+        ck2 = StageCheckpointer(spark, str(tmp_path))
+        ck2.run_stage("s", lambda: _frame(spark), observe=total)
+    assert resumed == [] and ck2.observed("s") == {"n_total": 2000}
+    with jobs_in_group("ck_missing") as filled:
+        ck3 = StageCheckpointer(spark, str(tmp_path))
+        ck3.run_stage("s", lambda: _frame(spark),
+                      observe={**total, "k_max": F.max("k")})
+    assert len(filled) >= 1
+    assert ck3.observed("s") == {"n_total": 2000, "k_max": 12}
+    assert (tmp_path / "s" / "metrics.json").read_text() == written

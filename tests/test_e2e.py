@@ -1,6 +1,7 @@
 """End-to-end: pipeline F1 ≥ 0.99 gate + checkpoint resume + LBP accuracy."""
 
 import json
+import shutil
 from pathlib import Path
 
 import pytest
@@ -148,3 +149,43 @@ def test_threshold_calibration_grid(spark, e2e):
     best = max(cal.values())
     assert cal[0.65] >= best - 1e-9
     assert best >= 0.99
+
+
+def test_resolve_chain_job_count(spark, e2e, jobs_in_group, tmp_path):
+    """``run_pipeline(learn_gold=…, learn_params=True)`` on a copy of the
+    e2e fixture's stages: the linkage stages and the candidates resume,
+    the weight fit, the parameter fit and LBP are built over one
+    conversation assembly in 44 Spark jobs, and
+    nothing stays pinned — the assembly is released."""
+    out, transcripts, gold, anchors, _ = e2e
+    work = tmp_path / "ck"
+    shutil.copytree(out, work)
+    pinned = lambda: len(spark.sparkContext._jsc.getPersistentRDDs())  # noqa: E731
+    before = pinned()
+    with jobs_in_group("resolve_chain") as jobs:
+        m = run_pipeline(
+            spark, transcripts, anchors, str(work),
+            learn_gold=gold, learn_params=True,
+        )
+    assert pinned() == before
+    assert m["param_tables"]["n_rho"] > 0 and m["lbp"]["pct_converged"] == 1.0
+    assert len(jobs) == 44
+
+
+def test_scalars_and_cluster_count_from_stage_writes(spark, e2e, tmp_path):
+    """The corpus scalars the s2 writes observe equal
+    stats.corpus_scalars, on the e2e fixture's stages (resumed: read
+    from metrics.json) and on the seeded corpus (fresh writes); the
+    cluster count equals the distinct cluster ids of the clusters
+    stage."""
+    from __spark_entry__ import _seeded_corpus
+    from pboh_spark.pipeline import corpus_stages
+
+    out, _, _, anchors, metrics = e2e
+    *_, scalars = corpus_stages(StageCheckpointer(spark, out), anchors)
+    assert scalars == stats.corpus_scalars(anchors)
+    seeded = _seeded_corpus(spark)[2]
+    *_, scalars = corpus_stages(StageCheckpointer(spark, str(tmp_path)), seeded)
+    assert scalars == stats.corpus_scalars(seeded)
+    clusters = spark.read.parquet(f"{out}/s6_clusters/data")
+    assert metrics["n_clusters"] == clusters.select("cluster_id").distinct().count()

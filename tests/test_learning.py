@@ -83,7 +83,7 @@ def test_finite_difference_gradient_b_with_context():
             assert grads[gi] == pytest.approx(fd, rel=1e-4, abs=1e-7), field
 
 
-def test_context_weight_b_is_learned(spark):
+def test_context_weight_b_is_learned(spark, assemble):
     """Corpus where only context evidence disambiguates (two same-surface
     mentions ⇒ no pair terms by the xj != x guard): fitted b must rise
     and flip the held-out argmax to the gold entity."""
@@ -103,11 +103,8 @@ def test_context_weight_b_is_learned(spark):
         "log_pop double, ctx_evidence double, ngram string, "
         "gold_entity bigint",
     )
-    lam = spark.createDataFrame(
-        [], "conv_id string, e1 bigint, e2 bigint, log_smoothed double, "
-            "lp_sum double",
-    )
-    w_fit, hist = learn_weights(cand, lam, n_rounds=30, eta=1.0)
+    lam = spark.createDataFrame([], LAM_SCHEMA)
+    w_fit, hist = learn_weights(assemble(cand, lam), n_rounds=30, eta=1.0)
     assert hist[-1]["loss"] > hist[0]["loss"]
     assert w_fit.b > W.b  # context weight strengthened
     # held-out flip: b·ctx must now beat the prior gap log(0.7/0.3)
@@ -126,39 +123,47 @@ def test_doc_size_guard():
     assert (loss, n) == (0.0, 0) and not g.any()
 
 
+LAM_SCHEMA = (
+    "e1 bigint, e2 bigint, lambda_potential double, log_smoothed double, "
+    "lp_sum double"
+)
+
+
 def _crafted_corpus(spark, conv_ids):
     """Per conv: ambiguous mention 'amb' (A1=1 prior 0.7 vs gold A2=2
     prior 0.3) + unambiguous 'ctx' (B=3); λ(A2,B) − λ(A1,B) = 0.5 < the
     0.847 prior log-gap, so shipped g=0.5 (pair weight g·2/(L−1) = 1.0)
-    picks A1 — only a larger learned g flips it."""
-    cand_rows, lam_rows = [], []
+    picks A1 — only a larger learned g flips it. Returns the candidate
+    table (with ngram and gold) and the λ table."""
+    cand_rows = []
     for i, c in enumerate(conv_ids):
         cand_rows += [
             (c, 10 * i + 1, 1, math.log(0.7), 0.0, "amb", 2),
             (c, 10 * i + 1, 2, math.log(0.3), 0.0, "amb", 2),
             (c, 10 * i + 2, 3, 0.0, 0.0, "ctx", 3),
         ]
-        lam_rows += [(c, 1, 3, -1.5, 0.0), (c, 2, 3, -1.0, 0.0)]
     cand = spark.createDataFrame(
         cand_rows,
         "conv_id string, mention_id bigint, entity bigint, rho double, "
         "log_pop double, ngram string, gold_entity bigint",
     )
     lam = spark.createDataFrame(
-        lam_rows,
-        "conv_id string, e1 bigint, e2 bigint, log_smoothed double, "
-        "lp_sum double",
+        [(1, 3, -1.5, -1.5, 0.0), (2, 3, -1.0, -1.0, 0.0)], LAM_SCHEMA
     )
     return cand, lam
 
 
-def test_spark_kernel_matches_numpy(spark):
-    """The live fit path — the cogrouped preassembly (resolve.conv_tensors
-    on the Spark side) then one fused round — equals the quantized loss
-    and gradients of ``_pl_conv`` on hand-built tensors."""
-    cand, lam = _crafted_corpus(spark, ["c0"])
+def test_spark_kernel_matches_numpy(spark, assemble):
+    """The live fit path — the conversation assembly, the fit's prepare
+    pass (resolve.conv_tensors on the Spark side) then one fused round —
+    equals the quantized loss and gradients of ``_pl_conv`` on
+    hand-built tensors."""
     rows = (
-        learning.preassembled_convs(cand, lam, resolve.LAMBDA_FLOOR)
+        assemble(*_crafted_corpus(spark, ["c0"]))
+        .mapInPandas(
+            learning._prepare_kernel(resolve.LAMBDA_FLOOR),
+            resolve.BLOB_SCHEMA,
+        )
         .mapInPandas(learning._fused_round_kernel(W), learning.PART_SCHEMA)
         .collect()
     )
@@ -184,7 +189,7 @@ def test_spark_kernel_matches_numpy(spark):
     assert got["g_b"] == q(g[3]) == 0  # no ctx column
 
 
-def test_learn_weights_leaves_session_conf_alone(spark, monkeypatch):
+def test_learn_weights_leaves_session_conf_alone(spark, monkeypatch, assemble):
     """The fit sets no session-global conf: a concurrent query on the
     same session must keep planning with AQE."""
     from pyspark.sql.conf import RuntimeConfig
@@ -197,55 +202,48 @@ def test_learn_weights_leaves_session_conf_alone(spark, monkeypatch):
         return orig(self, key, value)
 
     monkeypatch.setattr(RuntimeConfig, "set", spy)
-    cand, lam = _crafted_corpus(spark, ["a0", "a1"])
-    learn_weights(cand, lam, n_rounds=2)
+    learn_weights(assemble(*_crafted_corpus(spark, ["a0", "a1"])), n_rounds=2)
     assert [k for k in keys if k.startswith("spark.sql.adaptive.")] == []
 
 
-def test_learning_is_partitioning_deterministic(spark):
+def test_learning_is_partitioning_deterministic(spark, assemble):
     """The fixed-point long-sum merge makes every round's fitted weights
     bit-identical regardless of how the corpus is partitioned."""
-    convs = [f"t{i}" for i in range(12)]
-    cand, lam = _crafted_corpus(spark, convs)
+    asm = assemble(*_crafted_corpus(spark, [f"t{i}" for i in range(12)]))
     runs = []
     for parts in (1, 7):
-        w, hist = learn_weights(
-            cand.repartition(parts), lam.repartition(parts), n_rounds=5
-        )
+        w, hist = learn_weights(asm.repartition(parts), n_rounds=5)
         runs.append((w, [(h["loss"], h["f"], h["g"], h["h"]) for h in hist]))
     assert runs[0][1] == runs[1][1]  # exact float equality, no approx
     assert runs[0][0] == runs[1][0]
 
 
-def test_learn_weights_leaves_nothing_pinned(spark):
+def test_learn_weights_leaves_nothing_pinned(spark, assemble):
     """The fit's persisted and checkpointed intermediates are all
     released: it returns plain Python values, so nothing stays pinned."""
-    cand, lam = _crafted_corpus(spark, [f"p{i}" for i in range(6)])
+    asm = assemble(*_crafted_corpus(spark, [f"p{i}" for i in range(6)]))
     pinned = lambda: set(  # noqa: E731
         spark.sparkContext._jsc.getPersistentRDDs().keys()
     )
     before = pinned()
-    learn_weights(cand, lam, n_rounds=3)
+    learn_weights(asm, n_rounds=3)
     assert pinned() - before == set()
 
 
-def test_loss_increases_and_fitted_beats_shipped(spark):
+def test_loss_increases_and_fitted_beats_shipped(spark, assemble):
     """Train on 20 crafted convs, hold out 8: the pseudolikelihood rises
     monotonically-ish, the fitted g grows past the flip point, and LBP
     micro accuracy on held-out gold beats the shipped constants."""
-    train_cand, train_lam = _crafted_corpus(
-        spark, [f"t{i}" for i in range(20)]
+    w_fit, hist = learn_weights(
+        assemble(*_crafted_corpus(spark, [f"t{i}" for i in range(20)])),
+        n_rounds=25, eta=1.0,
     )
-    w_fit, hist = learn_weights(train_cand, train_lam, n_rounds=25, eta=1.0)
     assert hist[-1]["loss"] > hist[0]["loss"]
     assert w_fit.g > W.g  # pair weight strengthened
     assert 0.001 <= w_fit.f <= 15 and 0.001 <= w_fit.g <= 15  # box
 
     held_cand, held_lam = _crafted_corpus(spark, [f"h{i}" for i in range(8)])
-    held_lam = held_lam.withColumn(
-        "lambda_potential",
-        F.col("log_smoothed") - F.lit(0.0) * F.col("lp_sum"),
-    )
+    held = assemble(held_cand, held_lam)
     gold = {
         (r["conv_id"], r["mention_id"]): r["gold_entity"]
         for r in held_cand.select(
@@ -254,13 +252,7 @@ def test_loss_increases_and_fitted_beats_shipped(spark):
     }
 
     def accuracy(w):
-        out = resolve.resolve_entities(
-            held_cand.select(
-                "conv_id", "mention_id", "entity", "rho", "log_pop"
-            ),
-            held_lam.select("conv_id", "e1", "e2", "lambda_potential"),
-            weights=w,
-        ).collect()
+        out = resolve.resolve_entities(held, weights=w).collect()
         hits = sum(
             1 for r in out if gold[(r["conv_id"], r["mention_id"])] == r["entity"]
         )
@@ -300,20 +292,15 @@ def test_pipeline_learn_weights_stage(spark, universe, tmp_path):
     acc = evaluate.linking_accuracy(assign, gold, m)
     assert acc["micro_accuracy"] >= 0.99, (acc, lw)
 
-    # λ(h) applied to the stats table before the conversation probe gives
-    # the assignments of applying it to the probed pairs afterwards
+    # the stage equals LBP under the fitted weights over an assembly of
+    # the checkpointed stages, its scalars taken by stats.corpus_scalars
     from pboh_spark import stats
 
     stage = lambda name: spark.read.parquet(f"{out}/{name}/data")  # noqa: E731
-    cand, lam = stage("s5_candidates"), stage("s2_lambda")
     w = ScorerWeights(f=lw["f"], g=lw["g"], h=lw["h"], b=lw["b"])
     want = resolve.resolve_entities(
-        cand,
-        resolve.lambda_at_h(
-            resolve.conv_lambda_pairs(
-                cand, lam, ("log_smoothed", "lp_sum")
-            ),
-            w.h,
+        resolve.assemble_conversations(
+            stage("s5_candidates"), m, stage("s2_lambda")
         ),
         weights=w,
         scalars=stats.corpus_scalars(anchors, cooc=stage("s2_cooc")),
@@ -322,6 +309,26 @@ def test_pipeline_learn_weights_stage(spark, universe, tmp_path):
         tuple(r) for r in df.select(*want.columns).collect()
     )
     assert rows(assign) == rows(want)
+
+
+def test_pair_values_match_lambda_at_h(spark, anchors):
+    """The kernels' λ(h) (resolve.pair_values) equals the column rule
+    resolve.lambda_at_h bit for bit on a real λ table, and with no
+    weights it is the stored potential."""
+    from pboh_spark import stats
+
+    es = stats.entity_stats(anchors)
+    lam = stats.with_lambda_potential(
+        stats.cooccurrence(anchors), es, stats.corpus_scalars(anchors)
+    )
+    w = ScorerWeights(h=0.3719)
+    pdf = resolve.lambda_at_h(
+        lam.withColumn("stored", F.col("lambda_potential")), w.h
+    ).toPandas()
+    assert len(pdf) > 100
+    assert (resolve.pair_values(pdf, w) == pdf["lambda_potential"]).all()
+    stored = pdf.assign(lambda_potential=pdf["stored"])
+    assert (resolve.pair_values(stored, None) == pdf["stored"]).all()
 
 
 def test_b_fit_end_to_end_on_synth_context(spark, universe):
@@ -363,12 +370,9 @@ def test_b_fit_end_to_end_on_synth_context(spark, universe):
         "conv_id", "mention_id", "entity",
         F.col("rho_prior").alias("rho"), "log_pop", "ctx_evidence",
     )
-    cg = learning.learning_candidates(cand_learn, mentions, gold)
-    cl = resolve.conv_lambda_pairs(
-        cand, lam, value_cols=("log_smoothed", "lp_sum")
-    )
     w_fit, hist = learning.learn_weights(
-        cg, cl, n_rounds=8,
+        resolve.assemble_conversations(cand_learn, mentions, lam, gold),
+        n_rounds=8,
         lam_const=resolve.backoff_lam_const(scalars),  # production backoff
     )
     mentions.unpersist()

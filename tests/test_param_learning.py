@@ -20,6 +20,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pboh_spark import learning, param_learning, resolve
 from pboh_spark.resolve import _pack
 from pboh_spark.stats import ScorerWeights
+from pboh_spark.util import release
 
 W = ScorerWeights()
 
@@ -91,13 +92,18 @@ def test_lambda_gradient_matches_finite_differences():
 # ---------------------------------------------------------------------------
 
 A, B = 1, 2  # "foo" candidates: prior favors A, gold is always B
+LAM_SCHEMA = (
+    "e1 long, e2 long, cocit long, lambda_potential double, "
+    "log_smoothed double, lp_sum double"
+)
 
 
 def _planted_corpus(spark, convs):
     """Each conv: mention "foo" (cands A at p=.75 / B at .25, gold B) +
     one context mention with a single unambiguous candidate 10+i. All
-    (cand, ctx) entity pairs are in the λ table at potential 0 so the
-    ONLY signal separating A from B is the (wrong) prior."""
+    (cand, ctx) entity pairs are in the λ table at potential 0 (λ(h) = 0
+    at every h) so the ONLY signal separating A from B is the (wrong)
+    prior. Returns (candidates, mentions, λ table)."""
     cand_rows, lam_rows, mention_rows = [], set(), []
     for c in convs:
         i = int(c[1:])
@@ -117,8 +123,8 @@ def _planted_corpus(spark, convs):
     )
     mentions = spark.createDataFrame(mention_rows, "mention_id long, ngram string")
     lam = spark.createDataFrame(
-        [(e1, e2, 5, 0.0) for e1, e2 in sorted(lam_rows)],
-        "e1 long, e2 long, cocit long, lambda_potential double",
+        [(e1, e2, 5, 0.0, 0.0, 0.0) for e1, e2 in sorted(lam_rows)],
+        LAM_SCHEMA,
     )
     return cand, mentions, lam
 
@@ -130,26 +136,23 @@ def _accuracy(assign, gold):
     return ok / max(n, 1)
 
 
-def test_param_fit_flips_planted_surface_and_beats_fewparams(spark):
+def _gold_of(mentions):
+    """(mention_id, gold_entity) of the planted corpus."""
     from pyspark.sql import functions as F
 
-    train = _planted_corpus(spark, [f"c{i}" for i in range(8)])
-    hold = _planted_corpus(spark, [f"h{i}" for i in range(100, 104)])
-    gold_of = lambda mentions: mentions.select(  # noqa: E731
+    return mentions.select(
         "mention_id",
         F.when(F.col("ngram") == "foo", F.lit(B))
         .otherwise(F.expr("cast(substring(ngram, 4, 10) as long)"))
         .alias("gold_entity"),
     )
-    cand, mentions, lam = train
-    cg = cand.join(mentions, "mention_id").join(
-        gold_of(mentions), "mention_id"
-    ).select(
-        "conv_id", "mention_id", "entity", "rho", "log_pop", "ngram",
-        "gold_entity",
-    )
+
+
+def test_param_fit_flips_planted_surface_and_beats_fewparams(spark, assemble):
+    train = _planted_cand_gold(spark, [f"c{i}" for i in range(8)])
+    asm = assemble(*train)
     rho_p, lam_p, hist = param_learning.learn_param_tables(
-        cg, lam, n_rounds=8, eta=5.0, reg=0.01
+        asm, train[1], n_rounds=8, eta=5.0, reg=0.01
     )
     assert len(hist) == 8
     assert hist[-1]["loss"] > hist[0]["loss"]  # ascent
@@ -166,18 +169,13 @@ def test_param_fit_flips_planted_surface_and_beats_fewparams(spark):
     assert wmap[("foo", B)] > wmap[("foo", A)], wmap
 
     # holdout serving: per-param tables flip "foo" to gold
-    hcand, hmentions, hlam = hold
-    hgold = gold_of(hmentions)
-    base = resolve.resolve_entities(
-        hcand, resolve.conv_lambda_pairs(hcand, hlam)
+    hcand, hmentions, hlam = _planted_corpus(
+        spark, [f"h{i}" for i in range(100, 104)]
     )
-    served_cand = param_learning.serve_candidates(hcand, hmentions, rho_p)
-    served = resolve.resolve_entities(
-        served_cand,
-        resolve.conv_lambda_pairs(
-            served_cand, param_learning.serve_lambda_table(hlam, lam_p)
-        ),
-    )
+    hgold = _gold_of(hmentions)
+    held = resolve.assemble_conversations(hcand, hmentions, hlam)
+    base = resolve.resolve_entities(held)
+    served = resolve.resolve_entities(held, params=(rho_p, lam_p))
     base_acc = _accuracy(base, hgold)
     fit_acc = _accuracy(served, hgold)
     assert base_acc < 1.0  # the prior really is wrong on "foo"
@@ -186,47 +184,33 @@ def test_param_fit_flips_planted_surface_and_beats_fewparams(spark):
     # few-params {f,g,h,b} fit on the SAME data cannot flip a per-surface
     # preference — holdout accuracy of the per-param fit must be >= it
     # (VERDICT r3 #2 acceptance bar; strictly greater here by design)
-    conv_aff = spark.createDataFrame(
-        [(e1, e2, 0.0, 0.0) for e1, e2 in
-         [(r["e1"], r["e2"]) for r in lam.select("e1", "e2").collect()]],
-        "e1 long, e2 long, log_smoothed double, lp_sum double",
-    )
-    w_fit, _ = learning.learn_weights(
-        cg, resolve.conv_lambda_pairs(cand, conv_aff, ("log_smoothed", "lp_sum")),
-        n_rounds=8, eta=5.0, reg=0.01,
-    )
-    few = resolve.resolve_entities(
-        hcand, resolve.conv_lambda_pairs(hcand, hlam), weights=w_fit
-    )
+    w_fit, _ = learning.learn_weights(asm, n_rounds=8, eta=5.0, reg=0.01)
+    few = resolve.resolve_entities(held, weights=w_fit)
     few_acc = _accuracy(few, hgold)
     assert fit_acc >= few_acc
     assert few_acc == base_acc  # global weights can't fix a per-surface prior
 
 
 def _planted_cand_gold(spark, convs):
-    """_planted_corpus as the fit's (candidates ⋈ gold, λ table) input."""
-    from pyspark.sql import functions as F
-
+    """_planted_corpus as (candidates with ngram and gold, λ table), the
+    ``assemble`` fixture's input."""
     cand, mentions, lam = _planted_corpus(spark, convs)
-    gold = mentions.select(
-        "mention_id",
-        F.when(F.col("ngram") == "foo", F.lit(B))
-        .otherwise(F.expr("cast(substring(ngram, 4, 10) as long)"))
-        .alias("gold_entity"),
-    )
-    cg = cand.join(mentions, "mention_id").join(gold, "mention_id").select(
+    cg = cand.join(mentions, "mention_id").join(
+        _gold_of(mentions), "mention_id"
+    ).select(
         "conv_id", "mention_id", "entity", "rho", "log_pop", "ngram",
         "gold_entity",
     )
     return cg, lam
 
 
-def test_param_fit_deterministic_across_partitionings(spark):
+def test_param_fit_deterministic_across_partitionings(spark, assemble):
     cg, lam = _planted_cand_gold(spark, [f"c{i}" for i in range(6)])
+    asm = assemble(cg, lam)
 
     def run(parts):
         rho_p, lam_p, _ = param_learning.learn_param_tables(
-            cg.repartition(parts), lam.repartition(max(parts // 2, 1)),
+            asm.repartition(parts), lam.repartition(max(parts // 2, 1)),
             n_rounds=3, eta=2.0, reg=0.05,
         )
         r = sorted(
@@ -240,33 +224,31 @@ def test_param_fit_deterministic_across_partitionings(spark):
     assert run(1) == run(7)
 
 
-def test_param_fit_pins_only_its_two_tables(spark):
-    """Four rounds leave nothing pinned: the preassembly and the λ probe
-    are released, and the two returned tables are local relations."""
+def test_param_fit_pins_only_its_two_tables(spark, assemble):
+    """Four rounds leave nothing pinned: the prepared conversations are
+    released, and the two returned tables are local relations."""
     cg, lam = _planted_cand_gold(spark, [f"c{i}" for i in range(6)])
+    asm = assemble(cg, lam)
     pinned = lambda: set(  # noqa: E731
         spark.sparkContext._jsc.getPersistentRDDs().keys()
     )
     before = pinned()
-    rho_p, lam_p, hist = param_learning.learn_param_tables(cg, lam, n_rounds=4)
+    rho_p, lam_p, hist = param_learning.learn_param_tables(asm, lam, n_rounds=4)
     assert len(hist) == 4
     assert pinned() - before == set()
 
 
-def test_param_fit_job_count(spark, jobs_in_group):
-    """A one-round fit on materialized inputs costs 14 Spark jobs: the
-    two initial-table collects, the preassembly's exchanges and count,
-    and one job for the round."""
-    from pboh_spark.util import release
-
-    cg, lam = (
-        df.localCheckpoint()  # count the fit's jobs, not its inputs'
-        for df in _planted_cand_gold(spark, [f"c{i}" for i in range(6)])
-    )
+def test_param_fit_job_count(spark, jobs_in_group, assemble):
+    """A one-round fit on a materialized assembly costs 7 Spark jobs:
+    the two initial-table collects (the rho table's aggregation over the
+    assembly is two), the prepare pass's count and the round."""
+    cg, lam = _planted_cand_gold(spark, [f"c{i}" for i in range(6)])
+    # count the fit's jobs, not its inputs'
+    asm, lam = assemble(cg, lam).localCheckpoint(), lam.localCheckpoint()
     with jobs_in_group("param_fit") as jobs:
-        param_learning.learn_param_tables(cg, lam, n_rounds=1)
-    release(cg, lam)
-    assert len(jobs) == 14
+        param_learning.learn_param_tables(asm, lam, n_rounds=1)
+    release(asm, lam)
+    assert len(jobs) == 7
 
 
 # ---------------------------------------------------------------------------
@@ -305,9 +287,10 @@ def _edge_cand_gold(spark):
     rows += [("repeat", 9002, 10, float(np.log(0.9)), lp(10), "ctx10", 10)]
     cg = cg.unionByName(spark.createDataFrame(rows, cg.schema))
     lam = lam.unionByName(spark.createDataFrame(
-        [(20, 77, 5, 0.3), (21, 77, 5, -0.2), (A, 21, 5, 0.2),
-         (B, 21, 1, 0.1), (30, 32, 1, 0.4), (31, 32, 2, -0.3),
-         (31, 33, 0, 0.5), (60, 99, 5, 0.1)],
+        [(e1, e2, c, v, v, 0.0) for e1, e2, c, v in (
+            (20, 77, 5, 0.3), (21, 77, 5, -0.2), (A, 21, 5, 0.2),
+            (B, 21, 1, 0.1), (30, 32, 1, 0.4), (31, 32, 2, -0.3),
+            (31, 33, 0, 0.5), (60, 99, 5, 0.1))],
         lam.schema,
     ))
     return cg, lam
@@ -344,19 +327,19 @@ def _brute_loss(conv: pd.DataFrame, rho_w: dict, lam_eff: dict) -> float:
     return loss
 
 
-def test_round_kernel_matches_ppl_conv(spark):
-    """The fit's per-round kernel, run on each preassembled conversation
-    at parameters moved off their init values, returns _ppl_conv's
+def test_round_kernel_matches_ppl_conv(spark, assemble):
+    """The fit's per-round kernel, run on each prepared conversation at
+    parameters moved off their init values, returns _ppl_conv's
     quantized loss and gradients key by key, and the brute-force loss.
-    The λ probe holds exactly the λ-table pairs among each
-    conversation's candidate ∪ gold entities, with the table potential
-    and the λ-parameter id of each pair."""
+    The assembly's λ rows are exactly the λ-table pairs among each
+    conversation's candidate ∪ gold entities, with the table
+    potential."""
     from pboh_spark.resolve import NEG, conv_tensors
-    from pboh_spark.util import release
 
     q = learning._quantize
     cg, lam = _edge_cand_gold(spark)
-    rho_t = param_learning.init_rho_params(cg).toPandas()
+    asm = assemble(cg, lam).localCheckpoint()
+    rho_t = param_learning.init_rho_params(asm).toPandas()
     lam_t = param_learning.init_lambda_params(lam, min_cocit=4).toPandas()
     rho_keys = list(zip(rho_t["ngram"], rho_t["entity"]))
     lam_ids = {k: i for i, k in enumerate(zip(lam_t["e1"], lam_t["e2"]))}
@@ -365,15 +348,16 @@ def test_round_kernel_matches_ppl_conv(spark):
     rho_w[rho_keys.index(("foo", A))] -= 0.4
     lam_w[lam_ids[(A, 10)]] += 7.5
 
-    probe, pre = param_learning._preassemble(cg, rho_t, lam, lam_t, W, LAM_CONST)
-    try:
-        blobs = dict(pre.collect())
-        got = {
-            (r["conv_id"], r["e1"], r["e2"]): (r["lambda_potential"], r["lam_id"])
-            for r in probe.collect()
-        }
-    finally:
-        release(probe)
+    blobs = dict(asm.mapInPandas(
+        param_learning._prepare_kernel(rho_t, lam_t, None, LAM_CONST),
+        resolve.BLOB_SCHEMA,
+    ).collect())
+    got = {
+        (conv, e1, e2): v
+        for conv, _, pairs in resolve.conversations(asm.toPandas())
+        for e1, e2, v in zip(pairs["e1"], pairs["e2"], pairs["lambda_potential"])
+    }
+    release(asm)
 
     table = {(r["e1"], r["e2"]): r["lambda_potential"] for r in lam.collect()}
     pdf = cg.toPandas()
@@ -381,7 +365,7 @@ def test_round_kernel_matches_ppl_conv(spark):
     for conv, grp in pdf.groupby("conv_id"):
         ents = set(grp["entity"]) | set(grp["gold_entity"])
         expect.update({
-            (conv, a, b): (table[(a, b)], lam_ids.get((a, b), -1))
+            (conv, a, b): table[(a, b)]
             for a in ents for b in ents if a <= b and (a, b) in table
         })
     assert got == expect

@@ -126,17 +126,20 @@ def test_resolve_dataframe_roundtrip(spark):
             }
         )
     )
-    lam = spark.createDataFrame(
-        pd.DataFrame({"conv_id": ["c0"], "e1": [7], "e2": [9],
-                      "lambda_potential": [0.0]})
+    mentions = spark.createDataFrame(
+        pd.DataFrame({"mention_id": [1, 2], "ngram": ["a", "b"]})
     )
-    out = resolve.resolve_entities(cand, lam, scalars={"num_total_pairs": 100,
-                                                       "num_distinct_pairs": 10})
+    lam = spark.createDataFrame(
+        pd.DataFrame({"e1": [7], "e2": [9], "lambda_potential": [0.0],
+                      "log_smoothed": [0.0], "lp_sum": [0.0]})
+    )
+    asm = resolve.assemble_conversations(cand, mentions, lam)
+    scalars = {"num_total_pairs": 100, "num_distinct_pairs": 10}
+    out = resolve.resolve_entities(asm, scalars=scalars)
     rows = {r["mention_id"]: r for r in out.collect()}
     assert rows[1]["entity"] == rows[2]["entity"]  # agreement
     # deterministic: re-run gives identical assignment
-    out2 = resolve.resolve_entities(cand, lam, scalars={"num_total_pairs": 100,
-                                                        "num_distinct_pairs": 10})
+    out2 = resolve.resolve_entities(asm, scalars=scalars)
     assert {(r["mention_id"], r["entity"]) for r in out2.collect()} == {
         (r["mention_id"], r["entity"]) for r in out.collect()
     }
@@ -306,7 +309,7 @@ def test_containment_accuracy_not_regressed(spark, universe):
             mentions, ns, es, top_k=10, containment=containment
         )
         out = resolve.resolve_entities(
-            cand, resolve.conv_lambda_pairs(cand, lam), scalars=scalars
+            resolve.assemble_conversations(cand, mentions, lam), scalars=scalars
         )
         return evaluate.linking_accuracy(out, gold, mentions)["micro_accuracy"]
 

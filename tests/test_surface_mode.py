@@ -41,6 +41,11 @@ def test_surface_mode_f1_and_pair_collapse(spark, universe, tmp_path):
     assert metrics["n_pairs_scored"] < n_surfaces * 40
     assert metrics["n_pairs_scored"] < n_mentions * 2
 
+    # the cluster count the stage writes give is the distinct count
+    assert metrics["n_clusters"] == (
+        clusters.select("cluster_id").distinct().count()
+    )
+
     # identical surfaces always share a cluster
     multi = (
         clusters.groupBy("ngram")
