@@ -713,9 +713,9 @@ def link_pair_scoring(spark, sf_dir):
 
 
 def link_blocking_metrics(spark, sf_dir):
-    """Stage-3 salt/cap skew accounting (blocking.salt_and_cap metrics):
-    block sizes, oversized-block count, naive pair space."""
-    from pboh_spark.blocking import salt_and_cap
+    """Stage-3 salt/cap skew accounting (blocking.block_metrics): block
+    sizes, oversized-block count, naive pair space."""
+    from pboh_spark.blocking import block_metrics
 
     p = _t(spark, sf_dir, "part").select(
         F.concat_ws("|", "p_brand", F.col("p_size").cast("string")).alias(
@@ -723,10 +723,7 @@ def link_blocking_metrics(spark, sf_dir):
         ),
         F.col("p_partkey").alias("mention_id"),
     )
-    # metrics-only consumer: one scan, the salted side is discarded —
-    # persist=False so no cache entry is pinned for the session
-    _, metrics = salt_and_cap(p, cap=16, persist=False)
-    return metrics.select(
+    return block_metrics(p, cap=16).select(
         F.col("n_blocks").cast("bigint").alias("n_blocks"),
         F.col("max_block_size").cast("bigint").alias("max_block_size"),
         F.col("n_blocks_salted").cast("bigint").alias("n_blocks_salted"),
@@ -1093,7 +1090,7 @@ def _seeded_resolve_inputs(spark):
     cooc1 = stats.cooccurrence(anchors, min_cocit=1).persist()
     scalars = stats.corpus_scalars(anchors, cooc=cooc1)
     lam = stats.with_lambda_potential(cooc1, es, scalars)
-    cand = resolve.mention_candidates(mentions, ns, es, top_k=10).persist()
+    cand = resolve.mention_candidates(mentions, ns, es).persist()
     return gold, mentions, cand, lam, scalars
 
 
@@ -1290,7 +1287,7 @@ def pboh_e2e_clusters(spark, sf_dir):
     from pboh_spark.util import release
 
     _, _, _, mentions, ns = _seeded_corpus(spark)
-    salted, _ = blocking.salt_and_cap(blocking.blocks(mentions, ns), cap=512)
+    salted = blocking.salt_and_cap(blocking.blocks(mentions, ns), cap=512)
     scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
     comp = cluster.connected_components(scored.where("is_match_pred"))
     # CC materialized its own checkpoints: the returned plan no longer
@@ -1310,7 +1307,7 @@ def pboh_surface_clusters(spark, sf_dir):
 
     _, _, _, mentions, ns = _seeded_corpus(spark)
     nodes = pairs_mod.surface_nodes(mentions)
-    salted, _ = blocking.salt_and_cap(blocking.blocks(nodes, ns), cap=512)
+    salted = blocking.salt_and_cap(blocking.blocks(nodes, ns), cap=512)
     scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
     comp = cluster.connected_components(scored.where("is_match_pred"))
     release(salted)  # comp reads only CC's own checkpoints
@@ -1354,7 +1351,7 @@ def pboh_threshold_grid(spark, sf_dir):
     blocked = blocking.blocks(mentions, ns)
     # one aggregate pass reads the salted table: nothing to checkpoint,
     # so nothing stays pinned after the query
-    salted, _ = blocking.salt_and_cap(blocked, cap=512, persist=False)
+    salted = blocking.salt_and_cap(blocked, cap=512, persist=False)
     scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
     lp = evaluate.build_labeled_pairs(gold, blocked)
     grid = evaluate.calibrate_threshold(scored, lp)
@@ -1488,7 +1485,7 @@ def gold_aida_eval(spark, sf_dir):
         F.col("conv_id").alias("doc_id"),
     )
     cand = resolve.mention_candidates(
-        mentions, stats.name_stats(anchors), top_k=10
+        mentions, stats.name_stats(anchors)
     )
     assign = resolve.resolve_argmax(cand)
     # gold is per-annotation: collapse to ONE row per (conv, surface) —

@@ -178,7 +178,7 @@ def linkage_pairs_throughput(
     # the final action aggregates over the fused score — a bare count()
     # would let Catalyst prune the scoring columns and the similarity
     # UDF would never run
-    salted, _ = blocking.salt_and_cap(blocking.blocks(nodes, ns), cap=BLOCK_CAP)
+    salted = blocking.salt_and_cap(blocking.blocks(nodes, ns), cap=BLOCK_CAP)
     scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
     row = scored.agg(
         F.count("*").alias("n"), F.sum("score").alias("chk")
@@ -273,7 +273,7 @@ def sec_linkage(spark, sf_dir, tr) -> dict:
               lambda: _force(blocking.minhash_blocks(nodes, ns)))
 
         def salt():
-            salted, _ = blocking.salt_and_cap(
+            salted = blocking.salt_and_cap(
                 blocking.blocks(nodes, ns), cap=BLOCK_CAP
             )
             _force(salted)
@@ -473,7 +473,7 @@ def sec_skew(spark, sf_dir, tr) -> dict:
         blocked.count()  # input off the clock
         for mode, cap in (("salted", SKEW_CAP), ("unsalted", 1 << 31)):
             # persist=False: one pass over the persisted input per trial
-            salted, _ = blocking.salt_and_cap(blocked, cap=cap, persist=False)
+            salted = blocking.salt_and_cap(blocked, cap=cap, persist=False)
             row = _step(tr, f"n_hot={n_hot}/{mode}", "pairs", lambda: (
                 pairs_mod.candidate_pairs(salted)
                 .agg(F.count("*").alias("n"), F.sum("prior_agreement"))
@@ -823,7 +823,9 @@ def _prep_pairs(n_conv: int, out_path: str, partitions: int) -> None:
 
     spark = get_spark(cores=DEFAULT_CPUS, shuffle_partitions=128)
     mentions, ns = _linkage_inputs(spark, n_conv)
-    salted, _ = blocking.salt_and_cap(blocking.blocks(mentions, ns), cap=BLOCK_CAP)
+    salted = blocking.salt_and_cap(
+        blocking.blocks(mentions, ns), cap=BLOCK_CAP
+    )
     pairs_mod.candidate_pairs(salted).repartition(partitions).write.mode(
         "overwrite"
     ).parquet(out_path)

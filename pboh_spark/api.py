@@ -26,9 +26,9 @@ import numpy as np
 import pandas as pd
 
 from pboh_spark.resolve import (
-    LAMBDA_FLOOR, _pack, _solve_conv, backoff_lam_const,
+    LAMBDA_FLOOR, _pack, _solve_conv, backoff_lam_const, conv_tensors,
 )
-from pboh_spark.stats import ScorerWeights
+from pboh_spark.stats import TOP_K, ScorerWeights
 from pboh_spark.util import release
 
 
@@ -59,13 +59,12 @@ class EntityLinker:
         log_pop: dict[int, float],
         lam_map: dict[int, float],
         lam_const: float = LAMBDA_FLOOR,
-        weights: ScorerWeights | None = None,
     ):
         self.name_candidates = name_candidates
         self.log_pop = log_pop
         self.lam_map = lam_map
         self.lam_const = lam_const
-        self.weights = weights or ScorerWeights()
+        self.weights = ScorerWeights()  # the validated constants
 
     @classmethod
     def from_tables(
@@ -74,8 +73,6 @@ class EntityLinker:
         entity_stats,
         lambda_table,
         scalars: dict[str, int] | None = None,
-        top_k: int = 10,
-        weights: ScorerWeights | None = None,
         max_lambda_rows: int = 20_000_000,
     ) -> "EntityLinker":
         """Serving-size memory bound: only the candidate CLOSURE of the
@@ -83,21 +80,20 @@ class EntityLinker:
         bound (~10^9 rows at reference scale,
         EntityCooccurrenceIndex.scala:44) — collecting it whole would OOM
         the driver — so it is pruned to pairs with at least ONE endpoint
-        in the top-``top_k`` candidate closure (one-endpoint, not both:
-        caller-supplied context entities outside every name's top-k keep
-        their steering pairs; size = Σ cocitation degree over ≤ |names|·k
+        in the top-10 candidate closure (one-endpoint, not both:
+        caller-supplied context entities outside every name's top-10 keep
+        their steering pairs; size = Σ cocitation degree over ≤ |names|·10
         closure entities). ``max_lambda_rows`` is a hard ceiling: exceeding it
-        raises instead of silently ballooning the driver heap — shrink
-        top_k or serve via the distributed path (resolve.resolve_entities).
+        raises instead of silently ballooning the driver heap — serve via
+        the distributed path (resolve.resolve_entities) instead.
         """
         from pyspark.sql import functions as F
 
-        w = weights or ScorerWeights()
         # collect the dictionary ONCE and derive the closure locally —
         # avoids re-running the name_stats rank window for each of the
         # pruning joins below
         cands_rows = (
-            name_stats.where(f"rank <= {top_k}")
+            name_stats.where(F.col("rank") <= TOP_K)
             .select("name", "entity", "prob")
             .collect()
         )
@@ -113,7 +109,7 @@ class EntityLinker:
         # keep lambda rows with EITHER endpoint in the closure: the other
         # endpoint may be a caller-supplied context entity (the REPL's
         # '| e1 e2' steering) — a both-endpoint prune would silently
-        # neutralize context entities outside every name's top-k. Size is
+        # neutralize context entities outside every name's top-10. Size is
         # Σ cocitation degree over the closure — still ≪ the full
         # entity-pair table, and the ceiling below still guards it.
         c1 = closure.select(F.col("entity").alias("e1")).withColumn(
@@ -135,7 +131,7 @@ class EntityLinker:
             if n_lam > max_lambda_rows:
                 raise ValueError(
                     f"pruned lambda table has {n_lam} rows > max_lambda_rows="
-                    f"{max_lambda_rows}; lower top_k or use the distributed "
+                    f"{max_lambda_rows}; use the distributed "
                     "resolve.resolve_entities path instead of a driver-side "
                     "linker"
                 )
@@ -164,8 +160,8 @@ class EntityLinker:
             )
             for r in lam_rows
         }
-        lam_const = backoff_lam_const(scalars, w) if scalars else LAMBDA_FLOOR
-        return cls(cand, pop, lam, lam_const, w)
+        lam_const = backoff_lam_const(scalars) if scalars else LAMBDA_FLOOR
+        return cls(cand, pop, lam, lam_const)
 
     def link(
         self,
@@ -184,36 +180,28 @@ class EntityLinker:
         ]
         if not known:
             return out
-        ctx = list(dict.fromkeys(context_entities or []))
-        L = len(known) + len(ctx)
-        K = max(
-            max(len(c) for _, c in known),
-            1,
-        )
-        ents = np.full((L, K), -1, dtype=np.int64)
-        rho = np.full((L, K), -1.0e30)
-        logpop = np.zeros((L, K))
-        for row, (_, cands) in enumerate(known):
-            # deterministic candidate order: entity asc (stable tie-break)
-            for col, (eid, prob) in enumerate(sorted(cands)[:K]):
-                ents[row, col] = eid
-                rho[row, col] = float(np.log(max(prob, 1e-300)))
-                logpop[row, col] = self.log_pop.get(eid, 0.0)
-        # context entities = pseudo-mentions pinned to one candidate with
-        # neutral unary evidence (console_el offsets ≥ 10^6 trick)
-        for j, eid in enumerate(ctx):
-            row = len(known) + j
-            ents[row, 0] = eid
-            rho[row, 0] = 0.0
-            logpop[row, 0] = self.log_pop.get(eid, 0.0)
+        # one candidate row per (mention row, entity); context entities
+        # are pseudo-mentions pinned to one candidate with neutral unary
+        # evidence, rho 0 (console_el offsets ≥ 10^6 trick)
+        rows = [
+            (row, eid, float(np.log(max(prob, 1e-300))))
+            for row, (_, cands) in enumerate(known)
+            for eid, prob in cands
+        ] + [
+            (len(known) + j, eid, 0.0)
+            for j, eid in enumerate(dict.fromkeys(context_entities or []))
+        ]
+        cand = pd.DataFrame(rows, columns=["mention_id", "entity", "rho"])
+        cand["log_pop"] = [self.log_pop.get(e, 0.0) for e in cand["entity"]]
+        t = conv_tensors(cand)
         best, score, _iters, conv = _solve_conv(
-            ents, rho, self.lam_map, self.weights, max_product,
-            logpop=logpop, lam_const=self.lam_const,
+            t.ents, t.rho, self.lam_map, self.weights, max_product,
+            logpop=t.logpop, lam_const=self.lam_const,
         )
         for row, (i, _) in enumerate(known):
             out[i] = Annotation(
                 mentions[i],
-                int(ents[row, best[row]]),
+                int(t.ents[row, best[row]]),
                 float(score[row]),
                 bool(conv),
             )
@@ -248,7 +236,6 @@ def main() -> None:
     ap.add_argument("--lambda-table", help="parquet path: stage-2 lambda table")
     ap.add_argument("--synth", action="store_true",
                     help="build stats from the seeded synthetic corpus")
-    ap.add_argument("--top-k", type=int, default=10)
     ap.add_argument("--sum-product", action="store_true",
                     help="marginal (sum-product) scores instead of max-product")
     args = ap.parse_args()
@@ -278,7 +265,7 @@ def main() -> None:
         es = spark.read.parquet(args.entity_stats)
         lam = spark.read.parquet(args.lambda_table)
         scalars = None
-    linker = EntityLinker.from_tables(ns, es, lam, scalars, top_k=args.top_k)
+    linker = EntityLinker.from_tables(ns, es, lam, scalars)
     print("ready — mentions comma-split, optional '| ctx ids':",
           file=_sys.stderr)
     for line in _sys.stdin:

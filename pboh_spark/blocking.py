@@ -32,48 +32,46 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from pboh_spark.stats import TOP_K
+
 N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
+SHINGLE_K = 3  # char 3-grams
 _MERSENNE = np.uint64((1 << 61) - 1)
-
-def _minhash_params(n_hashes: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, _MERSENNE, size=n_hashes, dtype=np.uint64)
-    b = rng.integers(0, _MERSENNE, size=n_hashes, dtype=np.uint64)
-    return a, b
 
 
 _FNV_OFFSET = np.uint64(0xCBF29CE484222325)
 _FNV_PRIME = np.uint64(0x100000001B3)
 
 
-def _shingle_hashes(s: str, k: int = 3) -> np.ndarray:
-    """Stable 64-bit FNV-1a hashes of char k-grams (padded) — python
+def _shingle_hashes(s: str) -> np.ndarray:
+    """Stable 64-bit FNV-1a hashes of char 3-grams (padded) — python
     hash() is salted per-process. Vectorized: one codepoint array per
-    string, then k fused xor/multiply passes over the sliding windows
+    string, then 3 fused xor/multiply passes over the sliding windows
     (uint64 wraps ≡ the & mask of the scalar form — keys byte-identical
     to the original per-char loop; asserted in tests)."""
     s = f"^{s}$"
-    if len(s) < k:
-        s = s.ljust(k, "_")
+    if len(s) < SHINGLE_K:
+        s = s.ljust(SHINGLE_K, "_")
     codes = np.fromiter(map(ord, s), dtype=np.uint64, count=len(s))
-    n = len(s) - k + 1
+    n = len(s) - SHINGLE_K + 1
     h = np.full(n, _FNV_OFFSET, dtype=np.uint64)
     with np.errstate(over="ignore"):
-        for j in range(k):
+        for j in range(SHINGLE_K):
             h = (h ^ codes[j : j + n]) * _FNV_PRIME
     return h
 
 
-def minhash_band_keys_udf(
-    n_hashes: int = N_HASHES, n_bands: int = N_BANDS, seed: int = 42
-):
-    """pandas UDF: name → array of band keys ("b{i}:{h}").
+def minhash_band_keys_udf():
+    """pandas UDF: name → array of N_BANDS band keys ("b{i}:{h}") from
+    N_HASHES minhashes (universal hashing, seed 42).
 
     Arrow-batched: one Python invocation per ~10k rows; signatures are
     numpy matrix ops per batch (input_hint: no per-row Python UDFs)."""
-    a, b = _minhash_params(n_hashes, seed)
-    rows_per_band = n_hashes // n_bands
+    rng = np.random.default_rng(42)
+    a = rng.integers(1, _MERSENNE, size=N_HASHES, dtype=np.uint64)
+    b = rng.integers(0, _MERSENNE, size=N_HASHES, dtype=np.uint64)
+    rows_per_band = N_HASHES // N_BANDS
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def bands(names: pd.Series) -> pd.Series:
@@ -81,11 +79,11 @@ def minhash_band_keys_udf(
         cache: dict[str, list[str]] = {}
         for s in uniq:
             sh = _shingle_hashes(s)
-            # (n_hashes, n_shingles) universal hashing, min per row
+            # (N_HASHES, n_shingles) universal hashing, min per row
             hv = (np.outer(a, sh) + b[:, None]) % _MERSENNE
             sig = hv.min(axis=1)
             keys = []
-            for bi in range(n_bands):
+            for bi in range(N_BANDS):
                 chunk = sig[bi * rows_per_band : (bi + 1) * rows_per_band]
                 kh = np.uint64(0xCBF29CE484222325)
                 for v in chunk:
@@ -99,9 +97,7 @@ def minhash_band_keys_udf(
     return bands
 
 
-def candidate_blocks(
-    mentions: DataFrame, name_stats: DataFrame, top_k: int = 10
-) -> DataFrame:
+def candidate_blocks(mentions: DataFrame, name_stats: DataFrame) -> DataFrame:
     """(block_key, conv_id, turn_idx, mention_id, ngram, prob) — one row
     per (mention, candidate entity). block_key = 'e{entity}'.
 
@@ -110,7 +106,7 @@ def candidate_blocks(
     dictionary (~21M rows at reference scale) → broadcastable or a plain
     shuffle hash join at worst; Catalyst picks via AQE.
     """
-    cands = name_stats.where(F.col("rank") <= top_k).select(
+    cands = name_stats.where(F.col("rank") <= TOP_K).select(
         F.col("name"), F.col("entity"), F.col("prob")
     )
     return mentions.join(cands, mentions["ngram"] == cands["name"], "inner").select(
@@ -124,8 +120,6 @@ def minhash_blocks(
     mentions: DataFrame,
     name_stats: DataFrame | None = None,
     oov_only: bool = True,
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
 ) -> DataFrame:
     """LSH blocks for fuzzy matching. With ``oov_only`` (default) only
     mentions whose name misses the dictionary are LSH-blocked — the
@@ -139,7 +133,7 @@ def minhash_blocks(
             "ngram",
             "left_anti",
         )
-    bands = minhash_band_keys_udf(n_hashes, n_bands)
+    bands = minhash_band_keys_udf()
     return m.withColumn("bk", F.explode(bands(F.col("ngram")))).select(
         F.col("bk").alias("block_key"),
         "conv_id", "turn_idx", "mention_id", "ngram",
@@ -148,33 +142,27 @@ def minhash_blocks(
     )
 
 
-def blocks(
-    nodes: DataFrame, name_stats: DataFrame, top_k: int = 10
-) -> DataFrame:
+def blocks(nodes: DataFrame, name_stats: DataFrame) -> DataFrame:
     """THE blocking composition: candidate-key blocks plus minhash-LSH
     blocks for the names the dictionary misses, unsalted. Callers salt
     with ``salt_and_cap`` themselves — the labelled-pair universe needs
     the unsalted union."""
-    return candidate_blocks(nodes, name_stats, top_k=top_k).unionByName(
+    return candidate_blocks(nodes, name_stats).unionByName(
         minhash_blocks(nodes, name_stats, oov_only=True)
     )
 
 
 def salt_and_cap(
     blocked: DataFrame, cap: int = 512, persist: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """Splits blocks larger than ``cap`` into ⌈n/cap⌉ salted sub-blocks.
+) -> DataFrame:
+    """Splits blocks larger than ``cap`` into ⌈n/cap⌉ salted sub-blocks
+    in one pass (a window count per block_key, no join back), so the
+    blocking pandas UDF runs once. ``block_metrics`` reports what the
+    split did.
 
-    Returns (salted_df, metrics_df). metrics_df: per-block sizes and the
-    number of oversplit blocks — the 'never silently' part — as a
-    separate lazy aggregate over the input. salted_df is one pass (a
-    window count per block_key, no join back), so the blocking pandas
-    UDF runs once.
-
-    With ``persist`` salted_df is a lazy ``localCheckpoint`` the caller
+    With ``persist`` the result is a lazy ``localCheckpoint`` the caller
     owns: ``util.release(salted)`` once nothing lazy reads it. Callers
-    that write it durably themselves, or use only the metrics, pass
-    ``persist=False``.
+    that write it durably themselves pass ``persist=False``.
     """
     n_salt = F.ceil(
         F.count("*").over(Window.partitionBy("block_key")) / F.lit(cap)
@@ -200,9 +188,17 @@ def salt_and_cap(
         # re-attach) re-analyzes the blocking tree, ~1-2 s of driver time
         # per pass. Not fault-tolerant: an executor loss re-runs the query;
         # durable pipelines write the table through checkpoint.py instead.
-        salted = salted.localCheckpoint(eager=False)
+        return salted.localCheckpoint(eager=False)
+    return salted
+
+
+def block_metrics(blocked: DataFrame, cap: int) -> DataFrame:
+    """One row over the unsalted blocks: their number, the largest, how
+    many ``salt_and_cap(blocked, cap)`` splits, and the naive pair count
+    — the 'never silently' part of the skew handling, as a lazy
+    aggregate."""
     sizes = blocked.groupBy("block_key").agg(F.count("*").alias("block_size"))
-    metrics = sizes.agg(
+    return sizes.agg(
         F.count("*").alias("n_blocks"),
         F.max("block_size").alias("max_block_size"),
         F.sum(F.when(F.col("block_size") > cap, 1).otherwise(0)).alias(
@@ -212,4 +208,3 @@ def salt_and_cap(
             "naive_pairs"
         ),
     )
-    return salted, metrics

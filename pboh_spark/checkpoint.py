@@ -45,6 +45,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from pboh_spark.util import release
+
 # footer key under which Spark's parquet writer stores the row schema
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
@@ -117,7 +119,6 @@ class StageCheckpointer:
         builder: Callable[[], DataFrame],
         upstream: list[str] | None = None,
         repartition_by: str | None = None,
-        num_partitions: int | None = None,
         observe: dict | None = None,
     ) -> DataFrame:
         """Build-or-resume. ``repartition_by`` lets a stage land
@@ -131,7 +132,9 @@ class StageCheckpointer:
 
         A fresh stage runs only its write: ``rows`` and the per-write-
         partition lineage are summed from the part files' footer row
-        counts, and the returned frame is ``read(stage)``. A resumed
+        counts, and the returned frame is ``read(stage)``. The builder's
+        frame is then released (``util.release``): whatever it pinned —
+        CC's checkpointed labels — is freed once it is written. A resumed
         stage runs no job, unless its metrics.json predates one of the
         ``observe`` names: those are then aggregated once from the
         stage's data (one job) into this session's metrics, and
@@ -150,7 +153,7 @@ class StageCheckpointer:
             return out
 
         t0 = time.time()
-        df = builder()
+        built = df = builder()
         obs = None
         if observe:
             from pyspark.sql import Observation
@@ -160,11 +163,9 @@ class StageCheckpointer:
                 obs, *[expr.alias(name) for name, expr in observe.items()]
             )
         if repartition_by:
-            df = df.repartition(
-                *( [num_partitions] if num_partitions else [] ),
-                repartition_by,
-            )
+            df = df.repartition(repartition_by)
         df.write.mode("overwrite").parquet(str(dpath))
+        release(built)
         out = self.read(stage)
         # lineage: footer row counts summed per write task, whose number
         # is the NNNNN of the part-NNNNN-<job uuid>-cNNN file name

@@ -41,7 +41,8 @@ def connected_components(
     Convergence is a driver-side changed-count (the same bounded-loop
     shape as the reference's LBP, LoopyBeliefPropagation.scala:126-137).
     Each round's checkpoint is released once the next one is
-    materialized; only the one behind the returned labels stays pinned.
+    materialized. The returned labels are a projection of the last one,
+    which stays pinned until the caller's ``util.release(labels)``.
     """
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
@@ -119,17 +120,21 @@ def connected_components(
     return labels
 
 
+STAR_MAX_ITER = 25
+
+
 def connected_components_star(
     edges: DataFrame,
     src: str = "mention_id_a",
     dst: str = "mention_id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Alternating large-star / small-star (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14). Fewer rounds on
-    high-diameter graphs than hash-to-min; kept as the scale path for
-    chain-shaped components. Same output contract as
-    ``connected_components``.
+    Components in MapReduce and Beyond", SoCC'14), at most STAR_MAX_ITER
+    rounds. Fewer rounds on high-diameter graphs than hash-to-min; kept
+    as the scale path for chain-shaped components. Same output contract
+    as ``connected_components``: the labels are checkpointed, the last
+    edge set released, and the caller frees the labels with
+    ``util.release``.
     """
     def _fingerprint(df: DataFrame) -> tuple:
         """(n_edges, XOR of xxhash64(u,v)) — one aggregation job; an
@@ -150,12 +155,9 @@ def connected_components_star(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    vertices = e.select(F.col("u").alias("id")).union(
-        e.select(F.col("v").alias("id"))
-    ).distinct().localCheckpoint(eager=True)
 
     fp = _fingerprint(e)
-    for _ in range(max_iter):
+    for _ in range(STAR_MAX_ITER):
         # large-star: every neighbor v of u with v > u links to min(N(u) ∪ u)
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = sym.groupBy("u").agg(
@@ -189,23 +191,23 @@ def connected_components_star(
             break
         fp = new_fp
 
-    labels = e.select(F.col("u").alias("id"), F.col("v").alias("cluster_id"))
-    return (
-        vertices.join(labels, "id", "left")
-        .select(
-            "id",
-            F.least(F.coalesce(F.col("cluster_id"), F.col("id")), F.col("id")).alias(
-                "cluster_id"
-            ),
+    # every round orients each edge (u, v) with v < u and keeps every
+    # vertex on some edge, so a vertex's label is the least v of its
+    # edges, or itself when it only appears as a v
+    labels = (
+        e.select(F.col("u").alias("id"), F.col("v").alias("cluster_id"))
+        .union(
+            e.select(F.col("v").alias("id"), F.col("v").alias("cluster_id"))
         )
         .groupBy("id")
         .agg(F.min("cluster_id").alias("cluster_id"))
+        .localCheckpoint(eager=True)
     )
+    release(e)
+    return labels
 
 
-def clusters_table(
-    mentions: DataFrame, components: DataFrame, scores: DataFrame | None = None
-) -> DataFrame:
+def clusters_table(mentions: DataFrame, components: DataFrame) -> DataFrame:
     """Final clusters output (FIXTURES.md §7): every mention, singletons
     keeping cluster_id = own mention_id."""
     out = mentions.select("mention_id", "conv_id", "turn_idx", "ngram").join(
@@ -217,14 +219,11 @@ def clusters_table(
 
 
 def merge_edges_into_components(
-    mapping: DataFrame,
-    edges: DataFrame,
-    src: str = "mention_id_a",
-    dst: str = "mention_id_b",
-    max_iter: int = 20,
+    mapping: DataFrame, edges: DataFrame
 ) -> DataFrame:
     """INCREMENTAL connected-components merge: fold a batch of new
-    undirected edges into an existing min-id component ``mapping``
+    undirected edges (``mention_id_a``, ``mention_id_b``) into an
+    existing min-id component ``mapping``
     (``id``, ``cluster_id`` — the output contract of
     ``connected_components``) and return the updated mapping over every
     vertex seen so far.
@@ -259,7 +258,9 @@ def merge_edges_into_components(
     compaction.
     """
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(
+            F.col("mention_id_a").alias("u"), F.col("mention_id_b").alias("v")
+        )
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
@@ -292,9 +293,9 @@ def merge_edges_into_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    relabel = connected_components(
-        contracted, "la", "lb", max_iter=max_iter
-    ).select(F.col("id").alias("old_label"), F.col("cluster_id").alias("new_label"))
+    relabel = connected_components(contracted, "la", "lb").select(
+        F.col("id").alias("old_label"), F.col("cluster_id").alias("new_label")
+    )
     release(contracted)  # relabel reads only CC's own checkpoint
 
     updated_existing = mapping.join(

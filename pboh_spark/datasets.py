@@ -529,7 +529,6 @@ def evaluate_gold_dataset(
     mentions: DataFrame,
     gold: DataFrame,
     anchors: DataFrame | None = None,
-    top_k: int = 10,
     lbp: bool = True,
 ) -> dict:
     """eval/EvalOnDatasets.scala:150-205 recast: run ARGMAX and LBP
@@ -548,7 +547,7 @@ def evaluate_gold_dataset(
     ns = stats.name_stats(anchors)
     es = stats.entity_stats(anchors)
     scalars = stats.corpus_scalars(anchors)
-    cand = resolve.mention_candidates(mentions, ns, es, top_k=top_k)
+    cand = resolve.mention_candidates(mentions, ns, es)
     out = {
         "n_gold_mentions": gold.count(),
         "argmax": evaluate.linking_accuracy(
@@ -594,7 +593,6 @@ def _main() -> None:
     ap.add_argument("--redirects", default=None,
                     help="(alias, canonical) parquet chased before the "
                          "title-index probe (RedirectPagesIndex)")
-    ap.add_argument("--top-k", type=int, default=10)
     ap.add_argument("--no-lbp", action="store_true")
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args()
@@ -672,8 +670,7 @@ def _main() -> None:
                     file=_sys.stderr,
                 )
     metrics = evaluate_gold_dataset(
-        spark, mentions, gold, anchors, top_k=args.top_k,
-        lbp=not args.no_lbp,
+        spark, mentions, gold, anchors, lbp=not args.no_lbp,
     )
     metrics["format"] = args.format
     metrics["self_anchored"] = args.anchors is None

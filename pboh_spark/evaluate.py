@@ -178,10 +178,12 @@ def macro_pairwise_f1(
     }
 
 
+# the 17 candidate match thresholds 0.4, 0.425, …, 0.8
+THRESHOLD_GRID = [round(0.4 + 0.025 * i, 3) for i in range(17)]
+
+
 def calibrate_threshold(
-    scored_pairs: DataFrame,
-    labeled_pairs: DataFrame,
-    grid: list[float] | None = None,
+    scored_pairs: DataFrame, labeled_pairs: DataFrame
 ) -> DataFrame:
     """Grid-search the match threshold against gold labels — the analogue
     of the reference's hyperparameter grid search
@@ -193,13 +195,14 @@ def calibrate_threshold(
     Returns (threshold, tp, fp, fn, precision, recall, f1) sorted by
     threshold; pick max f1 driver-side.
     """
-    grid = grid or [round(0.4 + 0.025 * i, 3) for i in range(17)]
     j = labeled_pairs.select("mention_id_a", "mention_id_b", "is_match").join(
         scored_pairs.select("mention_id_a", "mention_id_b", "score"),
         ["mention_id_a", "mention_id_b"],
         "left",
     )
-    th = F.explode(F.lit(grid).cast("array<double>")).alias("threshold")
+    th = F.explode(F.lit(THRESHOLD_GRID).cast("array<double>")).alias(
+        "threshold"
+    )
     e = j.select("is_match", "score", th).withColumn(
         "pred", F.coalesce(F.col("score"), F.lit(-1.0)) >= F.col("threshold")
     )

@@ -288,12 +288,10 @@ def _fused_round_kernel(w: ScorerWeights):
 
 def learn_weights(
     assembly: DataFrame,
-    init: ScorerWeights | None = None,
     n_rounds: int = 20,
     eta: float = 1.0,
     reg: float = 0.01,
     lam_const: float = LAMBDA_FLOOR,
-    priors: tuple[float, float, float, float] | None = None,
 ) -> tuple[ScorerWeights, list[dict]]:
     """Full-batch AdaGrad ascent on the regularized pseudolikelihood
     over θ = (f, g, h, b). One Spark job per round (the distributed-SGD
@@ -316,8 +314,9 @@ def learn_weights(
     {round, loss, f, g, h, b} recorded AFTER round r's update;
     history[0] is the init evaluation (no update). Deterministic at any
     parallelism (see _fused_round_kernel). Session conf is left alone."""
-    w = init or ScorerWeights()
-    pr = np.array(priors if priors is not None else (w.f, w.g, w.h, w.b))
+    # the fit starts at, and regularizes toward, the shipped weights
+    w = ScorerWeights()
+    pr = np.array([w.f, w.g, w.h, w.b])
     # the λ probes and neighbor-sum contractions are weight-independent:
     # one narrow pass over the assembly prepares them, persisted for the
     # fit's duration; each round is then a mapInPandas over the small

@@ -29,6 +29,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# fused-score weights of the four string/prior/λ features
+W_JW, W_LEV, W_PRIOR, W_LAMBDA = 0.35, 0.15, 0.40, 0.10
+JW_PREFIX_SCALE = 0.1  # Winkler's standard prefix weight
+
 
 def _jaro(s1: str, s2: str) -> float:
     if s1 == s2:
@@ -63,7 +67,7 @@ def _jaro(s1: str, s2: str) -> float:
     return (matches / l1 + matches / l2 + (matches - t) / matches) / 3.0
 
 
-def jaro_winkler(s1: str, s2: str, p: float = 0.1) -> float:
+def jaro_winkler(s1: str, s2: str) -> float:
     j = _jaro(s1, s2)
     if j > 0.7:
         prefix = 0
@@ -72,7 +76,7 @@ def jaro_winkler(s1: str, s2: str, p: float = 0.1) -> float:
                 prefix += 1
             else:
                 break
-        j += prefix * p * (1.0 - j)
+        j += prefix * JW_PREFIX_SCALE * (1.0 - j)
     return j
 
 
@@ -234,33 +238,9 @@ def candidate_pairs(blocked: DataFrame) -> DataFrame:
     )
 
 
-def attach_embeddings(
-    pairs: DataFrame,
-    embeddings: DataFrame,
-    id_col: str = "mention_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Attach per-side embedding vectors to a pair table as
-    ``vec_a``/``vec_b`` (two narrow-keyed joins after pair dedup — the
-    same late-attach discipline as the string attributes in
-    candidate_pairs; AQE broadcasts when the embedding dim table fits).
-    score_pairs then fuses embedding-cosine into the score."""
-    ea = embeddings.select(
-        F.col(id_col).alias("mention_id_a"), F.col(vec_col).alias("vec_a")
-    )
-    eb = embeddings.select(
-        F.col(id_col).alias("mention_id_b"), F.col(vec_col).alias("vec_b")
-    )
-    return pairs.join(ea, "mention_id_a", "left").join(eb, "mention_id_b", "left")
-
-
 def score_pairs(
     pairs: DataFrame,
     lambda_pairs: DataFrame | None = None,
-    w_jw: float = 0.35,
-    w_lev: float = 0.15,
-    w_prior: float = 0.40,
-    w_lambda: float = 0.10,
     w_cos: float = 0.0,
     threshold: float = 0.65,
 ) -> DataFrame:
@@ -272,8 +252,8 @@ def score_pairs(
     pairwise agreement, different top candidates draw the PMI term.
 
     ``w_cos > 0`` additionally fuses embedding-cosine (north_star's
-    third similarity): requires ``vec_a``/``vec_b`` columns (see
-    attach_embeddings); the cosine is mapped to [0,1] and pairs with a
+    third similarity): requires per-side embedding columns
+    ``vec_a``/``vec_b``; the cosine is mapped to [0,1] and pairs with a
     missing vector fall back to the neutral 0.5 — JVM-side
     zip_with/aggregate, no UDF.
     """
@@ -336,16 +316,16 @@ def score_pairs(
     if lambda_pairs is not None:
         scored = scored.drop("lam_scaled")
     score = (
-        F.lit(w_jw) * F.col("jaro_winkler")
-        + F.lit(w_lev) * F.col("levenshtein_sim")
-        + F.lit(w_prior) * F.least(F.col("prior_agreement") * 2.0, F.lit(1.0))
-        + F.lit(w_lambda) * F.col("lambda_norm")
+        F.lit(W_JW) * F.col("jaro_winkler")
+        + F.lit(W_LEV) * F.col("levenshtein_sim")
+        + F.lit(W_PRIOR) * F.least(F.col("prior_agreement") * 2.0, F.lit(1.0))
+        + F.lit(W_LAMBDA) * F.col("lambda_norm")
     )
     if w_cos > 0:
         if "vec_a" not in scored.columns or "vec_b" not in scored.columns:
             raise ValueError(
-                "w_cos > 0 needs vec_a/vec_b columns — attach them with "
-                "pairs.attach_embeddings(pairs, embeddings)"
+                "w_cos > 0 needs the per-side embedding columns "
+                "vec_a/vec_b"
             )
         from pboh_spark.ops.simsearch import with_cosine
 

@@ -77,8 +77,6 @@ def run_pipeline(
     anchors: DataFrame,
     out_dir: str,
     threshold: float = 0.65,
-    block_cap: int = 512,
-    top_k: int = 10,
     with_lbp: bool = True,
     surface_mode: bool = False,
     learn_gold: DataFrame | None = None,
@@ -139,11 +137,9 @@ def run_pipeline(
 
     def build_blocked() -> DataFrame:
         # persist=False: the stage write below is what makes it durable
-        salted, _ = blocking.salt_and_cap(
-            blocking.blocks(link_nodes, name_stats, top_k=top_k),
-            cap=block_cap, persist=False,
+        return blocking.salt_and_cap(
+            blocking.blocks(link_nodes, name_stats), persist=False
         )
-        return salted
 
     blocked = ck.run_stage(
         f"s3_blocked{sfx}",
@@ -214,7 +210,7 @@ def run_pipeline(
             cand = ck.run_stage(
                 "s5_candidates",
                 lambda: resolve.mention_candidates(
-                    mentions, name_stats, ent_stats, top_k
+                    mentions, name_stats, ent_stats
                 ),
                 upstream=["s1_mentions", "s2_name_stats", "s2_entity_stats"],
             )

@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pboh_spark.stats import ScorerWeights, backoff_mass
+from pboh_spark.stats import TOP_K, ScorerWeights, backoff_mass
 
 MAX_ITER = 15  # eval/VerifyEDLBPForListOfWords.scala:35
 EPS = 1e-5  # LoopyBeliefPropagation.scala:33
@@ -68,11 +68,10 @@ def _solve_conv(
     max_product: bool,
     logpop: np.ndarray | None = None,  # (L, K) log unnormalized popularity
     lam_const: float = LAMBDA_FLOOR,  # log(backoff/N); floor if no stats
-    max_iter: int = MAX_ITER,
-    eps: float = EPS,
 ) -> tuple[np.ndarray, np.ndarray, int, bool]:
-    """One conversation. Returns (best_idx (L,), best_score (L,), iters,
-    converged). Brute-force-verifiable on tiny graphs (tests §8)."""
+    """One conversation, at most MAX_ITER rounds until no message moves by
+    EPS. Returns (best_idx (L,), best_score (L,), iters, converged).
+    Brute-force-verifiable on tiny graphs (tests §8)."""
     L, K = ents.shape
     valid = ents >= 0
     # guard the 32-bit pair packing: ids ≥ 2^32 would silently collide in
@@ -121,7 +120,7 @@ def _solve_conv(
     off_diag = ~np.eye(L, dtype=bool)
     iters = 0
     converged = False
-    for iters in range(1, max_iter + 1):
+    for iters in range(1, MAX_ITER + 1):
         S = M.sum(axis=0)  # S[i,a] = Σ_k msg k→i (a)   (C8 memoization)
         # base_ij[i,j,a] = f·rho[i,a] + S[i,a] − M[j,i,a]
         # (exclude the recipient's own message by subtraction —
@@ -157,7 +156,7 @@ def _solve_conv(
         new_M = np.where(off_diag[:, :, None], new_M, 0.0)
         delta = np.abs(new_M - M).max()
         M = new_M
-        if delta < eps:
+        if delta < EPS:
             converged = True
             break
 
@@ -390,7 +389,6 @@ def augment_containment(
     candidates: DataFrame,
     mentions: DataFrame,
     name_stats: DataFrame,
-    top_k: int = 10,
 ) -> DataFrame:
     """Containment candidate augmentation —
     index/MentEntsFreqIndexWrapper.scala:30-40: when another mention of
@@ -465,7 +463,7 @@ def augment_containment(
     )
     return (
         merged.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= top_k)
+        .where(F.col("rk") <= TOP_K)
         .drop("rk")
     )
 
@@ -474,7 +472,6 @@ def mention_candidates(
     mentions: DataFrame,
     name_stats: DataFrame,
     entity_stats: DataFrame | None = None,
-    top_k: int = 10,
     containment: bool = True,
 ) -> DataFrame:
     """(conv_id, mention_id, entity, rho, log_pop) with rho = log p̂(e|m) —
@@ -484,7 +481,7 @@ def mention_candidates(
     ``containment`` (default on, matching the reference's wrapper) merges
     conv-local containing mentions' candidates before the top-k prune —
     see augment_containment."""
-    cands = name_stats.where(F.col("rank") <= top_k).select(
+    cands = name_stats.where(F.col("rank") <= TOP_K).select(
         F.col("name"), F.col("entity"), F.log(F.col("prob")).alias("rho")
     )
     out = mentions.join(
@@ -500,7 +497,7 @@ def mention_candidates(
         out = out.withColumn("log_pop", F.lit(0.0))
     out = out.select("conv_id", "mention_id", "entity", "rho", "log_pop")
     if containment:
-        out = augment_containment(out, mentions, name_stats, top_k)
+        out = augment_containment(out, mentions, name_stats)
     return out
 
 

@@ -25,6 +25,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# the runtime candidate prune: a name's top-10 entities by p̂(e|m)
+# (MentEntsFreqIndexWrapper.scala:53) — blocking, the LBP candidates and
+# the driver-side linker all prune by it
+TOP_K = 10
+
 
 @dataclass(frozen=True)
 class ScorerWeights:
@@ -176,7 +181,6 @@ def with_lambda_potential(
     pairs: DataFrame,
     ent_stats: DataFrame,
     scalars: dict[str, int],
-    w: ScorerWeights | None = None,
 ) -> DataFrame:
     """Adds ``lambda_potential`` to an (e1, e2, cocit) table — the exact
     reference formula (ScorerFull.scala:207-227):
@@ -200,8 +204,8 @@ def with_lambda_potential(
     broadcasts it exactly when it actually fits (same policy as
     resolve.mention_candidates and pairs.score_pairs).
     """
-    w = w or ScorerWeights()
-    backoff, n_pairs = backoff_mass(scalars, w)
+    w = ScorerWeights()
+    backoff, n_pairs = backoff_mass(scalars)
     diag = ent_stats.select(
         F.col("entity").alias("e1"),
         F.col("entity").alias("e2"),

@@ -27,7 +27,9 @@ stops, which is also the right production shape for catch-up runs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -45,6 +47,50 @@ TRANSCRIPT_SCHEMA = T.StructType(
 )
 
 
+def _drain(
+    stream: DataFrame, checkpoint_dir: str, process, mode: str = "append"
+):
+    """Start a bounded drain of ``stream`` through the foreachBatch
+    ``process``: every pending file, then stop (``availableNow``).
+    Returns the started StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(process)
+        .outputMode(mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _batch_sink(
+    out_dir: str, build: Callable[[DataFrame], DataFrame] = lambda df: df
+):
+    """foreachBatch sink writing ``build(batch)`` over its own
+    ``out_dir/batch_id=N`` partition: a replayed micro-batch (failure
+    between sink commit and streaming-checkpoint commit) rewrites the
+    same files instead of appending duplicates — exactly-once."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        build(batch_df).write.mode("overwrite").parquet(
+            f"{out_dir}/batch_id={batch_id}"
+        )
+
+    return process
+
+
+def _turn_id() -> Column:
+    """A turn's id: the first 15 hex digits of md5(conv_id '#' turn_idx)
+    as a positive bigint — engine-portable (DuckDB spells it
+    ``('0x' || substr(md5(..), 1, 15))::BIGINT``), deterministic, and
+    collision-safe in practice (2^60 space; ~n²/2^61 expected
+    collisions — negligible below ~10^8 turns)."""
+    return F.conv(
+        F.substring(F.md5(F.concat_ws("#", "conv_id", "turn_idx")), 1, 15),
+        16,
+        10,
+    ).cast("bigint")
+
+
 def stream_transcripts(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -59,17 +105,14 @@ def stream_transcripts(
     return reader.load(path)
 
 
-def streaming_mention_counts(
-    turns: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window mention-surface counts — incremental
-    name statistics. Late rows beyond ``watermark`` are dropped (state
-    stays bounded: #windows × #surfaces, not #turns)."""
+def streaming_mention_counts(turns: DataFrame) -> DataFrame:
+    """Watermarked 1-hour tumbling-window mention-surface counts —
+    incremental name statistics. Rows later than the 2-hour watermark
+    are dropped (state stays bounded: #windows × #surfaces, not
+    #turns)."""
     from pboh_spark.normalize import MENTION_RE
 
-    mentions = turns.withWatermark("ts", watermark).select(
+    mentions = turns.withWatermark("ts", "2 hours").select(
         F.col("ts"),
         F.explode(
             F.expr(f"regexp_extract_all(text, '{MENTION_RE}', 0)")
@@ -77,7 +120,7 @@ def streaming_mention_counts(
     )
     return (
         mentions.withColumn("ngram", F.lower(F.col("surface")))
-        .groupBy(F.window("ts", window).alias("w"), F.col("ngram"))
+        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("ngram"))
         .agg(F.count("*").alias("freq"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -89,16 +132,12 @@ def streaming_mention_counts(
 
 
 def incremental_extract(
-    turns_stream: DataFrame,
-    mentions_out: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
+    turns_stream: DataFrame, mentions_out: str, checkpoint_dir: str
 ):
-    """foreachBatch ingest: stage-1 mention extraction per micro-batch.
-    Exactly-once: each batch overwrites its own ``batch_id=N`` partition
-    directory, so a replayed micro-batch (failure between sink commit and
-    streaming-checkpoint commit) rewrites the same files instead of
-    appending duplicates. Returns the started StreamingQuery."""
+    """foreachBatch ingest: stage-1 mention extraction per micro-batch,
+    drained with ``availableNow``. Exactly-once: each batch overwrites
+    its own ``batch_id=N`` partition directory (``_batch_sink``).
+    Returns the started StreamingQuery."""
 
     # layout guard: this sink writes batch_id=N partition dirs; a mentions
     # table from the old flat-append layout would make the root unreadable
@@ -119,19 +158,10 @@ def incremental_extract(
                 "flat layout (read + rewrite partitioned) first"
             )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        out = extract_mentions(batch_df)
-        out.write.mode("overwrite").parquet(
-            f"{mentions_out}/batch_id={batch_id}"
-        )
-
-    writer = (
-        turns_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return _drain(
+        turns_stream, checkpoint_dir,
+        _batch_sink(mentions_out, extract_mentions),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_surface_stats(turns_stream: DataFrame) -> DataFrame:
@@ -193,19 +223,7 @@ def run_surface_stats(
     stats = streaming_surface_stats(
         stream_transcripts(spark, input_path, max_files_per_trigger=1)
     )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
-
-    return (
-        stats.writeStream.foreachBatch(process)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(stats, checkpoint_dir, _batch_sink(out_dir), "update")
 
 
 def run_window_counts_to_memory(
@@ -213,16 +231,13 @@ def run_window_counts_to_memory(
     input_path: str,
     checkpoint_dir: str,
     query_name: str = "mention_counts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
 ):
-    """Drain all pending files through the windowed agg into an in-memory
-    sink (complete mode) — the test/inspection harness for the streaming
-    path. Returns the started query; read results from
-    ``spark.table(query_name)`` after awaitTermination."""
-    counts = streaming_mention_counts(
-        stream_transcripts(spark, input_path), window, watermark
-    )
+    """Drain all pending files through the windowed agg (1-hour windows,
+    2-hour watermark) into an in-memory sink (complete mode) — the
+    test/inspection harness for the streaming path. Returns the started
+    query; read results from ``spark.table(query_name)`` after
+    awaitTermination."""
+    counts = streaming_mention_counts(stream_transcripts(spark, input_path))
     return (
         counts.writeStream.outputMode("complete")
         .format("memory")
@@ -312,19 +327,7 @@ def run_streaming_dedup(
     dedup = streaming_doc_dedup(
         stream_transcripts(spark, input_path, max_files_per_trigger=1)
     )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
-
-    return (
-        dedup.writeStream.foreachBatch(process)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(dedup, checkpoint_dir, _batch_sink(out_dir), "update")
 
 
 def _admit_and_pair(members, n_dropped: int, ids, cap: int):
@@ -450,12 +453,8 @@ def blocked_turns(turns: DataFrame) -> DataFrame:
     * ``block_key`` = lowercased first non-empty whitespace token of the
       turn text (a real content-derived key; swap for candidate_blocks /
       minhash band keys upstream in a full deployment).
-    * ``mention_id`` = first 15 hex digits of md5(conv_id '#' turn_idx)
-      as a positive bigint — engine-portable (DuckDB spells it
-      ``('0x' || substr(md5(..), 1, 15))::BIGINT``), deterministic, and
-      collision-safe in practice (2^60 space; ~n²/2^61 expected
-      collisions — negligible below ~10^8 turns, and the id doubles as a
-      join key only within this operator's tests).
+    * ``mention_id`` = the turn's md5 id (``_turn_id``); it doubles as
+      a join key only within this operator's tests.
     """
     first_tok = F.element_at(
         F.filter(F.split(F.col("text"), " "), lambda x: x != ""), 1
@@ -464,15 +463,7 @@ def blocked_turns(turns: DataFrame) -> DataFrame:
         turns.where(F.col("text").isNotNull())
         .select(
             F.lower(first_tok).alias("block_key"),
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("#", "conv_id", "turn_idx")), 1, 15
-                ),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("mention_id"),
+            _turn_id().alias("mention_id"),
         )
         .where(F.col("block_key").isNotNull() & (F.col("block_key") != ""))
     )
@@ -502,26 +493,14 @@ def run_streaming_pairs(
         ),
         cap=cap,
     )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
-
-    return (
-        pairs.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(pairs, checkpoint_dir, _batch_sink(out_dir))
 
 
 def mention_token_dim(turns: DataFrame) -> DataFrame:
     """Static mention-attribute DIMENSION for the streamed scoring join:
-    ``(mention_id, tokens)`` with the same engine-portable md5-fold id
-    as blocked_turns and ``tokens`` = the DISTINCT lowercased non-empty
-    whitespace tokens of the turn text (set semantics — the score below
+    ``(mention_id, tokens)`` with the same engine-portable md5 id
+    (``_turn_id``) as blocked_turns and ``tokens`` = the DISTINCT
+    lowercased non-empty whitespace tokens of the turn text (set semantics — the score below
     is a set Jaccard, and DuckDB's list_distinct/list_intersect mirror
     Spark's array_distinct/array_intersect exactly). One row per
     (conv_id, turn_idx); built from the SAME files the stream drains,
@@ -531,18 +510,7 @@ def mention_token_dim(turns: DataFrame) -> DataFrame:
     )
     return (
         turns.where(F.col("text").isNotNull())
-        .select(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("#", "conv_id", "turn_idx")), 1, 15
-                ),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("mention_id"),
-            toks.alias("tokens"),
-        )
+        .select(_turn_id().alias("mention_id"), toks.alias("tokens"))
         .dropDuplicates(["mention_id"])
     )
 
@@ -611,24 +579,20 @@ def streaming_scored_pairs(
     )
 
 
-def run_streaming_scored_pairs(
+def _scored_pair_stream(
     spark: SparkSession,
     input_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    cap: int = 4096,
-    min_jaccard_pct: int = 20,
-    max_files_per_trigger: int | None = 1,
-):
-    """Drain pending transcript files through candidate-pair generation
-    AND stream-static scoring in one streaming query: stateful pair
-    emission (exactly-once per unordered pair), then the stateless
-    scored filter, landing each micro-batch's surviving pairs in
-    ``out_dir/batch_id=N`` exactly-once. The static dimension is read
-    from the SAME input glob — in production it would be the curated
-    mention-attribute table the stream's blocks reference."""
+    cap: int,
+    min_jaccard_pct: int,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """The streamed chain up to scoring: pending transcript files →
+    stateful candidate-pair emission → stream-static scored filter. The
+    static dimension is read from the SAME input glob — in production
+    it would be the curated mention-attribute table the stream's blocks
+    reference."""
     static_turns = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(input_path)
-    scored = streaming_scored_pairs(
+    return streaming_scored_pairs(
         streaming_candidate_pairs(
             blocked_turns(
                 stream_transcripts(
@@ -643,18 +607,25 @@ def run_streaming_scored_pairs(
         min_jaccard_pct=min_jaccard_pct,
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
 
-    return (
-        scored.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def run_streaming_scored_pairs(
+    spark: SparkSession,
+    input_path: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    cap: int = 4096,
+    min_jaccard_pct: int = 20,
+    max_files_per_trigger: int | None = 1,
+):
+    """Drain pending transcript files through candidate-pair generation
+    AND stream-static scoring in one streaming query: stateful pair
+    emission (exactly-once per unordered pair), then the stateless
+    scored filter (``_scored_pair_stream``), landing each micro-batch's
+    surviving pairs in ``out_dir/batch_id=N`` exactly-once."""
+    scored = _scored_pair_stream(
+        spark, input_path, cap, min_jaccard_pct, max_files_per_trigger
     )
+    return _drain(scored, checkpoint_dir, _batch_sink(out_dir))
 
 
 _CC_STATE_SCHEMA = T.StructType(
@@ -719,20 +690,8 @@ def run_streaming_cc(
     transitive closure."""
     from pboh_spark.cluster import merge_edges_into_components
 
-    static_turns = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(input_path)
-    scored = streaming_scored_pairs(
-        streaming_candidate_pairs(
-            blocked_turns(
-                stream_transcripts(
-                    spark,
-                    input_path,
-                    max_files_per_trigger=max_files_per_trigger,
-                )
-            ),
-            cap=cap,
-        ),
-        mention_token_dim(static_turns),
-        min_jaccard_pct=min_jaccard_pct,
+    scored = _scored_pair_stream(
+        spark, input_path, cap, min_jaccard_pct, max_files_per_trigger
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -744,10 +703,4 @@ def run_streaming_cc(
             f"{state_dir}/epoch={batch_id}"
         )
 
-    return (
-        scored.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(scored, checkpoint_dir, process)

@@ -275,19 +275,16 @@ def generate_clustered_embeddings(
     spark: SparkSession,
     n_vectors: int = 2000,
     n_clusters: int = 20,
-    dim: int = 64,
-    noise: float = 0.25,
-    seed: int = SEED,
-    partitions: int | None = None,
 ) -> DataFrame:
     """(vec_id bigint, embedding array<float>) with planted cluster
-    structure: vector i = center[i % n_clusters] + noise·N(0,I). Real
+    structure: 64-dim vector i = center[i % n_clusters] + 0.25·N(0,I). Real
     embedding corpora are clustered (that is why IVF works at all);
     the driver's uniform-random testdata embeddings are the worst case
     for any cell-probing index, so recall targets are asserted here.
-    Deterministic per vec_id (rng([seed, 7, vec_id])) ⇒ identical at any
+    Deterministic per vec_id (rng([SEED, 7, vec_id])) ⇒ identical at any
     partitioning or prefix scale, like every other synth table."""
-    rng = np.random.default_rng([seed, 6])
+    dim, noise = 64, 0.25
+    rng = np.random.default_rng([SEED, 6])
     centers = rng.normal(size=(n_clusters, dim))
 
     def gen(batches):
@@ -295,13 +292,12 @@ def generate_clustered_embeddings(
             ids = pdf["id"].to_numpy()
             out = []
             for vid in ids:
-                r = np.random.default_rng([seed, 7, int(vid)])
+                r = np.random.default_rng([SEED, 7, int(vid)])
                 v = centers[int(vid) % n_clusters] + noise * r.normal(size=dim)
                 out.append(v.astype(np.float32).tolist())
             yield pd.DataFrame({"vec_id": ids, "embedding": out})
 
-    parts = partitions or 8
-    return spark.range(0, n_vectors, 1, parts).mapInPandas(
+    return spark.range(0, n_vectors, 1, 8).mapInPandas(
         gen, "vec_id bigint, embedding array<float>"
     )
 
@@ -311,7 +307,6 @@ def generate_anchors(
     n_docs: int = 4000,
     universe: EntityUniverse | None = None,
     seed: int = SEED,
-    noise: float = 0.02,
 ) -> DataFrame:
     """Anchor corpus (doc_id bigint, name string, entity bigint) — the
     statistics source, analogous to Wikipedia hyperlink anchors
@@ -336,11 +331,11 @@ def generate_anchors(
         for e in chosen:
             doc_ids.append(d)
             ents.append(int(e))
-            # label noise: with prob ``noise`` the anchor text is an alias
+            # label noise: with prob 0.02 the anchor text is an alias
             # of a *different* entity — the crosswikis dictionary is noisy
             # in exactly this way, and it plants real negatives inside
             # candidate blocks (spurious p̂(e|m) mass).
-            if rng.random() < noise:
+            if rng.random() < 0.02:
                 other = int(rng.integers(0, uni.n_entities))
                 names.append(uni.sample_alias(rng, other).lower())
             else:

@@ -6,11 +6,7 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
-def ensure_parallelism(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    trigger_ratio: float = 1.0,
-) -> DataFrame:
+def ensure_parallelism(df: DataFrame, trigger_ratio: float = 1.0) -> DataFrame:
     """Scale-adaptive floor on a DataFrame's partition count (guide §2/§6).
 
     Small inputs (a single small parquet file has one row group, hence ONE
@@ -39,8 +35,7 @@ def ensure_parallelism(
     exchange below it, the probe runs that exchange as a hidden Spark
     job (under AQE), and the real action later recomputes it.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     trigger = max(2, int(target * trigger_ratio))
     if df.rdd.getNumPartitions() < trigger:
         return df.repartition(target)
@@ -50,14 +45,17 @@ def ensure_parallelism(
 def release(*dfs: DataFrame) -> None:
     """Free what ``persist()`` or ``localCheckpoint()`` pinned for each
     frame. The rule: whoever persists or checkpoints a frame calls this
-    on the frame that call returned, once nothing lazy still reads it.
-    ``unpersist`` alone leaves a checkpoint's blocks pinned: they belong
-    to the RDD behind the frame's ``LogicalRDD`` leaf, reached through a
+    on the frame that call returned, or on a column projection of it,
+    once nothing lazy still reads it. ``unpersist`` alone leaves a
+    checkpoint's blocks pinned: they belong to the RDD behind the
+    ``LogicalRDD`` leaf under the frame's projections, reached through a
     private API — if that changes, this degrades to ``unpersist``."""
     for df in dfs:
         df.unpersist()
         try:
             plan = df._jdf.queryExecution().analyzed()
+            while plan.nodeName() == "Project":
+                plan = plan.child()
             if plan.nodeName() == "LogicalRDD":
                 plan.rdd().unpersist(False)
         except (AttributeError, Py4JError):

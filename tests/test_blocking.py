@@ -77,7 +77,8 @@ def test_salt_and_cap_bounds_block_size(spark):
             ],
         )
     )
-    salted, metrics = blocking.salt_and_cap(df, cap=100)
+    salted = blocking.salt_and_cap(df, cap=100)
+    metrics = blocking.block_metrics(df, cap=100)
     sizes = salted.groupBy("block_key").count().toPandas()
     assert sizes["count"].max() <= 150  # ~cap with hash-split variance
     m = metrics.collect()[0]
@@ -147,7 +148,7 @@ def test_salt_and_cap_semantic_invariants(spark):
             ],
         )
     )
-    salted, _ = blocking.salt_and_cap(df, cap=64, persist=False)
+    salted = blocking.salt_and_cap(df, cap=64, persist=False)
 
     # 1. row preservation under base key
     base = salted.withColumn(

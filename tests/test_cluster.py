@@ -126,3 +126,44 @@ def test_cc_pins_only_the_returned_labels(spark):
     assert len(_pinned(spark) - before) <= 1
     got = labels.collect()
     assert len(got) == 64 and all(r["cluster_id"] == 0 for r in got)
+
+
+def test_cc_labels_and_surface_pipeline_pin_nothing(
+    spark, universe, tmp_path, monkeypatch
+):
+    """``release`` frees what CC pins behind the labels it returns, and
+    a fresh surface-mode ``run_pipeline`` leaves no new pinned RDD. The
+    test holds every CC result, so ContextCleaner cannot free a leaked
+    checkpoint behind its back."""
+    from pboh_spark import synth
+    from pboh_spark.pipeline import run_pipeline
+    from pboh_spark.util import release
+
+    edges = spark.createDataFrame(
+        pd.DataFrame(
+            [(i, i + 1) for i in range(31)],
+            columns=["mention_id_a", "mention_id_b"],
+        )
+    )
+    before = _pinned(spark)
+    labels = cluster.connected_components(edges)
+    release(labels)
+    assert _pinned(spark) - before == set()
+
+    held = []
+    cc = cluster.connected_components
+
+    def holding(*args, **kw):
+        held.append(cc(*args, **kw))
+        return held[-1]
+
+    monkeypatch.setattr(cluster, "connected_components", holding)
+    transcripts, _ = synth.generate_transcripts(spark, 60, universe=universe)
+    anchors = synth.generate_anchors(spark, 1000, universe=universe)
+    before = _pinned(spark)
+    run_pipeline(
+        spark, transcripts, anchors, str(tmp_path / "surf"),
+        with_lbp=False, surface_mode=True,
+    )
+    assert len(held) == 1
+    assert _pinned(spark) - before == set()

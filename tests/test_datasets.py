@@ -154,7 +154,7 @@ def test_xml_gold_end_to_end_accuracy(spark):
         F.col("conv_id").alias("doc_id"),
     )
     cand = resolve.mention_candidates(
-        mentions, stats.name_stats(anchors), top_k=10
+        mentions, stats.name_stats(anchors)
     )
     metrics = evaluate.linking_accuracy(
         resolve.resolve_argmax(cand), gold, mentions
@@ -187,7 +187,7 @@ def test_linking_accuracy_end_to_end_on_aida(spark):
         F.col("conv_id").alias("doc_id"),
     )
     ns = stats.name_stats(anchors)
-    cand = resolve.mention_candidates(mentions, ns, top_k=10)
+    cand = resolve.mention_candidates(mentions, ns)
     assign = resolve.resolve_argmax(cand)
     metrics = evaluate.linking_accuracy(assign, gold, mentions)
     assert metrics["n_mentions"] == 8

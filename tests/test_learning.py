@@ -349,7 +349,7 @@ def test_b_fit_end_to_end_on_synth_context(spark, universe):
     es = stats.entity_stats(anchors)
     scalars = stats.corpus_scalars(anchors)
     lam = stats.with_lambda_potential(stats.cooccurrence(anchors), es, scalars)
-    cand = resolve.mention_candidates(mentions, ns, es, top_k=10)
+    cand = resolve.mention_candidates(mentions, ns, es)
     # context stats trained from the gold conversations themselves
     mention_ctx = ctxmod.context_windows(norm, mentions)
     gm = gold.select(

@@ -271,7 +271,7 @@ def test_containment_candidate_augmentation(spark):
         "name string, entity bigint, freq bigint, total_freq bigint, "
         "prob double, rank int",
     )
-    out = resolve.mention_candidates(mentions, name_stats, top_k=10)
+    out = resolve.mention_candidates(mentions, name_stats)
     rows = {(r["mention_id"], r["entity"]): r for r in out.collect()}
     # contained mention inherited entity 5 from the container
     assert (1, 7) in rows and (1, 5) in rows
@@ -283,7 +283,7 @@ def test_containment_candidate_augmentation(spark):
     assert [k for k in rows if k[0] == 4] == [(4, 7)]
     # default-off path unchanged
     base = resolve.mention_candidates(
-        mentions, name_stats, top_k=10, containment=False
+        mentions, name_stats, containment=False
     )
     assert {(r["mention_id"], r["entity"]) for r in base.collect()} == {
         (1, 7), (2, 5), (4, 7)
@@ -306,7 +306,7 @@ def test_containment_accuracy_not_regressed(spark, universe):
 
     def acc(containment):
         cand = resolve.mention_candidates(
-            mentions, ns, es, top_k=10, containment=containment
+            mentions, ns, es, containment=containment
         )
         out = resolve.resolve_entities(
             resolve.assemble_conversations(cand, mentions, lam), scalars=scalars

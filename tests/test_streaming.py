@@ -147,7 +147,7 @@ def test_streamed_ingest_then_batch_linkage_matches_batch(
     ns = stats.name_stats(anchors)
 
     def clusters_from(mentions):
-        salted, _ = blocking.salt_and_cap(blocking.blocks(mentions, ns), cap=512)
+        salted = blocking.salt_and_cap(blocking.blocks(mentions, ns), cap=512)
         scored = pairs_mod.score_pairs(pairs_mod.candidate_pairs(salted))
         comp = cluster.connected_components(scored.where("is_match_pred"))
         release(salted)

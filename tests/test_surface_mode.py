@@ -26,7 +26,7 @@ def test_surface_mode_f1_and_pair_collapse(spark, universe, tmp_path):
 
     # (a) F1 on labeled pairs at the instance-level candidate blocking key
     ns = stats.name_stats(anchors)
-    cb = blocking.candidate_blocks(mentions, ns, top_k=10)
+    cb = blocking.candidate_blocks(mentions, ns)
     lp = evaluate.build_labeled_pairs(gold, cb)
     comp = clusters.select(
         F.col("mention_id").alias("id"), F.col("cluster_id")
