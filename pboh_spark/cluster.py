@@ -239,6 +239,12 @@ def merge_edges_into_components(
     3. the resulting (old_label -> new_label) relabel table — again
        O(|batch|) — is applied to the full mapping with one keyed join.
 
+    The relabel table is taken to the driver (one job; two longs per
+    vertex of the contracted graph, so driver memory is bounded by
+    O(|batch|), not by the mapping) and returned inside the mapping as a
+    local relation, so CC's checkpointed labels are released here and a
+    fold leaves nothing pinned.
+
     Because existing labels are component MINIMA and every new vertex
     enters the contracted graph labelled by itself, the min over a
     merged contracted component is the true min-id of the merged
@@ -293,10 +299,13 @@ def merge_edges_into_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    relabel = connected_components(contracted, "la", "lb").select(
+    labels = connected_components(contracted, "la", "lb")
+    release(contracted)  # the labels read only CC's own checkpoint
+    relabel = labels.select(
         F.col("id").alias("old_label"), F.col("cluster_id").alias("new_label")
     )
-    release(contracted)  # relabel reads only CC's own checkpoint
+    relabel = mapping.sparkSession.createDataFrame(relabel.toPandas(), relabel.schema)
+    release(labels)
 
     updated_existing = mapping.join(
         relabel, mapping["cluster_id"] == relabel["old_label"], "left"

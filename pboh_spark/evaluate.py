@@ -15,7 +15,7 @@ is collected but the scalar metric row.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -75,22 +75,27 @@ def build_labeled_pairs(
     return pairs
 
 
-def pairwise_f1(
-    labeled_pairs: DataFrame, components: DataFrame
-) -> dict[str, float]:
-    """Pairwise P/R/F1 of predicted components against gold labels,
-    evaluated exactly on the labeled candidate pairs (the reference
-    blocking key). Predicted-match := same cluster_id.
+def size_bucket(n: Column) -> Column:
+    """The 1 / 2 / 3-10 / 11+ conversation-size bucket of a mention
+    count — the doc-size bucketing of GlobalStats.scala:116-141."""
+    return (
+        F.when(n == 1, "1")
+        .when(n == 2, "2")
+        .when(n <= 10, "3-10")
+        .otherwise("11+")
+    )
 
-    ≙ Verifier.scala:24-43 with clusters instead of entity assignments.
-    """
+
+def _judged(labeled_pairs: DataFrame, components: DataFrame) -> DataFrame:
+    """The labeled pairs with ``pred`` — both mentions clustered, and in
+    the same cluster."""
     la = components.select(
         F.col("id").alias("mention_id_a"), F.col("cluster_id").alias("ca")
     )
     lb = components.select(
         F.col("id").alias("mention_id_b"), F.col("cluster_id").alias("cb")
     )
-    j = (
+    return (
         labeled_pairs.join(la, "mention_id_a", "left")
         .join(lb, "mention_id_b", "left")
         .withColumn(
@@ -100,11 +105,39 @@ def pairwise_f1(
             & (F.col("ca") == F.col("cb")),
         )
     )
-    row = j.agg(
+
+
+def _confusion() -> list[Column]:
+    """tp, fp and fn of ``pred`` against ``is_match``, as sums."""
+    return [
         F.sum(F.when(F.col("pred") & F.col("is_match"), 1).otherwise(0)).alias("tp"),
         F.sum(F.when(F.col("pred") & ~F.col("is_match"), 1).otherwise(0)).alias("fp"),
         F.sum(F.when(~F.col("pred") & F.col("is_match"), 1).otherwise(0)).alias("fn"),
-        F.count("*").alias("n"),
+    ]
+
+
+def _prf() -> list[Column]:
+    """precision, recall and f1 of the tp/fp/fn columns; an empty
+    denominator reads 0."""
+    p = F.col("tp") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1))
+    r = F.col("tp") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1))
+    return [
+        p.alias("precision"), r.alias("recall"),
+        (2 * p * r / F.greatest(p + r, F.lit(1e-12))).alias("f1"),
+    ]
+
+
+def pairwise_f1(
+    labeled_pairs: DataFrame, components: DataFrame
+) -> dict[str, float]:
+    """Pairwise P/R/F1 of predicted components against gold labels,
+    evaluated exactly on the labeled candidate pairs (the reference
+    blocking key). Predicted-match := same cluster_id.
+
+    ≙ Verifier.scala:24-43 with clusters instead of entity assignments.
+    """
+    row = _judged(labeled_pairs, components).agg(
+        *_confusion(), F.count("*").alias("n")
     ).collect()[0]
     tp, fp, fn = row["tp"] or 0, row["fp"] or 0, row["fn"] or 0
     p = tp / (tp + fp) if tp + fp else 1.0
@@ -134,28 +167,10 @@ def macro_pairwise_f1(
     One distributed groupBy(conv) + one scalar agg; nothing but the
     metric row is collected.
     """
-    la = components.select(
-        F.col("id").alias("mention_id_a"), F.col("cluster_id").alias("ca")
+    j = _judged(
+        labeled_pairs.where(F.col("conv_id_a") == F.col("conv_id_b")), components
     )
-    lb = components.select(
-        F.col("id").alias("mention_id_b"), F.col("cluster_id").alias("cb")
-    )
-    j = (
-        labeled_pairs.where(F.col("conv_id_a") == F.col("conv_id_b"))
-        .join(la, "mention_id_a", "left")
-        .join(lb, "mention_id_b", "left")
-        .withColumn(
-            "pred",
-            F.col("ca").isNotNull()
-            & F.col("cb").isNotNull()
-            & (F.col("ca") == F.col("cb")),
-        )
-    )
-    per_doc = j.groupBy(F.col("conv_id_a").alias("conv_id")).agg(
-        F.sum(F.when(F.col("pred") & F.col("is_match"), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("pred") & ~F.col("is_match"), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(~F.col("pred") & F.col("is_match"), 1).otherwise(0)).alias("fn"),
-    )
+    per_doc = j.groupBy(F.col("conv_id_a").alias("conv_id")).agg(*_confusion())
     p_doc = F.when(
         F.col("tp") + F.col("fp") > 0, F.col("tp") / (F.col("tp") + F.col("fp"))
     ).otherwise(F.lit(1.0))
@@ -206,18 +221,8 @@ def calibrate_threshold(
     e = j.select("is_match", "score", th).withColumn(
         "pred", F.coalesce(F.col("score"), F.lit(-1.0)) >= F.col("threshold")
     )
-    agg = e.groupBy("threshold").agg(
-        F.sum(F.when(F.col("pred") & F.col("is_match"), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("pred") & ~F.col("is_match"), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(~F.col("pred") & F.col("is_match"), 1).otherwise(0)).alias("fn"),
-    )
-    p = F.col("tp") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1))
-    r = F.col("tp") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1))
-    return agg.select(
-        "threshold", "tp", "fp", "fn",
-        p.alias("precision"), r.alias("recall"),
-        (2 * p * r / F.greatest(p + r, F.lit(1e-12))).alias("f1"),
-    ).orderBy("threshold")
+    agg = e.groupBy("threshold").agg(*_confusion())
+    return agg.select("threshold", "tp", "fp", "fn", *_prf()).orderBy("threshold")
 
 
 def linking_accuracy(
@@ -287,46 +292,11 @@ def size_bucketed_f1(
     """F1 bucketed by conversation mention-count — ≙ the reference's
     doc-size-bucketed GlobalStats (GlobalStats.scala:116-141). Returns a
     small DataFrame (bucket, precision, recall, f1)."""
-    sizes = gold_mentions.groupBy("conv_id").agg(F.count("*").alias("n_m"))
-    bucket = (
-        F.when(F.col("n_m") == 1, "1")
-        .when(F.col("n_m") == 2, "2")
-        .when(F.col("n_m") <= 10, "3-10")
-        .otherwise("11+")
+    sized = gold_mentions.groupBy(F.col("conv_id").alias("conv_id_a")).agg(
+        size_bucket(F.count("*")).alias("bucket")
     )
-    sized = sizes.withColumn("bucket", bucket).select(
-        F.col("conv_id").alias("conv_id_a"), "bucket"
-    )
-    la = components.select(
-        F.col("id").alias("mention_id_a"), F.col("cluster_id").alias("ca")
-    )
-    lb = components.select(
-        F.col("id").alias("mention_id_b"), F.col("cluster_id").alias("cb")
-    )
-    j = (
-        labeled_pairs.join(la, "mention_id_a", "left")
-        .join(lb, "mention_id_b", "left")
-        .join(sized, "conv_id_a", "left")
-        .withColumn(
-            "pred",
-            F.col("ca").isNotNull()
-            & F.col("cb").isNotNull()
-            & (F.col("ca") == F.col("cb")),
-        )
-    )
-    agg = j.groupBy("bucket").agg(
-        F.sum(F.when(F.col("pred") & F.col("is_match"), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("pred") & ~F.col("is_match"), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(~F.col("pred") & F.col("is_match"), 1).otherwise(0)).alias("fn"),
-    )
-    p = F.col("tp") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1))
-    r = F.col("tp") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1))
-    return agg.select(
-        "bucket",
-        p.alias("precision"),
-        r.alias("recall"),
-        (2 * p * r / F.greatest(p + r, F.lit(1e-12))).alias("f1"),
-    )
+    j = _judged(labeled_pairs, components).join(sized, "conv_id_a", "left")
+    return j.groupBy("bucket").agg(*_confusion()).select("bucket", *_prf())
 
 
 def candidate_rank_report(

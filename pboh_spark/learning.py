@@ -1,6 +1,7 @@
 """Distributed few-params weight learning (L2/L3) — pseudolikelihood
 gradients for the scorer weights {f, g, h, b}, fit with AdaGrad + box
-projection.
+projection — and ``pl_fit``, the one fit driver that this fit and the
+parameter-table fit (param_learning.py) both run.
 
 Reference parity (file:line in /root/reference/src/main/scala/):
 * pseudolikelihood log-factor + analytic partials
@@ -11,27 +12,27 @@ Reference parity (file:line in /root/reference/src/main/scala/):
   guard (:364).
 * loss = Σ_x (1/l)·[log_factor(x,y_gold) − log Z_x],
   Z_x = Σ_{y'∈cands(x)} e^{log_factor(x,y')} — :387-500 (the max-shift
-  underflow trick :448-460 is numpy logsumexp here).
+  underflow trick :448-460 is ``_gold_softmax`` here).
 * AdaGrad accumulation eta/√(1+Σg²) + update — :819-846.
 * box projection g,f ∈ [0.001, 15], b ∈ [1e-8, 10], and the h·g ≥ −15
   guard (h = −15/g when violated) — loopybeliefpropagation/
   ScorerWeights.scala:120-154.
 * distributed round merge — learning/Learning.scala:296-361: per-worker
-  partial results reduced, then one driver-side update per round.
+  partial results reduced, then one driver-side update per round; the
+  reference's few-params and per-parameter learners share this shape,
+  and so do ours, through ``pl_fit``.
 
 Spark recast: the reference runs per-worker *stochastic* SGD and merges
-weight deltas; here each round is ONE deterministic full-batch job. One
-narrow ``mapInPandas`` over the conversation assembly
-(resolve.assemble_conversations, which LBP and the parameter fit read
-too) prepares the weight-independent per-conversation contractions once
-per fit through resolve.conv_tensors; each round is then a
-shuffle-free ``mapInPandas`` that evaluates loss/gradients and
-partial-sums them per partition, AdaGrad'd driver-side. Same merge
-topology, but reproducible: results are bit-identical at any
-partitioning because per-conversation float results are quantized to
-integer 1e-9 units before the (order-independent) long sum — float
-addition order across partitions can never leak into the fitted weights,
-which is what makes the golden-oracle contract query possible.
+weight deltas; here each round is ONE deterministic full-batch job over
+conversations prepared once per fit from the conversation assembly
+(resolve.assemble_conversations, which LBP reads too). A learner
+supplies a per-conversation prepare function, a per-conversation round
+function, and its own projection and history; ``pl_fit`` does the rest.
+Per-conversation values are quantized to integer 1e-9 units before the
+(order-independent) sums, so results are bit-identical at any
+partitioning — float addition order across partitions can never leak
+into the fitted values, which is what makes the golden-oracle contract
+queries possible.
 
 λ(h) is affine in h for BOTH stored and backoff pairs:
     stored:  λ = log_smoothed − h·(log p̂(e1) + log p̂(e2))   (ScorerFull
@@ -56,6 +57,7 @@ from __future__ import annotations
 
 import pickle
 from dataclasses import replace
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -71,6 +73,44 @@ from pboh_spark.util import release
 CLAMP = 10.0  # FewParamsLearning.scala:330 log_factor discard threshold
 MAX_DOC = 25  # FewParamsLearning.scala:364
 _FIXED = 1e9  # fixed-point quantum for the order-independent merge
+# one row per partition of a round: integer loss, contributing
+# conversations, and integer gradient sums by parameter id
+PART_SCHEMA = "loss long, n_convs long, ids array<long>, q array<long>"
+_THETA_IDS = np.arange(4)  # the weight fit's parameter ids: f, g, h, b
+
+
+def _neighbor_pairs(ents, logpop, surfaces, gold_ent, gold_idx) -> tuple:
+    """(keys, lp_sum, mask) of one conversation: the packed pair of
+    candidate (i, a) and the gold entity of neighbor j, and their
+    log-pop sum, both (L, K, L) — a gold entity outside its mention's
+    candidates has log-pop 0 — and the (L, L) neighbor mask, the string
+    guard ``xj != x`` (:311), which drops i == j too."""
+    L, K = ents.shape
+    gold_lp = np.where(
+        gold_idx >= 0, logpop[np.arange(L), np.maximum(gold_idx, 0)], 0.0
+    )
+    keys = _pack(
+        np.broadcast_to(ents[:, :, None], (L, K, L)),
+        np.broadcast_to(gold_ent[None, None, :], (L, K, L)),
+    )
+    lp_sum = logpop[:, :, None] + gold_lp[None, None, :]
+    mask = (surfaces[:, None] != surfaces[None, :]).astype(np.float64)
+    return keys, lp_sum, mask
+
+
+def _gold_softmax(phi, valid, gold_idx, L: int) -> tuple:
+    """(idx, gidx, p, loss) of the mentions whose gold is a candidate:
+    their rows, gold slots, candidate softmax p and the loss
+    Σ (φ_gold − log Z)/L, by the max-shifted log-sum-exp (:448-460)."""
+    idx = np.nonzero(gold_idx >= 0)[0]
+    gidx = gold_idx[idx]
+    mx = phi[idx].max(axis=1, keepdims=True)
+    zexp = np.where(valid[idx], np.exp(phi[idx] - mx), 0.0)
+    z = zexp.sum(axis=1, keepdims=True)
+    lse = (np.log(z) + mx)[:, 0]
+    p = zexp / z
+    loss = float(((phi[idx, gidx] - lse) / L).sum())
+    return idx, gidx, p, loss
 
 
 def _pl_prepare(
@@ -84,55 +124,42 @@ def _pl_prepare(
     c1_map: dict[int, float],  # packed pair -> lp_sum
     lam_const: float = LAMBDA_FLOOR,
     ctx: np.ndarray | None = None,  # (L, K) context evidence Σ log(p̃/p̂)
-) -> dict:
+) -> dict | None:
     """Weight-INDEPENDENT half of the pseudolikelihood kernel: the λ
     affine-coefficient probes and the neighbor-sum contractions depend
     only on the conversation's tensors, never on θ = (f, g, h, b), so a
     multi-round fit computes them ONCE per conversation and re-evaluates
     only ``_pl_round`` per round (the r6 optimization; the per-round
-    arithmetic is unchanged, see _pl_conv)."""
+    arithmetic is unchanged, see _pl_conv). None outside the
+    (1, MAX_DOC] length guard."""
     L, K = ents.shape
     if L < 2 or L > MAX_DOC:
-        return {"skip": True}
-    valid = ents >= 0
-    # gold log-pop per neighbor (0.0 when gold is outside the candidate set)
-    gold_lp = np.where(
-        gold_idx >= 0, logpop[np.arange(L), np.maximum(gold_idx, 0)], 0.0
-    )
+        return None
+    keys, lp_sum, mask = _neighbor_pairs(ents, logpop, surfaces, gold_ent, gold_idx)
     # λ affine coefficients between candidate (i,a) and gold of j
-    keys = _pack(
-        np.broadcast_to(ents[:, :, None], (L, K, L)),
-        np.broadcast_to(gold_ent[None, None, :], (L, K, L)),
-    ).ravel()
-    ks = pd.Series(keys)
+    ks = pd.Series(keys.ravel())
     c0 = ks.map(c0_map).to_numpy(np.float64).reshape(L, K, L)
     c1 = ks.map(c1_map).to_numpy(np.float64).reshape(L, K, L)
-    lp_sum_default = logpop[:, :, None] + gold_lp[None, None, :]
-    c0 = np.where(np.isnan(c0), lam_const + lp_sum_default, c0)
-    c1 = np.where(np.isnan(c1), lp_sum_default, c1)
-    # neighbor mask: xj != x (string guard, :311) — drops i==j too
-    mask = (surfaces[:, None] != surfaces[None, :]).astype(np.float64)
-    pair0 = np.einsum("ikj,ij->ik", c0, mask)  # Σ_j c0[i,a,j]
-    pair1 = np.einsum("ikj,ij->ik", c1, mask)
+    c0 = np.where(np.isnan(c0), lam_const + lp_sum, c0)
+    c1 = np.where(np.isnan(c1), lp_sum, c1)
     return {
-        "skip": False,
         "rho": rho,
         "ctx": ctx,
-        "pair0": pair0,
-        "pair1": pair1,
-        "valid": valid,
+        "pair0": np.einsum("ikj,ij->ik", c0, mask),  # Σ_j c0[i,a,j]
+        "pair1": np.einsum("ikj,ij->ik", c1, mask),
+        "valid": ents >= 0,
         "gold_idx": gold_idx,
         "L": L,
     }
 
 
-def _pl_round(pre: dict, w: ScorerWeights) -> tuple[float, np.ndarray, int]:
-    """Weight-DEPENDENT half: evaluate loss + analytic ∂(f, g, h, b) at θ
-    from the precomputed contractions. Bit-identical to the former fused
-    kernel — same operations in the same order on the same float64
-    tensors, only hoisted out of the per-round loop."""
-    if pre["skip"]:
-        return 0.0, np.zeros(4), 0
+def _pl_round(pre: dict, w: ScorerWeights) -> tuple:
+    """Weight-DEPENDENT half, the weight fit's round function: loss,
+    parameter ids 0..3, analytic ∂(f, g, h, b) at θ and n, the
+    contributing mentions (0, with loss and gradients 0, when no gold is
+    a candidate), from the precomputed contractions. Bit-identical to
+    the former fused kernel — same operations in the same order on the
+    same float64 tensors, only hoisted out of the per-round loop."""
     rho, ctx = pre["rho"], pre["ctx"]
     pair0, pair1 = pre["pair0"], pre["pair1"]
     valid, gold_idx, L = pre["valid"], pre["gold_idx"], pre["L"]
@@ -150,25 +177,14 @@ def _pl_round(pre: dict, w: ScorerWeights) -> tuple[float, np.ndarray, int]:
     for arr in (phi, d_f, d_g, d_h, d_b):
         arr[big] = 0.0
     phi = np.where(valid, phi, -np.inf)
-    contrib = gold_idx >= 0
-    n = int(contrib.sum())
-    if n == 0:
-        return 0.0, np.zeros(4), 0
-    idx = np.where(contrib)[0]
-    gidx = gold_idx[idx]
-    mx = phi[idx].max(axis=1, keepdims=True)
-    zexp = np.where(valid[idx], np.exp(phi[idx] - mx), 0.0)
-    z = zexp.sum(axis=1, keepdims=True)
-    lse = (np.log(z) + mx)[:, 0]
-    p = zexp / z
-    loss = float(((phi[idx, gidx] - lse) / L).sum())
+    idx, gidx, p, loss = _gold_softmax(phi, valid, gold_idx, L)
     grads = np.zeros(4)
     for gi, d in enumerate((d_f, d_g, d_h, d_b)):
         dm = np.where(valid[idx], d[idx], 0.0)
         grads[gi] = float(
             ((d[idx, gidx] - (p * dm).sum(axis=1)) / L).sum()
         )
-    return loss, grads, n
+    return loss, _THETA_IDS, grads, len(idx)
 
 
 def _pl_conv(
@@ -199,42 +215,14 @@ def _pl_conv(
 
     Composed from the weight-independent ``_pl_prepare`` and the
     per-θ ``_pl_round`` so that multi-round fits can hoist the former."""
-    return _pl_round(
-        _pl_prepare(
-            ents, rho, logpop, surfaces, gold_ent, gold_idx,
-            c0_map, c1_map, lam_const, ctx=ctx,
-        ),
-        w,
+    pre = _pl_prepare(
+        ents, rho, logpop, surfaces, gold_ent, gold_idx,
+        c0_map, c1_map, lam_const, ctx=ctx,
     )
-
-
-def _prepare_kernel(lam_const: float):
-    """Narrow kernel over assembled conversations: per conversation with
-    a gold-labelled mention, ``_pl_prepare`` of its gold mentions
-    (resolve.conv_tensors) and of the λ pairs whose two entities are
-    both candidates in the conversation, pickled into one binary cell.
-    Conversations that contribute nothing (``skip``) yield no row."""
-
-    def prepare(batches):
-        for pdf in batches:
-            out = []
-            for conv_id, cand, lam in conversations(pdf):
-                gold = gold_rows(cand)
-                if gold.empty:
-                    continue
-                t = conv_tensors(gold)
-                ents = cand["entity"].to_numpy()
-                lam = lam[lam["e1"].isin(ents) & lam["e2"].isin(ents)]
-                pre = _pl_prepare(
-                    t.ents, t.rho, t.logpop, t.surfaces, t.gold_ent, t.gold_idx,
-                    pair_map(lam, "log_smoothed"), pair_map(lam, "lp_sum"),
-                    lam_const, ctx=t.ctx,
-                )
-                if not pre["skip"]:
-                    out.append((conv_id, pickle.dumps(pre, pickle.HIGHEST_PROTOCOL)))
-            yield pd.DataFrame(out, columns=["conv_id", "blob"])
-
-    return prepare
+    if pre is None:
+        return 0.0, np.zeros(4), 0
+    loss, _, grads, n = _pl_round(pre, w)
+    return loss, grads, n
 
 
 def _quantize(x: float) -> int:
@@ -252,38 +240,137 @@ def _quantize(x: float) -> int:
     return int(Decimal(repr(v)).quantize(Decimal("1"), rounding=ROUND_HALF_UP))
 
 
-PART_SCHEMA = (
-    "loss long, g_f long, g_g long, g_h long, g_b long, n_convs long"
-)
-_QCOLS = ("loss", "g_f", "g_g", "g_h", "g_b")
+def _prepare_kernel(prepare):
+    """Narrow kernel over assembled conversations: ``prepare(gold, cand,
+    lam)`` of each conversation with a gold-labelled mention
+    (resolve.gold_rows), pickled into one binary cell. A conversation
+    that contributes nothing (None) yields no row."""
 
-
-def _fused_round_kernel(w: ScorerWeights):
-    """Single-stage round kernel (r6): evaluate every conversation's
-    ``_pl_round`` at θ AND fold the fixed-point merge's per-partition
-    partial sums inside the same Python task — one row out per
-    partition, no exchange, no second stage. The quantization is the
-    same HALF_UP long as the former Spark-side
-    ``sum(round(col·1e9).cast(long))`` (see ``_quantize``), and long
-    partial sums per partition + a driver total equal the global long
-    sum by integer associativity — the merge stays bit-identical at any
-    partitioning."""
-    def ev(batches):
-        acc = [0, 0, 0, 0, 0, 0]
-        seen = False
+    def run(batches):
         for pdf in batches:
-            seen = True
-            for blob in pdf["blob"]:
-                loss, g, n = _pl_round(pickle.loads(bytes(blob)), w)
-                acc[0] += _quantize(loss)
-                for i in range(4):
-                    acc[1 + i] += _quantize(g[i])
-                if n > 0:
-                    acc[5] += 1
-        if seen:
-            yield pd.DataFrame([acc], columns=list(_QCOLS) + ["n_convs"])
+            out = []
+            for conv_id, cand, lam in conversations(pdf):
+                gold = gold_rows(cand)
+                pre = None if gold.empty else prepare(gold, cand, lam)
+                if pre is not None:
+                    out.append((conv_id, pickle.dumps(pre, pickle.HIGHEST_PROTOCOL)))
+            yield pd.DataFrame(out, columns=["conv_id", "blob"])
 
-    return ev
+    return run
+
+
+def _round_kernel(conv_round):
+    """One round as one Python stage: ``conv_round(pre) → (loss, ids,
+    grads, n)`` of every prepared conversation, each value quantized
+    (``_quantize``), folded into one row per partition: the loss sum,
+    the count of conversations with n > 0 and per-id gradient sums.
+    Integer sums are associative, so the merge is bit-identical at any
+    partitioning. A partition without conversations yields no row."""
+
+    def run(batches):
+        loss = n_convs = 0
+        ids, q = [], []
+        for pdf in batches:
+            for blob in pdf["blob"]:
+                conv_loss, conv_ids, grads, n = conv_round(pickle.loads(blob))
+                loss += _quantize(conv_loss)
+                n_convs += int(n > 0)
+                ids.append(conv_ids)
+                q += map(_quantize, grads.tolist())
+        if ids:
+            s = pd.Series(q, dtype=np.int64).groupby(np.concatenate(ids)).sum()
+            yield pd.DataFrame({
+                "loss": [loss], "n_convs": [n_convs],
+                "ids": [s.index.to_numpy(np.int64)], "q": [s.to_numpy(np.int64)],
+            })
+
+    return run
+
+
+def _merge(parts: pd.DataFrame, n_ids: int) -> tuple[int, int, np.ndarray]:
+    """The driver total of a round's per-partition rows: (loss, n_convs,
+    per-id gradient sums), exact integer additions of one small row per
+    partition — bounded by the task width, never by conversations."""
+    tot = np.zeros(n_ids, dtype=np.int64)
+    for ids, q in zip(parts["ids"], parts["q"]):
+        np.add.at(tot, np.asarray(ids, np.int64), np.asarray(q, np.int64))
+    return int(parts["loss"].sum()), int(parts["n_convs"].sum()), tot
+
+
+def pl_fit(
+    assembly: DataFrame, prepare, conv_round, record, project,
+    theta: np.ndarray, theta0: np.ndarray, sq: np.ndarray,
+    n_evals: int, eta: float, reg: float,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The one fit driver: full-batch AdaGrad ascent over the parameter
+    vector θ (one id per entry) on the gold mentions of an assembly
+    (resolve.assemble_conversations built with ``gold``). The learner
+    supplies ``prepare(gold, cand, lam)`` — a conversation's
+    θ-independent state from its gold candidate rows, all its candidate
+    rows and its λ rows, or None —, ``conv_round(θ)`` — the
+    per-conversation round function at θ, for ``_round_kernel`` —,
+    ``record(r, θ, loss, n)`` — its history of evaluation r, the mean
+    over the n conversations with n > 0; it returns whether to step —
+    and ``project(θ)``. At most ``n_evals`` evaluations run, one Spark
+    job each; after each one ``record`` accepts, θ takes the
+    AdaGrad-proximal step (FewParamsLearning.scala:819-846)
+    g' = g − reg·(θ − θ0), sq' = sq + g'²,
+    θ' = project(θ + eta/√(1+sq')·g').
+    Returns the final (θ, sq); the prepared conversations are persisted
+    for the fit's duration only."""
+    # the round view is coalesced to a rows-derived width (~256
+    # conversations per task; coalesce never raises the count) — a narrow
+    # dependency over the cache, so nothing is recomputed. The count
+    # materializes the cache.
+    pre = assembly.mapInPandas(_prepare_kernel(prepare), BLOB_SCHEMA).persist()
+    try:
+        pre_eval = pre.coalesce(pre.count() // 256 + 1)
+        for r in range(n_evals):
+            parts = pre_eval.mapInPandas(
+                _round_kernel(conv_round(theta)), PART_SCHEMA
+            ).toPandas()
+            loss_q, n, tot = _merge(parts, len(theta))
+            loss, g = 0.0, np.zeros(len(theta))
+            if n:
+                loss, g = loss_q / _FIXED / n, tot / _FIXED / n
+            if not record(r, theta, loss, n):
+                break
+            g = g - reg * (theta - theta0)
+            sq = sq + g * g
+            theta = project(theta + eta / np.sqrt(1.0 + sq) * g)
+    finally:
+        release(pre)
+    return theta, sq
+
+
+def _weight_prepare(gold, cand, lam, lam_const: float) -> dict | None:
+    """The weight fit's per-conversation prepare: ``_pl_prepare`` of the
+    gold mentions (resolve.conv_tensors) and of the λ pairs whose two
+    entities are both candidates in the conversation."""
+    t = conv_tensors(gold)
+    ents = cand["entity"].to_numpy()
+    lam = lam[lam["e1"].isin(ents) & lam["e2"].isin(ents)]
+    return _pl_prepare(
+        t.ents, t.rho, t.logpop, t.surfaces, t.gold_ent, t.gold_idx,
+        pair_map(lam, "log_smoothed"), pair_map(lam, "lp_sum"),
+        lam_const, ctx=t.ctx,
+    )
+
+
+def _weights_at(theta: np.ndarray) -> ScorerWeights:
+    """The shipped weights with θ = (f, g, h, b) in place."""
+    return replace(ScorerWeights(), **dict(zip("fghb", map(float, theta))))
+
+
+def _project(theta: np.ndarray) -> np.ndarray:
+    """The box projection of θ = (f, g, h, b)."""
+    f, g, h, b = theta
+    f = min(max(f, 0.001), 15.0)   # ScorerWeights.scala:127-132
+    g = min(max(g, 0.001), 15.0)   # :121-126
+    b = min(max(b, 1e-8), 10.0)    # :146-150
+    if h * g < -15.0:              # :152-154 — h's only bound
+        h = -15.0 / g
+    return np.array([f, g, h, b])
 
 
 def learn_weights(
@@ -294,11 +381,9 @@ def learn_weights(
     lam_const: float = LAMBDA_FLOOR,
 ) -> tuple[ScorerWeights, list[dict]]:
     """Full-batch AdaGrad ascent on the regularized pseudolikelihood
-    over θ = (f, g, h, b). One Spark job per round (the distributed-SGD
-    round/merge shape, Learning.scala:296-361); the AdaGrad state and
-    box projection live on the driver (FewParamsLearning.scala:819-849,
-    ScorerWeights.scala:120-154: f,g clamped to [0.001, 15], b to
-    [1e-8, 10], h bounded only by h·g ≥ −15).
+    over θ = (f, g, h, b), one Spark job per round (``pl_fit``), with
+    the box projection of ScorerWeights.scala:120-154: f,g clamped to
+    [0.001, 15], b to [1e-8, 10], h bounded only by h·g ≥ −15.
 
     The fit reads the gold mentions of an assembly
     (resolve.assemble_conversations built with ``gold``), and only λ
@@ -311,61 +396,26 @@ def learn_weights(
     regularizer pins it at its prior.
 
     Returns (fitted weights, history) where history[r] =
-    {round, loss, f, g, h, b} recorded AFTER round r's update;
+    {round, loss, f, g, h, b, n_convs} recorded AFTER round r's update;
     history[0] is the init evaluation (no update). Deterministic at any
-    parallelism (see _fused_round_kernel). Session conf is left alone."""
+    parallelism (see pl_fit). Session conf is left alone."""
     # the fit starts at, and regularizes toward, the shipped weights
-    w = ScorerWeights()
-    pr = np.array([w.f, w.g, w.h, w.b])
-    # the λ probes and neighbor-sum contractions are weight-independent:
-    # one narrow pass over the assembly prepares them, persisted for the
-    # fit's duration; each round is then a mapInPandas over the small
-    # contraction table. The round view is coalesced to a rows-derived
-    # width (~256 conversations per task; coalesce never raises the
-    # count) — a narrow dependency over the cache, so nothing is
-    # recomputed, and the quantized integer merge makes the result
-    # partitioning-independent by construction. The count materializes
-    # the cache.
-    pre = assembly.mapInPandas(_prepare_kernel(lam_const), BLOB_SCHEMA).persist()
-    pre_eval = pre.coalesce(pre.count() // 256 + 1)
-    sq = np.zeros(4)
+    w0 = ScorerWeights()
+    theta0 = np.array([w0.f, w0.g, w0.h, w0.b])
     history: list[dict] = []
-    try:
-        for r in range(n_rounds + 1):
-            # r6: one-stage round — the kernel quantizes and partial-sums
-            # per partition (see _fused_round_kernel); the driver totals
-            # the per-partition longs (exact integer addition, one small
-            # row per partition — bounded by the cluster's task width,
-            # never by conversations). Replaces a 2-stage agg + exchange
-            # per round; measured −0.2 s/round locally, bit-identical.
-            rows = pre_eval.mapInPandas(
-                _fused_round_kernel(w), PART_SCHEMA
-            ).collect()
-            n = sum(int(r_["n_convs"]) for r_ in rows)
-            if n == 0:
-                loss, g = 0.0, np.zeros(4)
-            else:
-                tot = [sum(int(r_[c]) for r_ in rows) for c in _QCOLS]
-                loss = tot[0] / _FIXED / n
-                g = np.array(tot[1:5], dtype=np.float64) / _FIXED / n
-            theta = np.array([w.f, w.g, w.h, w.b])
-            loss -= reg / 2.0 * float(((theta - pr) ** 2).sum())
-            history.append(
-                {"round": r, "loss": loss, "f": w.f, "g": w.g, "h": w.h,
-                 "b": w.b, "n_convs": n}
-            )
-            if r == n_rounds:
-                break
-            g = g - reg * (theta - pr)
-            sq += g * g
-            theta = theta + eta / np.sqrt(1.0 + sq) * g  # ascent, :841-846
-            f, gg, h, b = theta
-            f = min(max(f, 0.001), 15.0)   # ScorerWeights.scala:127-132
-            gg = min(max(gg, 0.001), 15.0)  # :121-126
-            b = min(max(b, 1e-8), 10.0)     # :146-150
-            if h * gg < -15.0:              # :152-154 — h's only bound
-                h = -15.0 / gg
-            w = replace(w, f=float(f), g=float(gg), h=float(h), b=float(b))
-    finally:
-        release(pre)
-    return w, history
+
+    def record(r, theta, loss, n):
+        w = _weights_at(theta)
+        loss -= reg / 2.0 * float(((theta - theta0) ** 2).sum())
+        history.append(
+            {"round": r, "loss": loss, "f": w.f, "g": w.g, "h": w.h,
+             "b": w.b, "n_convs": n}
+        )
+        return r < n_rounds
+
+    theta, _ = pl_fit(
+        assembly, partial(_weight_prepare, lam_const=lam_const),
+        lambda theta: partial(_pl_round, w=_weights_at(theta)), record,
+        _project, theta0, theta0, np.zeros(4), n_rounds + 1, eta, reg,
+    )
+    return _weights_at(theta), history

@@ -39,38 +39,30 @@ Reference parity (file:line in the reference's src/main/scala/):
   rho un-multiplied) and learned lambda replaces the pair's λ, so
   backoff pairs still flow through the kernel's closed-form default.
 
-The fit, like LBP and the weight fit, reads the conversations that
-resolve.assemble_conversations built once: one narrow pass prepares
-them against the parameter ids, and each round is one mapInPandas.
-
-Determinism: every per-(conversation, key) gradient is quantized to
-integer 1e-9 units (learning._quantize) and the integers are summed
-per key, so the fit is bit-identical at any partitioning and
-golden-oracle checkable.
+The fit is learning.pl_fit, the weight fit's driver, with this
+module's per-conversation prepare (``_ppl_prepare``) and round
+(``_ppl_round``), the READ_CLAMP projection and its history; both
+tables form one parameter vector, the λ ids after the rho ids. So it
+too is bit-identical at any partitioning and golden-oracle checkable.
 """
 
 from __future__ import annotations
-
-import pickle
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pboh_spark.learning import CLAMP, MAX_DOC, _FIXED, _quantize
+from pboh_spark.learning import (
+    CLAMP, MAX_DOC, _gold_softmax, _neighbor_pairs, pl_fit,
+)
 from pboh_spark.resolve import (
-    BLOB_SCHEMA, LAMBDA_FLOOR, NEG, ConvTensors, _pack, conv_tensors,
-    conversations, gold_rows, lambda_at_h, pair_values,
+    LAMBDA_FLOOR, NEG, ConvTensors, _pack, conv_tensors, conversations,
+    gold_rows, lambda_at_h, pair_values,
 )
 from pboh_spark.stats import ScorerWeights
-from pboh_spark.util import release
 
 READ_CLAMP = 15.0  # Learning.scala:440-443 (applied at update here)
-PART_SCHEMA = (
-    "loss long, n_convs long, rho_id array<long>, rho_q array<long>, "
-    "lam_id array<long>, lam_q array<long>"
-)
 
 
 def _gold_rho_rows(batches):
@@ -131,12 +123,8 @@ def _ppl_prepare(
     L, K = t.ents.shape
     if L < 2 or L > MAX_DOC or not (t.gold_idx >= 0).any():
         return None
-    gold_lp = np.where(
-        t.gold_idx >= 0, t.logpop[np.arange(L), np.maximum(t.gold_idx, 0)], 0.0
-    )
-    keys = _pack(
-        np.broadcast_to(t.ents[:, :, None], (L, K, L)),
-        np.broadcast_to(t.gold_ent[None, None, :], (L, K, L)),
+    keys, lp_sum, mask = _neighbor_pairs(
+        t.ents, t.logpop, t.surfaces, t.gold_ent, t.gold_idx
     )
     pos = pd.Index(lam_keys).get_indexer(keys.ravel()).reshape(L, K, L)
     rho_id = [[rho_ids[(s, e)] if e >= 0 else -1 for e in row]
@@ -145,10 +133,7 @@ def _ppl_prepare(
         "L": L, "valid": t.ents >= 0, "gold_idx": t.gold_idx,
         "rho_id": np.array(rho_id, dtype=np.int64), "pos": pos,
         "lam_id": lam_id, "lam_pot": lam_pot,
-        "backoff": lam_const + (1.0 - w.h) * (
-            t.logpop[:, :, None] + gold_lp[None, None, :]
-        ),
-        "mask": (t.surfaces[:, None] != t.surfaces[None, :]).astype(np.float64),
+        "backoff": lam_const + (1.0 - w.h) * lp_sum, "mask": mask,
     }
 
 
@@ -176,14 +161,7 @@ def _ppl_round(
     big = phi > CLAMP  # discard clamp: factor AND partials zeroed
     phi = np.where(big, 0.0, phi)
     phi = np.where(valid, phi, -np.inf)
-    idx = np.nonzero(gold_idx >= 0)[0]
-    gidx = gold_idx[idx]
-    mx = phi[idx].max(axis=1, keepdims=True)
-    zexp = np.where(valid[idx], np.exp(phi[idx] - mx), 0.0)
-    z = zexp.sum(axis=1, keepdims=True)
-    lse = (np.log(z) + mx)[:, 0]
-    p = zexp / z
-    loss = float(((phi[idx, gidx] - lse) / L).sum())
+    idx, gidx, p, loss = _gold_softmax(phi, valid, gold_idx, L)
     # coeff[row,a] = (1{a = gold_row} − p_row(a)) / L for contributing
     # mentions, zeroed where the candidate slot is padding or the discard
     # clamp fired (∂φ = 0 there)
@@ -250,83 +228,43 @@ def _ppl_conv(
     return loss, rho_g, dict(zip(lam_keys[li].tolist(), lg.tolist())), n
 
 
-def _prepare_kernel(
-    rho_t: pd.DataFrame, lam_t: pd.DataFrame, weights: ScorerWeights | None,
-    lam_const: float,
-):
-    """Narrow kernel over assembled conversations: ``_ppl_prepare`` of
-    each conversation's gold mentions against its candidate ∪ gold λ
-    pairs, pickled into one binary cell. A key's parameter id is its row
-    in ``rho_t`` / ``lam_t`` (−1: a λ pair without a parameter); a pair's
-    fixed value is resolve.pair_values at ``weights``. Conversations
-    that contribute nothing yield no row."""
-    rho_keys = list(zip(rho_t["ngram"].tolist(), rho_t["entity"].tolist()))
-    lam_keys = _pack(lam_t["e1"].to_numpy(np.int64), lam_t["e2"].to_numpy(np.int64))
+def _param_prepare(rho_t, lam_t, weights: ScorerWeights | None, lam_const: float):
+    """The parameter fit's per-conversation prepare: ``_ppl_prepare`` of
+    the gold mentions against the conversation's candidate ∪ gold λ
+    pairs. A key's parameter id is its row in ``rho_t`` / ``lam_t``
+    (−1: a λ pair without a parameter); a pair's fixed value is
+    resolve.pair_values at ``weights``."""
+    rho_ids = {k: i for i, k in enumerate(zip(rho_t["ngram"], rho_t["entity"]))}
+    lam_ids = pd.Index(
+        _pack(lam_t["e1"].to_numpy(np.int64), lam_t["e2"].to_numpy(np.int64))
+    )
     w = weights or ScorerWeights()
 
-    def prepare(batches):
-        rho_ids = {k: i for i, k in enumerate(rho_keys)}
-        lam_ids = pd.Index(lam_keys)
-        for pdf in batches:
-            out = []
-            for conv_id, cand, lam in conversations(pdf):
-                gold = gold_rows(cand)
-                if gold.empty:
-                    continue
-                keys = _pack(lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64))
-                pre = _ppl_prepare(
-                    conv_tensors(gold), rho_ids, keys, lam_ids.get_indexer(keys),
-                    pair_values(lam, weights), w, lam_const,
-                )
-                if pre is not None:
-                    out.append((conv_id, pickle.dumps(pre, pickle.HIGHEST_PROTOCOL)))
-            yield pd.DataFrame(out, columns=["conv_id", "blob"])
+    def prepare(gold, cand, lam):
+        keys = _pack(lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64))
+        return _ppl_prepare(
+            conv_tensors(gold), rho_ids, keys, lam_ids.get_indexer(keys),
+            pair_values(lam, weights), w, lam_const,
+        )
 
     return prepare
 
 
-def _partial_sums(grads: list[tuple]) -> tuple[np.ndarray, np.ndarray]:
-    """Per-id int64 sums of the quantized (conversation, id) gradients."""
-    ids = np.concatenate([i for i, _ in grads])
-    q = [_quantize(x) for _, g in grads for x in g.tolist()]
-    s = pd.Series(q, dtype=np.int64).groupby(ids).sum()
-    return s.index.to_numpy(np.int64), s.to_numpy(np.int64)
+def _param_round(w: ScorerWeights, theta: np.ndarray, n_rho: int):
+    """The parameter fit's per-conversation round at θ (the rho
+    parameters, then the λ parameters): ``_ppl_round`` with the λ ids
+    offset past the n_rho rho ids. Each vector gets a pad entry (NEG /
+    NaN) that id −1 reads."""
+    rho_ext = np.append(theta[:n_rho], NEG)
+    lam_ext = np.append(theta[n_rho:], np.nan)
 
+    def run(pre):
+        loss, (ri, rg), (li, lg), n = _ppl_round(
+            pre, rho_ext[pre["rho_id"]], lam_ext, w
+        )
+        return loss, np.concatenate([ri, li + n_rho]), np.concatenate([rg, lg]), n
 
-def _round_kernel(w: ScorerWeights, rho_ext: np.ndarray, lam_ext: np.ndarray):
-    """One round as one Python stage: ``_ppl_round`` of every
-    preassembled conversation, folded into one row per partition of
-    integer loss and per-id gradient sums. ``rho_ext`` / ``lam_ext`` are
-    the current w vectors plus a pad entry (NEG / NaN) that id −1 reads."""
-
-    def ev(batches):
-        out = [
-            _ppl_round(pre, rho_ext[pre["rho_id"]], lam_ext, w)
-            for pdf in batches for pre in map(pickle.loads, pdf["blob"])
-        ]
-        if out:
-            loss, rho_g, lam_g, _ = zip(*out)
-            yield pd.DataFrame(
-                [[sum(map(_quantize, loss)), len(out),
-                  *_partial_sums(rho_g), *_partial_sums(lam_g)]],
-                columns=["loss", "n_convs", "rho_id", "rho_q", "lam_id", "lam_q"],
-            )
-
-    return ev
-
-
-def _adagrad_update(
-    t: pd.DataFrame, tot: np.ndarray, n_convs: int, eta: float, reg: float
-) -> tuple[np.ndarray, np.ndarray]:
-    """(w', sq') for a parameter table (w0, w, sq) and its per-key
-    integer gradient sums: w' = min(w + eta/√(1+sq')·g_eff, 15),
-    g_eff = grad − reg·(w−w0), sq' = sq + g_eff² — per-key AdaGrad with
-    the proximal pull. fmin skips NaN the way Spark's ``least`` does."""
-    grad = tot / _FIXED / n_convs
-    w = t["w"].to_numpy(np.float64)
-    g_eff = grad - reg * (w - t["w0"].to_numpy(np.float64))
-    sq = t["sq"].to_numpy(np.float64) + g_eff * g_eff
-    return np.fmin(w + eta / np.sqrt(1.0 + sq) * g_eff, READ_CLAMP), sq
+    return run
 
 
 def learn_param_tables(
@@ -361,34 +299,27 @@ def learn_param_tables(
     rho0 = init_rho_params(assembly)
     lam0 = init_lambda_params(lambda_table, min_cocit)
     rho_t, lam_t = rho0.toPandas(), lam0.toPandas()
-    pre = assembly.mapInPandas(
-        _prepare_kernel(rho_t, lam_t, weights, lam_const), BLOB_SCHEMA
-    ).persist()
+    n_rho = len(rho_t)
+    # one parameter vector per column, the λ ids after the rho ids
+    theta, theta0, sq = (
+        np.concatenate([rho_t[c], lam_t[c]]).astype(np.float64)
+        for c in ("w", "w0", "sq")
+    )
     history: list[dict] = []
-    try:
-        # learn_weights' width rule: ~256 conversations per task, a
-        # narrow coalesce over the cache (the count materializes it)
-        pre_eval = pre.coalesce(pre.count() // 256 + 1)
-        for r in range(n_rounds):
-            parts = pre_eval.mapInPandas(
-                _round_kernel(
-                    w, np.append(rho_t["w"], NEG), np.append(lam_t["w"], np.nan)
-                ),
-                PART_SCHEMA,
-            ).toPandas()
-            n_convs = int(parts["n_convs"].sum())
-            if n_convs == 0:
-                break
-            history.append(
-                {"round": r, "loss": int(parts["loss"].sum()) / _FIXED / n_convs,
-                 "n_convs": n_convs}
-            )
-            for kind, t in (("rho", rho_t), ("lam", lam_t)):
-                tot = np.zeros(len(t), dtype=np.int64)
-                for ids, q in zip(parts[f"{kind}_id"], parts[f"{kind}_q"]):
-                    np.add.at(tot, np.asarray(ids, np.int64), np.asarray(q, np.int64))
-                t["w"], t["sq"] = _adagrad_update(t, tot, n_convs, eta, reg)
-    finally:
-        release(pre)
+
+    def record(r, theta, loss, n):
+        if n:
+            history.append({"round": r, "loss": loss, "n_convs": n})
+        return n > 0
+
+    theta, sq = pl_fit(
+        assembly, _param_prepare(rho_t, lam_t, weights, lam_const),
+        lambda theta: _param_round(w, theta, n_rho), record,
+        # fmin skips NaN the way Spark's ``least`` does
+        lambda theta: np.fmin(theta, READ_CLAMP),
+        theta, theta0, sq, n_rounds, eta, reg,
+    )
+    rho_t["w"], lam_t["w"] = theta[:n_rho], theta[n_rho:]
+    rho_t["sq"], lam_t["sq"] = sq[:n_rho], sq[n_rho:]
     new = assembly.sparkSession.createDataFrame
     return new(rho_t, rho0.schema), new(lam_t, lam0.schema), history

@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pboh_spark.evaluate import size_bucket
 from pboh_spark.stats import TOP_K, ScorerWeights, backoff_mass
 
 MAX_ITER = 15  # eval/VerifyEDLBPForListOfWords.scala:35
@@ -600,14 +601,8 @@ def convergence_report(assignments: DataFrame) -> DataFrame:
         F.first("n_iters").alias("n_iters"),
         F.first("converged").alias("converged"),
     )
-    bucket = (
-        F.when(F.col("n_m") == 1, "1")
-        .when(F.col("n_m") == 2, "2")
-        .when(F.col("n_m") <= 10, "3-10")
-        .otherwise("11+")
-    )
     return (
-        per_conv.withColumn("bucket", bucket)
+        per_conv.withColumn("bucket", size_bucket(F.col("n_m")))
         .groupBy("bucket")
         .agg(
             F.count("*").alias("n_convs"),

@@ -10,6 +10,7 @@ gold pairs)."""
 from __future__ import annotations
 
 from dataclasses import replace
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -191,9 +192,12 @@ def test_weight_fit_kernel_matches_pl_conv(parity):
     entities: a stored pair with a gold-only entity backs off."""
     asm, cand, lam = parity
     prepared = asm.mapInPandas(
-        learning._prepare_kernel(LAM_CONST), resolve.BLOB_SCHEMA
+        learning._prepare_kernel(
+            partial(learning._weight_prepare, lam_const=LAM_CONST)
+        ),
+        resolve.BLOB_SCHEMA,
     ).toPandas()
-    ev = learning._fused_round_kernel(FIT)
+    ev = learning._round_kernel(partial(learning._pl_round, w=FIT))
     q = learning._quantize
     seen = set()
     for conv, grp in _by_conv(cand).items():
@@ -212,7 +216,8 @@ def test_weight_fit_kernel_matches_pl_conv(parity):
         seen.add(conv)
         out = next(ev(iter([row]))).iloc[0]
         assert out["n_convs"] == int(n > 0)
-        assert [out[c] for c in learning._QCOLS] == [q(loss)] + [q(x) for x in g]
+        assert out["ids"].tolist() == [0, 1, 2, 3]
+        assert [out["loss"], *out["q"]] == [q(loss)] + [q(x) for x in g]
     assert {"nogold", "mixed", "untrained", "repeat", "c0"} <= seen
 
 
@@ -237,11 +242,14 @@ def test_param_fit_kernel_matches_ppl_conv_at_fitted_h(parity):
     rho_w[rho_keys.index(("foo", 1))] -= 0.4
     lam_w[lam_keys.index(_pk(1, 10))] += 3.0
     prepared = asm.mapInPandas(
-        param_learning._prepare_kernel(rho_t, lam_t, FIT, LAM_CONST),
+        learning._prepare_kernel(
+            param_learning._param_prepare(rho_t, lam_t, FIT, LAM_CONST)
+        ),
         resolve.BLOB_SCHEMA,
     ).toPandas()
-    ev = param_learning._round_kernel(
-        FIT, np.append(rho_w, NEG), np.append(lam_w, np.nan)
+    n_rho = len(rho_w)
+    ev = learning._round_kernel(
+        param_learning._param_round(FIT, np.concatenate([rho_w, lam_w]), n_rho)
     )
     q = learning._quantize
     rho_eff = dict(zip(rho_keys, rho_w))
@@ -264,10 +272,8 @@ def test_param_fit_kernel_matches_ppl_conv_at_fitted_h(parity):
         seen.add(conv)
         out = next(ev(iter([row]))).iloc[0]
         assert out["loss"] == q(loss), conv
-        assert dict(zip((rho_keys[i] for i in out["rho_id"]), out["rho_q"])) == {
-            k: q(v) for k, v in rho_g.items()
-        }, conv
-        assert dict(zip((lam_keys[i] for i in out["lam_id"]), out["lam_q"])) == {
-            k: q(v) for k, v in lam_g.items()
+        keys = rho_keys + lam_keys  # the λ ids follow the rho ids
+        assert dict(zip((keys[i] for i in out["ids"]), out["q"])) == {
+            k: q(v) for k, v in (*rho_g.items(), *lam_g.items())
         }, conv
     assert {"nogold", "mixed", "untrained", "repeat", "c0"} <= seen

@@ -128,6 +128,23 @@ def test_cc_pins_only_the_returned_labels(spark):
     assert len(got) == 64 and all(r["cluster_id"] == 0 for r in got)
 
 
+def test_merge_edges_into_components_pins_nothing(spark):
+    """Two incremental folds leave the pinned count unchanged while
+    every returned mapping is held (and still readable), so nothing
+    behind a mapping is freed by ContextCleaner instead."""
+    schema = "mention_id_a long, mention_id_b long"
+    before = _pinned(spark)
+    held = [spark.createDataFrame([], "id long, cluster_id long")]
+    for rows in ([(5, 9), (9, 7), (20, 30)], [(30, 40), (9, 40)]):
+        held.append(cluster.merge_edges_into_components(
+            held[-1], spark.createDataFrame(rows, schema)
+        ))
+    assert _pinned(spark) - before == set()
+    assert sorted(tuple(r) for r in held[-1].collect()) == [
+        (5, 5), (7, 5), (9, 5), (20, 5), (30, 5), (40, 5),
+    ]
+
+
 def test_cc_labels_and_surface_pipeline_pin_nothing(
     spark, universe, tmp_path, monkeypatch
 ):

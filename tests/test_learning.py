@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import replace
+from functools import partial
 
 import numpy as np
 import pytest
@@ -161,13 +162,21 @@ def test_spark_kernel_matches_numpy(spark, assemble):
     rows = (
         assemble(*_crafted_corpus(spark, ["c0"]))
         .mapInPandas(
-            learning._prepare_kernel(resolve.LAMBDA_FLOOR),
+            learning._prepare_kernel(
+                partial(learning._weight_prepare, lam_const=resolve.LAMBDA_FLOOR)
+            ),
             resolve.BLOB_SCHEMA,
         )
-        .mapInPandas(learning._fused_round_kernel(W), learning.PART_SCHEMA)
+        .mapInPandas(
+            learning._round_kernel(partial(learning._pl_round, w=W)),
+            learning.PART_SCHEMA,
+        )
         .collect()
     )
-    got = {c: sum(r[c] for r in rows) for c in (*learning._QCOLS, "n_convs")}
+    tot = [0] * 4
+    for r in rows:
+        for i, v in zip(r["ids"], r["q"]):
+            tot[i] += v
     ents = np.array([[1, 2], [3, -1]], dtype=np.int64)
     rho = np.array([[math.log(0.7), math.log(0.3)], [0.0, -1e30]])
     logpop = np.zeros((2, 2))
@@ -182,11 +191,11 @@ def test_spark_kernel_matches_numpy(spark, assemble):
     loss, g, n = _pl_conv(
         ents, rho, logpop, surfaces, gold_ent, gold_idx, c0, c1, W
     )
-    assert n == 2 and got["n_convs"] == 1
+    assert n == 2 and sum(r["n_convs"] for r in rows) == 1
     q = learning._quantize
-    assert got["loss"] == q(loss)
-    assert [got["g_f"], got["g_g"], got["g_h"]] == [q(x) for x in g[:3]]
-    assert got["g_b"] == q(g[3]) == 0  # no ctx column
+    assert sum(r["loss"] for r in rows) == q(loss)
+    assert tot[:3] == [q(x) for x in g[:3]]
+    assert tot[3] == q(g[3]) == 0  # no ctx column
 
 
 def test_learn_weights_leaves_session_conf_alone(spark, monkeypatch, assemble):

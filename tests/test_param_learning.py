@@ -251,6 +251,18 @@ def test_param_fit_job_count(spark, jobs_in_group, assemble):
     assert len(jobs) == 7
 
 
+def test_weight_fit_job_count(spark, jobs_in_group, assemble):
+    """A one-round weight fit on the same materialized assembly costs 5
+    Spark jobs: the prepare pass's count (three) and two evaluations,
+    the init one and the one after the update."""
+    cg, lam = _planted_cand_gold(spark, [f"c{i}" for i in range(6)])
+    asm = assemble(cg, lam).localCheckpoint()
+    with jobs_in_group("weight_fit") as jobs:
+        learning.learn_weights(asm, n_rounds=1)
+    release(asm)
+    assert len(jobs) == 5
+
+
 # ---------------------------------------------------------------------------
 # the fit's per-round kernel against _ppl_conv and a brute-force loss
 # ---------------------------------------------------------------------------
@@ -349,7 +361,9 @@ def test_round_kernel_matches_ppl_conv(spark, assemble):
     lam_w[lam_ids[(A, 10)]] += 7.5
 
     blobs = dict(asm.mapInPandas(
-        param_learning._prepare_kernel(rho_t, lam_t, None, LAM_CONST),
+        learning._prepare_kernel(
+            param_learning._param_prepare(rho_t, lam_t, None, LAM_CONST)
+        ),
         resolve.BLOB_SCHEMA,
     ).collect())
     got = {
@@ -371,8 +385,9 @@ def test_round_kernel_matches_ppl_conv(spark, assemble):
     assert got == expect
     assert any(k[0] == "nogold" and 77 in k[1:] for k in got)
 
-    ev = param_learning._round_kernel(
-        W, np.append(rho_w, NEG), np.append(lam_w, np.nan)
+    n_rho = len(rho_w)
+    ev = learning._round_kernel(
+        param_learning._param_round(W, np.concatenate([rho_w, lam_w]), n_rho)
     )
     rho_eff = dict(zip(rho_keys, rho_w))
     lam_eff = {**table, **{k: lam_w[i] for k, i in lam_ids.items()}}
@@ -399,12 +414,13 @@ def test_round_kernel_matches_ppl_conv(spark, assemble):
         row = next(ev(iter([pd.DataFrame({"blob": [blobs[conv]]})]))).iloc[0]
         assert row["n_convs"] == 1
         assert row["loss"] == q(loss)
-        assert dict(zip((rho_keys[i] for i in row["rho_id"]), row["rho_q"])) == {
+        got = dict(zip(row["ids"].tolist(), row["q"].tolist()))
+        assert {rho_keys[i]: v for i, v in got.items() if i < n_rho} == {
             k: q(g) for k, g in rho_g.items()
         }, conv
-        assert dict(zip(row["lam_id"], row["lam_q"])) == {
+        assert {i - n_rho: v for i, v in got.items() if i >= n_rho} == {
             lam_id[k]: q(g) for k, g in lam_g.items()
         }, conv
         assert rho_g and (lam_g or conv == "untrained"), conv
-        moved |= lam_ids[(A, 10)] in set(row["lam_id"])
+        moved |= n_rho + lam_ids[(A, 10)] in got
     assert moved
